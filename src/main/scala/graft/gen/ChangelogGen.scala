@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.lake.LocalFs
 import graft.model.{ChangeEvent, Schemas}
 
 /**
@@ -160,6 +161,7 @@ object ChangelogGen {
   /** Only write era-0 files (for checkpoint-resume tests: run, then append era 1). */
   def writeWalEra0(spark: SparkSession, p: GenParams, walDir: String): Unit = {
     import spark.implicits._
+    LocalFs.install(spark)
     events(spark, p)
       .map { case (f, e) => WalRow(f, e.op, e.lsn, e.conv_id, e.turn_idx, e.role,
         e.text, e.tool, e.ts, e.tool_meta) }
@@ -180,6 +182,7 @@ object ChangelogGen {
 
   def writeWalEra1(spark: SparkSession, p: GenParams, walDir: String): Unit = {
     import spark.implicits._
+    LocalFs.install(spark)
     if (p.evolveFile < p.nFiles) {
       events(spark, p)
         .map { case (f, e) => WalRow(f, e.op, e.lsn, e.conv_id, e.turn_idx, e.role,

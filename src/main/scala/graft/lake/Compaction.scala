@@ -55,6 +55,7 @@ object Compaction {
       targetRowsPerFile: Long = 500000L,
       smallFileRows: Long = 250000L): CompactionStats = {
     val t0 = System.nanoTime()
+    LocalFs.install(spark)
     val snap = table.currentSnapshot
     val keyCols = snap.keyCols
     val all = table.files(snap)
@@ -116,6 +117,7 @@ object Compaction {
       rangePlace: Boolean = true,
       scoped: Boolean = true): CompactionStats = {
     val t0 = System.nanoTime()
+    LocalFs.install(spark)
     val snap = table.currentSnapshot
     val allFiles = table.files(snap)
     val deltas = allFiles.filter(_.delta)

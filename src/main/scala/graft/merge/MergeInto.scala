@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{Compaction, DataFile, KeyCodec, LakeTable, SchemaMerge, Snapshot}
+import graft.lake.{Compaction, DataFile, KeyCodec, LakeTable, LocalFs, SchemaMerge, Snapshot}
 
 /**
  * Key-partitioned MERGE INTO — the Spark-native replacement for the
@@ -181,10 +181,9 @@ final case class MergeStats(
     filesPruned: Int,
     filesAdded: Int,
     wallMs: Long,
-    /** phase breakdown (ms): batch stats pass, key collect (CoW only), data
-      * write incl. range sampling, footer stats, snapshot commit */
+    /** phase breakdown (ms): batch stats pass (incl. the CoW key collect),
+      * data write incl. range sampling, footer stats, snapshot commit */
     statsMs: Long,
-    keysMs: Long,
     writeMs: Long,
     footerMs: Long,
     commitMs: Long,
@@ -212,6 +211,7 @@ object MergeInto {
       epochId: Long,
       opts: MergeOptions = MergeOptions()): MergeStats = {
     val t0 = System.nanoTime()
+    LocalFs.install(spark)
     val snap = table.currentSnapshot
     // table totals come from snapshot manifest REFS: the per-epoch hot path
     // never lists files (a 10^10-event table's listing is 10^5+ entries)
@@ -221,7 +221,7 @@ object MergeInto {
       // exactly-once: replayed epoch is a no-op (epoch ids per checkpoint are
       // monotone — Structured Streaming's foreachBatch contract)
       return MergeStats(ckptId, epochId, snap.version, 0, -1, -1, 0, 0, 0,
-        refFileCount, 0, 0, 0, 0, 0, 0, 0, noop = true)
+        refFileCount, 0, 0, 0, 0, 0, 0, noop = true)
     }
 
     // the merge key lives in table metadata; a mismatched caller would
@@ -354,13 +354,12 @@ object MergeInto {
         } else globalStats()
       }
       val statsMs = millisSince(tStats)
-      val keysMs = 0L
 
       if (!isMor && bRows == 0) {
         val next = table.commitChange(snap, snap.schemaJson, Set.empty, Nil,
           Some((ckptId, epochId)))
         return MergeStats(ckptId, epochId, next.version, 0, -1, -1, 0, 0, 0,
-          refFileCount, 0, millisSince(t0), statsMs, keysMs, 0, 0, 0,
+          refFileCount, 0, millisSince(t0), statsMs, 0, 0, 0,
           noop = false)
       }
 
@@ -535,7 +534,7 @@ object MergeInto {
           Some((ckptId, epochId)))
         val stats = MergeStats(ckptId, epochId, next.version, 0, -1, -1,
           untouchedRows, 0, 0, untouchedCount, 0,
-          millisSince(t0), statsMs, keysMs, writeMs, 0, 0, noop = false)
+          millisSince(t0), statsMs, writeMs, 0, 0, noop = false)
         writeMetrics(spark, table, stats)
         return stats
       }
@@ -565,7 +564,7 @@ object MergeInto {
       // (e.g. racing compaction) may land the epoch at a later version
       val stats = MergeStats(ckptId, epochId, committed.version, bRowsFinal, bMinLsn, bMaxLsn,
         outputRows, bDeletes, touched.size, untouchedCount, newFiles.size,
-        millisSince(t0), statsMs, keysMs, writeMs, footerMs, commitMs,
+        millisSince(t0), statsMs, writeMs, footerMs, commitMs,
         noop = false)
       writeMetrics(spark, table, stats)
 

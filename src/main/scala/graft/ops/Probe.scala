@@ -47,7 +47,7 @@ object Probe {
         val batch = ev.filter(pmod(col("wal_file"), lit(4)) === e).drop("wal_file")
         val st = t(s"merge$e")(MergeInto.merge(spark, table, batch, "e2e", e.toLong))
         println(s"  stats: batchRows=${st.batchRows} filesAdded=${st.filesAdded} " +
-          s"rewritten=${st.filesRewritten} statsMs=${st.statsMs} keysMs=${st.keysMs} " +
+          s"rewritten=${st.filesRewritten} statsMs=${st.statsMs} " +
           s"writeMs=${st.writeMs} footerMs=${st.footerMs} commitMs=${st.commitMs} wall=${st.wallMs}")
       }
       ev.unpersist()

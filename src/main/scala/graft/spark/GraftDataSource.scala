@@ -16,7 +16,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.lake.{KeyCodec, LakeTable}
+import graft.lake.{KeyCodec, LakeTable, LocalFs}
 import graft.merge.{MergeInto, MergeOptions}
 
 /**
@@ -67,6 +67,9 @@ final class GraftDataSource extends TableProvider with DataSourceRegister
     require(outputMode != OutputMode.Complete(),
       "graft sink: Complete output mode is not supported; Append/Update " +
         "rows upsert by merge key")
+    // before the query exists: its checkpoint logs take their filesystem
+    // from the Hadoop configuration at start
+    LocalFs.install(ctx.sparkSession)
     val dir = pathOf(parameters)
     def opt(k: String): Option[String] =
       parameters.collectFirst { case (n, v) if n.equalsIgnoreCase(k) => v }

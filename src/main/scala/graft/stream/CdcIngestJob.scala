@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.lake.LakeTable
+import graft.lake.{LakeTable, LocalFs}
 import graft.merge.{MergeInto, MergeOptions}
 import graft.model.Schemas
 
@@ -114,7 +114,14 @@ object CdcIngestJob {
   def payloadSchema(changeSchema: StructType): StructType =
     StructType(changeSchema.fields.filterNot(f => f.name == "op" || f.name == "lsn"))
 
+  /** The streaming query's name: unique per checkpoint, and a checkpoint
+    * runs at most one active query. */
+  def queryName(checkpointDir: String): String = s"cdc-ingest-${ckptId(checkpointDir)}"
+
   def start(spark: SparkSession, cfg: IngestConfig, trigger: Trigger): StreamingQuery = {
+    // before the query exists: its checkpoint logs take their filesystem
+    // from the Hadoop configuration at start
+    LocalFs.install(spark)
     if (!LakeTable.exists(cfg.tableDir))
       // the merge key comes from the caller's merge options — creating with
       // a different key would fail (or corrupt pruning) on the first epoch
@@ -140,7 +147,7 @@ object CdcIngestJob {
       else raw
 
     deduped.writeStream
-      .queryName(s"cdc-ingest-$id")
+      .queryName(queryName(cfg.checkpointDir))
       .option("checkpointLocation", cfg.checkpointDir)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         val table = LakeTable.load(cfg.tableDir)
@@ -185,7 +192,7 @@ object CdcIngestJob {
     * read the table themselves afterwards (the count is a full resolved
     * read+fold the caller would immediately repeat). */
   def drainAvailableNow(spark: SparkSession, cfg: IngestConfig): Unit = {
-    val listener = new LineageListener(cfg.tableDir)
+    val listener = new LineageListener(cfg.tableDir, queryName(cfg.checkpointDir))
     spark.streams.addListener(listener)
     val priorMpb = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
     try {
@@ -209,17 +216,22 @@ object CdcIngestJob {
  * the `_metrics` table (MergeStats incl. snapshot version + lsn range per
  * epoch) this is the engine's upgrade of the reference's per-stage stats
  * (/root/reference/execution_stat.go:9-48, pipeline.go:205-221).
+ *
+ * A listener sees every query of the session, so it records only the query
+ * named `queryName` (the ingest writing `tableDir`).
  */
-final class LineageListener(tableDir: String) extends StreamingQueryListener {
+final class LineageListener(tableDir: String, queryName: String)
+    extends StreamingQueryListener {
   private val dir = Paths.get(tableDir, "_lineage")
 
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-    Files.createDirectories(dir)
+    if (e.name == queryName) Files.createDirectories(dir)
 
   override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
     val p = e.progress
-    Files.write(dir.resolve(f"epoch-${p.batchId}%010d.json"),
-      p.json.getBytes(StandardCharsets.UTF_8))
+    if (p.name == queryName)
+      Files.write(dir.resolve(f"epoch-${p.batchId}%010d.json"),
+        p.json.getBytes(StandardCharsets.UTF_8))
   }
 
   override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
