@@ -49,9 +49,12 @@ object BenchExtra {
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
 
     if (warm) {
+      // looked up outside the try: a renamed query fails here, at start,
+      // instead of silently dropping the warmup
+      val shingleWarmup = SparkEntry.queries("q_minhash_pairs")
       try { SparkEntry.entry(spark).count(); () }
       catch { case e: Throwable => System.err.println(s"[extra] warmup failed: $e") }
-      try { SparkEntry.queries("q_minhash_pairs")(spark, sfDir).count(); () }
+      try { shingleWarmup(spark, sfDir).count(); () }
       catch { case e: Throwable => System.err.println(s"[extra] shingle warmup failed: $e") }
     }
 

@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -36,11 +36,41 @@ object Compaction {
     * deterministically (see MergeOptions.foldAsync) */
   @volatile private[graft] var testDelayBeforeFoldCommitMs: Long = 0L
 
-  /** Write encoding for maintenance rewrites — matches the merge default
-    * (lz4, no dictionary): measured decode-at-width rationale at
-    * [[graft.merge.MergeOptions.parquetCodec]]. */
+  /** Parquet encoding of every file the engine writes (merge deltas, CoW
+    * rewrites, compaction, folds): lz4 WITHOUT dictionary encoding, from
+    * width-interleaved A/B on the bench corpus (19M transcript rows, tmpfs):
+    * the epoch shape (scan -> hash dedup -> encode) ran 4.1-4.3s at 32 cores
+    * with lz4/no-dict vs 4.9-6.5s with snappy/dict, and no worse at 8 cores —
+    * snappy decode and dictionary bit-unpacking are memory-LATENCY-bound
+    * random access that throttles hardest at wide parallelism, while lz4's
+    * sequential decode scales with cores. Dictionary off because transcript
+    * text is high-cardinality (dictionary pages fall back anyway and the
+    * probe pays their indirection); zstd traded ~40% smaller files for
+    * slower wide-width decode — the right choice for cold storage tiers, not
+    * the hot ingest path. */
   val WriteCodec = "lz4"
   val WriteDictionary = false
+
+  /** Write `df` to `outDir` in the encoding above. */
+  private[graft] def writeParquet(df: DataFrame, outDir: String): Unit =
+    df.write.mode("overwrite")
+      .option("compression", WriteCodec)
+      .option("parquet.enable.dictionary", WriteDictionary.toString)
+      .parquet(outDir)
+
+  /** Output file count for a rewrite of `estRows` rows: target-sized files,
+    * floored at 2x cluster parallelism while files stay above
+    * `minRowsPerFile`. With few/large target files the sort+write would
+    * otherwise run as 1-2 tasks and serialize the job; the 2x (two task
+    * waves per stage) smooths per-task stragglers — a single-wave stage
+    * finishes with its SLOWEST task, a real tail cost on shared nodes. */
+  private[graft] def outputFiles(spark: SparkSession, estRows: Long,
+      targetRowsPerFile: Long, minRowsPerFile: Long): Int = {
+    val bySize = (estRows + targetRowsPerFile - 1) / targetRowsPerFile
+    val byPar = math.min(2L * spark.sparkContext.defaultParallelism,
+      estRows / minRowsPerFile)
+    math.max(1L, math.max(bySize, byPar)).toInt
+  }
 
   /**
    * Rewrite all files smaller than `smallFileRows` (plus nothing else) into
@@ -68,13 +98,10 @@ object Compaction {
     val newVersion = snap.version + 1
     val outDir = table.newDataDir(newVersion)
 
-    spark.read.schema(schema).parquet(small.map(_.path): _*)
+    writeParquet(spark.read.schema(schema).parquet(small.map(_.path): _*)
       .repartitionByRange(nOut, keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols.map(col) :+ col(LakeTable.LsnCol)): _*)
-      .write.mode("overwrite")
-      .option("compression", Compaction.WriteCodec)
-      .option("parquet.enable.dictionary", Compaction.WriteDictionary.toString)
-      .parquet(outDir)
+      .sortWithinPartitions((keyCols.map(col) :+ col(LakeTable.LsnCol)): _*),
+      outDir)
 
     val newFiles = writtenStats(spark, table, outDir, newVersion, delta = false)
     table.commitChange(snap, snap.schemaJson, small.map(_.path).toSet, newFiles, None)
@@ -95,7 +122,7 @@ object Compaction {
     * exchange skips repartitionByRange's whole-input boundary-sampling scan,
     * folding in one pass over the data.
     *
-    * `scoped` (default true): fold deltas only into the BASE files whose key
+    * The fold is scoped: deltas fold only into the BASE files whose key
     * range intersects the UNION of the per-delta key intervals (sorted and
     * merged, membership by binary search), carrying the rest of the base
     * over by reference — a key-local delta burst (one hot tenant, one
@@ -114,8 +141,7 @@ object Compaction {
       table: LakeTable,
       targetRowsPerFile: Long = 500000L,
       minRowsPerFile: Long = 10000L,
-      rangePlace: Boolean = true,
-      scoped: Boolean = true): CompactionStats = {
+      rangePlace: Boolean = true): CompactionStats = {
     val t0 = System.nanoTime()
     LocalFs.install(spark)
     val snap = table.currentSnapshot
@@ -125,7 +151,7 @@ object Compaction {
     val baseFiles = allFiles.filterNot(_.delta)
     val deltaBoundsKnown = deltas.forall(f => f.minKey != null && f.maxKey != null)
     val (touchedBase, carriedBase) =
-      if (!scoped || !deltaBoundsKnown) (baseFiles, Nil)
+      if (!deltaBoundsKnown) (baseFiles, Nil)
       else {
         // union of per-delta intervals: sort by lo, merge overlaps — after
         // the merge the intervals are disjoint and both endpoints are
@@ -155,12 +181,7 @@ object Compaction {
     val all = touchedBase ++ deltas
     val schema = snap.schema
     val estRows = all.map(_.rows).sum
-    val bySize = (estRows + targetRowsPerFile - 1) / targetRowsPerFile
-    // 2x parallelism = two task waves, same rationale as the merge write:
-    // a single-wave fold finishes with its slowest task
-    val byPar = math.min(2L * spark.sparkContext.defaultParallelism,
-      estRows / minRowsPerFile)
-    val nOut = math.max(1L, math.max(bySize, byPar)).toInt
+    val nOut = outputFiles(spark, estRows, targetRowsPerFile, minRowsPerFile)
     val newVersion = snap.version + 1
     val outDir = table.newDataDir(newVersion)
 
@@ -175,22 +196,15 @@ object Compaction {
         graft.merge.MergeInto.resolveSortDedup(raw, snap.keyCols, nOut)
       else
         graft.merge.MergeInto.resolveHashDedup(raw, snap.keyCols, nOut)
-    folded.write.mode("overwrite")
-      .option("compression", Compaction.WriteCodec)
-      .option("parquet.enable.dictionary", Compaction.WriteDictionary.toString)
-      .parquet(outDir)
+    writeParquet(folded, outDir)
 
     val newFiles = writtenStats(spark, table, outDir, newVersion, delta = false)
     if (testDelayBeforeFoldCommitMs > 0) Thread.sleep(testDelayBeforeFoldCommitMs)
     // removed-key envelope lets the commit skip parsing manifests that cannot
     // contain a removed path (same contract as the merge's CoW commit)
-    val removedBounds =
-      if (all.forall(f => f.minKey != null && f.maxKey != null))
-        Some((all.map(_.minKey).min(KeyCodec.ordering),
-          all.map(_.maxKey).max(KeyCodec.ordering)))
-      else None
     val committed = table.commitChange(snap, snap.schemaJson,
-      all.map(_.path).toSet, newFiles, None, removedBounds = removedBounds)
+      all.map(_.path).toSet, newFiles, None,
+      removedBounds = LakeTable.keyEnvelope(all))
     val stats = CompactionStats(allFiles.size,
       carriedBase.size + newFiles.size, estRows,
       (System.nanoTime() - t0) / 1000000L)

@@ -96,11 +96,10 @@ final case class ManifestRef(
 object ManifestRef {
   def of(name: String, files: List[DataFile]): ManifestRef = {
     val deltas = files.filter(_.delta)
-    val known = files.forall(f => f.minKey != null && f.maxKey != null)
+    val envelope = LakeTable.keyEnvelope(files)
     ManifestRef(name, files.size, files.map(_.rows).sum,
       deltas.size, deltas.map(_.rows).sum,
-      if (known && files.nonEmpty) files.map(_.minKey).min(KeyCodec.ordering) else null,
-      if (known && files.nonEmpty) files.map(_.maxKey).max(KeyCodec.ordering) else null,
+      envelope.map(_._1).orNull, envelope.map(_._2).orNull,
       if (files.nonEmpty) files.map(_.maxLsn).max else -1L)
   }
 }
@@ -145,6 +144,15 @@ object LakeTable {
     * be associative and final state would depend on when compaction ran. */
   val DelLsnCol = "_del_lsn"
   val MetaCols: Seq[String] = Seq(LsnCol, DeletedCol, CellLsnCol, DelLsnCol)
+
+  /** Encoded (min, max) key envelope of `files`; None when there are none or
+    * any bound is unknown. */
+  def keyEnvelope(files: Seq[DataFile]): Option[(String, String)] =
+    if (files.nonEmpty && files.forall(f => f.minKey != null && f.maxKey != null))
+      Some((files.map(_.minKey).min(KeyCodec.ordering),
+        files.map(_.maxKey).max(KeyCodec.ordering)))
+    else None
+
   /** current snapshot-JSON layout (3 = manifest entries carry per-manifest
     * stats + key range for parse-free commits and manifest-level pruning;
     * 2 was bare manifest names — upgradable via [[stampFormatVersion]];

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.lake.{Compaction, DataFile, KeyCodec, LakeTable, LocalFs, SchemaMerge, Snapshot}
+import graft.model.Schemas
 
 /**
  * Key-partitioned MERGE INTO — the Spark-native replacement for the
@@ -24,14 +25,16 @@ import graft.lake.{Compaction, DataFile, KeyCodec, LakeTable, LocalFs, SchemaMer
  *   2. Conflict resolution: because the rule is max-LSN-wins with a globally
  *      unique lsn, MERGE degenerates to an associative/commutative arg-max
  *      fold — never a full-outer join (an SMJ would shuffle both sides and
- *      cannot be broadcast). Default shape is `resolveSortDedup`: ONE range
- *      exchange that simultaneously places rows for tight per-file key
- *      bounds, clusters keys for the dedup window (no second exchange —
- *      RangePartitioning satisfies the window's ClusteredDistribution), and
+ *      cannot be broadcast). Every epoch resolves with ONE exchange plus an
+ *      in-partition window dedup: a hash exchange for MoR delta writes
+ *      (`resolveHashDedup`), a range exchange for CoW base rewrites
+ *      (`resolveSortDedup`) that simultaneously places rows for tight
+ *      per-file key bounds and clusters keys for the dedup window
+ *      (RangePartitioning satisfies the window's ClusteredDistribution) and
  *      feeds WindowGroupLimit so losing rows drop before full evaluation.
- *      The hash-aggregate form (`resolveMaxLsn`, map-side partial combine +
- *      optional skew salting) remains selectable for high-duplication
- *      batches.
+ *      Both partition on the FULL key tuple, so a hot conv_id spreads across
+ *      its turns. The hash arg-max aggregate (`resolveMaxLsn`) serves
+ *      read-time delta folds.
  *   3. Deletes write tombstones (_deleted = true, _lsn = delete's lsn) so a
  *      late-arriving lower-lsn insert can never resurrect a deleted key —
  *      required for replay determinism under out-of-order delivery.
@@ -46,47 +49,16 @@ import graft.lake.{Compaction, DataFile, KeyCodec, LakeTable, LocalFs, SchemaMer
  */
 final case class MergeOptions(
     keyCols: Seq[String] = Seq("conv_id", "turn_idx"),
-    lsnCol: String = "lsn",
-    opCol: String = "op",
-    deleteOp: String = "D",
-    saltBuckets: Int = 16,
-    /** salted pre-reduce engages when one first-key exceeds this many rows */
-    saltRowThreshold: Long = 2000000L,
     targetRowsPerFile: Long = 500000L,
     /** parallelism floor only applies while files stay above this size */
     minRowsPerFile: Long = 10000L,
-    /** max #distinct first-key values collected to the driver for pruning.
-      * Above it, pruning falls back to min/max range intersection: a batch
-      * touching that many keys almost certainly intersects every file anyway,
-      * and the driver-side collect becomes the epoch's serial bottleneck. */
-    collectKeysLimit: Int = 20000,
-    /** Conflict-resolution plan shape:
-      *  - [[ResolveStrategy.SortDedup]] (default): ONE shuffle — range-
-      *    partition the raw union on the key, sort within partitions by
-      *    (key, lsn desc), keep row_number()==1. The range partitioning
-      *    satisfies the window's ClusteredDistribution so no second
-      *    exchange appears; the write needs no extra repartition since the
-      *    data is already range-placed and sorted.
-      *  - [[ResolveStrategy.Agg]]: hash arg-max aggregate (map-side partial
-      *    combine) followed by a range repartition for the write — TWO
-      *    shuffles, plus the sampling job re-executes the aggregate unless
-      *    `checkpointResolved` is set. Wins only when batches carry many
-      *    updates per key (combine collapses them map-side before the
-      *    shuffle). */
-    resolveStrategy: ResolveStrategy = ResolveStrategy.SortDedup,
-    /** Agg strategy only: localCheckpoint the resolved frame so the range
-      * sampling job reads materialized blocks instead of re-running the
-      * aggregate. Trades executor-loss recoverability (safe here: the epoch
-      * ledger makes a retried micro-batch idempotent) for halving the agg
-      * work. */
-    checkpointResolved: Boolean = true,
     /** Write amplification mode.
       *  - [[MergeMode.Cow]] (copy-on-write): touched base files are rewritten
       *    each epoch. Reads are resolve-free; per-epoch write cost is
       *    O(touched table data) — with uniformly distributed update keys that
       *    is the WHOLE table per epoch, which at 100 TB is untenable.
       *  - [[MergeMode.Mor]] (merge-on-read): the epoch writes ONLY the batch
-      *    (resolved within itself, range-placed, key-sorted) as delta files;
+      *    (resolved within itself, key-clustered) as delta files;
       *    reads fold base+deltas by max-lsn; `Compaction.foldDeltas` (invoked
       *    automatically past the thresholds below) folds deltas into the base.
       *    Per-epoch write cost is O(batch) — the streaming-ingest default. */
@@ -105,20 +77,6 @@ final case class MergeOptions(
       * and worse on wider clusters. 1024 files = tens of epochs of fan-in,
       * with the row-ratio trigger remaining the primary policy. */
     morCompactMaxDeltaFiles: Int = 1024,
-    /** Parquet compression for the files this engine writes (delta + base).
-      * Default lz4 WITHOUT dictionary encoding, from width-interleaved A/B on
-      * the bench corpus (19M transcript rows, tmpfs): the epoch shape
-      * (scan -> hash dedup -> encode) ran 4.1-4.3s at 32 cores with
-      * lz4/no-dict vs 4.9-6.5s with snappy/dict, and no worse at 8 cores —
-      * snappy decode and dictionary bit-unpacking are memory-LATENCY-bound
-      * random access that throttles hardest at wide parallelism, while lz4's
-      * sequential decode scales with cores. Dictionary off because transcript
-      * text is high-cardinality (dictionary pages fall back anyway and the
-      * probe pays their indirection); zstd traded ~40%% smaller files for
-      * slower wide-width decode — the right choice for cold storage tiers,
-      * not the hot ingest path. */
-    parquetCodec: String = "lz4",
-    parquetDictionary: Boolean = false,
     /** Sparse tables only: plan shape for partial-column resolution.
       *  - [[ResolveStrategy.SortDedup]] (default): clustered-window fold
       *    ([[MergeInto.resolveSparse]]) — one exchange that doubles as the
@@ -130,16 +88,6 @@ final case class MergeOptions(
       *    shuffle partitioning. Applies to MoR epochs (read-time folds and
       *    compaction keep the window form's range placement). */
     sparseResolve: ResolveStrategy = ResolveStrategy.SortDedup,
-    /** MoR: resolve the batch within itself before writing delta files
-      * (default). With `false` the epoch writes the normalized batch AS
-      * SCANNED — no shuffle, no sort: a pure map job (scan -> project ->
-      * encode) that scales near-perfectly with cores, at the cost of delta
-      * files carrying intra-batch superseded row versions (read-time and
-      * fold-time resolution are unchanged — the max-lsn fold is total, so
-      * correctness is identical; deltas are just larger when one batch
-      * updates the same key repeatedly). The right trade when batches are
-      * mostly unique keys and folds are frequent. */
-    morResolveWithinBatch: Boolean = true,
     /** MoR: run trigger-fired delta folds OUT-OF-BAND on a maintenance
       * thread instead of inline in the epoch. An inline fold reads
       * base+deltas in full — at 100 TB that is a multi-hour job executed
@@ -155,6 +103,7 @@ final case class MergeOptions(
       * deterministic; the streaming ingest config turns it on. */
     foldAsync: Boolean = false)
 
+/** Sparse-table resolution plan shape, see [[MergeOptions.sparseResolve]]. */
 sealed trait ResolveStrategy
 object ResolveStrategy {
   case object SortDedup extends ResolveStrategy
@@ -198,10 +147,17 @@ object MergeInto {
   private val lastBatchRows =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
 
+  /** max #distinct first-key values collected to the driver for pruning.
+    * Above it, pruning falls back to min/max range intersection: a batch
+    * touching that many keys almost certainly intersects every file anyway,
+    * and the driver-side collect becomes the epoch's serial bottleneck. */
+  private val CollectKeysLimit = 20000
+
   /**
    * Merge one change batch into the table under (ckptId, epochId) idempotence.
-   * Batch columns: opCol, lsnCol + payload columns (superset-merged into the
-   * table schema; missing payload columns read as null).
+   * Batch columns: [[Schemas.OpCol]], [[Schemas.LsnCol]] + payload columns
+   * (superset-merged into the table schema; missing payload columns read as
+   * null).
    */
   def merge(
       spark: SparkSession,
@@ -230,7 +186,7 @@ object MergeInto {
       s"merge key mismatch: table has ${snap.keyCols}, options say ${opts.keyCols}")
     val keyCols = snap.keyCols
     val batchPayload = StructType(batch.schema.fields.filterNot(f =>
-      f.name == opts.opCol || f.name == opts.lsnCol))
+      f.name == Schemas.OpCol || f.name == Schemas.LsnCol))
     val mergedPayload = SchemaMerge.merge(tablePayload(snap), batchPayload)
     val storedSchema =
       StructType(mergedPayload.fields.toSeq ++ LakeTable.metaFields(snap.sparse))
@@ -239,7 +195,7 @@ object MergeInto {
 
     // Normalize the batch to stored shape: payload (nulls for D rows except
     // keys, nulls for columns the batch doesn't carry), _lsn, _deleted.
-    val isDelete = col(opts.opCol) === lit(opts.deleteOp)
+    val isDelete = col(Schemas.OpCol) === lit(Schemas.DeleteOp)
     val batchCols = batch.columns.toSet
     val payloadExprs = mergedPayload.fields.toSeq.map { f =>
       if (!batchCols.contains(f.name)) lit(null).cast(f.dataType).as(f.name)
@@ -252,15 +208,10 @@ object MergeInto {
     val sparseCols =
       if (!snap.sparse) Nil
       else Seq(
-        map_filter(
-          map_from_arrays(
-            array(nonKeyPayload.map(lit): _*),
-            array(nonKeyPayload.map { c =>
-              if (!batchCols.contains(c)) lit(null).cast(LongType)
-              else when(!isDelete && col(c).isNotNull,
-                col(opts.lsnCol).cast(LongType))
-            }: _*)),
-          (_, v) => v.isNotNull).as(LakeTable.CellLsnCol),
+        cellLsnMap(nonKeyPayload, nonKeyPayload.map { c =>
+          if (!batchCols.contains(c)) lit(null).cast(LongType)
+          else when(!isDelete && col(c).isNotNull, col(Schemas.LsnCol).cast(LongType))
+        }).as(LakeTable.CellLsnCol),
         // raw events carry no fold history; the delete watermark appears only
         // on FOLDED rows (resolveSparse sets it) — see LakeTable.DelLsnCol
         lit(null).cast(LongType).as(LakeTable.DelLsnCol))
@@ -268,17 +219,17 @@ object MergeInto {
     // few jobs below; building a columnar cache of it costs multiples of the
     // recompute (measured) and is a serial, cores-insensitive fixed cost.
     val bNorm = batch.select(payloadExprs ++ Seq(
-      col(opts.lsnCol).cast(LongType).as(LsnCol),
+      col(Schemas.LsnCol).cast(LongType).as(LsnCol),
       isDelete.as(DeletedCol)) ++ sparseCols: _*)
 
     {
       // --- batch stats -------------------------------------------------------
       // Pass 1 (always, global): row count, lsn bounds, delete count, approx
       // key cardinality. Pass 2 (only when the key set is small enough to be
-      // useful): exact per-key counts collected for manifest file pruning and
-      // the skew signal. A batch touching more than collectKeysLimit keys
-      // intersects virtually every file anyway, so the keyed pass (a full
-      // hash aggregate + a large driver collect) would be pure overhead.
+      // useful): exact per-key counts collected for manifest file pruning. A
+      // batch touching more than CollectKeysLimit keys intersects virtually
+      // every file anyway, so the keyed pass (a full hash aggregate + a large
+      // driver collect) would be pure overhead.
       val k1 = keyCols.head
       val k1Type = bNorm.schema(k1).dataType
       val prunable = KeyCodec.supports(k1Type)
@@ -293,14 +244,14 @@ object MergeInto {
       //
       // CoW stats run as ONE keyed aggregation job (guide §1.2/§2.4 — fewer
       // jobs, not faster jobs): groupBy(k1) with per-key (count, lsn bounds,
-      // delete count), collected under collectKeysLimit. The global stats
+      // delete count), collected under CollectKeysLimit. The global stats
       // (row count, lsn bounds, delete count, key envelope) fold from the
       // per-key rows on the driver — exactly, since the groups partition the
       // batch — replacing the former two serial jobs (global agg with
       // approx_count_distinct, then the keyed collect) with one. Only a batch
       // whose k1 cardinality exceeds the limit pays a second, global-agg job
       // (such a batch touches ~every file anyway, so the keyed pass being
-      // wasted is the pre-existing trade — see collectKeysLimit).
+      // wasted is the pre-existing trade — see CollectKeysLimit).
       val morObs = if (isMor) Some(new org.apache.spark.sql.Observation()) else None
       var bRows = -1L
       var bMinLsn0 = -1L
@@ -309,7 +260,6 @@ object MergeInto {
       var keyLo: String = null
       var keyHi: String = null
       var keySet: Option[Array[String]] = None
-      var maxKeyCount = -1L
       if (!isMor) {
         def globalStats(): Unit = {
           val r = bNorm.agg(count(lit(1)), min(col(LsnCol)), max(col(LsnCol)),
@@ -322,14 +272,13 @@ object MergeInto {
           bMaxLsn0 = if (r.isNullAt(2)) -1L else r.getLong(2)
           bDeletes0 = if (r.isNullAt(3)) 0L else r.getLong(3)
           keyLo = enc(4); keyHi = enc(5)
-          keySet = None; maxKeyCount = bRows
         }
         if (prunable) {
           val keyRows = bNorm.groupBy(col(k1)).agg(count(lit(1)).as("n"),
             min(col(LsnCol)).as("mn"), max(col(LsnCol)).as("mx"),
             sum(when(col(DeletedCol), 1L).otherwise(0L)).as("d"))
-            .limit(opts.collectKeysLimit + 1).collect()
-          if (keyRows.length > opts.collectKeysLimit) globalStats()
+            .limit(CollectKeysLimit + 1).collect()
+          if (keyRows.length > CollectKeysLimit) globalStats()
           else {
             bRows = keyRows.map(_.getLong(1)).sum
             val lsnMins = keyRows.filterNot(_.isNullAt(2)).map(_.getLong(2))
@@ -342,14 +291,10 @@ object MergeInto {
               .sorted(KeyCodec.ordering)
             keyLo = if (encoded.isEmpty) null else encoded.head
             keyHi = if (encoded.isEmpty) null else encoded.last
-            if (nonNull.length < keyRows.length) {
-              // null keys present: no exact prune set (a null key has no
-              // encoding), same fallback as before
-              keySet = None; maxKeyCount = bRows
-            } else {
-              keySet = Some(encoded)
-              maxKeyCount = if (keyRows.isEmpty) 0L else keyRows.map(_.getLong(1)).max
-            }
+            // an exact prune set only without null keys (a null key has no
+            // encoding); with one, pruning uses the range, as after the
+            // global pass
+            if (nonNull.length == keyRows.length) keySet = Some(encoded)
           }
         } else globalStats()
       }
@@ -370,18 +315,13 @@ object MergeInto {
       val touched: List[DataFile] = opts.mode match {
         case MergeMode.Mor => Nil
         case MergeMode.Cow =>
-          val envelope: Option[(String, String)] = keySet match {
-            case Some(sorted) if sorted.nonEmpty => Some((sorted.head, sorted.last))
-            case Some(_) => None
-            case None if prunable && keyLo != null && keyHi != null =>
-              Some((keyLo, keyHi))
-            case None => None
-          }
-          val candidates = envelope match {
-            case Some((lo, hi)) => table.filesIntersecting(snap, lo, hi)
-            case None => table.files(snap) // no usable bounds: all candidates
-          }
-          pruneFiles(candidates, prunable, keySet, keyLo, keyHi)._1
+          // (keyLo, keyHi) is the exact key set's first and last key when
+          // one was collected
+          val candidates =
+            if (prunable && keyLo != null && keyHi != null)
+              table.filesIntersecting(snap, keyLo, keyHi)
+            else table.files(snap) // no usable bounds: all candidates
+          pruneFiles(candidates, prunable, keySet, keyLo, keyHi)
       }
       val touchedRows = touched.map(_.rows).sum
       // untouched = table minus touched, by REF arithmetic (no listing)
@@ -390,13 +330,9 @@ object MergeInto {
 
       val newVersion = snap.version + 1
       val outDir = table.newDataDir(newVersion)
-      // File-count target, floored at 2x cluster parallelism: with few/large
-      // target files the final sort+write would otherwise run as 1-2 tasks
-      // and serialize the whole epoch; the 2x (two task waves per stage)
-      // smooths per-task stragglers — a single-wave stage finishes with its
-      // SLOWEST task, a real tail cost on shared/heterogeneous nodes.
-      // CoW bounds the floor by minRowsPerFile so tiny epochs don't spray
-      // micro-files; MoR has no pre-write row count (by design, see the
+      // File-count target (Compaction.outputFiles: floored at 2x cluster
+      // parallelism, bounded by minRowsPerFile so tiny epochs don't spray
+      // micro-files). MoR has no pre-write row count (by design, see the
       // stats pass) and instead sizes from the PREVIOUS epoch's observed
       // rows — steady streams see stable batch sizes, so this converges
       // after one epoch. The very first epoch (or the first after a JVM
@@ -407,12 +343,8 @@ object MergeInto {
       // 2x-cores micro-files whose footer stats + manifest entries dominated
       // the epoch (measured: 64 files / ~600 ms write for a 5k-row seed
       // epoch vs 1 file / ~250 ms once the estimator kicks in).
-      def sized(estRows: Long): Int = {
-        val bySize = (estRows + opts.targetRowsPerFile - 1) / opts.targetRowsPerFile
-        val byPar = math.min(2L * spark.sparkContext.defaultParallelism,
-          estRows / opts.minRowsPerFile)
-        math.max(1L, math.max(bySize, byPar)).toInt
-      }
+      def sized(estRows: Long): Int = Compaction.outputFiles(spark, estRows,
+        opts.targetRowsPerFile, opts.minRowsPerFile)
       val nOut = if (isMor) {
         Option(lastBatchRows.get(ckptId)).map(_.longValue()).filter(_ > 0)
           .map(sized)
@@ -424,7 +356,6 @@ object MergeInto {
       }
 
       val tWrite = System.nanoTime()
-      val isDelta = opts.mode == MergeMode.Mor
       // MoR telemetry rides the write job (see stats pass above)
       val obsNorm = morObs.map(o => bNorm.observe(o,
         count(lit(1)).as("rows"),
@@ -449,10 +380,6 @@ object MergeInto {
               resolveSparse(obsNorm.repartition(nOut, keyCols.map(col): _*),
                 keyCols, nonKeyPayload)
           }
-        case MergeMode.Mor if !opts.morResolveWithinBatch =>
-          // shuffle-free epoch: the normalized batch goes straight to delta
-          // files in scan order (see MergeOptions.morResolveWithinBatch)
-          obsNorm
         case MergeMode.Mor =>
           // merge-on-read: write ONLY the batch, resolved within itself
           // (cross-epoch conflicts fold at read / compaction time). Hash
@@ -460,17 +387,6 @@ object MergeInto {
           // scanned exactly once per epoch — delta files are folded soon
           // anyway, so tight range bounds buy little there.
           resolveHashDedup(obsNorm, keyCols, nOut)
-        case MergeMode.Cow if snap.sparse =>
-          val target =
-            if (touched.isEmpty)
-              spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                storedSchema)
-            else
-              spark.read.schema(storedSchema).parquet(touched.map(_.path): _*)
-          resolveSparse(
-            target.unionByName(bNorm)
-              .repartitionByRange(nOut, keyCols.map(col): _*),
-            keyCols, nonKeyPayload)
         case MergeMode.Cow =>
           val target =
             if (touched.isEmpty)
@@ -479,35 +395,17 @@ object MergeInto {
             else
               spark.read.schema(storedSchema).parquet(touched.map(_.path): _*)
           val union = target.unionByName(bNorm)
-          opts.resolveStrategy match {
-            case ResolveStrategy.SortDedup =>
-              // One shuffle: the range exchange both resolves conflicts
-              // (window over the in-partition sort) and places rows for tight
-              // per-file key bounds. The sampling job only re-runs the cheap
-              // scan+project union, never an aggregate.
-              resolveSortDedup(union, keyCols, nOut)
-            case ResolveStrategy.Agg =>
-              // Salted pre-reduce only under real skew: partial hash
-              // aggregation already combines hot keys map-side, so the second
-              // aggregation level only pays off when one key dominates.
-              val salt =
-                if (maxKeyCount > opts.saltRowThreshold) opts.saltBuckets else 1
-              val resolved0 = resolveMaxLsn(union, keyCols, salt)
-              // localCheckpoint (RDD blocks, NOT columnar cache — measured far
-              // cheaper) so repartitionByRange's sampling job doesn't
-              // re-execute the aggregate.
-              val resolved =
-                if (opts.checkpointResolved) resolved0.localCheckpoint()
-                else resolved0
-              resolved
-                .repartitionByRange(nOut, keyCols.map(col): _*)
-                .sortWithinPartitions(keyCols.map(col) :+ col(LsnCol): _*)
-          }
+          if (snap.sparse)
+            resolveSparse(union.repartitionByRange(nOut, keyCols.map(col): _*),
+              keyCols, nonKeyPayload)
+          else
+            // One shuffle: the range exchange both resolves conflicts
+            // (window over the in-partition sort) and places rows for tight
+            // per-file key bounds. The sampling job only re-runs the cheap
+            // scan+project union, never an aggregate.
+            resolveSortDedup(union, keyCols, nOut)
       }
-      toWrite.write.mode("overwrite")
-        .option("compression", opts.parquetCodec)
-        .option("parquet.enable.dictionary", opts.parquetDictionary.toString)
-        .parquet(outDir)
+      Compaction.writeParquet(toWrite, outDir)
       val writeMs = millisSince(tWrite)
       // collect the ridden-along MoR telemetry (the write action finished,
       // so get() returns immediately)
@@ -542,22 +440,17 @@ object MergeInto {
       // --- per-file stats from parquet footers (driver-side, no re-scan) ----
       val tFooter = System.nanoTime()
       val newFiles = FileStats
-        .fromFooters(spark, outDir, k1, k1Type, newVersion, isDelta)
-        .getOrElse(FileStats.fromScan(spark, outDir, storedSchema, k1, newVersion, isDelta))
+        .fromFooters(spark, outDir, k1, k1Type, newVersion, isMor)
+        .getOrElse(FileStats.fromScan(spark, outDir, storedSchema, k1, newVersion, isMor))
       val outputRows = newFiles.map(_.rows).sum + untouchedRows
       val footerMs = millisSince(tFooter)
 
       // removed-key envelope: lets the commit skip parsing manifests that
       // cannot contain a removed path (all touched bounds known => envelope)
-      val removedBounds =
-        if (touched.nonEmpty && touched.forall(f => f.minKey != null && f.maxKey != null))
-          Some((touched.map(_.minKey).min(KeyCodec.ordering),
-            touched.map(_.maxKey).max(KeyCodec.ordering)))
-        else None
       val tCommit = System.nanoTime()
       val committed = table.commitChange(snap, storedSchema.json,
         touched.map(_.path).toSet, newFiles, Some((ckptId, epochId)),
-        removedBounds = removedBounds)
+        removedBounds = LakeTable.keyEnvelope(touched))
       val commitMs = millisSince(tCommit)
 
       // committed.version, not newVersion: a disjoint-writer commit retry
@@ -570,7 +463,7 @@ object MergeInto {
 
       // --- MoR delta maintenance: fold past the thresholds (trigger math
       // rides the committed snapshot's manifest refs — no file listing) -----
-      if (isDelta) {
+      if (isMor) {
         val deltaFiles = committed.manifests.map(_.deltaFiles).sum
         val deltaRows = committed.manifests.map(_.deltaRows).sum
         val baseRows = committed.manifests.map(_.rows).sum - deltaRows
@@ -581,15 +474,12 @@ object MergeInto {
         // fold, the file-count trigger bounds read fan-in on its own.
         if (deltaFiles > opts.morCompactMaxDeltaFiles ||
             (baseRows > 0 && deltaRows > baseRows * opts.morCompactDeltaRatio)) {
-          if (opts.foldAsync)
-            submitMaintenance(table.dir) { () =>
-              Compaction.foldDeltas(spark, table,
-                opts.targetRowsPerFile, opts.minRowsPerFile)
-              ()
-            }
-          else
-            Compaction.foldDeltas(spark, table, opts.targetRowsPerFile,
-              opts.minRowsPerFile)
+          def fold(): Unit = {
+            Compaction.foldDeltas(spark, table, opts.targetRowsPerFile, opts.minRowsPerFile)
+            ()
+          }
+          if (opts.foldAsync) { submitMaintenance(table.dir)(() => fold()); () }
+          else fold()
         }
       }
       stats
@@ -701,10 +591,7 @@ object MergeInto {
   def resolveSparse(rows0: DataFrame, keyCols: Seq[String],
       payloadCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // tolerate inputs from before the _del_lsn column existed (reads as null)
-    val rows =
-      if (rows0.columns.contains(LakeTable.DelLsnCol)) rows0
-      else rows0.withColumn(LakeTable.DelLsnCol, lit(null).cast(LongType))
+    val rows = withDelLsn(rows0)
     val kc = keyCols.map(col)
     val wFull = Window.partitionBy(kc: _*)
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -722,11 +609,7 @@ object MergeInto {
       .select((rows.columns.map(col).toSeq :+ col("_ld")) ++ valCols ++ lsnCols: _*)
       .withColumn("_rn", row_number().over(wOrd))
       .filter(col("_rn") === 1)
-    val cellMap = map_filter(
-      map_from_arrays(
-        array(payloadCols.map(lit): _*),
-        array(payloadCols.map(c => col(s"_l_$c")): _*)),
-      (_, v) => v.isNotNull)
+    val cellMap = cellLsnMap(payloadCols, payloadCols.map(c => col(s"_l_$c")))
     val outCols =
       rows.columns.toSeq.map {
         case c if payloadCols.contains(c) => col(s"_v_$c").as(c)
@@ -757,9 +640,7 @@ object MergeInto {
    */
   def resolveSparseAgg(rows0: DataFrame, keyCols: Seq[String],
       payloadCols: Seq[String]): DataFrame = {
-    val rows =
-      if (rows0.columns.contains(LakeTable.DelLsnCol)) rows0
-      else rows0.withColumn(LakeTable.DelLsnCol, lit(null).cast(LongType))
+    val rows = withDelLsn(rows0)
     graft.functions.GraftFunctions.register(rows.sparkSession)
     def amax(v: Column, o: Column): Column =
       call_function(graft.functions.GraftFunctions.MaxRowByLongName, v, o)
@@ -776,11 +657,7 @@ object MergeInto {
     val g = rows.groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
     def wm = coalesce(col("_wm"), lit(Long.MinValue))
     def maskedLsn(c: String) = when(col(s"_al_$c") > wm, col(s"_al_$c"))
-    val cellMap = map_filter(
-      map_from_arrays(
-        array(payloadCols.map(lit): _*),
-        array(payloadCols.map(maskedLsn): _*)),
-      (_, v) => v.isNotNull)
+    val cellMap = cellLsnMap(payloadCols, payloadCols.map(maskedLsn))
     val outCols = rows.columns.toSeq.map {
       case c if payloadCols.contains(c) =>
         when(maskedLsn(c).isNotNull, col(s"_av_$c").getField("v")).as(c)
@@ -791,6 +668,28 @@ object MergeInto {
       case c => col(c) // key columns: grouping output
     }
     g.select(outCols: _*)
+  }
+
+  /** A `_cell_lsn` map: payload column name -> lsn, null lsns left out. */
+  private def cellLsnMap(payloadCols: Seq[String], lsns: Seq[Column]): Column =
+    map_filter(map_from_arrays(array(payloadCols.map(lit): _*), array(lsns: _*)),
+      (_, v) => v.isNotNull)
+
+  /** tolerate inputs from before the _del_lsn column existed (reads as null) */
+  private def withDelLsn(rows: DataFrame): DataFrame =
+    if (rows.columns.contains(LakeTable.DelLsnCol)) rows
+    else rows.withColumn(LakeTable.DelLsnCol, lit(null).cast(LongType))
+
+  /** Stored-shape rows (payload + `_lsn` [+ `_deleted`]) as a change batch
+    * for [[merge]]: tombstones become deletes, lsns carry through. */
+  def storedAsChanges(stored: DataFrame): DataFrame = {
+    val payloadCols = stored.columns.toSeq.filterNot(LakeTable.MetaCols.contains).map(col)
+    val op =
+      if (!stored.columns.contains(DeletedCol)) lit("U")
+      else when(coalesce(col(DeletedCol), lit(false)), lit(Schemas.DeleteOp))
+        .otherwise(lit("U"))
+    stored.select(payloadCols ++ Seq(
+      col(LsnCol).as(Schemas.LsnCol), op.as(Schemas.OpCol)): _*)
   }
 
   /** The shared in-partition dedup pipeline: both exchanges above satisfy
@@ -807,28 +706,22 @@ object MergeInto {
 
   /**
    * Arg-max fold, optionally salted (two-phase: per (key, salt) pre-reduce,
-   * then per key — exact because max-by-lsn is associative; engaged only
-   * under real skew, see `merge`).
+   * then per key — exact because max-by-lsn is associative). No engine path
+   * salts: the read-time fold and ChangeFeed bootstrap pass 1.
    *
    * Uses the native `max_row_by_long` TypedImperativeAggregate rather than
    * built-in `max_by`: max_by's immutable buffer types force SortAggregate
    * (a per-partition sort of every row on both sides of the shuffle), while
    * the native aggregate runs in ObjectHashAggregateExec with map-side
-   * partial combine. Set `useNative = false` to fall back to max_by (kept
-   * for A/B benchmarking and as the all-built-ins path).
+   * partial combine.
    */
-  def resolveMaxLsn(union: DataFrame, keyCols: Seq[String], saltBuckets: Int,
-      useNative: Boolean = true): DataFrame = {
+  def resolveMaxLsn(union: DataFrame, keyCols: Seq[String], saltBuckets: Int): DataFrame = {
     val all = union.columns.toSeq
     def bt(c: String) = s"`$c`"
     val ev = struct(all.map(col): _*)
-    val argMax: (Column, Column) => Column =
-      if (useNative) {
-        graft.functions.GraftFunctions.register(union.sparkSession)
-        (v, o) => call_function(graft.functions.GraftFunctions.MaxRowByLongName, v, o)
-      } else {
-        (v, o) => max_by(v, o)
-      }
+    graft.functions.GraftFunctions.register(union.sparkSession)
+    def argMax(v: Column, o: Column): Column =
+      call_function(graft.functions.GraftFunctions.MaxRowByLongName, v, o)
     if (saltBuckets <= 1) {
       union.groupBy(keyCols.map(col): _*)
         .agg(argMax(ev, col(LsnCol)).as("_e"))
@@ -844,7 +737,7 @@ object MergeInto {
   }
 
   /**
-   * Split manifest files into (touched, untouched) by first-key bounds, all
+   * The manifest files a batch touches, by first-key bounds, all
    * in KeyCodec's single (UTF-8 byte / numeric) ordering. `keySet` is the
    * batch's exact sorted ENCODED key set when known (collected in the stats
    * pass); otherwise falls back to (keyLo, keyHi) range intersection (also
@@ -856,8 +749,7 @@ object MergeInto {
       prunable: Boolean,
       keySet: Option[Array[String]],
       keyLo: String,
-      keyHi: String): (List[DataFile], List[DataFile]) = {
-    if (files.isEmpty) return (Nil, Nil)
+      keyHi: String): List[DataFile] = {
     def unknownBounds(f: DataFile) = f.minKey == null || f.maxKey == null
     keySet match {
       case Some(sorted) =>
@@ -870,12 +762,12 @@ object MergeInto {
           }
           lo < sorted.length && KeyCodec.compare(sorted(lo), f.maxKey) <= 0
         }
-        files.partition(intersects)
+        files.filter(intersects)
       case None if prunable && keyLo != null && keyHi != null =>
-        files.partition(f => unknownBounds(f) ||
+        files.filter(f => unknownBounds(f) ||
           (KeyCodec.compare(f.maxKey, keyLo) >= 0 && KeyCodec.compare(f.minKey, keyHi) <= 0))
       case None =>
-        (files, Nil) // no usable bounds: every file is touched
+        files // no usable bounds: every file is touched
     }
   }
 

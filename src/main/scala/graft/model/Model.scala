@@ -45,6 +45,14 @@ final case class ChangeEvent(
     tool_meta: Option[String])
 
 object Schemas {
+  /** Change-event envelope columns every merge input carries: the op
+    * (I/U/D) and the event lsn. The table stores the lsn as
+    * [[graft.lake.LakeTable.LsnCol]]. */
+  val OpCol = "op"
+  val LsnCol = "lsn"
+  /** `OpCol` value of a delete; every other op is an upsert. */
+  val DeleteOp = "D"
+
   /** Payload (table) columns, in canonical order. */
   val turn: StructType = StructType(Seq(
     StructField("conv_id", StringType, nullable = false),
@@ -56,8 +64,8 @@ object Schemas {
 
   /** Change-event envelope before schema evolution (no tool_meta). */
   val changeV1: StructType = StructType(
-    StructField("op", StringType, nullable = false) +:
-    StructField("lsn", LongType, nullable = false) +:
+    StructField(OpCol, StringType, nullable = false) +:
+    StructField(LsnCol, LongType, nullable = false) +:
     turn.fields.toSeq)
 
   /** Change-event envelope after evolution (adds tool_meta). */

@@ -58,7 +58,7 @@ object CdcQueries {
         max(col("event_id")).as("last_id"))
     }),
 
-    // Skew detector: hottest keys (drives the salting decision).
+    // Skew detector: hottest keys.
     "q_topk_hot_keys" -> ((s, dir) => {
       events(s, dir).groupBy(col("user_id"))
         .agg(count(lit(1)).as("cnt"))

@@ -18,6 +18,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.lake.{KeyCodec, LakeTable, LocalFs}
 import graft.merge.{MergeInto, MergeOptions}
+import graft.model.Schemas
 
 /**
  * DataSourceV2 provider for graft lake tables: `spark.read.format("graft")
@@ -238,8 +239,8 @@ private[spark] object GraftSqlTable {
     val lsnBase = table.maxLsn(snap) + 1L
     val epoch = snap.epochHwm.getOrElse("sql-writer", -1L) + 1L
     val batch = aligned
-      .withColumn(opts.opCol, lit("U"))
-      .withColumn(opts.lsnCol, lit(lsnBase) + monotonically_increasing_id())
+      .withColumn(Schemas.OpCol, lit("U"))
+      .withColumn(Schemas.LsnCol, lit(lsnBase) + monotonically_increasing_id())
     MergeInto.merge(spark, table, batch, "sql-writer", epoch, opts)
     ()
   }

@@ -3,11 +3,12 @@ package graft.spark
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.Sink
-import org.apache.spark.sql.functions.{coalesce, col, lit, monotonically_increasing_id, when}
+import org.apache.spark.sql.functions.{lit, monotonically_increasing_id}
 import org.apache.spark.sql.graft.GraftStreamingShim
 
 import graft.lake.LakeTable
 import graft.merge.{MergeInto, MergeOptions}
+import graft.model.Schemas
 
 /**
  * V1 streaming sink over a lake table: `df.writeStream.format("graft")
@@ -23,7 +24,7 @@ import graft.merge.{MergeInto, MergeOptions}
  * and is a no-op — the same contract as every other write path.
  *
  * Batch shape, by column inspection (first match wins):
- *  1. CDC envelope (`op` + `lsn` columns, names per [[MergeOptions]]):
+ *  1. CDC envelope ([[Schemas.OpCol]] + [[Schemas.LsnCol]] columns):
  *     merged as-is — inserts, updates, deletes, late events.
  *  2. Change-feed stored shape (`_lsn` [+ `_deleted`]): the output of a
  *     graft streaming READ — tombstones map to deletes, lsns carry through,
@@ -54,7 +55,7 @@ final class GraftStreamSink(dir: String, ckptId: String,
     if (!LakeTable.exists(dir)) {
       val createKeyCols = keyColsOpt.getOrElse(opts.keyCols)
       val payload = df.schema.fields.filterNot { f =>
-        f.name == opts.opCol || f.name == opts.lsnCol ||
+        f.name == Schemas.OpCol || f.name == Schemas.LsnCol ||
           LakeTable.MetaCols.contains(f.name)
       }
       createKeyCols.foreach(k => require(payload.exists(_.name == k),
@@ -74,23 +75,13 @@ final class GraftStreamSink(dir: String, ckptId: String,
     val mergeOpts = opts.copy(keyCols = snap.keyCols)
 
     val batch =
-      if (cols.contains(opts.opCol) && cols.contains(opts.lsnCol)) df
-      else if (cols.contains(LakeTable.LsnCol)) {
-        val payloadCols = df.columns.toSeq
-          .filterNot(LakeTable.MetaCols.contains).map(col)
-        val opExpr =
-          if (cols.contains(LakeTable.DeletedCol))
-            when(coalesce(col(LakeTable.DeletedCol), lit(false)),
-              lit(mergeOpts.deleteOp)).otherwise(lit("U"))
-          else lit("U")
-        df.select(payloadCols ++ Seq(
-          col(LakeTable.LsnCol).as(mergeOpts.lsnCol),
-          opExpr.as(mergeOpts.opCol)): _*)
-      } else {
+      if (cols.contains(Schemas.OpCol) && cols.contains(Schemas.LsnCol)) df
+      else if (cols.contains(LakeTable.LsnCol)) MergeInto.storedAsChanges(df)
+      else {
         // snapshot-ref high-watermark: O(manifest count), parses no manifests
         val lsnBase = table.maxLsn(snap) + 1L
-        df.withColumn(mergeOpts.opCol, lit("U"))
-          .withColumn(mergeOpts.lsnCol,
+        df.withColumn(Schemas.OpCol, lit("U"))
+          .withColumn(Schemas.LsnCol,
             lit(lsnBase) + monotonically_increasing_id())
       }
 

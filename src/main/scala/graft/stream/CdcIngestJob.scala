@@ -112,7 +112,8 @@ object CdcIngestJob {
 
   /** Payload schema = change schema minus the envelope (op, lsn). */
   def payloadSchema(changeSchema: StructType): StructType =
-    StructType(changeSchema.fields.filterNot(f => f.name == "op" || f.name == "lsn"))
+    StructType(changeSchema.fields.filterNot(f =>
+      f.name == Schemas.OpCol || f.name == Schemas.LsnCol))
 
   /** The streaming query's name: unique per checkpoint, and a checkpoint
     * runs at most one active query. */

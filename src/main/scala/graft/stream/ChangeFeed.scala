@@ -4,7 +4,6 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.lake.LakeTable
 import graft.merge.{MergeInto, MergeMode, MergeOptions}
@@ -133,15 +132,10 @@ object ChangeFeed {
     val keyCols = upstream.currentSnapshot.keyCols
     if (!LakeTable.exists(cfg.downstreamDir))
       LakeTable.create(cfg.downstreamDir, upstream.payloadSchema, keyCols)
-    val opts = cfg.mergeOptions.copy(keyCols = keyCols)
-    val payloadCols = stored.columns.toSeq
-      .filterNot(LakeTable.MetaCols.contains).map(col)
-    val batch = stored.select(payloadCols ++ Seq(
-      col(LakeTable.LsnCol).as(opts.lsnCol),
-      when(coalesce(col(LakeTable.DeletedCol), lit(false)), lit(opts.deleteOp))
-        .otherwise(lit("U")).as(opts.opCol)): _*)
-    MergeInto.merge(spark, LakeTable.load(cfg.downstreamDir), batch,
-      ckptId = "feed-" + CdcIngestJob.ckptId(cfg.cursorPath), epochId, opts)
+    MergeInto.merge(spark, LakeTable.load(cfg.downstreamDir),
+      MergeInto.storedAsChanges(stored),
+      ckptId = "feed-" + CdcIngestJob.ckptId(cfg.cursorPath), epochId,
+      cfg.mergeOptions.copy(keyCols = keyCols))
     ()
   }
 }

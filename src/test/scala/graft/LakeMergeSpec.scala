@@ -32,33 +32,32 @@ class LakeMergeSpec extends AnyFunSuite {
       k -> ((e.role, e.text, e.tool, e.ts, e.tool_meta))
     }
 
-  for (strat <- Seq(ResolveStrategy.SortDedup, ResolveStrategy.Agg))
-    test(s"epoch-by-epoch merge reproduces the sequential fold oracle [$strat]") {
-      val dir = TestSpark.tmpDir(s"lake-fold-$strat")
-      val table = LakeTable.create(s"$dir/t", Schemas.turn)
-      val ev = ChangelogGen.events(spark, p)
-        .map { case (f, e) => (f, e.op, e.lsn, e.conv_id, e.turn_idx, e.role, e.text,
-          e.tool, e.ts, e.tool_meta) }
-        .toDF("wal_file", "op", "lsn", "conv_id", "turn_idx", "role", "text",
-          "tool", "ts", "tool_meta")
-        .cache()
-      try {
-        (0 until p.nFiles).foreach { f =>
-          val batch = ev.filter($"wal_file" === f).drop("wal_file")
-          val stats = MergeInto.merge(spark, table, batch, "ck1", f.toLong,
-            MergeOptions(targetRowsPerFile = 2000, resolveStrategy = strat))
-          assert(!stats.noop)
-        }
-        val got = tableState(table)
-        val want = oracleState(p)
-        assert(got.size == want.size,
-          s"row count: got ${got.size}, want ${want.size}")
-        want.foreach { case (k, w) =>
-          assert(got.contains(k), s"missing key $k")
-          assert(got(k) == w, s"key $k: got ${got(k)}, want $w")
-        }
-      } finally ev.unpersist()
-    }
+  test("epoch-by-epoch merge reproduces the sequential fold oracle [SortDedup]") {
+    val dir = TestSpark.tmpDir("lake-fold")
+    val table = LakeTable.create(s"$dir/t", Schemas.turn)
+    val ev = ChangelogGen.events(spark, p)
+      .map { case (f, e) => (f, e.op, e.lsn, e.conv_id, e.turn_idx, e.role, e.text,
+        e.tool, e.ts, e.tool_meta) }
+      .toDF("wal_file", "op", "lsn", "conv_id", "turn_idx", "role", "text",
+        "tool", "ts", "tool_meta")
+      .cache()
+    try {
+      (0 until p.nFiles).foreach { f =>
+        val batch = ev.filter($"wal_file" === f).drop("wal_file")
+        val stats = MergeInto.merge(spark, table, batch, "ck1", f.toLong,
+          MergeOptions(targetRowsPerFile = 2000))
+        assert(!stats.noop)
+      }
+      val got = tableState(table)
+      val want = oracleState(p)
+      assert(got.size == want.size,
+        s"row count: got ${got.size}, want ${want.size}")
+      want.foreach { case (k, w) =>
+        assert(got.contains(k), s"missing key $k")
+        assert(got(k) == w, s"key $k: got ${got(k)}, want $w")
+      }
+    } finally ev.unpersist()
+  }
 
   test("replayed epoch is a no-op (exactly-once ledger)") {
     val dir = TestSpark.tmpDir("lake-idem")
@@ -150,21 +149,16 @@ class LakeMergeSpec extends AnyFunSuite {
     assert(rows.size == 20 && rows("conv_019") == "updated" && rows("conv_000") == "seed 0")
   }
 
-  test("salted and unsalted resolution agree") {
-    val dir0 = TestSpark.tmpDir("lake-salt")
+  test("copy-on-write merge under hot-key skew (hotFrac = 0.5) equals the oracle") {
+    val dir = TestSpark.tmpDir("lake-skew")
     val pSkew = p.copy(nEvents = 4000, hotFrac = 0.5)
     val ev = ChangelogGen.events(spark, pSkew)
       .map { case (_, e) => (e.op, e.lsn, e.conv_id, e.turn_idx, e.role, e.text,
         e.tool, e.ts, e.tool_meta) }
       .toDF("op", "lsn", "conv_id", "turn_idx", "role", "text", "tool", "ts", "tool_meta")
-    val tA = LakeTable.create(s"$dir0/a", Schemas.turn)
-    val tB = LakeTable.create(s"$dir0/b", Schemas.turn)
-    MergeInto.merge(spark, tA, ev, "ck", 0L, MergeOptions(saltBuckets = 1))
-    MergeInto.merge(spark, tB, ev, "ck", 0L, MergeOptions(saltBuckets = 32))
-    val a = tableState(tA)
-    val b = tableState(tB)
-    assert(a == b)
-    assert(a == oracleState(pSkew))
+    val table = LakeTable.create(s"$dir/t", Schemas.turn)
+    MergeInto.merge(spark, table, ev, "ck", 0L)
+    assert(tableState(table) == oracleState(pSkew))
   }
 
   test("merge-on-read reproduces the fold oracle; foldDeltas is state-invariant") {
@@ -188,7 +182,19 @@ class LakeMergeSpec extends AnyFunSuite {
       assert(table.currentFiles.exists(_.delta), "expected unresolved deltas")
       val want = oracleState(p)
       assert(tableState(table) == want, "MoR read-time fold mismatch")
-      // folding deltas must not change logical state, and clears all deltas
+      // folding deltas must not change logical state, and clears all deltas:
+      // first the hash fold (rangePlace = false) the streaming ingest runs ...
+      graft.lake.Compaction.foldDeltas(spark, table, rangePlace = false)
+      assert(!table.currentFiles.exists(_.delta))
+      assert(tableState(table) == want, "hash foldDeltas changed table contents")
+      // ... then the range fold, over fresh deltas: a second checkpoint
+      // re-delivers the last two WAL files (same lsns, same payloads)
+      (p.nFiles - 2 until p.nFiles).foreach { f =>
+        MergeInto.merge(spark, table,
+          ev.filter($"wal_file" === f).drop("wal_file"), "ck2", f.toLong, mor)
+      }
+      assert(table.currentFiles.exists(_.delta), "expected re-delivered deltas")
+      assert(tableState(table) == want, "read-time fold over base + deltas mismatch")
       val cs = graft.lake.Compaction.foldDeltas(spark, table)
       assert(cs.filesBefore > cs.filesAfter || cs.rowsRewritten > 0)
       assert(!table.currentFiles.exists(_.delta))
@@ -196,33 +202,6 @@ class LakeMergeSpec extends AnyFunSuite {
       // replay after fold still no-ops
       assert(MergeInto.merge(spark, table,
         ev.filter($"wal_file" === 0).drop("wal_file"), "ck1", 0L, mor).noop)
-    } finally ev.unpersist()
-  }
-
-  test("MoR without within-batch resolution still reproduces the fold oracle") {
-    // shuffle-free epochs (morResolveWithinBatch = false): delta files carry
-    // intra-batch superseded versions; read-time and fold-time resolution
-    // must still converge to the same state
-    val dir = TestSpark.tmpDir("lake-mor-raw")
-    val table = LakeTable.create(s"$dir/t", Schemas.turn)
-    val raw = MergeOptions(mode = MergeMode.Mor, morResolveWithinBatch = false,
-      morCompactDeltaRatio = 1e9, morCompactMaxDeltaFiles = Int.MaxValue)
-    val pr = p.copy(nEvents = 5000)
-    val ev = ChangelogGen.events(spark, pr)
-      .map { case (f, e) => (f, e.op, e.lsn, e.conv_id, e.turn_idx, e.role, e.text,
-        e.tool, e.ts, e.tool_meta) }
-      .toDF("wal_file", "op", "lsn", "conv_id", "turn_idx", "role", "text",
-        "tool", "ts", "tool_meta").cache()
-    try {
-      (0 until pr.nFiles).foreach { f =>
-        MergeInto.merge(spark, table,
-          ev.filter($"wal_file" === f).drop("wal_file"), "ck", f.toLong, raw)
-      }
-      val want = oracleState(pr)
-      assert(tableState(table) == want, "read-time fold over raw deltas mismatch")
-      graft.lake.Compaction.foldDeltas(spark, table, rangePlace = false)
-      assert(!table.currentFiles.exists(_.delta))
-      assert(tableState(table) == want, "hash fold over raw deltas mismatch")
     } finally ev.unpersist()
   }
 

@@ -57,7 +57,7 @@ class MergePropertySpec extends AnyFunSuite {
         val batch = epochs.getOrElse(e, Seq.empty)
           .toDF()
         MergeInto.merge(spark, table, batch, "prop", e.toLong,
-          MergeOptions(saltBuckets = 4, targetRowsPerFile = 100))
+          MergeOptions(targetRowsPerFile = 100))
       }
       val got = table.read(spark).collect()
         .map(row => (row.getString(0), row.getInt(1)) -> row.getString(3)).toMap
