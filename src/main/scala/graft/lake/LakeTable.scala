@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
@@ -734,24 +734,36 @@ final class LakeTable(val dir: String) {
 
   /** Time travel: table contents as of a given snapshot version. */
   def readAt(spark: SparkSession, version: Long): DataFrame =
-    readAtIntersecting(spark, version, None, None)
+    readAtIntersecting(spark, snapshot(version), None, None)
 
   /**
-   * Resolved read restricted to the files whose first-key envelope intersects
-   * the given ENCODED bounds (either side optional; `None` = unbounded).
+   * Resolved read of `snap` restricted to the files whose first-key envelope
+   * intersects the given ENCODED bounds (either side optional; `None` =
+   * unbounded), to the keys `keyFilter` accepts and to `columns`. This is
+   * the DSv2 scan path ([[graft.spark.GraftDataSource]]).
+   *
    * Two-level pruning — non-intersecting manifests are never parsed, then
    * non-intersecting files drop from the scan. Exact for any predicate whose
    * rows all satisfy lo <= key <= hi: a key inside the envelope has ALL its
    * row versions (deltas + tombstones) in intersecting files, so merge-on-read
    * resolution sees the full history; keys outside the envelope may surface
    * (files overlap the envelope) and the caller re-applies its predicate.
-   * This is the DSv2 scan path ([[graft.spark.GraftDataSource]]).
+   *
+   * `keyFilter` must reference merge-key columns only: it filters the fold's
+   * input, which is exact because the fold groups on the full key tuple, so
+   * the filter keeps or drops each key's versions together. `columns` (the
+   * payload columns to return, in order) limits what the fold reads and
+   * resolves to the key columns, the metadata columns and `columns`: exact
+   * because the winner of a key (of each cell, on sparse tables) is chosen
+   * by lsn alone, and lsns are unique.
    */
-  private[graft] def readAtIntersecting(spark: SparkSession, version: Long,
-      keyLo: Option[String], keyHi: Option[String]): DataFrame = {
+  private[graft] def readAtIntersecting(spark: SparkSession, snap: Snapshot,
+      keyLo: Option[String], keyHi: Option[String],
+      keyFilter: Option[Column] = None,
+      columns: Option[Seq[String]] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, not, coalesce, lit}
-    val snap = snapshot(version)
-    val payloadCols = snap.schema.fieldNames.filterNot(MetaCols.contains).map(col).toSeq
+    val stored = snap.schema.fieldNames.toSeq
+    val out = columns.getOrElse(stored.filterNot(MetaCols.contains))
     def hit(minKey: String, maxKey: String): Boolean =
       minKey == null || maxKey == null ||
         (keyLo.forall(lo => KeyCodec.compare(maxKey, lo) >= 0) &&
@@ -761,7 +773,13 @@ final class LakeTable(val dir: String) {
       else snap.manifests.filter(m => hit(m.minKey, m.maxKey))
         .flatMap(m => readManifest(m.name))
         .filter(f => hit(f.minKey, f.maxKey))
-    val raw = readRawFiles(spark, snap.schema, fs)
+    val foldCols = stored.filter(c =>
+      snap.keyCols.contains(c) || MetaCols.contains(c) || out.contains(c))
+    val rows = readRawFiles(spark, snap.schema, fs)
+    val filtered = keyFilter.fold(rows)(p => rows.filter(p))
+    // a full read adds no operator: each one is analyzed again by every
+    // DataFrame the fold builds on top of it
+    val raw = if (columns.isEmpty) filtered else filtered.select(foldCols.map(col): _*)
     // merge-on-read: unresolved delta rows fold before the tombstone filter
     // (per-column cell-lsn fold for sparse tables, max-lsn rows otherwise);
     // pure-base snapshots skip the fold (already resolved)
@@ -769,13 +787,12 @@ final class LakeTable(val dir: String) {
       if (!snap.manifests.exists(_.deltaFiles > 0)) raw
       else if (snap.sparse)
         graft.merge.MergeInto.resolveSparse(raw, snap.keyCols,
-          snap.schema.fieldNames.toSeq.filterNot(c =>
-            MetaCols.contains(c) || snap.keyCols.contains(c)))
+          foldCols.filterNot(c => MetaCols.contains(c) || snap.keyCols.contains(c)))
       else
         graft.merge.MergeInto.resolveMaxLsn(raw, snap.keyCols, saltBuckets = 1)
     resolved
       .filter(not(coalesce(col(DeletedCol), lit(false))))
-      .select(payloadCols: _*)
+      .select(out.map(col): _*)
   }
 }
 

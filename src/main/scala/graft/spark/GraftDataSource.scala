@@ -5,18 +5,18 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.functions.{lit, monotonically_increasing_id}
+import org.apache.spark.sql.functions.{col, lit, monotonically_increasing_id}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.lake.{KeyCodec, LakeTable, LocalFs}
+import graft.lake.{KeyCodec, LakeTable, LocalFs, Snapshot}
 import graft.merge.{MergeInto, MergeOptions}
 import graft.model.Schemas
 
@@ -29,13 +29,26 @@ import graft.model.Schemas
  * equivalent over the lake.
  *
  * Read: a [[V1Scan]] whose relation is the table's resolved view
- * ([[LakeTable.readAtIntersecting]]). Filter pushdown on the FIRST merge-key
- * column translates to the same two-level manifest/file envelope pruning the
- * merge path uses — a `conv_id = '…'` SELECT on a 10^6-file table parses
- * only the manifests whose range covers that key and scans only their
- * matching files. All filters are reported back as residual, so Spark
- * re-applies them post-resolution: pruning is a subset guarantee, exactness
- * comes from re-evaluation (no filter semantics are re-implemented here).
+ * ([[LakeTable.readAtIntersecting]]), built from ONE snapshot per scan. The
+ * merge-on-read fold runs inside the scan, where Catalyst cannot reach, so
+ * the scan pushes the query's key predicates and projection below it itself:
+ *  - filters on the FIRST merge-key column narrow the encoded key envelope
+ *    for the merge path's two-level manifest/file pruning — a
+ *    `conv_id = '…'` SELECT on a 10^6-file table parses only the manifests
+ *    whose range covers that key and scans only their matching files;
+ *  - every filter that references merge-key columns only (comparisons,
+ *    `In`, null tests and their `And`/`Or`/`Not` combinations) filters the
+ *    fold's INPUT. Exact: the fold groups on the full key tuple, so a
+ *    predicate on key columns keeps or drops each group whole;
+ *  - the fold reads and resolves only the key columns, the row metadata
+ *    (`_lsn`, `_deleted`; `_cell_lsn`, `_del_lsn` on sparse tables) and the
+ *    requested columns. Exact: the winner of a key is picked by lsn (per
+ *    cell on sparse tables) and lsns are unique, so dropping payload columns
+ *    never changes which row or cell wins.
+ * Predicates on any non-key column stay above the fold — below it they
+ * would drop a key's newer version and resurrect an older one. Every filter
+ * is still reported back as residual, so Spark re-applies all of them to
+ * the resolved rows.
  * Options: `versionAsOf` time-travels the scan.
  *
  * Write: `INSERT INTO` / append = one upsert epoch through [[MergeInto]]
@@ -157,7 +170,10 @@ final class GraftDataSource extends TableProvider with DataSourceRegister
 private[spark] final case class GraftSqlTable(dir: String, versionAsOf: Option[Long])
     extends Table with SupportsRead with SupportsWrite {
   private lazy val table = LakeTable.load(dir)
-  private def scanVersion: Long = versionAsOf.getOrElse(table.currentVersion)
+  /** Parsed afresh per call: a table object outlives the query that
+    * resolved it, and later queries must see later commits. */
+  private def scanSnapshot: Snapshot =
+    table.snapshot(versionAsOf.getOrElse(table.currentVersion))
 
   override def name(): String = s"graft.`$dir`"
 
@@ -168,8 +184,7 @@ private[spark] final case class GraftSqlTable(dir: String, versionAsOf: Option[L
     // Batch read/write of a missing table still fails with the lake's named
     // error — both paths force the lazy load before touching data.
     if (!LakeTable.exists(dir)) return new StructType()
-    val stored = table.snapshot(scanVersion).schema
-    StructType(stored.fields.filterNot(f => LakeTable.MetaCols.contains(f.name)))
+    GraftSqlTable.payloadOf(scanSnapshot)
   }
 
   override def capabilities(): java.util.Set[TableCapability] =
@@ -178,8 +193,10 @@ private[spark] final case class GraftSqlTable(dir: String, versionAsOf: Option[L
     Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.V1_BATCH_WRITE, TableCapability.ACCEPT_ANY_SCHEMA).asJava
 
+  // one snapshot for the builder's version, schema and key columns: a commit
+  // landing mid-planning (say a schema-evolving epoch) cannot split them
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(table, scanVersion, schema())
+    new GraftScanBuilder(table, scanSnapshot)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
@@ -199,6 +216,10 @@ private[spark] final case class GraftSqlTable(dir: String, versionAsOf: Option[L
 }
 
 private[spark] object GraftSqlTable {
+  /** The user-facing columns of a snapshot: its schema minus metadata. */
+  def payloadOf(snap: Snapshot): StructType =
+    StructType(snap.schema.fields.filterNot(f => LakeTable.MetaCols.contains(f.name)))
+
   /** One SQL append = one merge epoch under the "sql-writer" checkpoint.
     * Epoch ids continue that checkpoint's ledger; LSNs are assigned above
     * the table's current max so the batch wins over existing rows. */
@@ -246,27 +267,30 @@ private[spark] object GraftSqlTable {
   }
 }
 
-private[spark] final class GraftScanBuilder(table: LakeTable, version: Long,
-    fullSchema: StructType)
+private[spark] final class GraftScanBuilder(table: LakeTable, snap: Snapshot)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
+  private val fullSchema = GraftSqlTable.payloadOf(snap)
   private var required: StructType = fullSchema
   private var envelope: (Option[String], Option[String]) = (None, None)
+  private var keyPredicate: Option[Column] = None
   private var used: Array[Filter] = Array.empty
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
-    // empty projection (e.g. SELECT count(*)) still needs a row stream
-    required = if (requiredSchema.isEmpty) StructType(fullSchema.take(1))
+    // empty projection (e.g. SELECT count(*)) still needs a row stream: the
+    // first key column, which the fold reads anyway
+    required = if (requiredSchema.isEmpty)
+        StructType(fullSchema.filter(_.name == snap.keyCols.head))
       else requiredSchema
   }
 
   /** Conjunctive filters on the FIRST merge-key column tighten the encoded
-    * key envelope used for manifest/file pruning. Everything is returned as
-    * residual — Spark re-applies the predicates on the resolved rows, so
-    * pruning can only ever drop files no envelope key lives in. */
+    * key envelope used for manifest/file pruning; every filter over merge-key
+    * columns only joins the pre-fold predicate. Everything is returned as
+    * residual — Spark re-applies the predicates on the resolved rows. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val k1 = table.snapshot(version).keyCols.head
+    val k1 = snap.keyCols.head
     val dt = fullSchema.fields.find(_.name == k1).map(_.dataType)
     if (dt.exists(KeyCodec.supports)) {
       val enc = (v: Any) => KeyCodec.encode(dt.get, v)
@@ -275,25 +299,28 @@ private[spark] final class GraftScanBuilder(table: LakeTable, version: Long,
       def min(a: Option[String], b: String) =
         Some(a.filter(x => KeyCodec.compare(x, b) < 0).getOrElse(b))
       filters.foreach {
-        case f @ EqualTo(`k1`, v) if v != null =>
+        case EqualTo(`k1`, v) if v != null =>
           envelope = (max(envelope._1, enc(v)), min(envelope._2, enc(v)))
-          used :+= f
-        case f @ GreaterThan(`k1`, v) if v != null =>
-          envelope = (max(envelope._1, enc(v)), envelope._2); used :+= f
-        case f @ GreaterThanOrEqual(`k1`, v) if v != null =>
-          envelope = (max(envelope._1, enc(v)), envelope._2); used :+= f
-        case f @ LessThan(`k1`, v) if v != null =>
-          envelope = (envelope._1, min(envelope._2, enc(v))); used :+= f
-        case f @ LessThanOrEqual(`k1`, v) if v != null =>
-          envelope = (envelope._1, min(envelope._2, enc(v))); used :+= f
-        case f @ In(`k1`, vs) if vs.nonEmpty && vs.forall(_ != null) =>
+        case GreaterThan(`k1`, v) if v != null =>
+          envelope = (max(envelope._1, enc(v)), envelope._2)
+        case GreaterThanOrEqual(`k1`, v) if v != null =>
+          envelope = (max(envelope._1, enc(v)), envelope._2)
+        case LessThan(`k1`, v) if v != null =>
+          envelope = (envelope._1, min(envelope._2, enc(v)))
+        case LessThanOrEqual(`k1`, v) if v != null =>
+          envelope = (envelope._1, min(envelope._2, enc(v)))
+        case In(`k1`, vs) if vs.nonEmpty && vs.forall(_ != null) =>
           val es = vs.map(enc)
           envelope = (max(envelope._1, es.min(KeyCodec.ordering)),
             min(envelope._2, es.max(KeyCodec.ordering)))
-          used :+= f
         case _ => ()
       }
     }
+    val onKeys = filters.flatMap(f =>
+      if (f.references.forall(snap.keyCols.contains)) GraftScanBuilder.toColumn(f).map(f -> _)
+      else None)
+    keyPredicate = onKeys.map(_._2).reduceOption(_ && _)
+    used = onKeys.map(_._1)
     filters
   }
 
@@ -302,21 +329,48 @@ private[spark] final class GraftScanBuilder(table: LakeTable, version: Long,
   override def build(): Scan = new V1Scan {
     private val (lo, hi) = envelope
     private val schema = required
+    private val predicate = keyPredicate
     override def readSchema(): StructType = schema
     override def description(): String =
-      s"graft v$version envelope=[${lo.getOrElse("-inf")},${hi.getOrElse("+inf")}]"
+      s"graft v${snap.version} envelope=[${lo.getOrElse("-inf")},${hi.getOrElse("+inf")}]" +
+        predicate.fold("")(p => s" preFold=$p")
     override def toV1TableScan[T <: BaseRelation with TableScan](
         ctx: SQLContext): T =
-      new BaseRelation with TableScan {
-        override def sqlContext: SQLContext = ctx
-        override def schema: StructType = readSchema()
-        override def needConversion: Boolean = false
-        override def buildScan(): RDD[Row] = {
-          val spark = ctx.sparkSession
-          val df = table.readAtIntersecting(spark, version, lo, hi)
-            .select(readSchema().fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
-          df.queryExecution.toRdd.asInstanceOf[RDD[Row]]
-        }
-      }.asInstanceOf[T]
+      new GraftRelation(ctx, schema,
+        table.readAtIntersecting(ctx.sparkSession, snap, lo, hi, predicate,
+          Some(schema.fieldNames.toSeq))).asInstanceOf[T]
   }
+}
+
+private[spark] object GraftScanBuilder {
+  /** A filter as a Column with the same semantics, if its shape is one the
+    * pre-fold predicate takes. */
+  def toColumn(f: Filter): Option[Column] = {
+    def c(a: String) = col(s"`${a.replace("`", "``")}`")
+    f match {
+      case EqualTo(a, v) => Some(c(a) === lit(v))
+      case EqualNullSafe(a, v) => Some(c(a) <=> lit(v))
+      case GreaterThan(a, v) => Some(c(a) > lit(v))
+      case GreaterThanOrEqual(a, v) => Some(c(a) >= lit(v))
+      case LessThan(a, v) => Some(c(a) < lit(v))
+      case LessThanOrEqual(a, v) => Some(c(a) <= lit(v))
+      case In(a, vs) => Some(c(a).isin(vs.toIndexedSeq: _*))
+      case IsNull(a) => Some(c(a).isNull)
+      case IsNotNull(a) => Some(c(a).isNotNull)
+      case And(l, r) => for (x <- toColumn(l); y <- toColumn(r)) yield x && y
+      case Or(l, r) => for (x <- toColumn(l); y <- toColumn(r)) yield x || y
+      case Not(x) => toColumn(x).map(!_)
+      case _ => None
+    }
+  }
+}
+
+/** The scan's relation: `resolved` is the merge-on-read fold of the scan's
+  * snapshot, restricted to its key predicate and projection. */
+private[graft] final class GraftRelation(ctx: SQLContext, override val schema: StructType,
+    val resolved: DataFrame) extends BaseRelation with TableScan {
+  override def sqlContext: SQLContext = ctx
+  override def needConversion: Boolean = false
+  override def buildScan(): RDD[Row] =
+    resolved.queryExecution.toRdd.asInstanceOf[RDD[Row]]
 }

@@ -119,7 +119,13 @@ object CdcIngestJob {
     * runs at most one active query. */
   def queryName(checkpointDir: String): String = s"cdc-ingest-${ckptId(checkpointDir)}"
 
-  def start(spark: SparkSession, cfg: IngestConfig, trigger: Trigger): StreamingQuery = {
+  def start(spark: SparkSession, cfg: IngestConfig, trigger: Trigger): StreamingQuery =
+    startWithLineage(spark, cfg, trigger)._1
+
+  /** [[start]], plus the query's [[LineageListener]]: registered before the
+    * query starts, it removes itself when the query terminates. */
+  private def startWithLineage(spark: SparkSession, cfg: IngestConfig,
+      trigger: Trigger): (StreamingQuery, LineageListener) = {
     // before the query exists: its checkpoint logs take their filesystem
     // from the Hadoop configuration at start
     LocalFs.install(spark)
@@ -147,7 +153,9 @@ object CdcIngestJob {
           .dropDuplicatesWithinWatermark("lsn")
       else raw
 
-    deduped.writeStream
+    val lineage = new LineageListener(spark, cfg.tableDir, queryName(cfg.checkpointDir))
+    spark.streams.addListener(lineage)
+    val q = try deduped.writeStream
       .queryName(queryName(cfg.checkpointDir))
       .option("checkpointLocation", cfg.checkpointDir)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
@@ -177,6 +185,8 @@ object CdcIngestJob {
       }
       .trigger(trigger)
       .start()
+    catch { case e: Throwable => spark.streams.removeListener(lineage); throw e }
+    (q, lineage)
   }
 
   /**
@@ -193,14 +203,14 @@ object CdcIngestJob {
     * read the table themselves afterwards (the count is a full resolved
     * read+fold the caller would immediately repeat). */
   def drainAvailableNow(spark: SparkSession, cfg: IngestConfig): Unit = {
-    val listener = new LineageListener(cfg.tableDir, queryName(cfg.checkpointDir))
-    spark.streams.addListener(listener)
     val priorMpb = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
     try {
-      val q = start(spark, cfg, Trigger.AvailableNow())
+      val (q, lineage) = startWithLineage(spark, cfg, Trigger.AvailableNow())
       q.awaitTermination()
+      // progress events arrive asynchronously: return once every epoch's
+      // lineage record is on disk
+      lineage.awaitDetached()
     } finally {
-      spark.streams.removeListener(listener)
       // bounded lifecycle => restore the session's scan-partitioning config
       if (cfg.maxPartitionBytes.isDefined)
         priorMpb match {
@@ -218,22 +228,39 @@ object CdcIngestJob {
  * epoch) this is the engine's upgrade of the reference's per-stage stats
  * (/root/reference/execution_stat.go:9-48, pipeline.go:205-221).
  *
- * A listener sees every query of the session, so it records only the query
- * named `queryName` (the ingest writing `tableDir`).
+ * A listener sees every query of the session, so it records only the first
+ * query named `queryName` to start after it is registered (the ingest writing
+ * `tableDir`), and removes itself from the session when that query
+ * terminates. Progress events are delivered off the query's thread, so the
+ * writes stay off the epoch's critical path.
  */
-final class LineageListener(tableDir: String, queryName: String)
+final class LineageListener(spark: SparkSession, tableDir: String, queryName: String)
     extends StreamingQueryListener {
   private val dir = Paths.get(tableDir, "_lineage")
+  @volatile private var runId: java.util.UUID = null
+  private val detached = new java.util.concurrent.CountDownLatch(1)
 
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-    if (e.name == queryName) Files.createDirectories(dir)
+    if (runId == null && e.name == queryName) {
+      Files.createDirectories(dir)
+      runId = e.runId
+    }
 
   override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
     val p = e.progress
-    if (p.name == queryName)
+    if (p.runId == runId)
       Files.write(dir.resolve(f"epoch-${p.batchId}%010d.json"),
         p.json.getBytes(StandardCharsets.UTF_8))
   }
 
-  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+    if (e.runId == runId) {
+      spark.streams.removeListener(this)
+      detached.countDown()
+    }
+
+  /** Waits (bounded) until the query's last event has been handled. */
+  def awaitDetached(): Unit = {
+    detached.await(1, java.util.concurrent.TimeUnit.MINUTES); ()
+  }
 }

@@ -1,16 +1,18 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.lake.{KeyCodec, LakeTable}
 import graft.merge.{MergeInto, MergeMode, MergeOptions}
+import graft.model.Schemas
 
 /**
  * DataSourceV2 surface: `spark.read.format("graft")`, SQL
  * `CREATE TABLE … USING graft` + SELECT/INSERT, filter-pushdown pruning,
- * time travel via `versionAsOf`.
+ * the pre-fold key predicate and projection, time travel via `versionAsOf`.
  */
 class DsvSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -68,7 +70,7 @@ class DsvSpec extends AnyFunSuite {
     val snap = t.currentSnapshot
     val all = t.files(snap).size
     val k = KeyCodec.encode(StringType, "conv-1")
-    val pruned = t.readAtIntersecting(spark, t.currentVersion, Some(k), Some(k))
+    val pruned = t.readAtIntersecting(spark, snap, Some(k), Some(k))
       .inputFiles.length
     assert(pruned < all, s"pruned=$pruned all=$all")
   }
@@ -167,5 +169,149 @@ class DsvSpec extends AnyFunSuite {
     // a ref predating the field (maxLsn = -1) falls back to the walk
     val legacy = snap.copy(manifests = snap.manifests.map(_.copy(maxLsn = -1L)))
     assert(t.maxLsn(legacy) == 200L)
+  }
+
+  // ---- pre-fold key predicate and projection: exact against the full read
+
+  private val noAutoFold = MergeOptions(mode = MergeMode.Mor,
+    morCompactDeltaRatio = 1e9, morCompactMaxDeltaFiles = Int.MaxValue)
+
+  /** Change events over [[Schemas.turn]]: (op, lsn, conv_id, turn_idx,
+    * role, text); a null role or text is an unset column. */
+  private def events(rows: Seq[(String, Long, String, Int, String, String)]): DataFrame =
+    rows.map { case (op, lsn, c, t, role, tx) =>
+      (op, lsn, c, t, role, tx, Option.empty[String],
+        java.sql.Timestamp.valueOf("2025-01-01 00:00:00"))
+    }.toDF("op", "lsn", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+
+  /** A folded base plus three delta epochs: updates, tombstones, late
+    * lower-lsn events that must lose (and one that must win), a hot key
+    * updated many times in two epochs, and a delete followed by a re-insert.
+    * Returns the table and the version before the last epoch. */
+  private def historyTable(dir: String, sparse: Boolean = false): (LakeTable, Long) = {
+    val t = LakeTable.create(dir, Schemas.turn, sparseUpdates = sparse)
+    val convs = (0 until 6).map(c => s"conv-$c") :+ "conv-hot"
+    val base = for ((c, ci) <- convs.zipWithIndex; tu <- 0 until 6)
+      yield ("I", 10L * ci + tu, c, tu, "user", s"v0-$c-$tu")
+    MergeInto.merge(spark, t, events(base), "hist", 0L, noAutoFold)
+    graft.lake.Compaction.foldDeltas(spark, t)
+    MergeInto.merge(spark, t, events(
+      (0 until 6).map(tu => ("U", 1000L + tu, "conv-1", tu, null, s"v1-conv-1-$tu")) ++
+        (0 until 20).map(i => ("U", 1100L + i, "conv-hot", 0, "assistant", s"hot-$i")) ++
+        Seq(("D", 1200L, "conv-2", 0, null, null))), "hist", 1L, noAutoFold)
+    MergeInto.merge(spark, t, events(Seq(
+      ("U", 500L, "conv-1", 0, "tool", "late-stale"),
+      ("U", 600L, "conv-2", 0, "user", "zombie"),
+      ("U", 700L, "conv-3", 1, null, "late-wins"),
+      ("D", 1400L, "conv-4", 5, null, null)) ++
+      (0 until 10).map(i => ("U", 1300L + i, "conv-hot", i % 3, null, s"hot2-$i"))),
+      "hist", 2L, noAutoFold)
+    val before = t.currentVersion
+    MergeInto.merge(spark, t, events(Seq(
+      ("I", 2000L, "conv-4", 5, "user", "reborn"),
+      ("U", 2001L, "conv-5", 2, "tool", null))), "hist", 3L, noAutoFold)
+    (t, before)
+  }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.mkString("|")).toSeq.sorted
+
+  /** The scan's fold, and the columns its pre-fold filters reference. */
+  private def preFold(df: DataFrame): (DataFrame, Set[String]) = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Window}
+    val fold = df.queryExecution.sparkPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.RowDataSourceScanExec => s.relation
+    }.collect { case r: graft.spark.GraftRelation => r.resolved }
+      .getOrElse(fail(s"no graft scan in\n${df.queryExecution.sparkPlan}"))
+    val input = fold.queryExecution.optimizedPlan.collectFirst {
+      case a: Aggregate => a.child
+      case w: Window => w.child
+    }.getOrElse(fail(s"no fold in\n${fold.queryExecution.optimizedPlan}"))
+    (fold, input.collect { case f: Filter => f.condition.references.map(_.name) }
+      .flatten.toSet)
+  }
+
+  test("key predicates fold only their keys: EqualTo, In, ranges, turn_idx, And/Or") {
+    val dir = TestSpark.tmpDir("dsv-prefold")
+    val (t, _) = historyTable(s"$dir/t")
+    val dsv = spark.read.format("graft").load(s"$dir/t")
+    val preds: Seq[(String, Column)] = Seq(
+      "EqualTo" -> ($"conv_id" === "conv-1"),
+      "In" -> $"conv_id".isin("conv-1", "conv-2", "conv-hot"),
+      "<" -> ($"conv_id" < "conv-3"),
+      ">=" -> ($"conv_id" >= "conv-4"),
+      "turn_idx only" -> ($"turn_idx" === 0),
+      "And/Or" -> (($"conv_id" === "conv-1" && $"turn_idx" < 3) ||
+        ($"conv_id" === "conv-2" && !($"turn_idx" === 1)) || $"conv_id" === "conv-hot"))
+    preds.foreach { case (name, p) =>
+      val want = rows(t.read(spark).filter(p))
+      assert(want.nonEmpty, name)
+      assert(rows(dsv.filter(p)) == want, s"[$name] full-row read")
+      assert(rows(dsv.filter(p).select("turn_idx", "text")) ==
+        rows(t.read(spark).filter(p).select("turn_idx", "text")), s"[$name] projected read")
+      val (_, refs) = preFold(dsv.filter(p))
+      assert(refs.nonEmpty && refs.subsetOf(Set("conv_id", "turn_idx")),
+        s"[$name] fold input not filtered on the key: $refs")
+    }
+    // the history resolves as written: late lower lsns lose, a late higher
+    // lsn wins, the delete survives its late zombie, the hot key's top wins
+    val point = rows(dsv.filter($"conv_id".isin("conv-1", "conv-2", "conv-3", "conv-hot") &&
+      $"turn_idx" <= 1).select("conv_id", "turn_idx", "text"))
+    assert(point == Seq("conv-1|0|v1-conv-1-0", "conv-1|1|v1-conv-1-1",
+      "conv-2|1|v0-conv-2-1", "conv-3|0|v0-conv-3-0", "conv-3|1|late-wins",
+      "conv-hot|0|hot2-9", "conv-hot|1|hot2-7").sorted)
+  }
+
+  test("a non-key predicate stays above the fold: an older value never resurfaces") {
+    val dir = TestSpark.tmpDir("dsv-nonkey")
+    val (t, _) = historyTable(s"$dir/t")
+    val dsv = spark.read.format("graft").load(s"$dir/t")
+    // conv-1 turn 0 changed text from v0-conv-1-0 to v1-conv-1-0
+    val stale = Seq($"text" === "v0-conv-1-0",
+      $"conv_id" === "conv-1" && $"turn_idx" === 0 && $"text" === "v0-conv-1-0",
+      $"conv_id" === "conv-1" && ($"turn_idx" === 0 || $"text" === "v0-conv-1-0") &&
+        $"text" === "v0-conv-1-0")
+    stale.foreach { p =>
+      assert(dsv.filter(p).collect().isEmpty, s"older version resurfaced for $p")
+      val (_, refs) = preFold(dsv.filter(p).select("turn_idx"))
+      assert(!refs.contains("text"), s"non-key predicate moved below the fold: $refs")
+    }
+    // a key/non-key disjunction is not a key predicate: nothing moves down
+    val mixed = $"conv_id" === "conv-1" || $"text" === "hot-3"
+    assert(rows(dsv.filter(mixed)) == rows(t.read(spark).filter(mixed)))
+  }
+
+  test("pre-fold point reads stay exact on sparse tables, under versionAsOf and " +
+    "as count(*)") {
+    val dir = TestSpark.tmpDir("dsv-prefold-more")
+    // sparse: null role/text in an update keeps the incumbent cell
+    val (sp, _) = historyTable(s"$dir/sparse", sparse = true)
+    val sdsv = spark.read.format("graft").load(s"$dir/sparse")
+    Seq("conv-1", "conv-3", "conv-5", "conv-hot").foreach { c =>
+      val p = $"conv_id" === c
+      assert(rows(sdsv.filter(p)) == rows(sp.read(spark).filter(p)), s"sparse $c")
+      assert(rows(sdsv.filter(p).select("turn_idx", "text")) ==
+        rows(sp.read(spark).filter(p).select("turn_idx", "text")), s"sparse $c text")
+      assert(preFold(sdsv.filter(p))._2 == Set("conv_id"), s"sparse $c pre-fold")
+    }
+    assert(rows(sdsv.filter($"conv_id" === "conv-5" && $"turn_idx" === 2)
+      .select("role", "text")) == Seq("tool|v0-conv-5-2"))
+
+    val (t, before) = historyTable(s"$dir/t")
+    // time travel: conv-4 turn 5 is deleted at `before`, re-inserted after
+    val p = $"conv_id" === "conv-4"
+    val past = spark.read.format("graft").option("versionAsOf", before).load(s"$dir/t")
+    assert(rows(past.filter(p)) == rows(t.readAt(spark, before).filter(p)))
+    assert(rows(past.filter(p)) != rows(t.read(spark).filter(p)))
+    assert(past.filter(p && $"turn_idx" === 5).count() == 0)
+
+    // count(*): the empty projection reads the key alone
+    val dsv = spark.read.format("graft").load(s"$dir/t")
+    Seq($"conv_id" === "conv-2", $"conv_id" === "conv-hot", $"turn_idx" === 5).foreach { q =>
+      assert(dsv.filter(q).count() == t.read(spark).filter(q).count(), s"count $q")
+    }
+    assert(dsv.filter($"conv_id" === "conv-2").count() == 5)
+    assert(dsv.count() == t.read(spark).count())
+    assert(preFold(dsv.groupBy().count())._1.columns.toSeq == Seq("conv_id"))
   }
 }

@@ -12,11 +12,14 @@ import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.{ChangelogGen, GenParams}
-import graft.stream.{CdcIngestJob, IngestConfig}
+import org.apache.spark.sql.streaming.Trigger
+
+import graft.stream.{CdcIngestJob, IngestConfig, LineageListener}
 
 /**
  * Per-epoch lineage (`_lineage/`) records only the streaming query that
- * writes the table, even when other streams run in the same session.
+ * writes the table, even when other streams run in the same session, for
+ * drains and long-running `start()` streams alike.
  */
 class LineageSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -60,5 +63,53 @@ class LineageSpec extends AnyFunSuite {
     // the spec shows something only if the streams ran at the same time
     val (a, b) = (spans(0), spans(1))
     assert(!a._2.isBefore(b._1) && !b._2.isBefore(a._1), s"streams did not overlap: $spans")
+  }
+
+  test("start() streams record one lineage file per committed epoch and " +
+    "detach their listener when stopped") {
+    val work = TestSpark.tmpDir("lineage-start")
+    val p = GenParams(seed = 4, nEvents = 9 * 500L, nConvs = 40,
+      eventsPerFile = 500, maxLateEvents = 100, turnsPerConv = 20)
+    ChangelogGen.writeWal(spark, p, s"$work/staged")
+    def list(d: java.nio.file.Path): List[java.nio.file.Path] = {
+      val s = Files.list(d)
+      try s.iterator().asScala.toList finally s.close()
+    }
+    // (segment index, era=E/wal_file=N), delivered three segments per cycle
+    val segments = list(Paths.get(s"$work/staged")).filter(_.getFileName.toString
+      .startsWith("era=")).flatMap(era => list(era).filter(_.getFileName.toString
+      .startsWith("wal_file=")).map(seg =>
+        (seg.getFileName.toString.stripPrefix("wal_file=").toInt,
+          Paths.get(era.getFileName.toString, seg.getFileName.toString))))
+      .sortBy(_._1)
+    assert(segments.size == 9)
+    val cfg = IngestConfig(s"$work/wal", s"$work/t", s"$work/ckpt",
+      maxFilesPerTrigger = Some(1))
+    def lineageListeners =
+      spark.streams.listListeners().count(_.isInstanceOf[LineageListener])
+    def ids(dir: String, keep: String => Boolean, id: String => Long): List[Long] =
+      list(Paths.get(dir)).map(_.getFileName.toString).filter(keep).map(id).sorted
+    implicit val formats: Formats = DefaultFormats
+    segments.grouped(3).zipWithIndex.foreach { case (group, cycle) =>
+      group.foreach { case (_, rel) =>
+        val to = Paths.get(cfg.walDir).resolve(rel)
+        Files.createDirectories(to.getParent)
+        Files.move(Paths.get(s"$work/staged").resolve(rel), to)
+      }
+      val q = CdcIngestJob.start(spark, cfg, Trigger.ProcessingTime(0L))
+      try q.processAllAvailable() finally q.stop()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (lineageListeners > 0 && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(lineageListeners == 0, s"cycle $cycle left a lineage listener registered")
+      // every commit in the checkpoint has its lineage record, and no more
+      val committed = ids(s"${cfg.checkpointDir}/commits", _.forall(_.isDigit), _.toLong)
+      val recorded = ids(s"${cfg.tableDir}/_lineage", _.startsWith("epoch-"),
+        f => f.stripPrefix("epoch-").stripSuffix(".json").toLong)
+      assert(committed == (0L until 3L * (cycle + 1)).toList, s"cycle $cycle commits")
+      assert(recorded == committed, s"cycle $cycle lineage")
+      val last = JsonMethods.parse(new String(Files.readAllBytes(Paths.get(cfg.tableDir,
+        "_lineage", f"epoch-${committed.last}%010d.json")), "UTF-8"))
+      assert((last \ "name").extract[String] == CdcIngestJob.queryName(cfg.checkpointDir))
+    }
   }
 }

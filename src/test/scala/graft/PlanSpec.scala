@@ -138,4 +138,42 @@ class PlanSpec extends AnyFunSuite {
     // WindowGroupLimit drops losing rows before full window evaluation
     assert(p.contains("WindowGroupLimit"), s"rank-limit pushdown missing:\n$p")
   }
+
+  test("graft point read: the fold's input is key-filtered and reads only the " +
+    "requested columns") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec}
+    import org.apache.spark.sql.functions._
+    import graft.lake.LakeTable
+    import graft.merge.{MergeInto, MergeMode, MergeOptions}
+    import spark.implicits._
+    val dir = TestSpark.tmpDir("plan-point")
+    val table = LakeTable.create(s"$dir/t",
+      graft.stream.CdcIngestJob.payloadSchema(graft.model.Schemas.changeV2))
+    val mor = MergeOptions(mode = MergeMode.Mor,
+      morCompactDeltaRatio = 1e9, morCompactMaxDeltaFiles = Int.MaxValue)
+    val b = Seq(("I", 1L, "c1", 0, "user", "x", None: Option[String],
+      java.sql.Timestamp.valueOf("2025-01-01 00:00:00"), None: Option[String]))
+      .toDF("op", "lsn", "conv_id", "turn_idx", "role", "text", "tool", "ts", "tool_meta")
+    MergeInto.merge(spark, table, b, "ck", 0L, mor)
+    MergeInto.merge(spark, table, b.withColumn("lsn", lit(2L)), "ck", 1L, mor)
+    val point = spark.read.format("graft").load(s"$dir/t")
+      .filter($"conv_id" === "c1").select("turn_idx", "text")
+    val fold = point.queryExecution.sparkPlan.collectFirst {
+      case s: RowDataSourceScanExec => s.relation
+    }.collect { case r: graft.spark.GraftRelation => r.resolved }
+    assert(fold.isDefined, s"no graft scan:\n${point.queryExecution.sparkPlan}")
+    val opt = fold.get.queryExecution.optimizedPlan
+    val keyFiltered = opt.collectFirst { case a: Aggregate => a.child }.exists(_.exists {
+      case f: Filter => f.condition.references.exists(_.name == "conv_id")
+      case _ => false
+    })
+    assert(keyFiltered, s"fold input not filtered on conv_id:\n$opt")
+    val read = fold.get.queryExecution.sparkPlan.collect {
+      case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSet
+    }.flatten.toSet
+    assert(read.nonEmpty && read.intersect(Set("role", "tool", "ts", "tool_meta")).isEmpty,
+      s"fold scan reads unrequested payload columns: $read")
+    assert(point.collect().map(_.mkString("|")).toSeq == Seq("0|x"))
+  }
 }
