@@ -1,10 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{GraftFunctions, MaxRowByLong}
+import graft.functions.GraftFunctions
 
 /**
  * SparkSessionExtensions entry point: lets any consumer enable the engine's
@@ -22,14 +20,6 @@ import graft.functions.{GraftFunctions, MaxRowByLong}
  * programmatic use; this class is the zero-code-change deployment path.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.MaxRowByLongName),
-      new ExpressionInfo(classOf[MaxRowByLong].getName, GraftFunctions.MaxRowByLongName),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(exprs.length == 2,
-          s"${GraftFunctions.MaxRowByLongName}(value, ord) takes 2 args")
-        MaxRowByLong(exprs.head, exprs(1))
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    ext.injectFunction(GraftFunctions.maxRowByLong)
 }

@@ -113,17 +113,19 @@ object GraftFunctions {
 
   val MaxRowByLongName = "max_row_by_long"
 
+  /** `max_row_by_long`'s name, info and builder, for the session registry
+    * and for `SparkSessionExtensions.injectFunction` alike. */
+  val maxRowByLong: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier(MaxRowByLongName),
+    new ExpressionInfo(classOf[MaxRowByLong].getName, MaxRowByLongName),
+    (exprs: Seq[Expression]) => {
+      require(exprs.length == 2, s"$MaxRowByLongName(value, ord) takes 2 args")
+      MaxRowByLong(exprs.head, exprs(1))
+    })
+
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(MaxRowByLongName))) {
-      registry.registerFunction(
-        FunctionIdentifier(MaxRowByLongName),
-        new ExpressionInfo(classOf[MaxRowByLong].getName, MaxRowByLongName),
-        (exprs: Seq[Expression]) => {
-          require(exprs.length == 2, s"$MaxRowByLongName(value, ord) takes 2 args")
-          MaxRowByLong(exprs.head, exprs(1))
-        })
-      ()
-    }
+    val (id, info, builder) = maxRowByLong
+    if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
   }
 }

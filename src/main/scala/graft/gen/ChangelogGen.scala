@@ -173,7 +173,7 @@ object ChangelogGen {
       // WAL segment encoding = the CDC receiver's landing-format choice:
       // lz4/no-dict decodes sequentially and scales with cores where
       // snappy+dictionary is latency-bound at wide widths (measured — see
-      // Compaction.WriteCodec)
+      // LakeTable.WriteCodec)
       .option("compression", "lz4")
       .option("parquet.enable.dictionary", "false")
       .partitionBy("wal_file").parquet(s"$walDir/era=0")

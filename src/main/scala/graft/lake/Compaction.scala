@@ -1,13 +1,14 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
  * Table maintenance: small-file compaction and merge-on-read delta folding.
  * Both rewrite data WITHOUT changing logical table state (same resolved rows,
- * same tombstones, same schema), commit through the same atomic snapshot
- * rename as merges, and preserve the epoch ledger — safe between epochs.
+ * same tombstones, same schema), write and commit through the merges' step
+ * (`LakeTable.writeAndCommit`), and preserve the epoch ledger — safe
+ * between epochs.
  *
  * Why they exist: every streaming epoch commits at least one file per touched
  * key range, so a long-running ingest accumulates many small files (CoW) or
@@ -29,34 +30,23 @@ final case class CompactionStats(
     rowsRewritten: Long,
     wallMs: Long)
 
+/** A delta fold's `_metrics` record (`op` = "fold"), next to the epochs'
+  * [[graft.merge.MergeStats]] in [[LakeTable.metrics]]. */
+final case class FoldRecord(
+    op: String,
+    snapshotVersion: Long,
+    filesBefore: Int,
+    filesAfter: Int,
+    rowsRewritten: Long,
+    foldMs: Long,
+    thread: String)
+
 object Compaction {
 
   /** test hook: sleep between the fold's data write and its commit — lets
     * specs race ingest epochs against an in-flight out-of-band fold
     * deterministically (see MergeOptions.foldAsync) */
   @volatile private[graft] var testDelayBeforeFoldCommitMs: Long = 0L
-
-  /** Parquet encoding of every file the engine writes (merge deltas, CoW
-    * rewrites, compaction, folds): lz4 WITHOUT dictionary encoding, from
-    * width-interleaved A/B on the bench corpus (19M transcript rows, tmpfs):
-    * the epoch shape (scan -> hash dedup -> encode) ran 4.1-4.3s at 32 cores
-    * with lz4/no-dict vs 4.9-6.5s with snappy/dict, and no worse at 8 cores —
-    * snappy decode and dictionary bit-unpacking are memory-LATENCY-bound
-    * random access that throttles hardest at wide parallelism, while lz4's
-    * sequential decode scales with cores. Dictionary off because transcript
-    * text is high-cardinality (dictionary pages fall back anyway and the
-    * probe pays their indirection); zstd traded ~40% smaller files for
-    * slower wide-width decode — the right choice for cold storage tiers, not
-    * the hot ingest path. */
-  val WriteCodec = "lz4"
-  val WriteDictionary = false
-
-  /** Write `df` to `outDir` in the encoding above. */
-  private[graft] def writeParquet(df: DataFrame, outDir: String): Unit =
-    df.write.mode("overwrite")
-      .option("compression", WriteCodec)
-      .option("parquet.enable.dictionary", WriteDictionary.toString)
-      .parquet(outDir)
 
   /** Output file count for a rewrite of `estRows` rows: target-sized files,
     * floored at 2x cluster parallelism while files stay above
@@ -89,23 +79,17 @@ object Compaction {
     val snap = table.currentSnapshot
     val keyCols = snap.keyCols
     val all = table.files(snap)
-    val (small, _) = all.partition(f => !f.delta && f.rows < smallFileRows)
+    val small = all.filter(f => !f.delta && f.rows < smallFileRows)
     if (small.size <= 1) return CompactionStats.empty
 
-    val schema = snap.schema
     val rows = small.map(_.rows).sum
     val nOut = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-    val newVersion = snap.version + 1
-    val outDir = table.newDataDir(newVersion)
-
-    writeParquet(spark.read.schema(schema).parquet(small.map(_.path): _*)
-      .repartitionByRange(nOut, keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols.map(col) :+ col(LakeTable.LsnCol)): _*),
-      outDir)
-
-    val newFiles = writtenStats(spark, table, outDir, newVersion, delta = false)
-    table.commitChange(snap, snap.schemaJson, small.map(_.path).toSet, newFiles, None)
-    CompactionStats(all.size, all.size - small.size + newFiles.size, rows,
+    val written = table.writeAndCommit(snap, snap.schema,
+      spark.read.schema(snap.schema).parquet(small.map(_.path): _*)
+        .repartitionByRange(nOut, keyCols.map(col): _*)
+        .sortWithinPartitions((keyCols.map(col) :+ col(LakeTable.LsnCol)): _*),
+      delta = false, small, None)
+    CompactionStats(all.size, all.size - small.size + written.files.size, rows,
       (System.nanoTime() - t0) / 1000000L)
   }
 
@@ -115,27 +99,27 @@ object Compaction {
    * uses, keeping tombstones (a late lower-lsn insert must still lose).
    * Amortized via MergeOptions' ratio trigger: folding when deltas reach the
    * base's size bounds total write amplification at O(log) rewrites per row.
+   *
+   * `rangePlace`: range-partition the folded base for tight per-file key
+   * bounds (the default — feeds CoW pruning and compact). Pass false for a
+   * pure-MoR table, where no code path prunes on base bounds: the hash
+   * exchange skips repartitionByRange's whole-input boundary-sampling scan,
+   * folding in one pass over the data. Sparse tables always range-place.
+   *
+   * The fold is scoped: deltas fold only into the BASE files that the UNION
+   * of the per-delta key intervals touches ([[KeyRanges]]), carrying the rest
+   * of the base over by reference — a key-local delta burst (one hot tenant,
+   * one backfilled range) rewrites O(intersecting base), never O(table), and
+   * two concurrent bursts at OPPOSITE ends of the keyspace no longer widen
+   * the scope to ~everything the way the earlier single [min,max] envelope
+   * did (the multi-tenant write pattern that defeated r5's scoping). A base
+   * file intersecting no delta interval on the first key column cannot
+   * share any full key with a delta, so the untouched partition of the fold
+   * is exact; the fallback to a full fold (any delta/base file with unknown
+   * bounds) degrades to the old behavior, never to a wrong one. Tombstones
+   * in carried-over base files are untouched (folding only re-resolves rows
+   * that could conflict).
    */
-  /** `rangePlace`: range-partition the folded base for tight per-file key
-    * bounds (the default — feeds CoW pruning and compact). Pass false for a
-    * pure-MoR table, where no code path prunes on base bounds: the hash
-    * exchange skips repartitionByRange's whole-input boundary-sampling scan,
-    * folding in one pass over the data.
-    *
-    * The fold is scoped: deltas fold only into the BASE files whose key
-    * range intersects the UNION of the per-delta key intervals (sorted and
-    * merged, membership by binary search), carrying the rest of the base
-    * over by reference — a key-local delta burst (one hot tenant, one
-    * backfilled range) rewrites O(intersecting base), never O(table), and
-    * two concurrent bursts at OPPOSITE ends of the keyspace no longer widen
-    * the scope to ~everything the way the earlier single [min,max] envelope
-    * did (the multi-tenant write pattern that defeated r5's scoping). A base
-    * file intersecting no delta interval on the first key column cannot
-    * share any full key with a delta, so the untouched partition of the fold
-    * is exact; the fallback to a full fold (any delta/base file with unknown
-    * bounds) degrades to the old behavior, never to a wrong one. Tombstones
-    * in carried-over base files are untouched (folding only re-resolves rows
-    * that could conflict). */
   def foldDeltas(
       spark: SparkSession,
       table: LakeTable,
@@ -146,83 +130,27 @@ object Compaction {
     LocalFs.install(spark)
     val snap = table.currentSnapshot
     val allFiles = table.files(snap)
-    val deltas = allFiles.filter(_.delta)
+    val (deltas, baseFiles) = allFiles.partition(_.delta)
     if (deltas.isEmpty) return CompactionStats.empty
-    val baseFiles = allFiles.filterNot(_.delta)
-    val deltaBoundsKnown = deltas.forall(f => f.minKey != null && f.maxKey != null)
-    val (touchedBase, carriedBase) =
-      if (!deltaBoundsKnown) (baseFiles, Nil)
-      else {
-        // union of per-delta intervals: sort by lo, merge overlaps — after
-        // the merge the intervals are disjoint and both endpoints are
-        // strictly increasing, so base-file intersection is a binary search
-        val sortedIv = deltas.map(f => (f.minKey, f.maxKey))
-          .sortWith((x, y) => KeyCodec.compare(x._1, y._1) < 0)
-        val merged = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        sortedIv.foreach { case (lo, hi) =>
-          merged.lastOption match {
-            case Some((plo, phi)) if KeyCodec.compare(lo, phi) <= 0 =>
-              if (KeyCodec.compare(hi, phi) > 0) merged(merged.size - 1) = (plo, hi)
-            case _ => merged += ((lo, hi))
-          }
-        }
-        def intersectsAny(f: DataFile): Boolean =
-          f.minKey == null || f.maxKey == null || {
-            // first interval whose hi >= f.minKey; intersects iff lo <= f.maxKey
-            var l = 0; var r = merged.length
-            while (l < r) {
-              val m = (l + r) >>> 1
-              if (KeyCodec.compare(merged(m)._2, f.minKey) < 0) l = m + 1 else r = m
-            }
-            l < merged.length && KeyCodec.compare(merged(l)._1, f.maxKey) <= 0
-          }
-        baseFiles.partition(intersectsAny)
-      }
+    val (touchedBase, carriedBase) = baseFiles.partition(KeyRanges.covering(deltas).touches)
     val all = touchedBase ++ deltas
-    val schema = snap.schema
     val estRows = all.map(_.rows).sum
     val nOut = outputFiles(spark, estRows, targetRowsPerFile, minRowsPerFile)
-    val newVersion = snap.version + 1
-    val outDir = table.newDataDir(newVersion)
-
-    val raw = spark.read.schema(schema).parquet(all.map(_.path): _*)
-    val folded =
-      if (snap.sparse)
-        graft.merge.MergeInto.resolveSparse(
-          raw.repartitionByRange(nOut, snap.keyCols.map(col): _*), snap.keyCols,
-          schema.fieldNames.toSeq.filterNot(c =>
-            LakeTable.MetaCols.contains(c) || snap.keyCols.contains(c)))
-      else if (rangePlace)
-        graft.merge.MergeInto.resolveSortDedup(raw, snap.keyCols, nOut)
-      else
-        graft.merge.MergeInto.resolveHashDedup(raw, snap.keyCols, nOut)
-    writeParquet(folded, outDir)
-
-    val newFiles = writtenStats(spark, table, outDir, newVersion, delta = false)
-    if (testDelayBeforeFoldCommitMs > 0) Thread.sleep(testDelayBeforeFoldCommitMs)
-    // removed-key envelope lets the commit skip parsing manifests that cannot
-    // contain a removed path (same contract as the merge's CoW commit)
-    val committed = table.commitChange(snap, snap.schemaJson,
-      all.map(_.path).toSet, newFiles, None,
-      removedBounds = LakeTable.keyEnvelope(all))
+    val written = table.writeAndCommit(snap, snap.schema,
+      graft.merge.MergeInto.resolveExchanged(
+        spark.read.schema(snap.schema).parquet(all.map(_.path): _*),
+        snap.keyCols, snap.sparse, nOut, rangePlace || snap.sparse),
+      delta = false, all, None,
+      beforeCommit = () => if (testDelayBeforeFoldCommitMs > 0)
+        Thread.sleep(testDelayBeforeFoldCommitMs))
     val stats = CompactionStats(allFiles.size,
-      carriedBase.size + newFiles.size, estRows,
+      carriedBase.size + written.files.size, estRows,
       (System.nanoTime() - t0) / 1000000L)
-    logFold(table, committed.version, stats)
+    val version = written.snapshot.version
+    table.writeMetrics(f"fold-$version%010d.json", FoldRecord("fold", version,
+      stats.filesBefore, stats.filesAfter, stats.rowsRewritten, stats.wallMs,
+      Thread.currentThread.getName))
     stats
-  }
-
-  /** one JSON line per fold into _metrics (same observability surface as
-    * MergeStats — `table.metrics` shows merge and maintenance cost together) */
-  private def logFold(table: LakeTable, version: Long, s: CompactionStats): Unit = {
-    val dir = java.nio.file.Paths.get(table.dir, "_metrics")
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.write(dir.resolve(f"fold-$version%010d.json"),
-      (s"""{"op":"fold","snapshotVersion":$version,"filesBefore":${s.filesBefore},""" +
-        s""""filesAfter":${s.filesAfter},"rowsRewritten":${s.rowsRewritten},""" +
-        s""""foldMs":${s.wallMs},"thread":"${Thread.currentThread.getName}"}""")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ()
   }
 
   /**
@@ -266,10 +194,6 @@ object Compaction {
     val current = table.currentVersion
     val cutoff = current - retainVersions + 1
 
-    def local(p: String) =
-      if (p.startsWith("file:")) Paths.get(java.net.URI.create(p).getPath)
-      else Paths.get(p)
-
     // dirs whose contents THIS vacuum deleted: always collapsible once empty
     // (deleting a child bumps the parent's mtime, so an age check alone
     // would keep just-emptied dirs around as husks forever); dirs we did NOT
@@ -286,7 +210,7 @@ object Compaction {
       // with a smaller window); a gone snapshot references nothing, so it
       // simply contributes no liveness
       val retained = (cutoff to current)
-        .filter(v => Files.exists(Paths.get(table.dir, "_snapshots", f"v$v%020d.json")))
+        .filter(v => Files.exists(table.snapPath(v)))
         .map(table.snapshot)
       val liveFiles = retained.flatMap(s => table.files(s).map(_.path)).toSet
       val liveManifests = retained.flatMap(_.manifests.map(_.name)).toSet
@@ -298,8 +222,7 @@ object Compaction {
       // PRIOR interrupted vacuum already removed are tolerated: their file
       // lists are simply unknown, which only means some orphans survive until
       // a later pass — never a wedge.
-      val oldSnaps = (0L until cutoff).filter(v =>
-        Files.exists(Paths.get(table.dir, "_snapshots", f"v$v%020d.json")))
+      val oldSnaps = (0L until cutoff).filter(v => Files.exists(table.snapPath(v)))
       val deadFiles = oldSnaps.flatMap { v =>
         try table.files(table.snapshot(v)).map(_.path)
         catch { case NonFatal(_) => Nil }
@@ -312,15 +235,14 @@ object Compaction {
       // at any point leaves only orphans (re-collected next run), never a
       // retained snapshot with a missing manifest
       val fd = deadFiles.count { p =>
-        val f = local(p)
+        val f = LocalFs.localPath(p)
         val deleted = Files.deleteIfExists(f)
         if (deleted) markTouched(f)
         deleted
       }
       deadManifests.foreach(m =>
         Files.deleteIfExists(Paths.get(table.dir, "_manifests", m)))
-      val sd = oldSnaps.count(v =>
-        Files.deleteIfExists(Paths.get(table.dir, "_snapshots", f"v$v%020d.json")))
+      val sd = oldSnaps.count(v => Files.deleteIfExists(table.snapPath(v)))
       (fd, sd)
     }
 
@@ -349,7 +271,7 @@ object Compaction {
           // normalize BOTH sides of the path compare: manifest paths are
           // Hadoop-qualified absolutes, the walk below starts from the
           // caller-supplied table.dir, which may carry ./.. segments
-          survivors.flatMap(s => table.files(s).map(f => canon(local(f.path)))).toSet))
+          survivors.flatMap(s => table.files(s).map(f => canon(LocalFs.localPath(f.path)))).toSet))
       } catch {
         case NonFatal(e) =>
           System.err.println(
@@ -416,15 +338,5 @@ object Compaction {
     }
     if (Files.isDirectory(dataDir)) { dropEmptyDirs(dataDir); () }
     (filesDeleted + orphans, snapsDeleted)
-  }
-
-  private def writtenStats(spark: SparkSession, table: LakeTable, outDir: String,
-      version: Long, delta: Boolean): List[DataFile] = {
-    val snap = table.currentSnapshot
-    val k1 = snap.keyCols.head
-    val k1Type = snap.schema(k1).dataType
-    graft.merge.FileStats.fromFooters(spark, outDir, k1, k1Type, version, delta)
-      .getOrElse(graft.merge.FileStats.fromScan(spark, outDir, snap.schema, k1,
-        version, delta))
   }
 }

@@ -47,7 +47,8 @@ import org.json4s.jackson.Serialization
  *   dir/_snapshots/v{version%020d}.json   — snapshot log (atomic rename commit)
  *   dir/_manifests/m{version}[-c].json    — immutable data-file lists
  *   dir/data/v{version}/part-*.parquet    — immutable data files
- *   dir/_metrics/                         — per-epoch merge metrics (JSON lines)
+ *   dir/_metrics/                         — telemetry, one JSON record per file:
+ *                                           merge epochs and delta folds
  *
  * Stored schema = user payload columns + metadata columns:
  *   _lsn: long       — lsn of the change that produced this row version
@@ -96,10 +97,12 @@ final case class ManifestRef(
 object ManifestRef {
   def of(name: String, files: List[DataFile]): ManifestRef = {
     val deltas = files.filter(_.delta)
-    val envelope = LakeTable.keyEnvelope(files)
+    // the members' key envelope: unknown (null) if any member's bound is
+    val known = files.nonEmpty && files.forall(f => f.minKey != null && f.maxKey != null)
     ManifestRef(name, files.size, files.map(_.rows).sum,
       deltas.size, deltas.map(_.rows).sum,
-      envelope.map(_._1).orNull, envelope.map(_._2).orNull,
+      if (known) files.map(_.minKey).min(KeyCodec.ordering) else null,
+      if (known) files.map(_.maxKey).max(KeyCodec.ordering) else null,
       if (files.nonEmpty) files.map(_.maxLsn).max else -1L)
   }
 }
@@ -145,13 +148,30 @@ object LakeTable {
   val DelLsnCol = "_del_lsn"
   val MetaCols: Seq[String] = Seq(LsnCol, DeletedCol, CellLsnCol, DelLsnCol)
 
-  /** Encoded (min, max) key envelope of `files`; None when there are none or
-    * any bound is unknown. */
-  def keyEnvelope(files: Seq[DataFile]): Option[(String, String)] =
-    if (files.nonEmpty && files.forall(f => f.minKey != null && f.maxKey != null))
-      Some((files.map(_.minKey).min(KeyCodec.ordering),
-        files.map(_.maxKey).max(KeyCodec.ordering)))
-    else None
+  /** What [[LakeTable.writeAndCommit]] committed, with its phase times (ms). */
+  final case class Written(snapshot: Snapshot, files: List[DataFile],
+      writeMs: Long, footerMs: Long, commitMs: Long)
+
+  /** Parquet encoding of every file the engine writes (merge deltas, CoW
+    * rewrites, compaction, folds): lz4 WITHOUT dictionary encoding, from
+    * width-interleaved A/B on the bench corpus (19M transcript rows, tmpfs):
+    * the epoch shape (scan -> hash dedup -> encode) ran 4.1-4.3s at 32 cores
+    * with lz4/no-dict vs 4.9-6.5s with snappy/dict, and no worse at 8 cores —
+    * snappy decode and dictionary bit-unpacking are memory-LATENCY-bound
+    * random access that throttles hardest at wide parallelism, while lz4's
+    * sequential decode scales with cores. Dictionary off because transcript
+    * text is high-cardinality (dictionary pages fall back anyway and the
+    * probe pays their indirection); zstd traded ~40% smaller files for
+    * slower wide-width decode — the right choice for cold storage tiers, not
+    * the hot ingest path. */
+  val WriteCodec = "lz4"
+  val WriteDictionary = false
+
+  private def writeParquet(df: DataFrame, outDir: String): Unit =
+    df.write.mode("overwrite")
+      .option("compression", WriteCodec)
+      .option("parquet.enable.dictionary", WriteDictionary.toString)
+      .parquet(outDir)
 
   /** current snapshot-JSON layout (3 = manifest entries carry per-manifest
     * stats + key range for parse-free commits and manifest-level pruning;
@@ -344,7 +364,7 @@ final class LakeTable(val dir: String) {
   private def versionOf(name: String): Long =
     name.stripPrefix("v").stripSuffix(".json").toLong
 
-  private def snapPath(v: Long) = snapDir.resolve(f"v$v%020d.json")
+  private[lake] def snapPath(v: Long) = snapDir.resolve(f"v$v%020d.json")
 
   /** last head version this instance observed — commits are dense, so head
     * discovery probes FORWARD from here (O(new commits)) instead of listing
@@ -370,16 +390,13 @@ final class LakeTable(val dir: String) {
       }
     }
     snapshotListScans.incrementAndGet()
-    val vs = Files.list(snapDir).iterator().asScala
-      .map(_.getFileName.toString).filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(versionOf).toSeq
-    val max = if (vs.isEmpty) -1L else vs.max
+    val max = availableVersions.lastOption.getOrElse(-1L)
     versionHint.updateAndGet(m => math.max(m, max))
     max
   }
 
   def snapshot(version: Long): Snapshot = {
-    val p = snapDir.resolve(f"v$version%020d.json")
+    val p = snapPath(version)
     if (!Files.exists(p)) {
       // clear error surface instead of a NoSuchFileException (or, worse, a
       // mid-scan FNF): the caller asked for history that retention removed
@@ -455,17 +472,14 @@ final class LakeTable(val dir: String) {
   }
 
   /**
-   * Data files of only the manifests whose key range intersects the given
-   * ENCODED bound envelope — manifest-level pruning: non-intersecting
-   * manifests are not even parsed (refs with unknown bounds always read).
-   * Callers pair this with per-file pruning; the snapshot's ref stats cover
-   * totals, so skipped manifests never need listing.
+   * Data files of only the manifests that `ranges` touch — manifest-level
+   * pruning: untouched manifests are not even parsed (refs with unknown
+   * bounds always read). Callers pair this with per-file pruning
+   * (`.filter(ranges.touches)`); the snapshot's ref stats cover totals, so
+   * skipped manifests never need listing.
    */
-  def filesIntersecting(snap: Snapshot, keyLo: String, keyHi: String): List[DataFile] =
-    snap.manifests
-      .filter(m => m.minKey == null || m.maxKey == null ||
-        (KeyCodec.compare(m.maxKey, keyLo) >= 0 && KeyCodec.compare(m.minKey, keyHi) <= 0))
-      .flatMap(m => readManifest(m.name))
+  def filesIntersecting(snap: Snapshot, ranges: KeyRanges): List[DataFile] =
+    snap.manifests.filter(ranges.touches).flatMap(m => readManifest(m.name))
 
   private def readManifest(name: String): List[DataFile] = {
     val p = manifestDir.resolve(name).toString
@@ -498,10 +512,10 @@ final class LakeTable(val dir: String) {
    *
    * Commit metadata cost: a pure-append commit (MoR epochs — removedPaths
    * empty) parses NO manifests at all; refs carry the stats. With removals,
-   * `removedBounds` (the encoded key envelope of the removed files, when the
-   * caller knows it) lets non-intersecting manifests stay unparsed — a
-   * manifest's ref range contains every member file's range, so a manifest
-   * outside the envelope cannot hold a removed path.
+   * `removedRanges` (the removed files' key ranges, when the caller knows
+   * them) lets untouched manifests stay unparsed — a manifest's ref range
+   * contains every member file's range, so a manifest the ranges do not
+   * touch cannot hold a removed path.
    *
    * Manifest folding is size-TIERED, never fold-all: when the list exceeds
    * the threshold, only manifests below [[LakeTable.ManifestSealEntries]]
@@ -529,20 +543,15 @@ final class LakeTable(val dir: String) {
       added: List[DataFile],
       epoch: Option[(String, Long)],
       maxRetries: Int = 5,
-      removedBounds: Option[(String, String)] = None): Snapshot = {
+      removedRanges: KeyRanges = KeyRanges.All): Snapshot = {
     var cur = base
     var curSchemaJson = schemaJson
     var attempt = 0
     while (true) {
       val version = cur.version + 1
-      def mayContainRemoved(m: ManifestRef): Boolean =
-        removedBounds.isEmpty || m.minKey == null || m.maxKey == null || {
-          val (lo, hi) = removedBounds.get
-          KeyCodec.compare(m.maxKey, lo) >= 0 && KeyCodec.compare(m.minKey, hi) <= 0
-        }
       val (clean, dirty) =
         if (removedPaths.isEmpty) (cur.manifests, Nil)
-        else cur.manifests.partition(m => !mayContainRemoved(m) ||
+        else cur.manifests.partition(m => !removedRanges.touches(m) ||
           !readManifest(m.name).exists(f => removedPaths(f.path)))
       val survivors = dirty.flatMap(m => readManifest(m.name))
         .filterNot(f => removedPaths(f.path))
@@ -625,6 +634,42 @@ final class LakeTable(val dir: String) {
   def newDataDir(versionHint: Long): String = s"$dir/data/v$versionHint-${nonce()}"
 
   /**
+   * The lake's one write path, shared by merge epochs (copy-on-write and
+   * merge-on-read), delta folds and compaction: write `data` (stored rows of
+   * `schema`) as parquet into a fresh staging dir, take each file's manifest
+   * stats from its footer (a Spark scan of the output when footers are
+   * unusable), then commit the files against `base` in place of `removed`,
+   * advancing `epoch` in the exactly-once ledger. The removed files' key
+   * ranges spare the commit from parsing manifests that cannot hold them.
+   *
+   * Output without rows adds no files: the staging dir is deleted and the
+   * commit carries only the removals and the ledger entry (an idle epoch's
+   * 0-row delta file would cost a read-fold fan-in slot and a manifest entry
+   * forever). `beforeCommit` runs between the write and the commit.
+   */
+  private[graft] def writeAndCommit(base: Snapshot, schema: StructType, data: DataFrame,
+      delta: Boolean, removed: List[DataFile], epoch: Option[(String, Long)],
+      beforeCommit: () => Unit = () => ()): Written = {
+    val spark = data.sparkSession
+    val version = base.version + 1
+    val outDir = newDataDir(version)
+    val t0 = System.nanoTime()
+    writeParquet(data, outDir)
+    val t1 = System.nanoTime()
+    val k1 = base.keyCols.head
+    val added = graft.merge.FileStats
+      .fromFooters(spark, outDir, k1, schema(k1).dataType, version, delta)
+      .getOrElse(graft.merge.FileStats.fromScan(spark, outDir, schema, k1, version, delta))
+    if (added.isEmpty) deleteRecursively(LocalFs.localPath(outDir))
+    beforeCommit()
+    val t2 = System.nanoTime()
+    val committed = commitChange(base, schema.json, removed.map(_.path).toSet, added,
+      epoch, removedRanges = KeyRanges.covering(removed))
+    Written(committed, added, (t1 - t0) / 1000000L, (t2 - t1) / 1000000L,
+      (System.nanoTime() - t2) / 1000000L)
+  }
+
+  /**
    * Atomic test-and-set commit of the next snapshot file: write a temp file,
    * then hard-link it to the versioned name. link(2) is atomic AND fails if
    * the target exists — unlike rename(2), which on POSIX silently REPLACES
@@ -633,7 +678,7 @@ final class LakeTable(val dir: String) {
    * race raises IllegalStateException for `commitChange`'s rebase retry.
    */
   def commit(s: Snapshot): Unit = {
-    val target = snapDir.resolve(f"v${s.version}%020d.json")
+    val target = snapPath(s.version)
     val tmp = snapDir.resolve(f".v${s.version}%020d-${nonce()}.json.tmp")
     Files.write(tmp, Serialization.write(s)(fmts).getBytes(StandardCharsets.UTF_8))
     try {
@@ -669,12 +714,24 @@ final class LakeTable(val dir: String) {
   /** Current table contents (tombstones filtered, metadata cols dropped). */
   def read(spark: SparkSession): DataFrame = readAt(spark, currentVersion)
 
-  /** Per-epoch merge metrics table (throughput/lineage surface; one JSON-line
-    * row per committed epoch — see MergeStats). Empty before first merge. */
+  /** Telemetry table (throughput/lineage surface): one row per committed
+    * epoch ([[graft.merge.MergeStats]]) and per delta fold
+    * ([[FoldRecord]], `op = "fold"`). Empty before the first record. */
   def metrics(spark: SparkSession): DataFrame = {
     val p = Paths.get(dir, "_metrics")
     if (Files.isDirectory(p)) spark.read.json(p.toString)
     else spark.emptyDataFrame
+  }
+
+  /** Write one telemetry record (a case class) as the JSON file
+    * `_metrics/name`, driver-side: a Spark job for a 1-row append costs ~0.5s
+    * of serial time per epoch, which at small-epoch sizes dominates; a file
+    * create is microseconds. Read back via [[metrics]]. */
+  private[graft] def writeMetrics(name: String, record: AnyRef): Unit = {
+    val p = Paths.get(dir, "_metrics")
+    Files.createDirectories(p)
+    Files.write(p.resolve(name), Serialization.write(record)(fmts).getBytes(StandardCharsets.UTF_8))
+    ()
   }
 
   /**
@@ -762,38 +819,50 @@ final class LakeTable(val dir: String) {
       keyFilter: Option[Column] = None,
       columns: Option[Seq[String]] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, not, coalesce, lit}
-    val stored = snap.schema.fieldNames.toSeq
-    val out = columns.getOrElse(stored.filterNot(MetaCols.contains))
-    def hit(minKey: String, maxKey: String): Boolean =
-      minKey == null || maxKey == null ||
-        (keyLo.forall(lo => KeyCodec.compare(maxKey, lo) >= 0) &&
-          keyHi.forall(hi => KeyCodec.compare(minKey, hi) <= 0))
-    val fs =
-      if (keyLo.isEmpty && keyHi.isEmpty) files(snap)
-      else snap.manifests.filter(m => hit(m.minKey, m.maxKey))
-        .flatMap(m => readManifest(m.name))
-        .filter(f => hit(f.minKey, f.maxKey))
-    val foldCols = stored.filter(c =>
-      snap.keyCols.contains(c) || MetaCols.contains(c) || out.contains(c))
-    val rows = readRawFiles(spark, snap.schema, fs)
+    val out = columns.getOrElse(snap.schema.fieldNames.toSeq.filterNot(MetaCols.contains))
+    readResolved(spark, snap, KeyRanges.span(keyLo, keyHi), keyFilter, columns)
+      .filter(not(coalesce(col(DeletedCol), lit(false))))
+      .select(out.map(col): _*)
+  }
+
+  /**
+   * The read-time merge-on-read fold: `snap`'s stored rows in the files
+   * `ranges` touch, resolved per key — tombstones KEPT — restricted to the
+   * keys `keyFilter` accepts, and to the key, metadata and `columns` columns
+   * when `columns` is given (see [[readAtIntersecting]] for why both
+   * restrictions are exact). Serves resolved reads and the change feed's
+   * bootstrap, which must carry tombstones downstream.
+   */
+  private[graft] def readResolved(spark: SparkSession, snap: Snapshot,
+      ranges: KeyRanges = KeyRanges.All, keyFilter: Option[Column] = None,
+      columns: Option[Seq[String]] = None): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val foldCols = snap.schema.fieldNames.toSeq.filter(c => snap.keyCols.contains(c) ||
+      MetaCols.contains(c) || columns.forall(_.contains(c)))
+    val rows = readRawFiles(spark, snap.schema,
+      filesIntersecting(snap, ranges).filter(ranges.touches))
     val filtered = keyFilter.fold(rows)(p => rows.filter(p))
     // a full read adds no operator: each one is analyzed again by every
     // DataFrame the fold builds on top of it
     val raw = if (columns.isEmpty) filtered else filtered.select(foldCols.map(col): _*)
-    // merge-on-read: unresolved delta rows fold before the tombstone filter
-    // (per-column cell-lsn fold for sparse tables, max-lsn rows otherwise);
-    // pure-base snapshots skip the fold (already resolved)
-    val resolved =
-      if (!snap.manifests.exists(_.deltaFiles > 0)) raw
-      else if (snap.sparse)
-        graft.merge.MergeInto.resolveSparse(raw, snap.keyCols,
-          foldCols.filterNot(c => MetaCols.contains(c) || snap.keyCols.contains(c)))
-      else
-        graft.merge.MergeInto.resolveMaxLsn(raw, snap.keyCols, saltBuckets = 1)
-    resolved
-      .filter(not(coalesce(col(DeletedCol), lit(false))))
-      .select(out.map(col): _*)
+    // unresolved delta rows fold (per-column cell-lsn fold for sparse
+    // tables, max-lsn rows otherwise); pure-base snapshots are resolved
+    if (!snap.manifests.exists(_.deltaFiles > 0)) raw
+    else if (snap.sparse)
+      graft.merge.MergeInto.resolveSparse(raw, snap.keyCols,
+        foldCols.filterNot(c => MetaCols.contains(c) || snap.keyCols.contains(c)))
+    else
+      graft.merge.MergeInto.resolveMaxLsn(raw, snap.keyCols, saltBuckets = 1)
   }
+
+  /** local recursive delete (a staging dir that received no rows) */
+  private def deleteRecursively(p: java.nio.file.Path): Unit =
+    if (Files.exists(p)) {
+      val s = Files.walk(p)
+      try s.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => { Files.deleteIfExists(f); () })
+      finally s.close()
+    }
 }
 
 /** Add-column-only schema merge (type conflicts are errors in v1). */

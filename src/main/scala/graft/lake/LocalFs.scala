@@ -85,6 +85,12 @@ object LocalFs {
     }
   }
 
+  /** A `file:` URI (how Hadoop and the session catalog qualify paths) as a
+    * local path; any other string is a local path already. */
+  def localPath(p: String): java.nio.file.Path =
+    if (p.startsWith("file:")) java.nio.file.Paths.get(URI.create(p).getPath)
+    else java.nio.file.Paths.get(p)
+
   // PosixFilePermission's declaration order is owner rwx, group rwx,
   // others rwx: bit 0400 down to 0001
   private def posix(mode: Short): java.util.Set[PosixFilePermission] = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{Compaction, DataFile, KeyCodec, LakeTable, LocalFs, SchemaMerge, Snapshot}
+import graft.lake.{Compaction, DataFile, KeyCodec, KeyRanges, LakeTable, LocalFs, SchemaMerge, Snapshot}
 import graft.model.Schemas
 
 /**
@@ -18,27 +18,29 @@ import graft.model.Schemas
  *
  *   1. Write-amplification mode (MergeMode): merge-on-read epochs write ONLY
  *      the batch as resolved delta files (O(batch) IO — the streaming-ingest
- *      default); copy-on-write epochs rewrite the base files the batch's key
- *      bounds intersect. Manifest pruning happens on the driver against
- *      snapshot metadata in KeyCodec's single ordering — no data read for
- *      untouched files, and integral keys prune too.
+ *      default); copy-on-write epochs rewrite the base files the batch's
+ *      keys touch ([[graft.lake.KeyRanges]]). Manifest pruning happens on
+ *      the driver against snapshot metadata in KeyCodec's single ordering —
+ *      no data read for untouched files, and integral keys prune too.
  *   2. Conflict resolution: because the rule is max-LSN-wins with a globally
  *      unique lsn, MERGE degenerates to an associative/commutative arg-max
  *      fold — never a full-outer join (an SMJ would shuffle both sides and
  *      cannot be broadcast). Every epoch resolves with ONE exchange plus an
- *      in-partition window dedup: a hash exchange for MoR delta writes
- *      (`resolveHashDedup`), a range exchange for CoW base rewrites
- *      (`resolveSortDedup`) that simultaneously places rows for tight
- *      per-file key bounds and clusters keys for the dedup window
+ *      in-partition window dedup (`resolveExchanged`, shared with delta
+ *      folds): a hash exchange for MoR delta writes, a range exchange for
+ *      CoW base rewrites that simultaneously places rows for tight per-file
+ *      key bounds and clusters keys for the dedup window
  *      (RangePartitioning satisfies the window's ClusteredDistribution) and
  *      feeds WindowGroupLimit so losing rows drop before full evaluation.
  *      Both partition on the FULL key tuple, so a hot conv_id spreads across
  *      its turns. The hash arg-max aggregate (`resolveMaxLsn`) serves
  *      read-time delta folds.
- *   3. Deletes write tombstones (_deleted = true, _lsn = delete's lsn) so a
+ *   3. One write path: every epoch writes and commits through
+ *      `LakeTable.writeAndCommit`, as delta folds and compaction do.
+ *   4. Deletes write tombstones (_deleted = true, _lsn = delete's lsn) so a
  *      late-arriving lower-lsn insert can never resurrect a deleted key —
  *      required for replay determinism under out-of-order delivery.
- *   4. Exactly-once: the per-checkpoint epoch high-watermark in the snapshot
+ *   5. Exactly-once: the per-checkpoint epoch high-watermark in the snapshot
  *      makes re-delivered micro-batches no-ops; the commit itself is an
  *      atomic rename. Epoch ids per checkpoint must be monotone (Structured
  *      Streaming's foreachBatch contract).
@@ -257,9 +259,9 @@ object MergeInto {
       var bMinLsn0 = -1L
       var bMaxLsn0 = -1L
       var bDeletes0 = 0L
-      var keyLo: String = null
-      var keyHi: String = null
-      var keySet: Option[Array[String]] = None
+      // the keys the batch may touch: its exact key set when collected, else
+      // its span; unknown (every file) without usable bounds
+      var ranges = KeyRanges.All
       if (!isMor) {
         def globalStats(): Unit = {
           val r = bNorm.agg(count(lit(1)), min(col(LsnCol)), max(col(LsnCol)),
@@ -271,7 +273,8 @@ object MergeInto {
           bMinLsn0 = if (r.isNullAt(1)) -1L else r.getLong(1)
           bMaxLsn0 = if (r.isNullAt(2)) -1L else r.getLong(2)
           bDeletes0 = if (r.isNullAt(3)) 0L else r.getLong(3)
-          keyLo = enc(4); keyHi = enc(5)
+          val (lo, hi) = (enc(4), enc(5))
+          if (lo != null && hi != null) ranges = KeyRanges.span(Some(lo), Some(hi))
         }
         if (prunable) {
           val keyRows = bNorm.groupBy(col(k1)).agg(count(lit(1)).as("n"),
@@ -287,14 +290,14 @@ object MergeInto {
             bMaxLsn0 = if (lsnMaxs.isEmpty) -1L else lsnMaxs.max
             bDeletes0 = keyRows.map(r => if (r.isNullAt(4)) 0L else r.getLong(4)).sum
             val nonNull = keyRows.filterNot(_.isNullAt(0))
-            val encoded = nonNull.map(r => KeyCodec.encode(k1Type, r.get(0)))
-              .sorted(KeyCodec.ordering)
-            keyLo = if (encoded.isEmpty) null else encoded.head
-            keyHi = if (encoded.isEmpty) null else encoded.last
+            val encoded = nonNull.map(r => KeyCodec.encode(k1Type, r.get(0))).toSeq
             // an exact prune set only without null keys (a null key has no
             // encoding); with one, pruning uses the range, as after the
             // global pass
-            if (nonNull.length == keyRows.length) keySet = Some(encoded)
+            if (nonNull.length == keyRows.length) ranges = KeyRanges.points(encoded)
+            else if (encoded.nonEmpty)
+              ranges = KeyRanges.span(Some(encoded.min(KeyCodec.ordering)),
+                Some(encoded.max(KeyCodec.ordering)))
           }
         } else globalStats()
       }
@@ -309,27 +312,16 @@ object MergeInto {
       }
 
       // --- file pruning against manifest key bounds (CoW reads the base;
-      // MoR touches nothing). Two-level: whole manifests outside the batch's
-      // key envelope are skipped WITHOUT being parsed (snapshot refs carry
+      // MoR touches nothing). Two-level: whole manifests the batch's key
+      // ranges miss are skipped WITHOUT being parsed (snapshot refs carry
       // per-manifest ranges), then the surviving candidates prune per file.
-      val touched: List[DataFile] = opts.mode match {
-        case MergeMode.Mor => Nil
-        case MergeMode.Cow =>
-          // (keyLo, keyHi) is the exact key set's first and last key when
-          // one was collected
-          val candidates =
-            if (prunable && keyLo != null && keyHi != null)
-              table.filesIntersecting(snap, keyLo, keyHi)
-            else table.files(snap) // no usable bounds: all candidates
-          pruneFiles(candidates, prunable, keySet, keyLo, keyHi)
-      }
+      val touched: List[DataFile] =
+        if (isMor) Nil else table.filesIntersecting(snap, ranges).filter(ranges.touches)
       val touchedRows = touched.map(_.rows).sum
       // untouched = table minus touched, by REF arithmetic (no listing)
       val untouchedCount = refFileCount - touched.size
       val untouchedRows = refRowCount - touchedRows
 
-      val newVersion = snap.version + 1
-      val outDir = table.newDataDir(newVersion)
       // File-count target (Compaction.outputFiles: floored at 2x cluster
       // parallelism, bounded by minRowsPerFile so tiny epochs don't spray
       // micro-files). MoR has no pre-write row count (by design, see the
@@ -355,58 +347,38 @@ object MergeInto {
         sized(touchedRows + bRows)
       }
 
-      val tWrite = System.nanoTime()
       // MoR telemetry rides the write job (see stats pass above)
       val obsNorm = morObs.map(o => bNorm.observe(o,
         count(lit(1)).as("rows"),
         min(col(LsnCol)).as("minLsn"), max(col(LsnCol)).as("maxLsn"),
         sum(when(col(DeletedCol), 1L).otherwise(0L)).as("dels")))
         .getOrElse(bNorm)
-      val toWrite = opts.mode match {
-        case MergeMode.Mor if snap.sparse =>
-          // within-batch sparse collapse: exact because cell lsns preserve
-          // per-column provenance (see resolveSparse / resolveSparseAgg)
-          opts.sparseResolve match {
-            case ResolveStrategy.Agg =>
-              // coalesce (not repartition) the aggregate output to nOut so
-              // file sizing stays governed by targetRowsPerFile like every
-              // other write path — the agg's own output partitioning is
-              // spark.sql.shuffle.partitions, which would spray that many
-              // tiny delta files per small epoch. Coalesce merges post-agg
-              // partitions without a second exchange and no-ops when the
-              // agg already runs at <= nOut partitions.
-              resolveSparseAgg(obsNorm, keyCols, nonKeyPayload).coalesce(nOut)
-            case ResolveStrategy.SortDedup =>
-              resolveSparse(obsNorm.repartition(nOut, keyCols.map(col): _*),
-                keyCols, nonKeyPayload)
-          }
-        case MergeMode.Mor =>
+      val toWrite =
+        if (isMor && snap.sparse && opts.sparseResolve == ResolveStrategy.Agg)
+          // coalesce (not repartition) the aggregate output to nOut so file
+          // sizing stays governed by targetRowsPerFile like every other
+          // write path — the agg's own output partitioning is
+          // spark.sql.shuffle.partitions, which would spray that many tiny
+          // delta files per small epoch. Coalesce merges post-agg partitions
+          // without a second exchange and no-ops when the agg already runs
+          // at <= nOut partitions.
+          resolveSparseAgg(obsNorm, keyCols, nonKeyPayload).coalesce(nOut)
+        else if (isMor)
           // merge-on-read: write ONLY the batch, resolved within itself
-          // (cross-epoch conflicts fold at read / compaction time). Hash
-          // exchange: no range-boundary sampling job, so the batch is
-          // scanned exactly once per epoch — delta files are folded soon
-          // anyway, so tight range bounds buy little there.
-          resolveHashDedup(obsNorm, keyCols, nOut)
-        case MergeMode.Cow =>
+          // (cross-epoch conflicts fold at read / compaction time)
+          resolveExchanged(obsNorm, keyCols, snap.sparse, nOut, rangePlace = false)
+        else {
           val target =
             if (touched.isEmpty)
               spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
                 storedSchema)
             else
               spark.read.schema(storedSchema).parquet(touched.map(_.path): _*)
-          val union = target.unionByName(bNorm)
-          if (snap.sparse)
-            resolveSparse(union.repartitionByRange(nOut, keyCols.map(col): _*),
-              keyCols, nonKeyPayload)
-          else
-            // One shuffle: the range exchange both resolves conflicts
-            // (window over the in-partition sort) and places rows for tight
-            // per-file key bounds. The sampling job only re-runs the cheap
-            // scan+project union, never an aggregate.
-            resolveSortDedup(union, keyCols, nOut)
-      }
-      Compaction.writeParquet(toWrite, outDir)
-      val writeMs = millisSince(tWrite)
+          resolveExchanged(target.unionByName(bNorm), keyCols, snap.sparse, nOut,
+            rangePlace = true)
+        }
+      val written = table.writeAndCommit(snap, storedSchema, toWrite, delta = isMor,
+        touched, Some((ckptId, epochId)))
       // collect the ridden-along MoR telemetry (the write action finished,
       // so get() returns immediately)
       val (bRowsFinal, bMinLsn, bMaxLsn, bDeletes) = morObs match {
@@ -423,47 +395,19 @@ object MergeInto {
       // poison the estimate (nor should a restart: absent => parallelism floor)
       if (isMor && bRowsFinal > 0) lastBatchRows.put(ckptId, bRowsFinal)
 
-      if (isMor && bRowsFinal == 0) {
-        // empty MoR epoch: advance the exactly-once ledger WITHOUT data files
-        // (a 0-row delta file would still cost a read-fold fan-in slot and a
-        // manifest entry per idle tick, forever)
-        deleteRecursively(outDir)
-        val next = table.commitChange(snap, storedSchema.json, Set.empty, Nil,
-          Some((ckptId, epochId)))
-        val stats = MergeStats(ckptId, epochId, next.version, 0, -1, -1,
-          untouchedRows, 0, 0, untouchedCount, 0,
-          millisSince(t0), statsMs, writeMs, 0, 0, noop = false)
-        writeMetrics(spark, table, stats)
-        return stats
-      }
-
-      // --- per-file stats from parquet footers (driver-side, no re-scan) ----
-      val tFooter = System.nanoTime()
-      val newFiles = FileStats
-        .fromFooters(spark, outDir, k1, k1Type, newVersion, isMor)
-        .getOrElse(FileStats.fromScan(spark, outDir, storedSchema, k1, newVersion, isMor))
-      val outputRows = newFiles.map(_.rows).sum + untouchedRows
-      val footerMs = millisSince(tFooter)
-
-      // removed-key envelope: lets the commit skip parsing manifests that
-      // cannot contain a removed path (all touched bounds known => envelope)
-      val tCommit = System.nanoTime()
-      val committed = table.commitChange(snap, storedSchema.json,
-        touched.map(_.path).toSet, newFiles, Some((ckptId, epochId)),
-        removedBounds = LakeTable.keyEnvelope(touched))
-      val commitMs = millisSince(tCommit)
-
-      // committed.version, not newVersion: a disjoint-writer commit retry
-      // (e.g. racing compaction) may land the epoch at a later version
+      // written.snapshot.version, not snap.version + 1: a disjoint-writer
+      // commit retry (e.g. racing compaction) may land the epoch later
+      val committed = written.snapshot
       val stats = MergeStats(ckptId, epochId, committed.version, bRowsFinal, bMinLsn, bMaxLsn,
-        outputRows, bDeletes, touched.size, untouchedCount, newFiles.size,
-        millisSince(t0), statsMs, writeMs, footerMs, commitMs,
-        noop = false)
-      writeMetrics(spark, table, stats)
+        written.files.map(_.rows).sum + untouchedRows, bDeletes, touched.size,
+        untouchedCount, written.files.size, millisSince(t0), statsMs,
+        written.writeMs, written.footerMs, written.commitMs, noop = false)
+      table.writeMetrics(f"epoch-$ckptId-$epochId%010d.json", stats)
 
       // --- MoR delta maintenance: fold past the thresholds (trigger math
-      // rides the committed snapshot's manifest refs — no file listing) -----
-      if (isMor) {
+      // rides the committed snapshot's manifest refs — no file listing;
+      // an empty epoch adds nothing to fold) ---------------------------------
+      if (isMor && written.files.nonEmpty) {
         val deltaFiles = committed.manifests.map(_.deltaFiles).sum
         val deltaRows = committed.manifests.map(_.deltaRows).sum
         val baseRows = committed.manifests.map(_.rows).sum - deltaRows
@@ -526,35 +470,43 @@ object MergeInto {
   }
 
   /**
-   * Single-shuffle conflict resolution: range-partition on the key columns,
-   * sort within partitions by (key, lsn desc), keep the first row per key.
-   * RangePartitioning(keyCols) satisfies the window's
-   * ClusteredDistribution(keyCols) and the in-partition sort matches its
-   * required ordering, so EnsureRequirements inserts NO second exchange and
-   * NO extra sort — asserted in PlanSpec. Exact for max-lsn-wins because lsn
-   * is globally unique (no ties). Output is range-placed and key-sorted, so
-   * per-file bounds stay tight for manifest pruning.
+   * The write-time resolver of merge epochs and delta folds: ONE exchange on
+   * the FULL key tuple (so a hot conv_id spreads over its turns), then the
+   * per-key fold inside each partition — the per-column window fold
+   * ([[resolveSparse]]) on sparse tables, else a (key, lsn desc) sort and
+   * first-row-per-key window, exact for max-lsn-wins because lsns are unique.
+   * Either exchange satisfies the window's ClusteredDistribution and the
+   * in-partition sort its ordering, so EnsureRequirements adds NO second
+   * exchange or sort (asserted in PlanSpec); output is deterministic given
+   * the data.
    *
-   * Skew note: the partitioning key is the FULL key tuple (conv_id,
-   * turn_idx), so a hot conv_id spreads over its turns, and the range
-   * sampler assigns hot key ranges more partitions; rows equal on the whole
-   * tuple are bounded by the per-key update count within one epoch.
+   * `rangePlace` picks the exchange. Range placement also gives each output
+   * file tight key bounds and key-sorted rows — what long-lived base files
+   * (CoW epochs, range folds) need for pruning; its boundary-sampling job
+   * re-runs only the cheap scan+project input, and the sampler gives hot key
+   * ranges more partitions. A hash exchange skips that job, scanning the
+   * input once — the trade for merge-on-read delta files, which are folded
+   * soon, and for pure-MoR folds, whose base bounds nothing prunes on.
    */
-  def resolveSortDedup(union: DataFrame, keyCols: Seq[String], nOut: Int): DataFrame =
-    dedupAfterExchange(union.repartitionByRange(nOut, keyCols.map(col): _*), keyCols)
+  private[graft] def resolveExchanged(rows: DataFrame, keyCols: Seq[String], sparse: Boolean,
+      nOut: Int, rangePlace: Boolean): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val kc = keyCols.map(col)
+    val exchanged =
+      if (rangePlace) rows.repartitionByRange(nOut, kc: _*) else rows.repartition(nOut, kc: _*)
+    if (sparse)
+      resolveSparse(exchanged, keyCols, rows.columns.toSeq.filterNot(c =>
+        LakeTable.MetaCols.contains(c) || keyCols.contains(c)))
+    else
+      exchanged
+        .sortWithinPartitions(kc :+ col(LsnCol).desc: _*)
+        .withColumn("_rn", row_number().over(Window.partitionBy(kc: _*).orderBy(col(LsnCol).desc)))
+        .filter(col("_rn") === 1).drop("_rn")
+  }
 
-  /**
-   * Same single-shuffle dedup with a HASH exchange instead of range: no
-   * boundary-sampling job, so the input is scanned exactly once per epoch —
-   * the right trade for merge-on-read DELTA writes, whose files are
-   * short-lived (folded into the base) and whose per-file key bounds
-   * therefore buy little pruning. Long-lived base files (CoW epochs,
-   * compaction, delta folds) keep the range form for tight bounds.
-   * Deterministic: hash placement and in-partition order are functions of
-   * the data only.
-   */
-  def resolveHashDedup(union: DataFrame, keyCols: Seq[String], nOut: Int): DataFrame =
-    dedupAfterExchange(union.repartition(nOut, keyCols.map(col): _*), keyCols)
+  /** [[resolveExchanged]] with range placement, max-lsn rows. */
+  def resolveSortDedup(union: DataFrame, keyCols: Seq[String], nOut: Int): DataFrame =
+    resolveExchanged(union, keyCols, sparse = false, nOut, rangePlace = true)
 
   /**
    * Partial-column (sparse) conflict resolution — the reference's
@@ -692,18 +644,6 @@ object MergeInto {
       col(LsnCol).as(Schemas.LsnCol), op.as(Schemas.OpCol)): _*)
   }
 
-  /** The shared in-partition dedup pipeline: both exchanges above satisfy
-    * the window's ClusteredDistribution, so no further shuffle appears. */
-  private def dedupAfterExchange(exchanged: DataFrame, keyCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val kc = keyCols.map(col)
-    val win = Window.partitionBy(kc: _*).orderBy(col(LsnCol).desc)
-    exchanged
-      .sortWithinPartitions(kc :+ col(LsnCol).desc: _*)
-      .withColumn("_rn", row_number().over(win))
-      .filter(col("_rn") === 1).drop("_rn")
-  }
-
   /**
    * Arg-max fold, optionally salted (two-phase: per (key, salt) pre-reduce,
    * then per key — exact because max-by-lsn is associative). No engine path
@@ -736,71 +676,8 @@ object MergeInto {
     }
   }
 
-  /**
-   * The manifest files a batch touches, by first-key bounds, all
-   * in KeyCodec's single (UTF-8 byte / numeric) ordering. `keySet` is the
-   * batch's exact sorted ENCODED key set when known (collected in the stats
-   * pass); otherwise falls back to (keyLo, keyHi) range intersection (also
-   * from the stats pass — no extra scan). Files with null bounds (unsupported
-   * key type at write time) are always touched.
-   */
-  private def pruneFiles(
-      files: List[DataFile],
-      prunable: Boolean,
-      keySet: Option[Array[String]],
-      keyLo: String,
-      keyHi: String): List[DataFile] = {
-    def unknownBounds(f: DataFile) = f.minKey == null || f.maxKey == null
-    keySet match {
-      case Some(sorted) =>
-        def intersects(f: DataFile): Boolean = unknownBounds(f) || {
-          // lowest batch key >= file.minKey; touched iff it also <= maxKey
-          var lo = 0; var hi = sorted.length
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            if (KeyCodec.compare(sorted(mid), f.minKey) < 0) lo = mid + 1 else hi = mid
-          }
-          lo < sorted.length && KeyCodec.compare(sorted(lo), f.maxKey) <= 0
-        }
-        files.filter(intersects)
-      case None if prunable && keyLo != null && keyHi != null =>
-        files.filter(f => unknownBounds(f) ||
-          (KeyCodec.compare(f.maxKey, keyLo) >= 0 && KeyCodec.compare(f.minKey, keyHi) <= 0))
-      case None =>
-        files // no usable bounds: every file is touched
-    }
-  }
-
   private def tablePayload(snap: Snapshot): StructType =
     StructType(snap.schema.fields.filterNot(f => LakeTable.MetaCols.contains(f.name)))
 
   private def millisSince(t0: Long): Long = (System.nanoTime() - t0) / 1000000L
-
-  /** local-fs recursive delete (staging dirs written then discarded) */
-  private def deleteRecursively(dir: String): Unit = {
-    val p =
-      if (dir.startsWith("file:")) java.nio.file.Paths.get(java.net.URI.create(dir).getPath)
-      else java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) {
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-      finally s.close()
-    }
-  }
-
-  /** One JSON line per epoch, written driver-side: a Spark job for a 1-row
-    * append costs ~0.5s of serial time per epoch, which at small-epoch sizes
-    * dominates; a file create is microseconds. Read back via
-    * `LakeTable.metrics` (spark.read.json over the directory). */
-  private def writeMetrics(spark: SparkSession, table: LakeTable, s: MergeStats): Unit = {
-    import org.json4s.DefaultFormats
-    import org.json4s.jackson.Serialization
-    val dir = java.nio.file.Paths.get(table.dir, "_metrics")
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.write(
-      dir.resolve(f"epoch-${s.ckptId}-${s.epochId}%010d.json"),
-      Serialization.write(s)(DefaultFormats).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ()
-  }
 }

@@ -144,15 +144,12 @@ final class GraftDataSource extends TableProvider with DataSourceRegister
   private def pathOf(parameters: Map[String, String]): String = {
     val p = parameters.collectFirst { case (k, v) if k.equalsIgnoreCase("path") => v }
     require(p.isDefined, "graft: OPTION path (the lake table directory) is required")
-    if (p.get.startsWith("file:")) new java.net.URI(p.get).getPath else p.get
+    // the session catalog qualifies stored paths to file: URIs
+    LocalFs.localPath(p.get).toString
   }
 
-  private def dirOf(options: CaseInsensitiveStringMap): String = {
-    val p = options.get("path")
-    require(p != null, "graft: OPTION path (the lake table directory) is required")
-    // the session catalog qualifies stored paths to file: URIs
-    if (p.startsWith("file:")) new java.net.URI(p).getPath else p
-  }
+  private def dirOf(options: CaseInsensitiveStringMap): String =
+    pathOf(options.asCaseSensitiveMap().asScala.toMap)
 
   private def versionOf(options: CaseInsensitiveStringMap): Option[Long] =
     Option(options.get("versionAsOf")).map(_.toLong)

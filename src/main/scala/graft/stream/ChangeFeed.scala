@@ -115,12 +115,7 @@ object ChangeFeed {
     val head = upstream.currentVersion
     val usnap = upstream.snapshot(head)
     require(!usnap.sparse, "ChangeFeed is defined for row-lsn (non-sparse) tables")
-    val resolved = {
-      val raw = upstream.readRaw(spark, usnap)
-      if (!usnap.manifests.exists(_.deltaFiles > 0)) raw
-      else MergeInto.resolveMaxLsn(raw, usnap.keyCols, saltBuckets = 1)
-    }
-    applyBatch(spark, cfg, upstream, resolved, epochId = head)
+    applyBatch(spark, cfg, upstream, upstream.readResolved(spark, usnap), epochId = head)
     writeCursor(cfg.cursorPath, head)
     head
   }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types._
 
-import graft.lake.{DataFile, KeyCodec, LakeTable}
+import graft.lake.{DataFile, KeyCodec, KeyRanges, LakeTable}
 
 /**
  * Snapshot-metadata scaling: size-tiered manifest folding and manifest-level
@@ -237,7 +237,7 @@ class ManifestTierSpec extends AnyFunSuite {
     assert(snap.manifests.size == 3)
     LakeTable.clearManifestCacheForTest()
     val parses0 = LakeTable.manifestParses.get()
-    val got = table.filesIntersecting(snap, enc(1003), enc(1007))
+    val got = table.filesIntersecting(snap, KeyRanges.span(Some(enc(1003)), Some(enc(1007))))
     assert(LakeTable.manifestParses.get() - parses0 == 1,
       "exactly one manifest (the intersecting range) should be parsed")
     assert(got.size == 10 && got.forall(f =>
@@ -252,14 +252,39 @@ class ManifestTierSpec extends AnyFunSuite {
       "pure-append commit must not parse any manifest")
     // a bounded removal parses only manifests intersecting the removed envelope
     LakeTable.clearManifestCacheForTest()
-    val victim = table.filesIntersecting(table.currentSnapshot, enc(2000), enc(2009))
+    val victim = table.filesIntersecting(table.currentSnapshot,
+      KeyRanges.span(Some(enc(2000)), Some(enc(2009))))
     LakeTable.clearManifestCacheForTest()
     val parses2 = LakeTable.manifestParses.get()
     table.commitChange(table.currentSnapshot, snap.schemaJson,
       victim.map(_.path).toSet, Nil, None,
-      removedBounds = Some((enc(2000), enc(2009))))
+      removedRanges = KeyRanges.span(Some(enc(2000)), Some(enc(2009))))
     assert(LakeTable.manifestParses.get() - parses2 == 1,
       "bounded removal must parse only the intersecting manifest")
     assert(table.currentFiles.size == 30 + 5 - 10)
+  }
+
+  test("cold currentVersion closes its snapshot-log listing: no fd leak") {
+    val dir = TestSpark.tmpDir("fdleak")
+    val table = LakeTable.create(s"$dir/t", schema, keyCols = Seq("conv_id"))
+    (0 until 3).foreach { _ =>
+      val snap = table.currentSnapshot
+      table.commitChange(snap, snap.schemaJson, Set.empty, Nil, None)
+    }
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean]
+    val fds0 = os.getOpenFileDescriptorCount
+    // each fresh instance starts with a cold version hint, so its first
+    // currentVersion lists the snapshot log
+    val scans = (0 until 500).map { _ =>
+      val t = LakeTable.load(s"$dir/t")
+      assert(t.currentVersion == 3L)
+      t.snapshotListScans.get()
+    }
+    assert(scans.forall(_ == 1L), "every cold instance must list once")
+    val leaked = os.getOpenFileDescriptorCount - fds0
+    // an unclosed listing holds its directory handle until GC finalizes it:
+    // 500 cold loads would leave hundreds open
+    assert(leaked < 50, s"$leaked file descriptors left open by 500 cold loads")
   }
 }

@@ -75,6 +75,32 @@ class StreamingReplaySpec extends AnyFunSuite {
         s"version ${LakeTable.load(s"$work/table1").currentVersion}")
   }
 
+  test("streamDedup: the watermark dedup drops redelivered events and the " +
+    "drain equals the fold oracle") {
+    val work = TestSpark.tmpDir("stream-dedup")
+    ChangelogGen.writeWal(spark, p, s"$work/wal")
+    val wal = spark.read.parquet(s"$work/wal")
+    val events = wal.count()
+    val lsns = wal.select("lsn").distinct().count()
+    assert(lsns < events, "the WAL must carry redelivered events")
+    CdcIngestJob.runAvailableNow(spark, IngestConfig(s"$work/wal", s"$work/table",
+      s"$work/ckpt", maxFilesPerTrigger = Some(3), streamDedup = true))
+    // each lsn reached the merges once: the stream dropped every redelivery
+    val merged = LakeTable.load(s"$work/table").metrics(spark)
+      .where("ckptId IS NOT NULL").selectExpr("sum(batchRows)").head().getLong(0)
+    assert(merged == lsns, s"merged $merged rows for $lsns distinct lsns")
+    val got = state(s"$work/table")
+    val oracle = oracleKeys
+    assert(got.size == oracle.size, s"rows: got ${got.size}, want ${oracle.size}")
+    val cols = LakeTable.load(s"$work/table").read(spark).columns.sorted
+    got.foreach { row =>
+      val k = (row(cols.indexOf("conv_id")).asInstanceOf[String],
+        row(cols.indexOf("turn_idx")).asInstanceOf[Int])
+      assert(oracle.contains(k), s"unexpected key $k")
+      assert(row(cols.indexOf("text")) == oracle(k).text, s"text mismatch at $k")
+    }
+  }
+
   test("checkpoint resume: stop after era 0, append era 1 with evolved schema, " +
     "resume — final state equals a full run and the oracle") {
     val work = TestSpark.tmpDir("stream-resume")
