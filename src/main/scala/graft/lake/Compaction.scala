@@ -3,6 +3,8 @@ package graft.lake
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.merge.Placement
+
 /**
  * Table maintenance: small-file compaction and merge-on-read delta folding.
  * Both rewrite data WITHOUT changing logical table state (same resolved rows,
@@ -88,7 +90,9 @@ object Compaction {
       spark.read.schema(snap.schema).parquet(small.map(_.path): _*)
         .repartitionByRange(nOut, keyCols.map(col): _*)
         .sortWithinPartitions((keyCols.map(col) :+ col(LakeTable.LsnCol)): _*),
-      delta = false, small, None)
+      delta = false, small, None,
+      baseRanges = added => Some(Placement.rangesOf(
+        all.filter(f => !f.delta && f.rows >= smallFileRows) ++ added)))
     CompactionStats(all.size, all.size - small.size + written.files.size, rows,
       (System.nanoTime() - t0) / 1000000L)
   }
@@ -105,6 +109,11 @@ object Compaction {
    * pure-MoR table, where no code path prunes on base bounds: the hash
    * exchange skips repartitionByRange's whole-input boundary-sampling scan,
    * folding in one pass over the data. Sparse tables always range-place.
+   * The fold records the new base's key ranges in the snapshot
+   * ([[Snapshot.baseRanges]]): merge-on-read epochs place their deltas by
+   * a range-placed base's ranges ([[graft.merge.Placement]]), while a
+   * hash-placed base records none and sends them to the hash exchange until
+   * the next range fold.
    *
    * The fold is scoped: deltas fold only into the BASE files that the UNION
    * of the per-delta key intervals touches ([[KeyRanges]]), carrying the rest
@@ -139,10 +148,12 @@ object Compaction {
     val written = table.writeAndCommit(snap, snap.schema,
       graft.merge.MergeInto.resolveExchanged(
         spark.read.schema(snap.schema).parquet(all.map(_.path): _*),
-        snap.keyCols, snap.sparse, nOut, rangePlace || snap.sparse),
+        snap.keyCols, snap.sparse, nOut,
+        if (rangePlace || snap.sparse) Placement.ByRange else Placement.ByHash),
       delta = false, all, None,
       beforeCommit = () => if (testDelayBeforeFoldCommitMs > 0)
-        Thread.sleep(testDelayBeforeFoldCommitMs))
+        Thread.sleep(testDelayBeforeFoldCommitMs),
+      baseRanges = added => Some(Placement.rangesOf(carriedBase ++ added)))
     val stats = CompactionStats(allFiles.size,
       carriedBase.size + written.files.size, estRows,
       (System.nanoTime() - t0) / 1000000L)

@@ -43,10 +43,15 @@ object KeyCodec {
     "0" * (20 - u.length) + u
   }
 
+  /** Inverse of [[encodeLong]]. */
+  def decodeLong(s: String): Long = java.lang.Long.parseUnsignedLong(s) ^ Long.MinValue
+
   /** Unsigned UTF-8 byte-order comparison (the single ordering rule). */
-  def compare(a: String, b: String): Int = {
-    val x = a.getBytes(StandardCharsets.UTF_8)
-    val y = b.getBytes(StandardCharsets.UTF_8)
+  def compare(a: String, b: String): Int =
+    compareBytes(a.getBytes(StandardCharsets.UTF_8), b.getBytes(StandardCharsets.UTF_8))
+
+  /** [[compare]] of already-encoded UTF-8 bytes. */
+  def compareBytes(x: Array[Byte], y: Array[Byte]): Int = {
     var i = 0
     val n = math.min(x.length, y.length)
     while (i < n) {

@@ -132,8 +132,23 @@ final case class Snapshot(
       * would otherwise default a missing collection field to empty and
       * silently read an incompatible table as EMPTY — losing the epoch
       * ledger and re-applying replayed epochs). */
-    formatVersion: Int = LakeTable.FormatVersion) {
+    formatVersion: Int = LakeTable.FormatVersion,
+    /** The key ranges of the base files, for merge-on-read delta placement
+      * ([[graft.merge.Placement]]): the upper first-key bound of each range
+      * in KeyCodec encoding, recorded by the commit that last changed the
+      * base when its files' first-key intervals are disjoint (a range fold
+      * or compaction); empty when they are not, or unknown (a copy-on-write
+      * epoch). Non-empty only while every delta file of the snapshot was
+      * placed by base ranges, so each lies inside one group of adjacent
+      * ranges ([[LakeTable.commitChange]] keeps this). Kept here so a merge-on-read
+      * epoch places its deltas without parsing a manifest. Additive field:
+      * json4s defaults it to empty for snapshots written before it existed. */
+    baseRanges: List[String] = Nil) {
   def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+
+  /** The user-facing columns: the stored schema minus [[LakeTable.MetaCols]]. */
+  def payloadSchema: StructType =
+    StructType(schema.fields.filterNot(f => LakeTable.MetaCols.contains(f.name)))
 }
 
 object LakeTable {
@@ -445,8 +460,7 @@ final class LakeTable(val dir: String) {
   def storedSchema: StructType = currentSnapshot.schema
 
   /** User-facing payload schema. */
-  def payloadSchema: StructType =
-    StructType(storedSchema.fields.filterNot(f => MetaCols.contains(f.name)))
+  def payloadSchema: StructType = currentSnapshot.payloadSchema
 
   def hasEpoch(ckptId: String, epochId: Long): Boolean =
     currentSnapshot.epochHwm.get(ckptId).exists(_ >= epochId)
@@ -517,6 +531,16 @@ final class LakeTable(val dir: String) {
    * contains every member file's range, so a manifest the ranges do not
    * touch cannot hold a removed path.
    *
+   * [[Snapshot.baseRanges]] is decided here alone. Without `baseRanges`, a
+   * commit that removes nothing and adds only deltas keeps the head's (the
+   * deltas were placed by `base`'s ranges, so after a rebase onto a head
+   * whose ranges differ it records none), and any other commit records none.
+   * `baseRanges` gives the ranges of the base the commit leaves, as the
+   * caller computed them from `base` (computed again from the head's files
+   * after a rebase); they are recorded unless the commit adds deltas or
+   * leaves deltas that were placed without base ranges. `Some(Nil)` records
+   * none.
+   *
    * Manifest folding is size-TIERED, never fold-all: when the list exceeds
    * the threshold, only manifests below [[LakeTable.ManifestSealEntries]]
    * entries fold together; a manifest that grows past the seal is never
@@ -543,9 +567,12 @@ final class LakeTable(val dir: String) {
       added: List[DataFile],
       epoch: Option[(String, Long)],
       maxRetries: Int = 5,
-      removedRanges: KeyRanges = KeyRanges.All): Snapshot = {
+      removedRanges: KeyRanges = KeyRanges.All,
+      baseRanges: Option[List[String]] = None): Snapshot = {
     var cur = base
     var curSchemaJson = schemaJson
+    val keepsBase = removedPaths.isEmpty && added.forall(_.delta)
+    var ranges = baseRanges.getOrElse(Nil)
     var attempt = 0
     while (true) {
       val version = cur.version + 1
@@ -585,8 +612,16 @@ final class LakeTable(val dir: String) {
       val hwm = epoch.fold(cur.epochHwm) { case (ck, e) =>
         cur.epochHwm.updated(ck, math.max(e, cur.epochHwm.getOrElse(ck, Long.MinValue)))
       }
+      val nextRanges = baseRanges match {
+        case None =>
+          if (keepsBase && cur.baseRanges == base.baseRanges) cur.baseRanges else Nil
+        case Some(_) =>
+          if (added.exists(_.delta) ||
+            cur.baseRanges.isEmpty && manifests.exists(_.deltaFiles > 0)) Nil
+          else ranges
+      }
       val next = Snapshot(version, cur.version, curSchemaJson, cur.keyCols,
-        manifests, hwm, cur.sparse)
+        manifests, hwm, cur.sparse, baseRanges = nextRanges)
       try {
         commit(next)
         return next
@@ -600,7 +635,8 @@ final class LakeTable(val dir: String) {
           }
           attempt += 1
           val head = currentSnapshot
-          val headPaths = files(head).map(_.path).toSet
+          val headFiles = files(head)
+          val headPaths = headFiles.map(_.path).toSet
           val missing = removedPaths.filterNot(headPaths)
           if (missing.nonEmpty)
             throw new IllegalStateException(
@@ -615,6 +651,9 @@ final class LakeTable(val dir: String) {
           }
           curSchemaJson = SchemaMerge.merge(head.schema,
             DataType.fromJson(curSchemaJson).asInstanceOf[StructType]).json
+          if (ranges.nonEmpty)
+            ranges = graft.merge.Placement.rangesOf(
+              (headFiles.filterNot(f => removedPaths(f.path)) ++ added).filterNot(_.delta))
           cur = head
       }
     }
@@ -646,10 +685,13 @@ final class LakeTable(val dir: String) {
    * commit carries only the removals and the ledger entry (an idle epoch's
    * 0-row delta file would cost a read-fold fan-in slot and a manifest entry
    * forever). `beforeCommit` runs between the write and the commit.
+   *
+   * `baseRanges` maps the added files to [[commitChange]]'s `baseRanges`.
    */
   private[graft] def writeAndCommit(base: Snapshot, schema: StructType, data: DataFrame,
       delta: Boolean, removed: List[DataFile], epoch: Option[(String, Long)],
-      beforeCommit: () => Unit = () => ()): Written = {
+      beforeCommit: () => Unit = () => (),
+      baseRanges: List[DataFile] => Option[List[String]] = _ => None): Written = {
     val spark = data.sparkSession
     val version = base.version + 1
     val outDir = newDataDir(version)
@@ -664,7 +706,7 @@ final class LakeTable(val dir: String) {
     beforeCommit()
     val t2 = System.nanoTime()
     val committed = commitChange(base, schema.json, removed.map(_.path).toSet, added,
-      epoch, removedRanges = KeyRanges.covering(removed))
+      epoch, removedRanges = KeyRanges.covering(removed), baseRanges = baseRanges(added))
     Written(committed, added, (t1 - t0) / 1000000L, (t2 - t1) / 1000000L,
       (System.nanoTime() - t2) / 1000000L)
   }
@@ -693,10 +735,6 @@ final class LakeTable(val dir: String) {
     }
   }
 
-  /** Raw stored rows (incl. tombstones + metadata cols) at a snapshot. */
-  def readRaw(spark: SparkSession, snap: Snapshot): DataFrame =
-    readRawFiles(spark, snap.schema, files(snap))
-
   private def readRawFiles(spark: SparkSession, schema: StructType,
       fs: List[DataFile]): DataFrame = {
     if (fs.isEmpty) {
@@ -708,8 +746,6 @@ final class LakeTable(val dir: String) {
       spark.read.schema(schema).parquet(fs.map(_.path): _*)
     }
   }
-
-  def readRaw(spark: SparkSession): DataFrame = readRaw(spark, currentSnapshot)
 
   /** Current table contents (tombstones filtered, metadata cols dropped). */
   def read(spark: SparkSession): DataFrame = readAt(spark, currentVersion)
@@ -813,14 +849,25 @@ final class LakeTable(val dir: String) {
    * resolves to the key columns, the metadata columns and `columns`: exact
    * because the winner of a key (of each cell, on sparse tables) is chosen
    * by lsn alone, and lsns are unique.
+   *
+   * A point envelope (`keyLo == keyHi`, one first-key value) on a snapshot
+   * with [[Snapshot.baseRanges]] folds in ONE partition with no exchange, so
+   * the read is one Spark job and planning it runs none. That is cheap
+   * because every delta file of such a snapshot was placed by the base
+   * files' key ranges ([[graft.merge.Placement]]): the envelope keeps one
+   * base range's files, a few deltas per epoch. Without base ranges (no
+   * base, a hash-folded base, a copy-on-write epoch since the last range
+   * fold) the deltas may each span the whole keyspace, so the point read
+   * keeps the parallel fold.
    */
   private[graft] def readAtIntersecting(spark: SparkSession, snap: Snapshot,
       keyLo: Option[String], keyHi: Option[String],
       keyFilter: Option[Column] = None,
       columns: Option[Seq[String]] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, not, coalesce, lit}
-    val out = columns.getOrElse(snap.schema.fieldNames.toSeq.filterNot(MetaCols.contains))
-    readResolved(spark, snap, KeyRanges.span(keyLo, keyHi), keyFilter, columns)
+    val out = columns.getOrElse(snap.payloadSchema.fieldNames.toSeq)
+    readResolved(spark, snap, KeyRanges.span(keyLo, keyHi), keyFilter, columns,
+      onePartition = keyLo.isDefined && keyLo == keyHi && snap.baseRanges.nonEmpty)
       .filter(not(coalesce(col(DeletedCol), lit(false))))
       .select(out.map(col): _*)
   }
@@ -830,12 +877,13 @@ final class LakeTable(val dir: String) {
    * `ranges` touch, resolved per key — tombstones KEPT — restricted to the
    * keys `keyFilter` accepts, and to the key, metadata and `columns` columns
    * when `columns` is given (see [[readAtIntersecting]] for why both
-   * restrictions are exact). Serves resolved reads and the change feed's
+   * restrictions are exact). `onePartition` folds in a single partition,
+   * without an exchange. Serves resolved reads and the change feed's
    * bootstrap, which must carry tombstones downstream.
    */
   private[graft] def readResolved(spark: SparkSession, snap: Snapshot,
       ranges: KeyRanges = KeyRanges.All, keyFilter: Option[Column] = None,
-      columns: Option[Seq[String]] = None): DataFrame = {
+      columns: Option[Seq[String]] = None, onePartition: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.col
     val foldCols = snap.schema.fieldNames.toSeq.filter(c => snap.keyCols.contains(c) ||
       MetaCols.contains(c) || columns.forall(_.contains(c)))
@@ -844,15 +892,19 @@ final class LakeTable(val dir: String) {
     val filtered = keyFilter.fold(rows)(p => rows.filter(p))
     // a full read adds no operator: each one is analyzed again by every
     // DataFrame the fold builds on top of it
-    val raw = if (columns.isEmpty) filtered else filtered.select(foldCols.map(col): _*)
+    val projected = if (columns.isEmpty) filtered else filtered.select(foldCols.map(col): _*)
     // unresolved delta rows fold (per-column cell-lsn fold for sparse
     // tables, max-lsn rows otherwise); pure-base snapshots are resolved
-    if (!snap.manifests.exists(_.deltaFiles > 0)) raw
-    else if (snap.sparse)
-      graft.merge.MergeInto.resolveSparse(raw, snap.keyCols,
-        foldCols.filterNot(c => MetaCols.contains(c) || snap.keyCols.contains(c)))
-    else
-      graft.merge.MergeInto.resolveMaxLsn(raw, snap.keyCols, saltBuckets = 1)
+    if (!snap.manifests.exists(_.deltaFiles > 0)) projected
+    else {
+      // a single partition satisfies the fold's clustering: no exchange
+      val raw = if (onePartition) projected.coalesce(1) else projected
+      if (snap.sparse)
+        graft.merge.MergeInto.resolveSparse(raw, snap.keyCols,
+          foldCols.filterNot(c => MetaCols.contains(c) || snap.keyCols.contains(c)))
+      else
+        graft.merge.MergeInto.resolveMaxLsn(raw, snap.keyCols, saltBuckets = 1)
+    }
   }
 
   /** local recursive delete (a staging dir that received no rows) */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{Compaction, DataFile, KeyCodec, KeyRanges, LakeTable, LocalFs, SchemaMerge, Snapshot}
+import graft.lake.{Compaction, DataFile, KeyCodec, KeyRanges, LakeTable, LocalFs, SchemaMerge}
 import graft.model.Schemas
 
 /**
@@ -27,14 +27,23 @@ import graft.model.Schemas
  *      fold — never a full-outer join (an SMJ would shuffle both sides and
  *      cannot be broadcast). Every epoch resolves with ONE exchange plus an
  *      in-partition window dedup (`resolveExchanged`, shared with delta
- *      folds): a hash exchange for MoR delta writes, a range exchange for
- *      CoW base rewrites that simultaneously places rows for tight per-file
- *      key bounds and clusters keys for the dedup window
- *      (RangePartitioning satisfies the window's ClusteredDistribution) and
- *      feeds WindowGroupLimit so losing rows drop before full evaluation.
- *      Both partition on the FULL key tuple, so a hot conv_id spreads across
- *      its turns. The hash arg-max aggregate (`resolveMaxLsn`) serves
- *      read-time delta folds.
+ *      folds). The exchange ([[Placement]]) is a range exchange for CoW base
+ *      rewrites that simultaneously places rows for tight per-file key
+ *      bounds and clusters keys for the dedup window (RangePartitioning
+ *      satisfies the window's ClusteredDistribution) and feeds
+ *      WindowGroupLimit so losing rows drop before full evaluation. MoR delta
+ *      writes place by the key ranges of the table's current base files
+ *      when those are disjoint (recorded in the snapshot by a range fold or
+ *      compaction, so the epoch parses no manifest): a hash exchange on a
+ *      driver-chosen integer per group of ranges, so each delta file lies
+ *      inside one group and a point read opens one group's deltas per
+ *      epoch, with no sampling job. A group's partitions follow the rows
+ *      the checkpoint's previous epoch put in its ranges (counted in that
+ *      epoch's write job), so the range of a hot conv_id gets more, and its
+ *      turns spread over them by a hash of the FULL key tuple. With no base,
+ *      a hash-folded base, unknown bounds or after a CoW epoch they fall
+ *      back to a hash exchange on the full key tuple. The hash arg-max
+ *      aggregate (`resolveMaxLsn`) serves read-time delta folds.
  *   3. One write path: every epoch writes and commits through
  *      `LakeTable.writeAndCommit`, as delta folds and compaction do.
  *   4. Deletes write tombstones (_deleted = true, _lsn = delete's lsn) so a
@@ -45,9 +54,9 @@ import graft.model.Schemas
  *      atomic rename. Epoch ids per checkpoint must be monotone (Structured
  *      Streaming's foreachBatch contract).
  *
- * Output files are range-partitioned and key-sorted so per-file key bounds
- * stay tight (pruning + read-side selectivity) and file contents are
- * deterministic given the same final row set.
+ * Base files (CoW epochs, range folds) are range-partitioned and key-sorted
+ * so per-file key bounds stay tight (pruning + read-side selectivity); file
+ * contents are deterministic given the same final row set.
  */
 final case class MergeOptions(
     keyCols: Seq[String] = Seq("conv_id", "turn_idx"),
@@ -149,6 +158,12 @@ object MergeInto {
   private val lastBatchRows =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
 
+  /** rows per key range of the last epoch placed by base ranges, per
+    * checkpoint — where the next epoch's rows are expected to land
+    * ([[Placement.forDeltas]]; in-memory only like [[lastBatchRows]]) */
+  private val lastLoads =
+    new java.util.concurrent.ConcurrentHashMap[String, Placement.Loads]
+
   /** max #distinct first-key values collected to the driver for pruning.
     * Above it, pruning falls back to min/max range intersection: a batch
     * touching that many keys almost certainly intersects every file anyway,
@@ -189,7 +204,7 @@ object MergeInto {
     val keyCols = snap.keyCols
     val batchPayload = StructType(batch.schema.fields.filterNot(f =>
       f.name == Schemas.OpCol || f.name == Schemas.LsnCol))
-    val mergedPayload = SchemaMerge.merge(tablePayload(snap), batchPayload)
+    val mergedPayload = SchemaMerge.merge(snap.payloadSchema, batchPayload)
     val storedSchema =
       StructType(mergedPayload.fields.toSeq ++ LakeTable.metaFields(snap.sparse))
     val nonKeyPayload =
@@ -306,9 +321,11 @@ object MergeInto {
       if (!isMor && bRows == 0) {
         val next = table.commitChange(snap, snap.schemaJson, Set.empty, Nil,
           Some((ckptId, epochId)))
-        return MergeStats(ckptId, epochId, next.version, 0, -1, -1, 0, 0, 0,
+        val stats = MergeStats(ckptId, epochId, next.version, 0, -1, -1, refRowCount, 0, 0,
           refFileCount, 0, millisSince(t0), statsMs, 0, 0, 0,
           noop = false)
+        recordEpoch(table, stats)
+        return stats
       }
 
       // --- file pruning against manifest key bounds (CoW reads the base;
@@ -347,14 +364,25 @@ object MergeInto {
         sized(touchedRows + bRows)
       }
 
-      // MoR telemetry rides the write job (see stats pass above)
-      val obsNorm = morObs.map(o => bNorm.observe(o,
-        count(lit(1)).as("rows"),
-        min(col(LsnCol)).as("minLsn"), max(col(LsnCol)).as("maxLsn"),
-        sum(when(col(DeletedCol), 1L).otherwise(0L)).as("dels")))
+      val aggResolve = isMor && snap.sparse && opts.sparseResolve == ResolveStrategy.Agg
+      val placement =
+        if (!isMor) Placement.ByRange
+        else if (aggResolve) Placement.ByHash
+        else Placement.forDeltas(snap.baseRanges, k1Type, nOut, Option(lastLoads.get(ckptId)))
+      // MoR telemetry rides the write job (see stats pass above), with the
+      // rows per placement group: exact, a histogram with one bin per group
+      val groupRows = placement match {
+        case p: Placement.ByBase =>
+          Seq(histogram_numeric(p.groupIndex(col(k1)), lit(math.max(2, p.counts.size)))
+            .as("groups"))
+        case _ => Nil
+      }
+      val obsNorm = morObs.map(o => bNorm.observe(o, count(lit(1)).as("rows"),
+        Seq(min(col(LsnCol)).as("minLsn"), max(col(LsnCol)).as("maxLsn"),
+          sum(when(col(DeletedCol), 1L).otherwise(0L)).as("dels")) ++ groupRows: _*))
         .getOrElse(bNorm)
       val toWrite =
-        if (isMor && snap.sparse && opts.sparseResolve == ResolveStrategy.Agg)
+        if (aggResolve)
           // coalesce (not repartition) the aggregate output to nOut so file
           // sizing stays governed by targetRowsPerFile like every other
           // write path — the agg's own output partitioning is
@@ -366,7 +394,7 @@ object MergeInto {
         else if (isMor)
           // merge-on-read: write ONLY the batch, resolved within itself
           // (cross-epoch conflicts fold at read / compaction time)
-          resolveExchanged(obsNorm, keyCols, snap.sparse, nOut, rangePlace = false)
+          resolveExchanged(obsNorm, keyCols, snap.sparse, nOut, placement)
         else {
           val target =
             if (touched.isEmpty)
@@ -374,11 +402,13 @@ object MergeInto {
                 storedSchema)
             else
               spark.read.schema(storedSchema).parquet(touched.map(_.path): _*)
-          resolveExchanged(target.unionByName(bNorm), keyCols, snap.sparse, nOut,
-            rangePlace = true)
+          resolveExchanged(target.unionByName(bNorm), keyCols, snap.sparse, nOut, placement)
         }
+      // the aggregate's deltas span the keyspace: the table loses its base
+      // ranges until the next range fold (see Snapshot.baseRanges)
       val written = table.writeAndCommit(snap, storedSchema, toWrite, delta = isMor,
-        touched, Some((ckptId, epochId)))
+        touched, Some((ckptId, epochId)),
+        baseRanges = added => if (aggResolve && added.nonEmpty) Some(Nil) else None)
       // collect the ridden-along MoR telemetry (the write action finished,
       // so get() returns immediately)
       val (bRowsFinal, bMinLsn, bMaxLsn, bDeletes) = morObs match {
@@ -386,6 +416,14 @@ object MergeInto {
           val m = o.get
           def l(k: String, d: Long) =
             m.get(k).collect { case v: java.lang.Long => v.longValue() }.getOrElse(d)
+          (placement, m.get("groups")) match {
+            case (p: Placement.ByBase, Some(bins: Seq[_])) =>
+              val rows = Array.fill(p.counts.size)(0.0)
+              bins.collect { case b: org.apache.spark.sql.Row =>
+                rows(b.getInt(0)) = b.getDouble(1) }
+              if (rows.sum > 0) lastLoads.put(ckptId, Placement.Loads(p.bounds, rows.toIndexedSeq))
+            case _ =>
+          }
           (l("rows", 0L), l("minLsn", -1L), l("maxLsn", -1L), l("dels", 0L))
         case None => (bRows, bMinLsn0, bMaxLsn0, bDeletes0)
       }
@@ -402,7 +440,7 @@ object MergeInto {
         written.files.map(_.rows).sum + untouchedRows, bDeletes, touched.size,
         untouchedCount, written.files.size, millisSince(t0), statsMs,
         written.writeMs, written.footerMs, written.commitMs, noop = false)
-      table.writeMetrics(f"epoch-$ckptId-$epochId%010d.json", stats)
+      recordEpoch(table, stats)
 
       // --- MoR delta maintenance: fold past the thresholds (trigger math
       // rides the committed snapshot's manifest refs — no file listing;
@@ -470,43 +508,60 @@ object MergeInto {
   }
 
   /**
-   * The write-time resolver of merge epochs and delta folds: ONE exchange on
-   * the FULL key tuple (so a hot conv_id spreads over its turns), then the
-   * per-key fold inside each partition — the per-column window fold
+   * The write-time resolver of merge epochs and delta folds: ONE exchange
+   * that places every version of a key in one partition, then the per-key
+   * fold inside each partition — the per-column window fold
    * ([[resolveSparse]]) on sparse tables, else a (key, lsn desc) sort and
    * first-row-per-key window, exact for max-lsn-wins because lsns are unique.
-   * Either exchange satisfies the window's ClusteredDistribution and the
+   * Every exchange satisfies the window's ClusteredDistribution and the
    * in-partition sort its ordering, so EnsureRequirements adds NO second
    * exchange or sort (asserted in PlanSpec); output is deterministic given
    * the data.
    *
-   * `rangePlace` picks the exchange. Range placement also gives each output
-   * file tight key bounds and key-sorted rows — what long-lived base files
-   * (CoW epochs, range folds) need for pruning; its boundary-sampling job
-   * re-runs only the cheap scan+project input, and the sampler gives hot key
-   * ranges more partitions. A hash exchange skips that job, scanning the
+   * `placement` picks the exchange. [[Placement.ByRange]] also gives each
+   * output file tight key bounds and key-sorted rows — what long-lived base
+   * files (CoW epochs, range folds) need for pruning; its boundary-sampling
+   * job re-runs only the cheap scan+project input, and the sampler gives hot
+   * key ranges more partitions. A hash exchange skips that job, scanning the
    * input once — the trade for merge-on-read delta files, which are folded
    * soon, and for pure-MoR folds, whose base bounds nothing prunes on.
+   * [[Placement.ByHash]] hashes the FULL key tuple (a hot conv_id spreads
+   * over its turns). [[Placement.ByBase]] (MoR epochs over a range-placed
+   * base) hashes an integer column chosen per group of base ranges and
+   * hash sub-partition, which joins the window's partition keys after the
+   * key columns so the exchange still satisfies it; each delta file then
+   * lies inside one group.
    */
   private[graft] def resolveExchanged(rows: DataFrame, keyCols: Seq[String], sparse: Boolean,
-      nOut: Int, rangePlace: Boolean): DataFrame = {
+      nOut: Int, placement: Placement): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val kc = keyCols.map(col)
-    val exchanged =
-      if (rangePlace) rows.repartitionByRange(nOut, kc: _*) else rows.repartition(nOut, kc: _*)
-    if (sparse)
-      resolveSparse(exchanged, keyCols, rows.columns.toSeq.filterNot(c =>
-        LakeTable.MetaCols.contains(c) || keyCols.contains(c)))
-    else
-      exchanged
-        .sortWithinPartitions(kc :+ col(LsnCol).desc: _*)
-        .withColumn("_rn", row_number().over(Window.partitionBy(kc: _*).orderBy(col(LsnCol).desc)))
-        .filter(col("_rn") === 1).drop("_rn")
+    val (exchanged, cluster) = placement match {
+      case Placement.ByRange => (rows.repartitionByRange(nOut, kc: _*), keyCols)
+      case Placement.ByHash => (rows.repartition(nOut, kc: _*), keyCols)
+      case p: Placement.ByBase =>
+        (rows.withColumn(PlaceCol, p.column(keyCols)).repartition(p.partitions, col(PlaceCol)),
+          keyCols :+ PlaceCol)
+    }
+    val cc = cluster.map(col)
+    val resolved =
+      if (sparse)
+        resolveSparse(exchanged, cluster, rows.columns.toSeq.filterNot(c =>
+          LakeTable.MetaCols.contains(c) || keyCols.contains(c)))
+      else
+        exchanged
+          .sortWithinPartitions(cc :+ col(LsnCol).desc: _*)
+          .withColumn("_rn", row_number().over(Window.partitionBy(cc: _*).orderBy(col(LsnCol).desc)))
+          .filter(col("_rn") === 1).drop("_rn")
+    if (cluster == keyCols) resolved else resolved.drop(PlaceCol)
   }
+
+  /** the exchange column of [[Placement.ByBase]], dropped before the write */
+  private val PlaceCol = "_place"
 
   /** [[resolveExchanged]] with range placement, max-lsn rows. */
   def resolveSortDedup(union: DataFrame, keyCols: Seq[String], nOut: Int): DataFrame =
-    resolveExchanged(union, keyCols, sparse = false, nOut, rangePlace = true)
+    resolveExchanged(union, keyCols, sparse = false, nOut, Placement.ByRange)
 
   /**
    * Partial-column (sparse) conflict resolution — the reference's
@@ -676,8 +731,9 @@ object MergeInto {
     }
   }
 
-  private def tablePayload(snap: Snapshot): StructType =
-    StructType(snap.schema.fields.filterNot(f => LakeTable.MetaCols.contains(f.name)))
+  /** An applied epoch's `_metrics` record (empty epochs included). */
+  private def recordEpoch(table: LakeTable, s: MergeStats): Unit =
+    table.writeMetrics(f"epoch-${s.ckptId}-${s.epochId}%010d.json", s)
 
   private def millisSince(t0: Long): Long = (System.nanoTime() - t0) / 1000000L
 }

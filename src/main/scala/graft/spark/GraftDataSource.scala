@@ -181,7 +181,7 @@ private[spark] final case class GraftSqlTable(dir: String, versionAsOf: Option[L
     // Batch read/write of a missing table still fails with the lake's named
     // error — both paths force the lazy load before touching data.
     if (!LakeTable.exists(dir)) return new StructType()
-    GraftSqlTable.payloadOf(scanSnapshot)
+    scanSnapshot.payloadSchema
   }
 
   override def capabilities(): java.util.Set[TableCapability] =
@@ -213,10 +213,6 @@ private[spark] final case class GraftSqlTable(dir: String, versionAsOf: Option[L
 }
 
 private[spark] object GraftSqlTable {
-  /** The user-facing columns of a snapshot: its schema minus metadata. */
-  def payloadOf(snap: Snapshot): StructType =
-    StructType(snap.schema.fields.filterNot(f => LakeTable.MetaCols.contains(f.name)))
-
   /** One SQL append = one merge epoch under the "sql-writer" checkpoint.
     * Epoch ids continue that checkpoint's ledger; LSNs are assigned above
     * the table's current max so the batch wins over existing rows. */
@@ -234,8 +230,7 @@ private[spark] object GraftSqlTable {
     // with the mismatch listed. Any name overlap stays by-name (add-column
     // schema evolution may introduce genuinely new columns alongside
     // existing ones).
-    val payloadNames = snap.schema.fieldNames
-      .filterNot(LakeTable.MetaCols.contains).toSeq
+    val payloadNames = snap.payloadSchema.fieldNames.toSeq
     val sqlLiteralShape = data.columns.forall(_.matches("col[0-9]+|_c[0-9]+"))
     val aligned =
       if (data.columns.exists(payloadNames.contains)) data
@@ -268,7 +263,7 @@ private[spark] final class GraftScanBuilder(table: LakeTable, snap: Snapshot)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
-  private val fullSchema = GraftSqlTable.payloadOf(snap)
+  private val fullSchema = snap.payloadSchema
   private var required: StructType = fullSchema
   private var envelope: (Option[String], Option[String]) = (None, None)
   private var keyPredicate: Option[Column] = None

@@ -603,6 +603,25 @@ class LakeMergeSpec extends AnyFunSuite {
     assert(MergeInto.merge(spark, table, batch(Nil), "ck", 1L, mor).noop)
   }
 
+  test("an empty epoch writes its _metrics record on copy-on-write and merge-on-read") {
+    Seq(MergeMode.Cow, MergeMode.Mor).foreach { mode =>
+      val dir = TestSpark.tmpDir(s"lake-empty-metrics-$mode")
+      val table = LakeTable.create(s"$dir/t", Schemas.turn)
+      def batch(rows: Seq[(String, Long, String, Int)]) =
+        rows.map { case (op, lsn, c, t) =>
+          (op, lsn, c, t, "user", "txt", None: Option[String],
+            Timestamp.valueOf("2025-01-01 00:00:00"))
+        }.toDF("op", "lsn", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+      val opts = MergeOptions(mode = mode)
+      MergeInto.merge(spark, table, batch(Seq(("I", 1L, "c1", 0))), "ck", 0L, opts)
+      val empty = MergeInto.merge(spark, table, batch(Nil), "ck", 1L, opts)
+      assert(!empty.noop && empty.outputRows == 1, s"$mode: $empty")
+      val recs = table.metrics(spark).select("epochId", "batchRows", "outputRows")
+        .orderBy("epochId").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      assert(recs.toSeq == Seq((0L, 1L, 1L), (1L, 0L, 1L)), s"$mode: ${recs.toSeq}")
+    }
+  }
+
   test("stampFormatVersion migrates unstamped field-compatible snapshots") {
     val dir = TestSpark.tmpDir("lake-stamp")
     val table = LakeTable.create(s"$dir/t", Schemas.turn)

@@ -176,4 +176,68 @@ class PlanSpec extends AnyFunSuite {
       s"fold scan reads unrequested payload columns: $read")
     assert(point.collect().map(_.mkString("|")).toSeq == Seq("0|x"))
   }
+
+  test("aligned MoR epoch: one exchange, one sort, no sampling job; a point read " +
+    "plans no exchange") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.types.StringType
+    import graft.lake.LakeTable
+    import graft.merge.{MergeMode, MergeOptions, Placement}
+    import spark.implicits._
+    val dir = TestSpark.tmpDir("plan-aligned")
+    def batch(n: Int, lsn0: Long) = (0 until n).map { i =>
+      ("U", lsn0 + i, f"c${i % 400}%04d", i / 400, "user", s"t$lsn0",
+        None: Option[String], java.sql.Timestamp.valueOf("2025-01-01 00:00:00"))
+    }.toDF("op", "lsn", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+    val mor = MergeOptions(mode = MergeMode.Mor,
+      morCompactDeltaRatio = 1e9, morCompactMaxDeltaFiles = Int.MaxValue)
+    // a range fold leaves disjoint base files and records their ranges
+    val table = LakeTable.create(s"$dir/t", graft.model.Schemas.turn)
+    MergeInto.merge(spark, table, batch(2000, 0L), s"plan-base-${System.nanoTime()}", 0L, mor)
+    graft.lake.Compaction.foldDeltas(spark, table, minRowsPerFile = 500)
+    val placement = Placement.forDeltas(table.currentSnapshot.baseRanges, StringType, 8)
+    assert(placement.isInstanceOf[Placement.ByBase], s"not aligned: $placement")
+    val stored = batch(1000, 5000L).select($"conv_id", $"turn_idx", $"role", $"text",
+      $"tool", $"ts", $"lsn".as("_lsn"), lit(false).as("_deleted"))
+    val p = plan(MergeInto.resolveExchanged(stored, Seq("conv_id", "turn_idx"),
+      sparse = false, 8, placement))
+    assert("Exchange".r.findAllIn(p).size == 1, s"expected 1 shuffle:\n$p")
+    assert("Sort ".r.findAllIn(p).size == 1, s"expected 1 sort:\n$p")
+    assert(!p.contains("rangepartitioning"), s"range exchange planned:\n$p")
+
+    // the aligned epoch runs as many jobs as a hash-placed epoch of the same
+    // batch over an empty base: a sampling job would be one more
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(pr => Option(pr.getProperty("spark.jobGroup.id")))
+          .foreach(g => { jobs.merge(g, 1, (a: Integer, b: Integer) => a + b); () })
+    }
+    val empty = LakeTable.create(s"$dir/e", graft.model.Schemas.turn)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Seq("aligned" -> table, "hash" -> empty).foreach { case (g, t) =>
+        spark.sparkContext.setJobGroup(g, g)
+        try MergeInto.merge(spark, t, batch(1000, 5000L), s"plan-$g-${System.nanoTime()}", 1L, mor)
+        finally spark.sparkContext.clearJobGroup()
+      }
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get("aligned") != null && jobs.get("aligned") == jobs.get("hash"),
+      s"jobs per epoch: $jobs")
+
+    // a point read: one base file plus one range's deltas, folded in one
+    // partition with no exchange
+    val point = spark.read.format("graft").load(s"$dir/t")
+      .filter($"conv_id" === "c0123").select("turn_idx", "text")
+    val fold = point.queryExecution.sparkPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.RowDataSourceScanExec => s.relation
+    }.collect { case r: graft.spark.GraftRelation => r.resolved }.get
+    val fp = plan(fold)
+    assert(fp.contains("HashAggregate") || fp.contains("ObjectHashAggregate"), fp)
+    assert(!fp.contains("Exchange"), s"point read fold plans an exchange:\n$fp")
+    assert(point.collect().map(r => r.getInt(0) -> r.getString(1)).toMap ==
+      Map(0 -> "t5000", 1 -> "t5000", 2 -> "t5000", 3 -> "t0", 4 -> "t0"))
+  }
 }
