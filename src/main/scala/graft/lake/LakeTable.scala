@@ -752,11 +752,22 @@ final class LakeTable(val dir: String) {
 
   /** Telemetry table (throughput/lineage surface): one row per committed
     * epoch ([[graft.merge.MergeStats]]) and per delta fold
-    * ([[FoldRecord]], `op = "fold"`). Empty before the first record. */
+    * ([[FoldRecord]], `op = "fold"`). Empty before the first record.
+    *
+    * Reads the record files by name, not the directory: Spark's path check
+    * takes a root path named `_…` for a hidden one and warns that it was
+    * ignored (it is read all the same). */
   def metrics(spark: SparkSession): DataFrame = {
     val p = Paths.get(dir, "_metrics")
-    if (Files.isDirectory(p)) spark.read.json(p.toString)
-    else spark.emptyDataFrame
+    val records =
+      if (!Files.isDirectory(p)) Nil
+      else {
+        val s = Files.list(p)
+        try s.iterator().asScala.map(_.toString).filter(_.endsWith(".json")).toList
+        finally s.close()
+      }
+    if (records.isEmpty) spark.emptyDataFrame
+    else spark.read.json(records: _*)
   }
 
   /** Write one telemetry record (a case class) as the JSON file

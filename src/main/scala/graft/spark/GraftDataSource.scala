@@ -103,7 +103,7 @@ final class GraftDataSource extends TableProvider with DataSourceRegister
     val opts = MergeOptions(mode = mode)
     val keyCols = opt("keyCols")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    new GraftStreamSink(dir, ckptId, opts, keyCols)
+    new GraftStreamSink(ctx.sparkSession, dir, ckptId, opts, keyCols)
   }
 
   override def sourceSchema(ctx: SQLContext, schema: Option[StructType],

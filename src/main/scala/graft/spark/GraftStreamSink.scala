@@ -1,7 +1,7 @@
 package graft.spark
 
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.functions.{lit, monotonically_increasing_id}
 import org.apache.spark.sql.graft.GraftStreamingShim
@@ -39,17 +39,23 @@ import graft.model.Schemas
  * auto-create-table writer (/root/reference/processors/big_query_writer.go).
  * Default merge mode is MoR — each epoch writes only its batch, and the
  * sink's own CDC-out feed stays live for the next pipeline.
+ *
+ * Sessions: `spark` is the session the provider's `createSink` received —
+ * the one that started the stream. Each micro-batch is re-planned onto it
+ * and merged there, the rule [[graft.stream.CdcIngestJob]] follows too:
+ * the query's own clone of the session has its own executor class loader,
+ * and so an empty generated-code cache, under Spark's artifact isolation.
  */
-final class GraftStreamSink(dir: String, ckptId: String,
+final class GraftStreamSink(spark: SparkSession, dir: String, ckptId: String,
     opts: MergeOptions, keyColsOpt: Option[Seq[String]]) extends Sink with Logging {
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    // Re-plan the incremental frame as a plain batch: the merge runs several
-    // jobs over it (stats, resolution, write) and a streaming-tagged plan
-    // may be executed at most once. Our sources are deterministic per batch
-    // (immutable delta files), so re-execution is safe.
-    val df = GraftStreamingShim.asBatch(data)
-    val spark = df.sparkSession
+    // Re-plan the incremental frame as a plain batch of `spark` (see the
+    // class doc): the merge runs several jobs over it (stats, resolution,
+    // write) and a streaming-tagged plan may be executed at most once. Our
+    // sources are deterministic per batch (immutable delta files), so
+    // re-execution is safe.
+    val df = GraftStreamingShim.asBatch(data, spark)
     val cols = df.columns.toSet
 
     if (!LakeTable.exists(dir)) {

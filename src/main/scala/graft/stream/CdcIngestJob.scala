@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.GraftStreamingShim
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -39,6 +40,16 @@ import graft.model.Schemas
  * an event can have relative to the newest event already read, otherwise the
  * dedup operator may treat it as too-late. Correctness does not depend on
  * this (the merge converges regardless); only streaming-dedup state size does.
+ *
+ * Sessions: Structured Streaming runs each query on a clone of `spark`,
+ * and with Spark's artifact isolation every clone has its own executor
+ * class loader, under which Spark's generated-code cache (keyed by loader
+ * and source) starts empty. So each micro-batch is re-planned onto `spark`
+ * itself and the whole merge — and the folds it queues — runs there: every
+ * epoch of every drain reuses one warm code cache instead of recompiling
+ * the merge's classes per query. The optional `streamDedup`
+ * `localCheckpoint` still runs on the stream's clone, where the stateful
+ * dedup operator lives.
  *
  * Schema evolution: the source schema is fixed at query start, so a restart
  * (with the widened schema) picks up newly added columns — same contract as
@@ -166,9 +177,14 @@ object CdcIngestJob {
         // localCheckpoint stores plain RDD blocks — cheap to build, unlike a
         // columnar cache — at the cost of lineage (fine: on executor loss the
         // query fails and restarts from the checkpoint, where the epoch
-        // ledger makes the replay exactly-once).
+        // ledger makes the replay exactly-once). It runs on `batch`'s own
+        // session, the stream's clone.
         val mat = if (cfg.streamDedup) batch.localCheckpoint() else batch
-        MergeInto.merge(batch.sparkSession, table, mat, id, epochId, cfg.mergeOptions)
+        // ...then merge on the caller's session, not the clone: a merge
+        // planned on a new query's clone recompiles all of its generated
+        // code and runs its first epoch cold (see Sessions above)
+        MergeInto.merge(spark, table, GraftStreamingShim.asBatch(mat, spark),
+          id, epochId, cfg.mergeOptions)
         // retention cadence: out-of-band like async folds — a vacuum is
         // driver-side fs work but still O(retained snapshots) and must never
         // stretch an epoch; the maintenance queue also serializes it against

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /**
  * A V1 streaming `Source.getBatch` must return a DataFrame whose logical
@@ -20,13 +20,24 @@ object GraftStreamingShim {
       cdf.queryExecution.toRdd, cdf.schema, isStreaming = true)
   }
 
-  /** The inverse stamp, for a V1 `Sink.addBatch`: re-plan the incremental
-    * micro-batch frame as an ordinary batch DataFrame so a multi-job
-    * consumer (the merge runs stats + resolve + write) may execute it more
-    * than once — a streaming-tagged plan is single-execution by contract. */
-  def asBatch(df: DataFrame): DataFrame = {
+  /** The inverse stamp, for a micro-batch consumer (a V1 `Sink.addBatch`,
+    * a `foreachBatch` function): re-plan the incremental micro-batch frame
+    * as an ordinary batch DataFrame of `spark`, so a multi-job consumer (the
+    * merge runs stats + resolve + write) may execute it more than once — a
+    * streaming-tagged plan is single-execution by contract.
+    *
+    * `spark` is the session that started the stream, not the batch's own.
+    * Every streaming query runs on a clone of its session, and with Spark's
+    * artifact isolation each session gets its own executor class loader;
+    * the generated-code cache is keyed by (class loader, source), so a plan
+    * run on a fresh clone recompiles every class its stages need, and its
+    * first epochs run on cold, unwarmed code. Planned on the long-lived
+    * session, every epoch of every query shares one loader and one warm
+    * cache. The clone still plans the batch's own scan; its tasks run in
+    * the consumer's jobs on `spark`. */
+  def asBatch(df: DataFrame, spark: SparkSession): DataFrame = {
     val cdf = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-    cdf.sparkSession.internalCreateDataFrame(
-      cdf.queryExecution.toRdd, cdf.schema, isStreaming = false)
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(cdf.queryExecution.toRdd, cdf.schema, isStreaming = false)
   }
 }

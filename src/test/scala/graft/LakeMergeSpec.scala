@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -620,6 +622,41 @@ class LakeMergeSpec extends AnyFunSuite {
         .orderBy("epochId").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       assert(recs.toSeq == Seq((0L, 1L, 1L), (1L, 0L, 1L)), s"$mode: ${recs.toSeq}")
     }
+  }
+
+  test("metrics loads every epoch record and logs no hidden-path warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+
+    val dir = TestSpark.tmpDir("lake-metrics-read")
+    val table = LakeTable.create(s"$dir/t", Schemas.turn)
+    assert(table.metrics(spark).isEmpty, "no records before the first epoch")
+    val mor = MergeOptions(mode = MergeMode.Mor)
+    Seq(0L, 1L).foreach { e =>
+      MergeInto.merge(spark, table,
+        Seq(("I", 1L + e, "c1", e.toInt, "user", "hi", None: Option[String],
+          Timestamp.valueOf("2025-01-01 00:00:00")))
+          .toDF("op", "lsn", "conv_id", "turn_idx", "role", "text", "tool", "ts"),
+        "ck", e, mor)
+    }
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("metrics-read", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource").asInstanceOf[Logger]
+    logger.addAppender(appender)
+    val epochs =
+      try table.metrics(spark).select("epochId").collect().map(_.getLong(0)).sorted
+      finally { logger.removeAppender(appender); appender.stop() }
+    assert(epochs.toSeq == Seq(0L, 1L))
+    assert(!warnings.asScala.exists(_.contains("All paths were ignored")),
+      warnings.asScala.mkString("\n"))
   }
 
   test("stampFormatVersion migrates unstamped field-compatible snapshots") {
