@@ -1,26 +1,23 @@
 package graft.lake
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.merge.Placement
 
 /**
- * Table maintenance: small-file compaction and merge-on-read delta folding.
- * Both rewrite data WITHOUT changing logical table state (same resolved rows,
- * same tombstones, same schema), write and commit through the merges' step
- * (`LakeTable.writeAndCommit`), and preserve the epoch ledger — safe
+ * Table maintenance: merge-on-read delta folding and retention. A fold
+ * rewrites data WITHOUT changing logical table state (same resolved rows,
+ * same tombstones, same schema), writes and commits through the merges' step
+ * (`LakeTable.writeAndCommit`), and preserves the epoch ledger — safe
  * between epochs.
  *
- * Why they exist: every streaming epoch commits at least one file per touched
- * key range, so a long-running ingest accumulates many small files (CoW) or
- * unresolved delta files (MoR); scan cost and read-time fold fan-in then grow
- * with epoch count, not data size. (The reference has no analogue — its sink
- * is an external DB; these are the lake-format maintenance ops that role
- * requires.)
+ * Why it exists: every merge-on-read epoch commits unresolved delta files,
+ * so read-time fold fan-in grows with epoch count, not data size. (The
+ * reference has no analogue — its sink is an external DB; these are the
+ * lake-format maintenance ops that role requires.)
  *
  * The merge key comes from table metadata (Snapshot.keyCols), never from the
- * caller — compacting on the wrong column would silently corrupt merge-time
+ * caller — folding on the wrong column would silently corrupt merge-time
  * file pruning.
  */
 object CompactionStats {
@@ -65,39 +62,6 @@ object Compaction {
   }
 
   /**
-   * Rewrite all files smaller than `smallFileRows` (plus nothing else) into
-   * target-sized files. Files already at/above the threshold are carried over
-   * untouched — compaction cost is proportional to the small-file tail, not
-   * table size. Delta files are excluded (folding them changes row sets —
-   * that's `foldDeltas`' job).
-   */
-  def compact(
-      spark: SparkSession,
-      table: LakeTable,
-      targetRowsPerFile: Long = 500000L,
-      smallFileRows: Long = 250000L): CompactionStats = {
-    val t0 = System.nanoTime()
-    LocalFs.install(spark)
-    val snap = table.currentSnapshot
-    val keyCols = snap.keyCols
-    val all = table.files(snap)
-    val small = all.filter(f => !f.delta && f.rows < smallFileRows)
-    if (small.size <= 1) return CompactionStats.empty
-
-    val rows = small.map(_.rows).sum
-    val nOut = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-    val written = table.writeAndCommit(snap, snap.schema,
-      spark.read.schema(snap.schema).parquet(small.map(_.path): _*)
-        .repartitionByRange(nOut, keyCols.map(col): _*)
-        .sortWithinPartitions((keyCols.map(col) :+ col(LakeTable.LsnCol)): _*),
-      delta = false, small, None,
-      baseRanges = added => Some(Placement.rangesOf(
-        all.filter(f => !f.delta && f.rows >= smallFileRows) ++ added)))
-    CompactionStats(all.size, all.size - small.size + written.files.size, rows,
-      (System.nanoTime() - t0) / 1000000L)
-  }
-
-  /**
    * Merge-on-read maintenance: fold ALL files (base + deltas) into a resolved
    * base — one max-lsn-wins pass with the same single-shuffle plan the merge
    * uses, keeping tombstones (a late lower-lsn insert must still lose).
@@ -105,10 +69,10 @@ object Compaction {
    * base's size bounds total write amplification at O(log) rewrites per row.
    *
    * `rangePlace`: range-partition the folded base for tight per-file key
-   * bounds (the default — feeds CoW pruning and compact). Pass false for a
-   * pure-MoR table, where no code path prunes on base bounds: the hash
-   * exchange skips repartitionByRange's whole-input boundary-sampling scan,
-   * folding in one pass over the data. Sparse tables always range-place.
+   * bounds (the default — feeds CoW pruning and delta placement). Pass
+   * false for a pure-MoR table, where no code path prunes on base bounds:
+   * the hash exchange skips repartitionByRange's whole-input
+   * boundary-sampling scan, folding in one pass over the data. Sparse tables always range-place.
    * The fold records the new base's key ranges in the snapshot
    * ([[Snapshot.baseRanges]]): merge-on-read epochs place their deltas by
    * a range-placed base's ranges ([[graft.merge.Placement]]), while a

@@ -33,8 +33,8 @@ import graft.model.Schemas
  *      satisfies the window's ClusteredDistribution) and feeds
  *      WindowGroupLimit so losing rows drop before full evaluation. MoR delta
  *      writes place by the key ranges of the table's current base files
- *      when those are disjoint (recorded in the snapshot by a range fold or
- *      compaction, so the epoch parses no manifest): a hash exchange on a
+ *      when those are disjoint (recorded in the snapshot by a range fold,
+ *      so the epoch parses no manifest): a hash exchange on a
  *      driver-chosen integer per group of ranges, so each delta file lies
  *      inside one group and a point read opens one group's deltas per
  *      epoch, with no sampling job. A group's partitions follow the rows
@@ -45,7 +45,7 @@ import graft.model.Schemas
  *      back to a hash exchange on the full key tuple. The hash arg-max
  *      aggregate (`resolveMaxLsn`) serves read-time delta folds.
  *   3. One write path: every epoch writes and commits through
- *      `LakeTable.writeAndCommit`, as delta folds and compaction do.
+ *      `LakeTable.writeAndCommit`, as delta folds do.
  *   4. Deletes write tombstones (_deleted = true, _lsn = delete's lsn) so a
  *      late-arriving lower-lsn insert can never resurrect a deleted key —
  *      required for replay determinism under out-of-order delivery.
@@ -97,7 +97,7 @@ final case class MergeOptions(
       *    partial combine) — collapses high-duplication/hot-key batches
       *    BEFORE the shuffle; delta file count follows the aggregate's
       *    shuffle partitioning. Applies to MoR epochs (read-time folds and
-      *    compaction keep the window form's range placement). */
+      *    delta folds keep the window form). */
     sparseResolve: ResolveStrategy = ResolveStrategy.SortDedup,
     /** MoR: run trigger-fired delta folds OUT-OF-BAND on a maintenance
       * thread instead of inline in the epoch. An inline fold reads
@@ -393,7 +393,7 @@ object MergeInto {
           resolveSparseAgg(obsNorm, keyCols, nonKeyPayload).coalesce(nOut)
         else if (isMor)
           // merge-on-read: write ONLY the batch, resolved within itself
-          // (cross-epoch conflicts fold at read / compaction time)
+          // (cross-epoch conflicts fold at read / delta-fold time)
           resolveExchanged(obsNorm, keyCols, snap.sparse, nOut, placement)
         else {
           val target =
@@ -434,7 +434,7 @@ object MergeInto {
       if (isMor && bRowsFinal > 0) lastBatchRows.put(ckptId, bRowsFinal)
 
       // written.snapshot.version, not snap.version + 1: a disjoint-writer
-      // commit retry (e.g. racing compaction) may land the epoch later
+      // commit retry (e.g. racing a delta fold) may land the epoch later
       val committed = written.snapshot
       val stats = MergeStats(ckptId, epochId, committed.version, bRowsFinal, bMinLsn, bMaxLsn,
         written.files.map(_.rows).sum + untouchedRows, bDeletes, touched.size,
@@ -559,10 +559,6 @@ object MergeInto {
   /** the exchange column of [[Placement.ByBase]], dropped before the write */
   private val PlaceCol = "_place"
 
-  /** [[resolveExchanged]] with range placement, max-lsn rows. */
-  def resolveSortDedup(union: DataFrame, keyCols: Seq[String], nOut: Int): DataFrame =
-    resolveExchanged(union, keyCols, sparse = false, nOut, Placement.ByRange)
-
   /**
    * Partial-column (sparse) conflict resolution — the reference's
    * `OnDupKeyFields` column-subset upsert (/root/reference/processors/
@@ -576,14 +572,14 @@ object MergeInto {
    * provenance a folded row would promote old column values to its row lsn,
    * and a late lower-lsn update arriving in a later epoch would lose;
    * with it the fold is associative, so within-batch collapse, cross-epoch
-   * read folds and compaction all compose exactly).
+   * read folds and delta folds all compose exactly).
    *
    * The key's newest-delete lsn is itself fold state: when a row NEWER than
    * the delete survives the fold, the tombstone row is dropped, so its lsn
    * must persist on the folded row (`_del_lsn`) — otherwise a later fold
    * input carrying a late event with a cell lsn below the forgotten delete
    * would resurrect dead cells (fold associativity would break: final state
-   * would depend on whether within-batch collapse or compaction ran). The
+   * would depend on whether within-batch collapse or a fold ran). The
    * per-row delete watermark is therefore greatest(own tombstone lsn,
    * carried `_del_lsn`), folded by max per key and re-emitted.
    *

@@ -25,7 +25,7 @@ import graft.lake.LakeTable
  * Offsets are upstream snapshot versions: batch (start, end] is exactly
  * `LakeTable.readChangesBetween(start, end)` — MoR delta files written in
  * those commits, which carry no duplicates within an epoch (merge resolves
- * max-lsn per key before writing). Fold/compaction/vacuum commits add no
+ * max-lsn per key before writing). Fold/vacuum commits add no
  * delta files and contribute nothing, so maintenance never re-delivers rows.
  * Offset tracking, recovery, and exactly-once-per-batch replay come from the
  * streaming engine's offset log: on restart the engine re-asks for the same

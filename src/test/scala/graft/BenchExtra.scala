@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
  * the driver bench uses (local[SPARK_GRAFT_CPUS], shuffle partitions =
  * cores, AQE on), so numbers are comparable to BENCH_r*.json rows.
  *
- * Usage: sbt "runMain graft.BenchExtra [all|q_name1 q_name2 ...]"
+ * Usage: sbt "Test/runMain graft.BenchExtra [all|q_name1 q_name2 ...]"
  *  - SPARK_GRAFT_SF_DIR     data dir (default /root/testdata/sf0.1)
  *  - SPARK_GRAFT_CPUS       cores (default 32)
  *  - SPARK_GRAFT_EXTRA_REPS reps per query (default 2; rep1 = cold-in-session,

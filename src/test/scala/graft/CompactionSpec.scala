@@ -4,12 +4,12 @@ import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.{ChangelogGen, GenParams}
-import graft.lake.{Compaction, LakeTable}
-import graft.merge.{MergeInto, MergeOptions}
+import graft.lake.{Compaction, LakeTable, TableLog}
+import graft.merge.{MergeInto, MergeMode, MergeOptions}
 import graft.model.Schemas
 import org.apache.spark.sql.functions._
 
-/** Compaction changes the file layout, never the logical table state. */
+/** Delta folds and vacuum change the file layout, never the logical table state. */
 class CompactionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -20,14 +20,19 @@ class CompactionSpec extends AnyFunSuite {
     val table = LakeTable.create(s"$work/t", Schemas.turn)
     val ev = ChangelogGen.events(spark, p).toDF("wal_file", "ev")
       .select(col("wal_file"), col("ev.*")).cache()
-    // many tiny epochs with tiny target files => fragmented layout
+    // many tiny copy-on-write epochs with tiny target files => fragmented
+    // layout, each epoch superseding the files it rewrote; then one
+    // merge-on-read epoch whose deltas span the keyspace
     val fragOpts = MergeOptions(targetRowsPerFile = 500L, minRowsPerFile = 1L)
+    val morOpts = fragOpts.copy(mode = MergeMode.Mor, morCompactDeltaRatio = 1e9,
+      morCompactMaxDeltaFiles = Int.MaxValue)
     (0 until 10).foreach { e =>
       MergeInto.merge(spark, table,
         ev.filter(pmod(col("wal_file"), lit(10)) === e).drop("wal_file"),
-        "cmp", e.toLong, fragOpts)
+        "cmp", e.toLong, if (e < 9) fragOpts else morOpts)
     }
     ev.unpersist()
+    assert(table.currentFiles.exists(_.delta))
 
     def state(): Seq[Seq[Any]] = {
       val df = table.read(spark)
@@ -40,8 +45,7 @@ class CompactionSpec extends AnyFunSuite {
     val filesBefore = table.currentFiles.size
     val epochsBefore = table.currentSnapshot.epochHwm
 
-    val stats = Compaction.compact(spark, table, targetRowsPerFile = 50000L,
-      smallFileRows = 50000L)
+    val stats = Compaction.foldDeltas(spark, table, targetRowsPerFile = 50000L)
     assert(stats.filesAfter < stats.filesBefore,
       s"expected fewer files: ${stats.filesBefore} -> ${stats.filesAfter}")
     assert(table.currentFiles.size < filesBefore)
@@ -107,8 +111,8 @@ class CompactionSpec extends AnyFunSuite {
     val p0 = Paths.get(s"$work/t/_snapshots", f"v${0L}%020d.json")
     val raw = new String(Files.readAllBytes(p0), "UTF-8")
     Files.write(p0,
-      raw.replace(s""""formatVersion":${LakeTable.FormatVersion},""", "")
-        .replace(s""","formatVersion":${LakeTable.FormatVersion}""", "")
+      raw.replace(s""""formatVersion":${TableLog.FormatVersion},""", "")
+        .replace(s""","formatVersion":${TableLog.FormatVersion}""", "")
         .getBytes("UTF-8"))
     // plant an aged orphan that a healthy sweep WOULD collect
     val orphan = Paths.get(s"$work/t/_manifests/m999-dead.json")
@@ -123,8 +127,9 @@ class CompactionSpec extends AnyFunSuite {
         Paths.get(java.net.URI.create(f).getPath) else Paths.get(f)
       assert(Files.exists(p), s"live data deleted under incomplete liveness: $f")
     }
-    // after migration the same sweep collects the orphan and spares the data
-    LakeTable.stampFormatVersion(s"$work/t")
+    // with the snapshot's original bytes back, the same sweep collects the
+    // orphan and spares the data
+    Files.write(p0, raw.getBytes("UTF-8"))
     val (d2, _) = Compaction.vacuum(table, retainVersions = 100, orphanMinAgeMs = 0L)
     assert(d2 >= 1 && !Files.exists(orphan))
     assert(table.read(spark).count() == 1)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{KeyCodec, LakeTable}
+import graft.lake.{KeyCodec, LakeTable, TableLog}
 import graft.merge.{MergeInto, MergeMode, MergeOptions}
 import graft.model.Schemas
 
@@ -156,11 +156,11 @@ class DsvSpec extends AnyFunSuite {
     assert(t.maxLsn(snap) == 200L) // the seed's delete carries the top lsn
     // SQL-face append: the whole upsert (watermark + MoR merge + pure-append
     // commit) must parse NO manifest — O(manifest count) driver work only
-    LakeTable.clearManifestCacheForTest()
-    val p0 = LakeTable.manifestParses.get()
+    TableLog.clearManifestCacheForTest()
+    val p0 = TableLog.manifestParses.get()
     Seq(("conv-0", 1, "hwm-upd")).toDF("conv_id", "turn_idx", "text")
       .write.format("graft").mode("append").save(s"$dir/t")
-    val parsed = LakeTable.manifestParses.get() - p0
+    val parsed = TableLog.manifestParses.get() - p0
     assert(parsed == 0, s"auto-LSN append parsed $parsed manifests, expected 0")
     // and the assigned lsn actually won over the incumbent row
     assert(spark.read.format("graft").load(s"$dir/t")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.{ChangelogGen, GenParams}
-import graft.lake.{KeyCodec, LakeTable, SchemaMerge}
+import graft.lake.{KeyCodec, LakeTable, SchemaMerge, TableLog}
 import graft.merge.{MergeInto, MergeMode, MergeOptions, ResolveStrategy}
 import graft.model.Schemas
 
@@ -383,17 +383,47 @@ class LakeMergeSpec extends AnyFunSuite {
     val raw = new String(java.nio.file.Files.readAllBytes(p0), "UTF-8")
     // unknown future version
     java.nio.file.Files.write(p0,
-      raw.replace(s""""formatVersion":${LakeTable.FormatVersion}""",
+      raw.replace(s""""formatVersion":${TableLog.FormatVersion}""",
         """"formatVersion":99""").getBytes("UTF-8"))
     val ex = intercept[IllegalStateException](table.snapshot(0L))
     assert(ex.getMessage.contains("formatVersion 99"), ex.getMessage)
     // missing field (pre-versioned layout): must NOT silently read as empty
     java.nio.file.Files.write(p0,
-      raw.replace(s""""formatVersion":${LakeTable.FormatVersion},""", "")
-        .replace(s""","formatVersion":${LakeTable.FormatVersion}""", "")
+      raw.replace(s""""formatVersion":${TableLog.FormatVersion},""", "")
+        .replace(s""","formatVersion":${TableLog.FormatVersion}""", "")
         .getBytes("UTF-8"))
     val ex2 = intercept[IllegalStateException](table.snapshot(0L))
     assert(ex2.getMessage.contains("no formatVersion"), ex2.getMessage)
+    // the earlier v2 layout (bare manifest names) has no reader in this build
+    java.nio.file.Files.write(p0,
+      raw.replace(s""""formatVersion":${TableLog.FormatVersion}""",
+        """"formatVersion":2""").getBytes("UTF-8"))
+    val ex3 = intercept[IllegalStateException](table.snapshot(0L))
+    assert(ex3.getMessage.contains("formatVersion 2;"), ex3.getMessage)
+    assert(ex3.getMessage.contains("recreate the table"), ex3.getMessage)
+  }
+
+  test("creating a table over an existing one fails by name and writes nothing") {
+    val dir = TestSpark.tmpDir("lake-recreate")
+    val table = LakeTable.create(s"$dir/t", Schemas.turn)
+    MergeInto.merge(spark, table,
+      Seq(("I", 1L, "c1", 0, "user", "hi", None: Option[String],
+        Timestamp.valueOf("2025-01-01 00:00:00")))
+        .toDF("op", "lsn", "conv_id", "turn_idx", "role", "text", "tool", "ts"),
+      "ck", 0L, MergeOptions(mode = MergeMode.Mor))
+    def listing(): Set[String] = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/t"))
+      try s.iterator().asScala.map(_.toString).toSet finally s.close()
+    }
+    val before = listing()
+    val ex = intercept[IllegalStateException](
+      LakeTable.create(s"$dir/t", Schemas.turn, keyCols = Seq("conv_id")))
+    assert(ex.getMessage.contains(s"already exists at $dir/t"), ex.getMessage)
+    assert(listing() == before, "a refused create must write nothing")
+    val again = LakeTable.load(s"$dir/t")
+    assert(again.currentVersion == 1L && again.currentSnapshot.keyCols == List("conv_id", "turn_idx"))
+    assert(again.read(spark).count() == 1)
+    assert(again.hasEpoch("ck", 0L) && !again.hasEpoch("ck", 1L))
   }
 
   test("sparse upserts: partial-column updates coalesce from the incumbent row") {
@@ -657,34 +687,6 @@ class LakeMergeSpec extends AnyFunSuite {
     assert(epochs.toSeq == Seq(0L, 1L))
     assert(!warnings.asScala.exists(_.contains("All paths were ignored")),
       warnings.asScala.mkString("\n"))
-  }
-
-  test("stampFormatVersion migrates unstamped field-compatible snapshots") {
-    val dir = TestSpark.tmpDir("lake-stamp")
-    val table = LakeTable.create(s"$dir/t", Schemas.turn)
-    MergeInto.merge(spark, table,
-      Seq(("I", 1L, "c1", 0, "user", "hi", None: Option[String],
-        Timestamp.valueOf("2025-01-01 00:00:00")))
-        .toDF("op", "lsn", "conv_id", "turn_idx", "role", "text", "tool", "ts"),
-      "ck", 0L, MergeOptions(mode = MergeMode.Mor))
-    // strip the stamp from every snapshot (simulating an unversioned build)
-    val snapDir = java.nio.file.Paths.get(s"$dir/t/_snapshots")
-    val snaps = java.nio.file.Files.list(snapDir).iterator()
-    while (snaps.hasNext) {
-      val p = snaps.next()
-      val raw = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      java.nio.file.Files.write(p,
-        raw.replace(s""""formatVersion":${LakeTable.FormatVersion},""", "")
-          .replace(s""","formatVersion":${LakeTable.FormatVersion}""", "")
-          .getBytes("UTF-8"))
-    }
-    val ex = intercept[IllegalStateException](table.currentSnapshot)
-    assert(ex.getMessage.contains("no formatVersion"), ex.getMessage)
-    val stamped = LakeTable.stampFormatVersion(s"$dir/t")
-    assert(stamped == 2, s"expected 2 snapshots stamped, got $stamped")
-    assert(table.read(spark).count() == 1) // readable again, ledger intact
-    assert(table.hasEpoch("ck", 0L))
-    assert(LakeTable.stampFormatVersion(s"$dir/t") == 0) // idempotent
   }
 
   test("sparse upserts survive schema evolution: added column folds per cell") {

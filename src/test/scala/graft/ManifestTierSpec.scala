@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types._
 
-import graft.lake.{DataFile, KeyCodec, KeyRanges, LakeTable}
+import graft.lake.{DataFile, KeyCodec, KeyRanges, LakeTable, TableLog}
 
 /**
  * Snapshot-metadata scaling: size-tiered manifest folding and manifest-level
@@ -54,7 +54,7 @@ class ManifestTierSpec extends AnyFunSuite {
       val written = (manifestNames() -- before).toList
       maxCommitEntries = math.max(maxCommitEntries, written.map(entriesOf).sum)
       everSealed ++= table.currentSnapshot.manifests
-        .filter(_.files >= LakeTable.ManifestSealEntries).map(_.name)
+        .filter(_.files >= TableLog.ManifestSealEntries).map(_.name)
     }
     val snap = table.currentSnapshot
     val totalFiles = snap.manifests.map(_.files).sum
@@ -67,11 +67,11 @@ class ManifestTierSpec extends AnyFunSuite {
     // per-commit metadata work is bounded by the tier (seal + sub-seal tail +
     // the epoch's adds), NOT by table size — fold-all would have written a
     // totalFiles-entry manifest on late folds
-    val bound = LakeTable.ManifestSealEntries + 33 * perCommit + perCommit
+    val bound = TableLog.ManifestSealEntries + 33 * perCommit + perCommit
     assert(maxCommitEntries <= bound,
       s"a commit re-serialized $maxCommitEntries entries (bound $bound, table $totalFiles)")
     // manifest list stays bounded: sealed tier + sub-seal sawtooth
-    assert(snap.manifests.size <= 33 + totalFiles / LakeTable.ManifestSealEntries,
+    assert(snap.manifests.size <= 33 + totalFiles / TableLog.ManifestSealEntries,
       s"manifest list unbounded: ${snap.manifests.size}")
     // ref stats agree with contents
     snap.manifests.foreach { m =>
@@ -79,38 +79,6 @@ class ManifestTierSpec extends AnyFunSuite {
     }
     // and the full listing still returns every file
     assert(table.files(snap).size == totalFiles)
-  }
-
-  test("stampFormatVersion upgrades a v2 (bare-name manifests) snapshot to refs") {
-    val dir = TestSpark.tmpDir("mv2up")
-    val table = LakeTable.create(s"$dir/t", schema, keyCols = Seq("conv_id"))
-    val snap0 = table.currentSnapshot
-    table.commitChange(snap0, snap0.schemaJson, Set.empty,
-      mkFiles(s"$dir/t", 1L, 0, 12), Some(("ck", 7L)))
-    val want = table.currentSnapshot
-    // rewrite every snapshot into the v2 shape: manifests as name strings
-    val snapDir = java.nio.file.Paths.get(s"$dir/t/_snapshots")
-    val it = java.nio.file.Files.list(snapDir).iterator()
-    while (it.hasNext) {
-      val p = it.next()
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val ast = JsonMethods.parse(
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-      val v2 = ast.transformField {
-        case JField("manifests", JArray(ms)) =>
-          JField("manifests", JArray(ms.map(m => m \ "name")))
-        case JField("formatVersion", _) => JField("formatVersion", JInt(2))
-      }
-      java.nio.file.Files.write(p,
-        JsonMethods.compact(JsonMethods.render(v2)).getBytes("UTF-8"))
-    }
-    val ex = intercept[IllegalStateException](table.currentSnapshot)
-    assert(ex.getMessage.contains("stampFormatVersion"), ex.getMessage)
-    assert(LakeTable.stampFormatVersion(s"$dir/t") == 2)
-    val got = table.currentSnapshot
-    assert(got.manifests == want.manifests, "upgraded refs must match originals")
-    assert(got.epochHwm == want.epochHwm && got.keyCols == want.keyCols)
   }
 
   test("change-file catch-up parses O(new manifests), not O(versions x manifests)") {
@@ -130,10 +98,10 @@ class ManifestTierSpec extends AnyFunSuite {
     val brute = (21L to head).flatMap(v =>
       table.files(table.snapshot(v)).filter(f => f.delta && f.addedAtVersion == v))
       .distinct.toSet
-    LakeTable.clearManifestCacheForTest()
-    val p0 = LakeTable.manifestParses.get()
+    TableLog.clearManifestCacheForTest()
+    val p0 = TableLog.manifestParses.get()
     val got = table.changeFilesBetween(20L, head)
-    val parsed = LakeTable.manifestParses.get() - p0
+    val parsed = TableLog.manifestParses.get() - p0
     assert(got.toSet == brute, "per-version lookup diverged from ground truth")
     assert(got.size == 100 * 2)
     // each version contributes at most its own add manifest plus the
@@ -141,51 +109,6 @@ class ManifestTierSpec extends AnyFunSuite {
     // (the old walk parsed ~#manifests (>30 here) per version: >3000 parses)
     assert(parsed <= 2 * 100,
       s"catch-up parsed $parsed manifests for 100 versions — not O(new manifests)")
-  }
-
-  test("stampFormatVersion tolerates a non-head snapshot with a vacuumed manifest") {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val dir = TestSpark.tmpDir("mstamp-tol")
-    val table = LakeTable.create(s"$dir/t", schema, keyCols = Seq("conv_id"))
-    val snap0 = table.currentSnapshot
-    val a = mkFiles(s"$dir/t", 1L, 0, 4)
-    table.commitChange(snap0, snap0.schemaJson, Set.empty, a, None) // v1
-    // v2 removes all of v1's files -> v1's manifest is referenced ONLY by v1
-    table.commitChange(table.currentSnapshot, snap0.schemaJson,
-      a.map(_.path).toSet, mkFiles(s"$dir/t", 2L, 100, 4), Some(("st", 1L)))
-    val v1Manifests = table.snapshot(1L).manifests.map(_.name)
-    val headManifests = table.currentSnapshot.manifests.map(_.name).toSet
-    val onlyV1 = v1Manifests.filterNot(headManifests)
-    assert(onlyV1.nonEmpty, "setup: need a manifest unique to the old snapshot")
-    // downgrade every snapshot to the v2 (bare-name) shape
-    val snapDir = java.nio.file.Paths.get(s"$dir/t/_snapshots")
-    val it = java.nio.file.Files.list(snapDir).iterator()
-    while (it.hasNext) {
-      val p = it.next()
-      val ast = JsonMethods.parse(
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-      val v2 = ast.transformField {
-        case JField("manifests", JArray(ms)) =>
-          JField("manifests", JArray(ms.map(m => m \ "name")))
-        case JField("formatVersion", _) => JField("formatVersion", JInt(2))
-      }
-      java.nio.file.Files.write(p,
-        JsonMethods.compact(JsonMethods.render(v2)).getBytes("UTF-8"))
-    }
-    // simulate the interrupted-vacuum state: v1's manifest already deleted
-    onlyV1.foreach { m =>
-      java.nio.file.Files.delete(java.nio.file.Paths.get(s"$dir/t/_manifests", m))
-    }
-    LakeTable.clearManifestCacheForTest()
-    // migration must NOT abort: v0 + head migrate, the wounded v1 is skipped
-    val migrated = LakeTable.stampFormatVersion(s"$dir/t")
-    assert(migrated == 2, s"expected 2 snapshots migrated, got $migrated")
-    val got = table.currentSnapshot // head reads fine post-migration
-    assert(got.manifests.map(_.name).toSet == headManifests)
-    assert(got.epochHwm == Map("st" -> 1L))
-    // the skipped snapshot still fails loudly (it was unreadable before, too)
-    intercept[IllegalStateException](table.snapshot(1L))
   }
 
   test("head discovery probes forward: no snapshot-log listing per commit") {
@@ -235,31 +158,31 @@ class ManifestTierSpec extends AnyFunSuite {
     }
     val snap = table.currentSnapshot
     assert(snap.manifests.size == 3)
-    LakeTable.clearManifestCacheForTest()
-    val parses0 = LakeTable.manifestParses.get()
+    TableLog.clearManifestCacheForTest()
+    val parses0 = TableLog.manifestParses.get()
     val got = table.filesIntersecting(snap, KeyRanges.span(Some(enc(1003)), Some(enc(1007))))
-    assert(LakeTable.manifestParses.get() - parses0 == 1,
+    assert(TableLog.manifestParses.get() - parses0 == 1,
       "exactly one manifest (the intersecting range) should be parsed")
     assert(got.size == 10 && got.forall(f =>
       KeyCodec.compare(f.minKey, enc(1000)) >= 0 &&
         KeyCodec.compare(f.maxKey, enc(1009)) <= 0))
     // a MoR-style pure-append commit parses NO manifests at all
-    LakeTable.clearManifestCacheForTest()
-    val parses1 = LakeTable.manifestParses.get()
+    TableLog.clearManifestCacheForTest()
+    val parses1 = TableLog.manifestParses.get()
     table.commitChange(table.currentSnapshot, snap.schemaJson, Set.empty,
       mkFiles(s"$dir/t", snap.version + 2, 5000, 5), Some(("ck", 0L)))
-    assert(LakeTable.manifestParses.get() == parses1,
+    assert(TableLog.manifestParses.get() == parses1,
       "pure-append commit must not parse any manifest")
     // a bounded removal parses only manifests intersecting the removed envelope
-    LakeTable.clearManifestCacheForTest()
+    TableLog.clearManifestCacheForTest()
     val victim = table.filesIntersecting(table.currentSnapshot,
       KeyRanges.span(Some(enc(2000)), Some(enc(2009))))
-    LakeTable.clearManifestCacheForTest()
-    val parses2 = LakeTable.manifestParses.get()
+    TableLog.clearManifestCacheForTest()
+    val parses2 = TableLog.manifestParses.get()
     table.commitChange(table.currentSnapshot, snap.schemaJson,
       victim.map(_.path).toSet, Nil, None,
       removedRanges = KeyRanges.span(Some(enc(2000)), Some(enc(2009))))
-    assert(LakeTable.manifestParses.get() - parses2 == 1,
+    assert(TableLog.manifestParses.get() - parses2 == 1,
       "bounded removal must parse only the intersecting manifest")
     assert(table.currentFiles.size == 30 + 5 - 10)
   }

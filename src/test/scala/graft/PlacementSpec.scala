@@ -253,25 +253,23 @@ class PlacementSpec extends AnyFunSuite {
         List(folded), None, baseRanges = Some(Placement.rangesOf(base.tail :+ folded)))
       assert(table.currentSnapshot.baseRanges == baseRangesNow)
       assert(baseRangesNow.last == KeyCodec.encode(StringType, "conv_zzz"))
-    } finally ev.unpersist()
-  }
 
-  test("compacting a base that hash-placed deltas sit on records no ranges") {
-    val dir = TestSpark.tmpDir("place-compact")
-    val table = LakeTable.create(s"$dir/t", Schemas.turn)
-    val mor = MergeOptions(mode = MergeMode.Mor, minRowsPerFile = 100,
-      morCompactDeltaRatio = 1e9, morCompactMaxDeltaFiles = Int.MaxValue)
-    val ck = s"place-compact-${System.nanoTime()}"
-    val ev = events.cache()
-    try {
-      MergeInto.merge(spark, table, ev.filter($"wal_file" < 7).drop("wal_file"), ck, 0L, mor)
-      Compaction.foldDeltas(spark, table, minRowsPerFile = 700, rangePlace = false)
-      MergeInto.merge(spark, table, ev.filter($"wal_file" === 7).drop("wal_file"), ck, 1L, mor)
+      // rewriting base files that hash-placed deltas sit on records no
+      // ranges: a copy-on-write epoch clears them, so the next merge-on-read
+      // epoch places its deltas by hash
+      MergeInto.merge(spark, table, row("I", TopLsn + 1, "conv_zzz", 1, "cow"), s"$ck-cow", 1L,
+        MergeOptions())
+      MergeInto.merge(spark, table, file(8), ck, 2L, mor)
+      val head = table.currentSnapshot
+      val (hashDeltas, base2) = table.currentFiles.partition(_.delta)
+      assert(head.baseRanges.isEmpty && hashDeltas.nonEmpty)
+      val merged = base2.head.copy(path = s"$dir/merged.parquet")
+      val leftRanges = Placement.rangesOf(base2.tail :+ merged)
+      assert(leftRanges.nonEmpty)
+      table.commitChange(head, head.schemaJson, Set(base2.head.path), List(merged), None,
+        baseRanges = Some(leftRanges))
+      assert(table.currentSnapshot.baseRanges.isEmpty, "ranges recorded over hash-placed deltas")
     } finally ev.unpersist()
-    assert(Compaction.compact(spark, table, smallFileRows = 100000L).filesBefore > 0)
-    val (deltas, base) = table.currentFiles.partition(_.delta)
-    assert(deltas.nonEmpty && Placement.rangesOf(base).nonEmpty)
-    assert(table.currentSnapshot.baseRanges.isEmpty, "ranges recorded over hash-placed deltas")
   }
 
   test("placement groups: thinned to nOut, or split into hash sub-partitions") {

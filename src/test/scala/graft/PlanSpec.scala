@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.merge.MergeInto
+import graft.merge.{MergeInto, Placement}
 import graft.ops.{CdcQueries, RelationalOps}
 
 /**
@@ -128,7 +128,8 @@ class PlanSpec extends AnyFunSuite {
       .select(col("user_id").cast("string").as("conv_id"),
         (col("event_id") % 5).cast("int").as("turn_idx"),
         col("event_id").as("_lsn"), col("value"))
-    val p = plan(MergeInto.resolveSortDedup(df, Seq("conv_id", "turn_idx"), 8))
+    val p = plan(MergeInto.resolveExchanged(df, Seq("conv_id", "turn_idx"), sparse = false, 8,
+      Placement.ByRange))
     val exchanges = "Exchange".r.findAllIn(p).size
     val sorts = "Sort ".r.findAllIn(p).size
     // The range exchange must double as the window's clustering — a second
