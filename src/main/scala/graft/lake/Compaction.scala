@@ -144,10 +144,10 @@ object Compaction {
    * occasional failures). Orphans younger than `orphanMinAgeMs` are spared:
    * an IN-FLIGHT concurrent write's staged part files look exactly like
    * orphans until the snapshot lands, and their mtimes date from TASK WRITE
-   * time (the committer's rename preserves them), so the floor must exceed
-   * the longest plausible write JOB end-to-end, not just the metadata
-   * commit. Default 24 h (the same order as Iceberg's remove_orphan_files
-   * default) — pass a smaller value only when no writer can be in flight.
+   * time, so the floor must exceed the longest plausible write JOB
+   * end-to-end, not just the metadata commit. Default 24 h (the same order
+   * as Iceberg's remove_orphan_files default) — pass a smaller value only
+   * when no writer can be in flight.
    *
    * Orphan GC is strictly FAIL-SAFE: if liveness cannot be computed
    * completely (an unreadable snapshot or manifest), the orphan sweep is
@@ -162,7 +162,7 @@ object Compaction {
    */
   def vacuum(table: LakeTable, retainVersions: Int = 2,
       orphanMinAgeMs: Long = 24L * 3600 * 1000): (Int, Int) = {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     import scala.jdk.CollectionConverters._
     import scala.util.control.NonFatal
     require(retainVersions >= 1, "must retain at least the current snapshot")
@@ -216,7 +216,7 @@ object Compaction {
         deleted
       }
       deadManifests.foreach(m =>
-        Files.deleteIfExists(Paths.get(table.dir, "_manifests", m)))
+        Files.deleteIfExists(table.manifestDir.resolve(m)))
       val sd = oldSnaps.count(v => Files.deleteIfExists(table.snapPath(v)))
       (fd, sd)
     }
@@ -255,22 +255,24 @@ object Compaction {
       }
     var orphans = 0
     liveness.foreach { case (liveManifestNames, liveDataPaths) =>
-      ls(Paths.get(table.dir, "_manifests")).foreach { m =>
+      ls(table.manifestDir).foreach { m =>
         if (!liveManifestNames(m.getFileName.toString) && oldEnough(m) &&
             Files.deleteIfExists(m)) orphans += 1
       }
       // crashed commit()s can leak .v*.json.tmp next to the snapshot log
-      ls(Paths.get(table.dir, "_snapshots")).foreach { t =>
-        if (t.getFileName.toString.endsWith(".tmp") && oldEnough(t) &&
+      ls(table.snapDir).foreach { t =>
+        if (t.getFileName.toString.endsWith(TableLog.SnapshotTmpSuffix) && oldEnough(t) &&
             Files.deleteIfExists(t)) orphans += 1
       }
-      // RECURSIVE sweep of each data/v* dir: a crashed write job leaves a
-      // nested `_temporary/<attempt>/...` tree inside its staging dir, which
-      // a one-level scan would never collect — the staging dir then stays
+      // RECURSIVE sweep of each staging dir: a crashed write job of an
+      // earlier build (Spark's file committer) left a nested
+      // `_temporary/<attempt>/...` tree inside its staging dir, which a
+      // one-level scan would never collect — the staging dir then stays
       // non-empty forever (the unbounded-litter class this GC exists for).
-      // Well-known job markers (_SUCCESS, .crc sidecars) are exempt INSIDE
-      // directories that still hold live data — external tools check them —
-      // but a dir with no live files at all is pure litter, markers included.
+      // Well-known job markers (_SUCCESS, which such builds also wrote, and
+      // .crc sidecars) are exempt INSIDE directories that still hold live
+      // data — external tools check them — but a dir with no live files at
+      // all is pure litter, markers included.
       def isMarker(p: java.nio.file.Path): Boolean = {
         val n = p.getFileName.toString
         n == "_SUCCESS" || n.endsWith(".crc") || n.startsWith("._")
@@ -279,7 +281,7 @@ object Compaction {
         ls(p).flatMap(c =>
           if (Files.isDirectory(c)) walkFiles(c)
           else if (Files.isRegularFile(c)) List(c) else Nil)
-      ls(Paths.get(table.dir, "data")).foreach { d =>
+      ls(table.dataDir).foreach { d =>
         val all = walkFiles(d)
         val hasLive = all.exists(f => liveDataPaths(canon(f)))
         all.foreach { f =>
@@ -299,7 +301,7 @@ object Compaction {
     // than orphanMinAgeMs. An untouched YOUNG empty dir survives: it is a
     // concurrent writer's just-created staging dir (or the _temporary tree
     // between mkdir and first file write).
-    val dataDir = Paths.get(table.dir, "data")
+    val dataDir = table.dataDir
     def dropEmptyDirs(d: java.nio.file.Path): Boolean = {
       val childDropped = ls(d).map(c =>
         Files.isDirectory(c) && dropEmptyDirs(c)).exists(identity)

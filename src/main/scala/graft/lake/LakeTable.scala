@@ -54,12 +54,6 @@ object LakeTable {
   val WriteCodec = "lz4"
   val WriteDictionary = false
 
-  private def writeParquet(df: DataFrame, outDir: String): Unit =
-    df.write.mode("overwrite")
-      .option("compression", WriteCodec)
-      .option("parquet.enable.dictionary", WriteDictionary.toString)
-      .parquet(outDir)
-
   /** Metadata columns: lsn + tombstone flag; sparse tables additionally
     * store per-column cell lsns (column name -> lsn of the event that set
     * it) — the provenance that makes partial-column folds associative
@@ -90,9 +84,7 @@ object LakeTable {
     if (exists(dir)) t.availableVersions.lastOption.foreach { v =>
       throw new IllegalStateException(s"a lake table already exists at $dir (head v$v)")
     }
-    Files.createDirectories(Paths.get(dir, "_snapshots"))
-    Files.createDirectories(Paths.get(dir, "_manifests"))
-    Files.createDirectories(Paths.get(dir, "data"))
+    Seq(t.snapDir, t.manifestDir, t.dataDir).foreach(Files.createDirectories(_))
     val stored = StructType(payloadSchema.fields.toSeq ++ metaFields(sparseUpdates))
     t.commit(Snapshot(0L, -1L, stored.json, keyCols.toList, Nil, Map.empty,
       sparseUpdates))
@@ -100,11 +92,11 @@ object LakeTable {
   }
 
   def load(dir: String): LakeTable = {
-    require(Files.isDirectory(Paths.get(dir, "_snapshots")), s"not a lake table: $dir")
+    require(exists(dir), s"not a lake table: $dir")
     new LakeTable(dir)
   }
 
-  def exists(dir: String): Boolean = Files.isDirectory(Paths.get(dir, "_snapshots"))
+  def exists(dir: String): Boolean = Files.isDirectory(Paths.get(dir, TableLog.SnapshotsDir))
 }
 
 final class LakeTable(dir: String) extends TableLog(dir) {
@@ -113,16 +105,19 @@ final class LakeTable(dir: String) extends TableLog(dir) {
   /**
    * The lake's one write path, shared by merge epochs (copy-on-write and
    * merge-on-read) and delta folds: write `data` (stored rows of
-   * `schema`) as parquet into a fresh staging dir, take each file's manifest
-   * stats from its footer (a Spark scan of the output when footers are
-   * unusable), then commit the files against `base` in place of `removed`,
-   * advancing `epoch` in the exactly-once ledger. The removed files' key
-   * ranges spare the commit from parsing manifests that cannot hold them.
+   * `schema`) as parquet into a fresh staging dir ([[ParquetWrite]]: each
+   * task returns its file with the manifest stats it took while writing),
+   * build the `DataFile`s from those commit messages, then commit the files
+   * against `base` in place of `removed`, advancing `epoch` in the
+   * exactly-once ledger. The removed files' key ranges spare the commit from
+   * parsing manifests that cannot hold them.
    *
-   * Output without rows adds no files: the staging dir is deleted and the
-   * commit carries only the removals and the ledger entry (an idle epoch's
-   * 0-row delta file would cost a read-fold fan-in slot and a manifest entry
-   * forever). `beforeCommit` runs between the write and the commit.
+   * Output without rows adds no files: empty partitions write none, the
+   * staging dir is deleted and the commit carries only the removals and the
+   * ledger entry (an idle epoch's 0-row delta file would cost a read-fold
+   * fan-in slot and a manifest entry forever). A failed write deletes its
+   * staging dir and commits nothing. `beforeCommit` runs between the write
+   * and the commit. `Written.footerMs` times building the `DataFile`s.
    *
    * `baseRanges` maps the added files to [[commitChange]]'s `baseRanges`.
    */
@@ -130,17 +125,14 @@ final class LakeTable(dir: String) extends TableLog(dir) {
       delta: Boolean, removed: List[DataFile], epoch: Option[(String, Long)],
       beforeCommit: () => Unit = () => (),
       baseRanges: List[DataFile] => Option[List[String]] = _ => None): Written = {
-    val spark = data.sparkSession
     val version = base.version + 1
     val outDir = newDataDir(version)
     val t0 = System.nanoTime()
-    writeParquet(data, outDir)
+    val files = ParquetWrite.write(data, outDir, base.keyCols.head)
     val t1 = System.nanoTime()
-    val k1 = base.keyCols.head
-    val added = graft.merge.FileStats
-      .fromFooters(spark, outDir, k1, schema(k1).dataType, version, delta)
-      .getOrElse(graft.merge.FileStats.fromScan(spark, outDir, schema, k1, version, delta))
-    if (added.isEmpty) deleteRecursively(LocalFs.localPath(outDir))
+    val added = files.map(f =>
+      DataFile(f.path, f.rows, f.minKey, f.maxKey, f.minLsn, f.maxLsn, version, delta))
+    if (added.isEmpty) ParquetWrite.deleteRecursively(LocalFs.localPath(outDir))
     beforeCommit()
     val t2 = System.nanoTime()
     val committed = commitChange(base, schema.json, removed.map(_.path).toSet, added,
@@ -165,8 +157,10 @@ final class LakeTable(dir: String) extends TableLog(dir) {
   def read(spark: SparkSession): DataFrame = readAt(spark, currentVersion)
 
   /** Telemetry table (throughput/lineage surface): one row per committed
-    * epoch ([[graft.merge.MergeStats]]) and per delta fold
-    * ([[FoldRecord]], `op = "fold"`). Empty before the first record.
+    * epoch ([[graft.merge.MergeStats]]), per delta fold
+    * ([[FoldRecord]], `op = "fold"`) and per failed out-of-band maintenance
+    * task ([[graft.merge.MaintenanceFailure]], `op = "fold-failed"`,
+    * `"vacuum-failed"`). Empty before the first record.
     *
     * Reads the record files by name, not the directory: Spark's path check
     * takes a root path named `_…` for a hidden one and warns that it was
@@ -309,13 +303,4 @@ final class LakeTable(dir: String) extends TableLog(dir) {
         graft.merge.MergeInto.resolveMaxLsn(raw, snap.keyCols, saltBuckets = 1)
     }
   }
-
-  /** local recursive delete (a staging dir that received no rows) */
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { Files.deleteIfExists(f); () })
-      finally s.close()
-    }
 }

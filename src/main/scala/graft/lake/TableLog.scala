@@ -192,6 +192,13 @@ object TableLog {
     def clear(): Unit = synchronized { map.clear(); totalEntries = 0L }
   }
 
+  /** the table layout's directory names (see the class doc) */
+  private[lake] val SnapshotsDir = "_snapshots"
+  private[lake] val ManifestsDir = "_manifests"
+  private[lake] val DataDir = "data"
+  /** suffix of the temp file a `commit` writes before linking its snapshot */
+  private[lake] val SnapshotTmpSuffix = ".json.tmp"
+
   /** test instrumentation: number of manifest files parsed from disk */
   private[graft] val manifestParses = new java.util.concurrent.atomic.AtomicLong
   private[graft] def clearManifestCacheForTest(): Unit = manifestCache.clear()
@@ -204,8 +211,10 @@ class TableLog(val dir: String) {
   import TableLog._
   protected implicit val fmts: Formats = DefaultFormats
 
-  private def snapDir = Paths.get(dir, "_snapshots")
-  private def manifestDir = Paths.get(dir, "_manifests")
+  private[lake] def snapDir = Paths.get(dir, SnapshotsDir)
+  private[lake] def manifestDir = Paths.get(dir, ManifestsDir)
+  /** parent of every write's staging dir ([[newDataDir]]) */
+  private[lake] def dataDir = Paths.get(dir, DataDir)
 
   private def versionOf(name: String): Long =
     name.stripPrefix("v").stripSuffix(".json").toLong
@@ -515,7 +524,7 @@ class TableLog(val dir: String) {
     * with a bare `data/v{N}` would `overwrite`-delete each other's files
     * mid-write. Manifests store absolute paths, so the name never needs to
     * match the committed version. */
-  def newDataDir(versionHint: Long): String = s"$dir/data/v$versionHint-${nonce()}"
+  def newDataDir(versionHint: Long): String = s"$dir/$DataDir/v$versionHint-${nonce()}"
 
   /**
    * Atomic test-and-set commit of the next snapshot file: write a temp file,
@@ -527,7 +536,7 @@ class TableLog(val dir: String) {
    */
   def commit(s: Snapshot): Unit = {
     val target = snapPath(s.version)
-    val tmp = snapDir.resolve(f".v${s.version}%020d-${nonce()}.json.tmp")
+    val tmp = snapDir.resolve(f".v${s.version}%020d-${nonce()}$SnapshotTmpSuffix")
     Files.write(tmp, Serialization.write(s)(fmts).getBytes(StandardCharsets.UTF_8))
     try {
       Files.createLink(target, tmp)

@@ -1,5 +1,7 @@
 package graft.merge
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -142,12 +144,25 @@ final case class MergeStats(
     filesAdded: Int,
     wallMs: Long,
     /** phase breakdown (ms): batch stats pass (incl. the CoW key collect),
-      * data write incl. range sampling, footer stats, snapshot commit */
+      * data write incl. range sampling, `footerMs`, snapshot commit.
+      * `footerMs` keeps its name so `_metrics` readers keep their schema;
+      * the write tasks now return each file's manifest stats, so it times
+      * only building the `DataFile`s from their commit messages. */
     statsMs: Long,
     writeMs: Long,
     footerMs: Long,
     commitMs: Long,
     noop: Boolean)
+
+/** The `_metrics` record of a failed out-of-band maintenance task
+  * (`op` = "fold-failed", "vacuum-failed"): the error's class and message,
+  * the thread it ran on and when it failed (epoch ms). */
+final case class MaintenanceFailure(
+    op: String,
+    errorClass: String,
+    message: String,
+    thread: String,
+    timeMs: Long)
 
 object MergeInto {
   import LakeTable.{DeletedCol, LsnCol}
@@ -373,8 +388,11 @@ object MergeInto {
       // rows per placement group: exact, a histogram with one bin per group
       val groupRows = placement match {
         case p: Placement.ByBase =>
-          Seq(histogram_numeric(p.groupIndex(col(k1)), lit(math.max(2, p.counts.size)))
-            .as("groups"))
+          // on doubles, read back rounded: merging partial histograms
+          // averages a bin's x in floating point (1.9999… for group 2), and
+          // an integral input type would truncate that to the wrong group
+          Seq(histogram_numeric(p.groupIndex(col(k1)).cast(DoubleType),
+            lit(math.max(2, p.counts.size))).as("groups"))
         case _ => Nil
       }
       val obsNorm = morObs.map(o => bNorm.observe(o, count(lit(1)).as("rows"),
@@ -420,7 +438,7 @@ object MergeInto {
             case (p: Placement.ByBase, Some(bins: Seq[_])) =>
               val rows = Array.fill(p.counts.size)(0.0)
               bins.collect { case b: org.apache.spark.sql.Row =>
-                rows(b.getInt(0)) = b.getDouble(1) }
+                rows(math.round(b.getDouble(0)).toInt) += b.getDouble(1) }
               if (rows.sum > 0) lastLoads.put(ckptId, Placement.Loads(p.bounds, rows.toIndexedSeq))
             case _ =>
           }
@@ -460,7 +478,7 @@ object MergeInto {
             Compaction.foldDeltas(spark, table, opts.targetRowsPerFile, opts.minRowsPerFile)
             ()
           }
-          if (opts.foldAsync) { submitMaintenance(table.dir)(() => fold()); () }
+          if (opts.foldAsync) { submitMaintenance(table.dir, "fold")(() => fold()); () }
           else fold()
         }
       }
@@ -480,19 +498,30 @@ object MergeInto {
   private val maintenanceInFlight =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Queue `task` for `tableDir` unless one is already pending — a trigger
-    * firing mid-fold is absorbed, not queued behind it (the running fold
-    * already shrinks the delta backlog; the next epoch re-evaluates the
-    * trigger). Failures log and clear the flag: maintenance is best-effort
-    * by design (the stream's correctness never depends on a fold). */
-  private[graft] def submitMaintenance(tableDir: String)(task: () => Unit): Boolean = {
+  /** Queue `task` (the maintenance op `op`, e.g. "fold") for `tableDir`
+    * unless one is already pending — a trigger firing mid-fold is absorbed,
+    * not queued behind it (the running fold already shrinks the delta
+    * backlog; the next epoch re-evaluates the trigger). A failure clears the
+    * flag and is recorded, not rethrown: maintenance is best-effort by design
+    * (the stream's correctness never depends on a fold), so the table's
+    * `_metrics` get a [[MaintenanceFailure]] record (op `"<op>-failed"`). */
+  private[graft] def submitMaintenance(tableDir: String, op: String)(task: () => Unit): Boolean = {
     if (!maintenanceInFlight.add(tableDir)) return false
     maintenancePool.submit(new Runnable {
       override def run(): Unit =
         try task()
         catch {
           case e: Throwable =>
-            System.err.println(s"[graft] maintenance task for $tableDir failed: $e")
+            System.err.println(s"[graft] maintenance task $op for $tableDir failed: $e")
+            val failed = MaintenanceFailure(s"$op-failed", e.getClass.getName,
+              String.valueOf(e.getMessage), Thread.currentThread.getName,
+              System.currentTimeMillis())
+            try LakeTable.load(tableDir).writeMetrics(
+              f"${failed.op}-${failed.timeMs}%013d-${System.nanoTime()}%x.json", failed)
+            catch {
+              case NonFatal(w) => System.err.println(
+                s"[graft] could not record the failed $op for $tableDir: $w")
+            }
         } finally {
           maintenanceInFlight.remove(tableDir); ()
         }

@@ -191,7 +191,7 @@ object CdcIngestJob {
         // a concurrent fold on the same table (one thread)
         cfg.vacuumEveryEpochs.foreach { n =>
           if (epochId > 0 && epochId % n == 0)
-            MergeInto.submitMaintenance(cfg.tableDir) { () =>
+            MergeInto.submitMaintenance(cfg.tableDir, "vacuum") { () =>
               graft.lake.Compaction.vacuum(LakeTable.load(cfg.tableDir),
                 cfg.vacuumRetainVersions, cfg.vacuumOrphanMinAgeMs)
               ()

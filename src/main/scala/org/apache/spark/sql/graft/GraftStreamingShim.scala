@@ -34,10 +34,19 @@ object GraftStreamingShim {
     * first epochs run on cold, unwarmed code. Planned on the long-lived
     * session, every epoch of every query shares one loader and one warm
     * cache. The clone still plans the batch's own scan; its tasks run in
-    * the consumer's jobs on `spark`. */
+    * the consumer's jobs on `spark`.
+    *
+    * A `foreachBatch` frame is already a non-streaming scan of the batch's
+    * planned RDD (a `LogicalRDD`): that RDD is re-planned as it is, so the
+    * consumer's plan holds one `Scan ExistingRDD` rather than a scan of a
+    * second plan, compiled on the clone, that only scans the first. */
   def asBatch(df: DataFrame, spark: SparkSession): DataFrame = {
     val cdf = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+    val rdd = cdf.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD if !r.isStreaming => r.rdd
+      case _ => cdf.queryExecution.toRdd
+    }
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(cdf.queryExecution.toRdd, cdf.schema, isStreaming = false)
+      .internalCreateDataFrame(rdd, cdf.schema, isStreaming = false)
   }
 }

@@ -1,7 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SQLExecutionRDD}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.{ChangelogGen, GenParams}
@@ -38,6 +44,32 @@ class CodegenReuseSpec extends AnyFunSuite {
     (compiles - before, q.recentProgress.toSeq.map(_.numInputRows))
   }
 
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** Runs `body`; returns, for each plan run on `spark` meanwhile that scans
+    * an existing RDD, its `Scan ExistingRDD` nodes and, per node, the planned
+    * plans its rows came through (`SQLExecutionRDD`s in the RDD's lineage). */
+  private def rddScans(body: => Unit): Seq[Seq[Int]] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try body
+    finally {
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(l)
+    }
+    def planned(r: RDD[_]): Int =
+      (if (r.isInstanceOf[SQLExecutionRDD]) 1 else 0) + r.dependencies.map(d => planned(d.rdd)).sum
+    plans.asScala.toSeq
+      .map(qe => Plans.collect(qe.executedPlan) { case s: RDDScanExec => planned(s.rdd) })
+      .filter(_.nonEmpty)
+  }
+
   /** The table holds exactly the fold oracle's rows. */
   private def assertOracle(dir: String): Unit = {
     val oracle = ChangelogGen.foldOracle(p)
@@ -58,14 +90,23 @@ class CodegenReuseSpec extends AnyFunSuite {
       drain(CdcIngestJob.start(spark, IngestConfig(s"$work/wal", s"$work/t$n",
         s"$work/ckpt$n", maxFilesPerTrigger = Some(3)), Trigger.AvailableNow()))
     // `start` leaves its scan-partition size on the session; restore it
-    val ((_, epochs1), (compiled2, epochs2)) =
-      try (ingest(1), ingest(2))
+    var second: (Long, Seq[Long]) = null
+    val ((_, epochs1), (compiled2, epochs2), scans) =
+      try {
+        val first = ingest(1)
+        val scans = rddScans { second = ingest(2) }
+        (first, second, scans)
+      }
       finally priorMpb match {
         case Some(v) => spark.conf.set("spark.sql.files.maxPartitionBytes", v)
         case None => spark.conf.unset("spark.sql.files.maxPartitionBytes")
       }
     assert(epochs1.count(_ > 0) >= 3, s"epoch input rows: $epochs1")
     assert(compiled2 == 0, s"the second drain compiled $compiled2 classes")
+    // each epoch's merge scans the micro-batch once, straight off the plan
+    // the stream ran it through: no second plan re-scanning the first
+    assert(scans.size >= epochs2.count(_ > 0) && scans.forall(_ == Seq(1)),
+      s"Scan ExistingRDD nodes per merge (planned layers under each): $scans")
     Seq(epochs1, epochs2).foreach(e => assert(e.sum == walRows, s"$e vs $walRows"))
     assertOracle(s"$work/t1")
     assertOracle(s"$work/t2")

@@ -231,7 +231,8 @@ class MaintenanceSpec extends AnyFunSuite {
     val table = LakeTable.load(dir)
     MergeInto.merge(spark, table, batch(Seq(("I", 1L, "c1", "hello"))),
       "or", 0L, MergeOptions(mode = MergeMode.Mor))
-    // the live data dir carries Spark's _SUCCESS marker
+    // a live data dir written by an earlier build (Spark's file committer)
+    // carries a _SUCCESS marker
     val liveDir = {
       val f = table.currentFiles.head.path
       val p = if (f.startsWith("file:")) Paths.get(java.net.URI.create(f).getPath)
@@ -255,5 +256,32 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(Files.exists(marker),
       "_SUCCESS in a LIVE data dir must survive the sweep")
     assert(table.read(spark).count() == 1)
+  }
+
+  test("a failed out-of-band fold is recorded in _metrics") {
+    import java.nio.file.Files
+    val dir = TestSpark.tmpDir("fold-fails") + "/t"
+    val table = LakeTable.create(dir, Schemas.turn)
+    val opts = MergeOptions(mode = MergeMode.Mor, minRowsPerFile = 1L,
+      morCompactMaxDeltaFiles = 1, foldAsync = true)
+    MergeInto.merge(spark, table, batch(Seq(("I", 1L, "c1", "a"))), "ff", 0L, opts)
+    MergeInto.awaitMaintenance()
+    assert(table.currentFiles.size == 1, "setup: one delta, no fold yet")
+    // lose the first epoch's file: the fold the next epoch triggers cannot read it
+    table.currentFiles.foreach(f => Files.delete(graft.lake.LocalFs.localPath(f.path)))
+    val t0 = System.currentTimeMillis()
+    MergeInto.merge(spark, table, batch(Seq(("U", 2L, "c2", "b"))), "ff", 1L, opts)
+    MergeInto.awaitMaintenance()
+    assert(table.currentFiles.count(_.delta) == 2, "the failed fold committed")
+    val failed = table.metrics(spark).filter(col("op") === "fold-failed").collect()
+    assert(failed.length == 1, failed.mkString("; "))
+    val r = failed.head
+    def s(c: String): String = r.getString(r.fieldIndex(c))
+    assert(s("errorClass").nonEmpty && s("message").nonEmpty)
+    assert(s("thread") == "graft-maintenance")
+    val at = r.getLong(r.fieldIndex("timeMs"))
+    assert(at >= t0 && at <= System.currentTimeMillis())
+    // epoch records are unchanged: two, neither carrying an op
+    assert(table.metrics(spark).filter(col("op").isNull).count() == 2)
   }
 }

@@ -20,6 +20,14 @@ over the stage's tasks of executor run time, executor CPU time and executor
 deserialize time (seconds). `--grep TEXT` keeps the jobs whose description
 or call site contains TEXT.
 
+`--tasks JOB` prints, for each stage of job JOB, one line per task instead:
+its launch offset (seconds since the job's submission), duration, and
+executor deserialize, run and CPU times (milliseconds), then the records it
+read from input, wrote to output, and read and wrote through the shuffle.
+The view that shows what each task pays before it runs, e.g.
+
+    python3 tools/evlog_stages.py /tmp/ev/eventlog_v2_<app-id> --tasks 42
+
 Reads plain JSON-lines logs and zstd-compressed ones (the Spark 4 default)
 through the `zstd` command.
 """
@@ -66,7 +74,7 @@ def load(path):
         key = (info["Stage ID"], info.get("Stage Attempt ID", 0))
         s = stages.setdefault(key, {"name": "", "tasks": 0, "submit": None,
                                     "done": None, "run_ms": 0, "cpu_ns": 0,
-                                    "deser_ms": 0})
+                                    "deser_ms": 0, "task_list": []})
         s["name"] = info.get("Stage Name", s["name"])
         s["tasks"] = info.get("Number of Tasks", s["tasks"])
         s["submit"] = info.get("Submission Time", s["submit"])
@@ -107,6 +115,22 @@ def load(path):
                 s["run_ms"] += m.get("Executor Run Time", 0)
                 s["cpu_ns"] += m.get("Executor CPU Time", 0)
                 s["deser_ms"] += m.get("Executor Deserialize Time", 0)
+                info = e.get("Task Info") or {}
+                s["task_list"].append({
+                    "id": info.get("Task ID"), "index": info.get("Index"),
+                    "attempt": info.get("Attempt", 0),
+                    "launch": info.get("Launch Time"),
+                    "finish": info.get("Finish Time"),
+                    "deser_ms": m.get("Executor Deserialize Time", 0),
+                    "run_ms": m.get("Executor Run Time", 0),
+                    "cpu_ns": m.get("Executor CPU Time", 0),
+                    "in": (m.get("Input Metrics") or {}).get("Records Read", 0),
+                    "out": (m.get("Output Metrics") or {}).get("Records Written", 0),
+                    "shuf_r": (m.get("Shuffle Read Metrics") or {}).get(
+                        "Total Records Read", 0),
+                    "shuf_w": (m.get("Shuffle Write Metrics") or {}).get(
+                        "Shuffle Records Written", 0),
+                })
     return jobs, stages
 
 
@@ -114,15 +138,43 @@ def secs(start, end):
     return "-" if start is None or end is None else f"{(end - start) / 1000:.3f}"
 
 
+def print_tasks(jobs, stages, jid):
+    """One line per task of each stage of job `jid`."""
+    if jid not in jobs:
+        sys.exit(f"evlog_stages: no job {jid} in the log")
+    j = jobs[jid]
+    print(f"job {jid}: {(j['desc'] or j['site'])[:120]}")
+    print(f"{'stage':>8} {'task':>6} {'index':>6} {'launch_s':>9} {'dur_ms':>7} "
+          f"{'deser_ms':>8} {'run_ms':>7} {'cpu_ms':>7} {'in_recs':>9} "
+          f"{'out_recs':>9} {'shuf_r':>9} {'shuf_w':>9}")
+    for key in sorted(k for k in stages if k[0] in j["stages"]):
+        s = stages[key]
+        name = str(key[0]) + ("." + str(key[1]) if key[1] else "")
+        for t in sorted(s["task_list"], key=lambda t: (t["launch"] or 0, t["id"] or 0)):
+            launch = "-" if t["launch"] is None else \
+                f"{(t['launch'] - j['submit']) / 1000:.3f}"
+            dur = "-" if t["launch"] is None or t["finish"] is None else \
+                str(t["finish"] - t["launch"])
+            index = f"{t['index']}" + (f".{t['attempt']}" if t["attempt"] else "")
+            print(f"{name:>8} {t['id']:>6} {index:>6} {launch:>9} {dur:>7} "
+                  f"{t['deser_ms']:>8} {t['run_ms']:>7} {t['cpu_ns'] / 1e6:7.1f} "
+                  f"{t['in']:>9} {t['out']:>9} {t['shuf_r']:>9} {t['shuf_w']:>9}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("log", help="an event-log file or eventlog_v2_* directory")
     ap.add_argument("--grep", default=None,
                     help="keep jobs whose description or call site contains this")
+    ap.add_argument("--tasks", type=int, default=None, metavar="JOB",
+                    help="print one line per task of this job's stages")
     args = ap.parse_args()
     jobs, stages = load(args.log)
     if not jobs:
         sys.exit(f"evlog_stages: no jobs in {args.log}")
+    if args.tasks is not None:
+        print_tasks(jobs, stages, args.tasks)
+        return
     t0 = min(j["submit"] for j in jobs.values())
     print(f"{'job/stage':>12} {'submit_s':>9} {'wall_s':>8} {'tasks':>6} "
           f"{'run_s':>8} {'cpu_s':>8} {'deser_s':>8}  description / stage name")
