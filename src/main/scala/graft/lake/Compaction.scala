@@ -110,7 +110,7 @@ object Compaction {
     val estRows = all.map(_.rows).sum
     val nOut = outputFiles(spark, estRows, targetRowsPerFile, minRowsPerFile)
     val written = table.writeAndCommit(snap, snap.schema,
-      graft.merge.MergeInto.resolveExchanged(
+      graft.merge.Resolve.resolveExchanged(
         spark.read.schema(snap.schema).parquet(all.map(_.path): _*),
         snap.keyCols, snap.sparse, nOut,
         if (rangePlace || snap.sparse) Placement.ByRange else Placement.ByHash),
@@ -152,7 +152,8 @@ object Compaction {
    * Orphan GC is strictly FAIL-SAFE: if liveness cannot be computed
    * completely (an unreadable snapshot or manifest), the orphan sweep is
    * skipped for this run rather than risking live data — see the inline
-   * rule below.
+   * rule below. A skipped sweep writes a `"vacuum-sweep-skipped"`
+   * [[graft.merge.MaintenanceFailure]] record to the table's `_metrics`.
    *
    * Safe by construction: the liveness set is computed from RETAINED
    * snapshots' manifests, so a file shared by old and new snapshots
@@ -251,6 +252,7 @@ object Compaction {
         case NonFatal(e) =>
           System.err.println(
             s"[graft] vacuum: skipping orphan GC — liveness incomplete: $e")
+          graft.merge.Maintenance.record(table, "vacuum-sweep-skipped", e)
           None
       }
     var orphans = 0

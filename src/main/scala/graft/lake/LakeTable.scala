@@ -159,8 +159,9 @@ final class LakeTable(dir: String) extends TableLog(dir) {
   /** Telemetry table (throughput/lineage surface): one row per committed
     * epoch ([[graft.merge.MergeStats]]), per delta fold
     * ([[FoldRecord]], `op = "fold"`) and per failed out-of-band maintenance
-    * task ([[graft.merge.MaintenanceFailure]], `op = "fold-failed"`,
-    * `"vacuum-failed"`). Empty before the first record.
+    * task or skipped vacuum sweep ([[graft.merge.MaintenanceFailure]],
+    * `op = "fold-failed"`, `"vacuum-failed"`, `"vacuum-sweep-skipped"`).
+    * Empty before the first record.
     *
     * Reads the record files by name, not the directory: Spark's path check
     * takes a root path named `_…` for a hidden one and warns that it was
@@ -297,10 +298,10 @@ final class LakeTable(dir: String) extends TableLog(dir) {
       // a single partition satisfies the fold's clustering: no exchange
       val raw = if (onePartition) projected.coalesce(1) else projected
       if (snap.sparse)
-        graft.merge.MergeInto.resolveSparse(raw, snap.keyCols,
+        graft.merge.Resolve.resolveSparse(raw, snap.keyCols,
           foldCols.filterNot(c => MetaCols.contains(c) || snap.keyCols.contains(c)))
       else
-        graft.merge.MergeInto.resolveMaxLsn(raw, snap.keyCols, saltBuckets = 1)
+        graft.merge.Resolve.resolveMaxLsn(raw, snap.keyCols)
     }
   }
 }

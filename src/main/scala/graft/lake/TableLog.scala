@@ -115,7 +115,7 @@ final case class Snapshot(
     /** partial-column (sparse) upsert mode, fixed at table creation: update
       * events may carry only a subset of payload columns (null = "unchanged")
       * and resolution folds PER COLUMN by cell lsn — see
-      * [[graft.merge.MergeInto.resolveSparse]]. Additive field: json4s
+      * [[graft.merge.Resolve.resolveSparse]]. Additive field: json4s
       * defaults it to false for snapshots written before it existed. */
     sparse: Boolean = false,
     /** on-disk layout version — see [[TableLog.FormatVersion]]. The default
@@ -199,6 +199,10 @@ object TableLog {
   /** suffix of the temp file a `commit` writes before linking its snapshot */
   private[lake] val SnapshotTmpSuffix = ".json.tmp"
 
+  /** test instrumentation: full snapshot-log listings by all instances, for
+    * handles a test cannot reach (a streaming query's) */
+  private[graft] val allSnapshotListScans = new java.util.concurrent.atomic.AtomicLong
+
   /** test instrumentation: number of manifest files parsed from disk */
   private[graft] val manifestParses = new java.util.concurrent.atomic.AtomicLong
   private[graft] def clearManifestCacheForTest(): Unit = manifestCache.clear()
@@ -245,6 +249,7 @@ class TableLog(val dir: String) {
       }
     }
     snapshotListScans.incrementAndGet()
+    allSnapshotListScans.incrementAndGet()
     val max = availableVersions.lastOption.getOrElse(-1L)
     versionHint.updateAndGet(m => math.max(m, max))
     max

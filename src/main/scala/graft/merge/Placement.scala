@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import graft.lake.{DataFile, KeyCodec}
 
 /**
- * Where a write's one exchange sends each key ([[MergeInto.resolveExchanged]]).
+ * Where a write's one exchange sends each key ([[Resolve.resolveExchanged]]).
  * Every placement is a function of the key alone, so all versions of a key
  * meet in one partition and the in-partition dedup is exact.
  */

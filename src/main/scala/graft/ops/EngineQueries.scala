@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.gen.{ChangelogGen, GenParams}
 import graft.lake.LakeTable
-import graft.merge.{MergeInto, MergeOptions}
+import graft.merge.{MergeInto, MergeOptions, Resolve}
 import graft.model.Schemas
 import graft.stream.{CdcIngestJob, IngestConfig}
 
@@ -169,7 +169,7 @@ object EngineQueries {
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     val streamed = s.read.parquet(s"$work/sink")
-    MergeInto.resolveMaxLsn(streamed, Seq("doc_id"), saltBuckets = 1)
+    Resolve.resolveMaxLsn(streamed, Seq("doc_id"))
       .filter(!col(LakeTable.DeletedCol))
       .select(col("doc_id"), col("lang"), col("source"), col("text"))
   }

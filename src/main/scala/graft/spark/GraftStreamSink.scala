@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.{lit, monotonically_increasing_id}
 import org.apache.spark.sql.graft.GraftStreamingShim
 
 import graft.lake.LakeTable
-import graft.merge.{MergeInto, MergeOptions}
+import graft.merge.{MergeInto, MergeOptions, Resolve}
 import graft.model.Schemas
 
 /**
@@ -45,9 +45,15 @@ import graft.model.Schemas
  * and merged there, the rule [[graft.stream.CdcIngestJob]] follows too:
  * the query's own clone of the session has its own executor class loader,
  * and so an empty generated-code cache, under Spark's artifact isolation.
+ * Every batch merges through one table handle, loaded once the table
+ * exists, so head discovery probes forward from the last commit instead of
+ * listing the snapshot log per epoch.
  */
 final class GraftStreamSink(spark: SparkSession, dir: String, ckptId: String,
     opts: MergeOptions, keyColsOpt: Option[Seq[String]]) extends Sink with Logging {
+
+  /** the sink's one table handle: the first batch creates the table first */
+  private lazy val table = LakeTable.load(dir)
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     // Re-plan the incremental frame as a plain batch of `spark` (see the
@@ -70,7 +76,6 @@ final class GraftStreamSink(spark: SparkSession, dir: String, ckptId: String,
       LakeTable.create(dir, org.apache.spark.sql.types.StructType(payload),
         createKeyCols)
     }
-    val table = LakeTable.load(dir)
     val snap = table.currentSnapshot
     // an EXPLICIT keyCols option on an existing table must agree with it —
     // silently merging on different keys than the user asked for would be
@@ -82,7 +87,7 @@ final class GraftStreamSink(spark: SparkSession, dir: String, ckptId: String,
 
     val batch =
       if (cols.contains(Schemas.OpCol) && cols.contains(Schemas.LsnCol)) df
-      else if (cols.contains(LakeTable.LsnCol)) MergeInto.storedAsChanges(df)
+      else if (cols.contains(LakeTable.LsnCol)) Resolve.storedAsChanges(df)
       else {
         // snapshot-ref high-watermark: O(manifest count), parses no manifests
         val lsnBase = table.maxLsn(snap) + 1L

@@ -10,13 +10,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, T
 import org.apache.spark.sql.types.StructType
 
 import graft.lake.{LakeTable, LocalFs}
-import graft.merge.{MergeInto, MergeOptions}
+import graft.merge.{Maintenance, MergeInto, MergeOptions}
 import graft.model.Schemas
 
 /**
  * The flagship pipeline (north rule): tail a WAL/binlog-style append-only
- * directory of change files, deduplicate by lsn within a watermark, and apply
- * key-partitioned MERGE upserts to the lake table with exactly-once commits.
+ * directory of change files and apply key-partitioned MERGE upserts to the
+ * lake table with exactly-once commits.
  *
  * This replaces the reference's whole pipeline-stage model
  * (/root/reference/pipeline.go:20-27: stages of goroutines joined by
@@ -26,9 +26,6 @@ import graft.model.Schemas
  *     IoReader analogue, /root/reference/processors/s3_reader.go:40-47);
  *     `maxFilesPerTrigger` is the batching/backpressure knob the reference
  *     implements with bounded channels (/root/reference/pipeline.go:182-184)
- *   .withWatermark(ts).dropDuplicatesWithinWatermark(lsn)
- *                                                 — bounded-state dedup; dups
- *     beyond the watermark are still resolved by the idempotent max-LSN merge
  *   .writeStream.foreachBatch(MergeInto.merge)    — the SQLWriter upsert stage
  *     (/root/reference/processors/sql_writer.go:44-68), made exactly-once by
  *     the (checkpointId, epochId) ledger instead of at-least-once
@@ -36,10 +33,9 @@ import graft.model.Schemas
  *     resumes from the last committed epoch (the reference restarts from
  *     scratch — SURVEY.md §2.6 "Streaming")
  *
- * Watermark sizing: `watermarkDelay` must exceed the max event-time lateness
- * an event can have relative to the newest event already read, otherwise the
- * dedup operator may treat it as too-late. Correctness does not depend on
- * this (the merge converges regardless); only streaming-dedup state size does.
+ * Duplicates need no streaming state: a redelivered event carries the same
+ * (key, lsn) and payload (the WAL contract), so the merge's max-lsn
+ * resolution collapses it, within an epoch and across epochs alike.
  *
  * Sessions: Structured Streaming runs each query on a clone of `spark`,
  * and with Spark's artifact isolation every clone has its own executor
@@ -47,9 +43,9 @@ import graft.model.Schemas
  * and source) starts empty. So each micro-batch is re-planned onto `spark`
  * itself and the whole merge — and the folds it queues — runs there: every
  * epoch of every drain reuses one warm code cache instead of recompiling
- * the merge's classes per query. The optional `streamDedup`
- * `localCheckpoint` still runs on the stream's clone, where the stateful
- * dedup operator lives.
+ * the merge's classes per query. Every epoch of a query merges through one
+ * table handle, so head discovery probes forward from the last commit
+ * instead of listing the snapshot log per epoch.
  *
  * Schema evolution: the source schema is fixed at query start, so a restart
  * (with the widened schema) picks up newly added columns — same contract as
@@ -60,16 +56,6 @@ final case class IngestConfig(
     tableDir: String,
     checkpointDir: String,
     schema: StructType = Schemas.changeV2,
-    watermarkCol: String = "ts",
-    watermarkDelay: String = "2 hours",
-    /** Optional stateful lsn-dedup BEFORE the merge. Default OFF: the merge's
-      * max-lsn resolution already collapses redelivered (key, lsn) rows —
-      * identical records by the WAL contract — so the state store shuffle,
-      * per-epoch state maintenance, and the localCheckpoint to avoid
-      * re-executing it are pure overhead (measured ~1.8x ingest throughput
-      * when removed). Enable only when a downstream consumer taps the deduped
-      * stream itself rather than the table. */
-    streamDedup: Boolean = false,
     maxFilesPerTrigger: Option[Int] = None,
     /** Read-partition size for batch scans. The default 128 MiB packs small
       * WAL files into a handful of read partitions, capping every epoch's
@@ -140,10 +126,12 @@ object CdcIngestJob {
     // before the query exists: its checkpoint logs take their filesystem
     // from the Hadoop configuration at start
     LocalFs.install(spark)
-    if (!LakeTable.exists(cfg.tableDir))
+    // the query's one table handle (see Sessions above)
+    val table =
+      if (LakeTable.exists(cfg.tableDir)) LakeTable.load(cfg.tableDir)
       // the merge key comes from the caller's merge options — creating with
       // a different key would fail (or corrupt pruning) on the first epoch
-      LakeTable.create(cfg.tableDir, payloadSchema(cfg.schema),
+      else LakeTable.create(cfg.tableDir, payloadSchema(cfg.schema),
         cfg.mergeOptions.keyCols)
     cfg.maxPartitionBytes.foreach(b =>
       spark.conf.set("spark.sql.files.maxPartitionBytes", b))
@@ -157,33 +145,17 @@ object CdcIngestJob {
       src = src.option("cleanSource", cfg.cleanSource)
       cfg.sourceArchiveDir.foreach(d => src = src.option("sourceArchiveDir", d))
     }
-    val raw = src.parquet(cfg.walDir)
-    val deduped =
-      if (cfg.streamDedup)
-        raw.withWatermark(cfg.watermarkCol, cfg.watermarkDelay)
-          .dropDuplicatesWithinWatermark("lsn")
-      else raw
 
     val lineage = new LineageListener(spark, cfg.tableDir, queryName(cfg.checkpointDir))
     spark.streams.addListener(lineage)
-    val q = try deduped.writeStream
+    val q = try src.parquet(cfg.walDir).writeStream
       .queryName(queryName(cfg.checkpointDir))
       .option("checkpointLocation", cfg.checkpointDir)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val table = LakeTable.load(cfg.tableDir)
-        // Materialize the micro-batch ONCE: the merge runs several jobs over
-        // it, and each would otherwise re-execute the batch plan through the
-        // stateful dedup operator (re-loading state stores per job).
-        // localCheckpoint stores plain RDD blocks — cheap to build, unlike a
-        // columnar cache — at the cost of lineage (fine: on executor loss the
-        // query fails and restarts from the checkpoint, where the epoch
-        // ledger makes the replay exactly-once). It runs on `batch`'s own
-        // session, the stream's clone.
-        val mat = if (cfg.streamDedup) batch.localCheckpoint() else batch
-        // ...then merge on the caller's session, not the clone: a merge
-        // planned on a new query's clone recompiles all of its generated
-        // code and runs its first epoch cold (see Sessions above)
-        MergeInto.merge(spark, table, GraftStreamingShim.asBatch(mat, spark),
+        // merge on the caller's session, not the clone: a merge planned on a
+        // new query's clone recompiles all of its generated code and runs
+        // its first epoch cold (see Sessions above)
+        MergeInto.merge(spark, table, GraftStreamingShim.asBatch(batch, spark),
           id, epochId, cfg.mergeOptions)
         // retention cadence: out-of-band like async folds — a vacuum is
         // driver-side fs work but still O(retained snapshots) and must never
@@ -191,9 +163,9 @@ object CdcIngestJob {
         // a concurrent fold on the same table (one thread)
         cfg.vacuumEveryEpochs.foreach { n =>
           if (epochId > 0 && epochId % n == 0)
-            MergeInto.submitMaintenance(cfg.tableDir, "vacuum") { () =>
-              graft.lake.Compaction.vacuum(LakeTable.load(cfg.tableDir),
-                cfg.vacuumRetainVersions, cfg.vacuumOrphanMinAgeMs)
+            Maintenance.submit(table, "vacuum") { () =>
+              graft.lake.Compaction.vacuum(table, cfg.vacuumRetainVersions,
+                cfg.vacuumOrphanMinAgeMs)
               ()
             }
         }

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.lake.LakeTable
-import graft.merge.{MergeInto, MergeMode, MergeOptions}
+import graft.merge.{MergeInto, MergeMode, MergeOptions, Resolve}
 
 /**
  * Checkpointed change-stream consumer: follows a lake table's CDC-out feed
@@ -128,7 +128,7 @@ object ChangeFeed {
     if (!LakeTable.exists(cfg.downstreamDir))
       LakeTable.create(cfg.downstreamDir, upstream.payloadSchema, keyCols)
     MergeInto.merge(spark, LakeTable.load(cfg.downstreamDir),
-      MergeInto.storedAsChanges(stored),
+      Resolve.storedAsChanges(stored),
       ckptId = "feed-" + CdcIngestJob.ckptId(cfg.cursorPath), epochId,
       cfg.mergeOptions.copy(keyCols = keyCols))
     ()

@@ -86,7 +86,7 @@ object BenchExtra {
     }
     // graft maintenance (async folds) must not leak into a subsequent query's
     // wall-clock when queries are timed individually here
-    graft.merge.MergeInto.awaitMaintenance()
+    graft.merge.Maintenance.await()
     spark.stop()
     System.exit(0)
   }

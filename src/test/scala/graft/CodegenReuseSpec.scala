@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.{ChangelogGen, GenParams}
 import graft.lake.LakeTable
-import graft.merge.MergeInto
+import graft.merge.Maintenance
 import graft.stream.{CdcIngestJob, IngestConfig}
 
 /**
@@ -35,11 +35,11 @@ class CodegenReuseSpec extends AnyFunSuite {
   /** Runs `start` to termination with no maintenance before or after it in
     * flight; returns the classes it compiled and its input rows per epoch. */
   private def drain(start: => StreamingQuery): (Long, Seq[Long]) = {
-    MergeInto.awaitMaintenance()
+    Maintenance.await()
     val before = compiles
     val q = start
     q.awaitTermination()
-    MergeInto.awaitMaintenance()
+    Maintenance.await()
     assert(q.exception.isEmpty, q.exception.map(_.toString).getOrElse(""))
     (compiles - before, q.recentProgress.toSeq.map(_.numInputRows))
   }
@@ -119,7 +119,7 @@ class CodegenReuseSpec extends AnyFunSuite {
     val up = s"$work/up"
     CdcIngestJob.drainAvailableNow(spark,
       IngestConfig(s"$work/wal", up, s"$work/ckpt-up", maxFilesPerTrigger = Some(3)))
-    MergeInto.awaitMaintenance()
+    Maintenance.await()
     val upTable = LakeTable.load(up)
     val changeRows = upTable.readChangesBetween(spark, 0L, upTable.currentVersion).count()
     def chain(n: Int): (Long, Seq[Long]) = drain(

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.{ChangelogGen, GenParams}
 import graft.lake.{KeyCodec, LakeTable, SchemaMerge, TableLog}
-import graft.merge.{MergeInto, MergeMode, MergeOptions, ResolveStrategy}
+import graft.merge.{MergeInto, MergeMode, MergeOptions, Resolve, ResolveStrategy}
 import graft.model.Schemas
 
 class LakeMergeSpec extends AnyFunSuite {
@@ -587,17 +587,17 @@ class LakeMergeSpec extends AnyFunSuite {
           case v => v
         }
       }.toSet
-    val win = norm(MergeInto.resolveSparse(
+    val win = norm(Resolve.resolveSparse(
       df.repartition(8, col("conv_id"), col("turn_idx")), keys, cols))
-    val agg = norm(MergeInto.resolveSparseAgg(df, keys, cols))
+    val agg = norm(Resolve.resolveSparseAgg(df, keys, cols))
     assert(agg == win, {
       val onlyW = win -- agg
       val onlyA = agg -- win
       s"forms diverge: window-only=${onlyW.take(2)}, agg-only=${onlyA.take(2)}"
     })
     // associativity: fold a prefix, union the rest raw, fold again
-    val pre = MergeInto.resolveSparseAgg(df.filter(col("_lsn") <= 1500), keys, cols)
-    val staged = norm(MergeInto.resolveSparseAgg(
+    val pre = Resolve.resolveSparseAgg(df.filter(col("_lsn") <= 1500), keys, cols)
+    val staged = norm(Resolve.resolveSparseAgg(
       pre.unionByName(df.filter(col("_lsn") > 1500)), keys, cols))
     assert(staged == agg, "aggregate fold is not associative")
   }

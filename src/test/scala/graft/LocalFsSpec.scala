@@ -18,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.{ChangelogGen, GenParams}
 import graft.lake.{Compaction, LakeTable, LocalFs}
-import graft.merge.MergeInto
+import graft.merge.Maintenance
 import graft.stream.{CdcIngestJob, ChangeFeed, IngestConfig}
 
 /**
@@ -98,7 +98,7 @@ class LocalFsSpec extends AnyFunSuite {
       ChangelogGen.writeWal(spark, p, cfg.walDir))
     assertNoForks("CdcIngestJob drain + fold") {
       CdcIngestJob.drainAvailableNow(spark, cfg)
-      MergeInto.awaitMaintenance()
+      Maintenance.await()
       Compaction.foldDeltas(spark, LakeTable.load(cfg.tableDir))
     }
     val table = LakeTable.load(cfg.tableDir)
@@ -208,7 +208,7 @@ class LocalFsSpec extends AnyFunSuite {
       maxFilesPerTrigger = Some(3))
     ChangelogGen.writeWal(spark, p, cfg.walDir)
     CdcIngestJob.drainAvailableNow(spark, cfg)
-    MergeInto.awaitMaintenance()
+    Maintenance.await()
     Compaction.foldDeltas(spark, LakeTable.load(cfg.tableDir))
     val oracle = ChangelogGen.foldOracle(p)
     val got = LakeTable.load(cfg.tableDir).read(spark)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.gen.{ChangelogGen, GenParams}
 import graft.lake.{Compaction, KeyCodec, LakeTable}
-import graft.merge.{MergeInto, MergeMode, MergeOptions}
+import graft.merge.{Maintenance, MergeInto, MergeMode, MergeOptions}
 import graft.model.Schemas
 import graft.stream.{CdcIngestJob, IngestConfig}
 
@@ -167,12 +167,12 @@ class MaintenanceSpec extends AnyFunSuite {
       assert(epochsMs < 5000L,
         s"epochs waited on the fold commit (${epochsMs}ms >= fold delay)")
       Compaction.testDelayBeforeFoldCommitMs = 0L
-      MergeInto.awaitMaintenance()
+      Maintenance.await()
       // the fold landed AFTER those epochs, via the disjoint rebase commit
       assert(table.currentVersion > v2, "fold never committed")
     } finally {
       Compaction.testDelayBeforeFoldCommitMs = 0L
-      MergeInto.awaitMaintenance()
+      Maintenance.await()
     }
     // fold ran on the maintenance thread (recorded in its metrics line)
     val folds = LakeTable.load(dir).metrics(spark)
@@ -198,7 +198,7 @@ class MaintenanceSpec extends AnyFunSuite {
       vacuumEveryEpochs = Some(2), vacuumRetainVersions = 2,
       vacuumOrphanMinAgeMs = 0L)
     CdcIngestJob.runAvailableNow(spark, cfg)
-    MergeInto.awaitMaintenance()
+    Maintenance.await()
     val table = LakeTable.load(s"$work/table")
     val head = table.currentVersion
     assert(head >= 6, s"expected many epochs, saw version $head")
@@ -219,7 +219,7 @@ class MaintenanceSpec extends AnyFunSuite {
     oracle.foreach { case (k, v) => assert(got(k) == v.text, s"key $k") }
     // replay: re-running the same WAL against the same checkpoint no-ops
     CdcIngestJob.runAvailableNow(spark, cfg)
-    MergeInto.awaitMaintenance()
+    Maintenance.await()
     assert(LakeTable.load(s"$work/table").read(spark).count() == oracle.size)
   }
 
@@ -265,13 +265,13 @@ class MaintenanceSpec extends AnyFunSuite {
     val opts = MergeOptions(mode = MergeMode.Mor, minRowsPerFile = 1L,
       morCompactMaxDeltaFiles = 1, foldAsync = true)
     MergeInto.merge(spark, table, batch(Seq(("I", 1L, "c1", "a"))), "ff", 0L, opts)
-    MergeInto.awaitMaintenance()
+    Maintenance.await()
     assert(table.currentFiles.size == 1, "setup: one delta, no fold yet")
     // lose the first epoch's file: the fold the next epoch triggers cannot read it
     table.currentFiles.foreach(f => Files.delete(graft.lake.LocalFs.localPath(f.path)))
     val t0 = System.currentTimeMillis()
     MergeInto.merge(spark, table, batch(Seq(("U", 2L, "c2", "b"))), "ff", 1L, opts)
-    MergeInto.awaitMaintenance()
+    Maintenance.await()
     assert(table.currentFiles.count(_.delta) == 2, "the failed fold committed")
     val failed = table.metrics(spark).filter(col("op") === "fold-failed").collect()
     assert(failed.length == 1, failed.mkString("; "))
@@ -283,5 +283,29 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(at >= t0 && at <= System.currentTimeMillis())
     // epoch records are unchanged: two, neither carrying an op
     assert(table.metrics(spark).filter(col("op").isNull).count() == 2)
+  }
+
+  test("a vacuum that skips its orphan sweep records it in _metrics") {
+    import java.nio.file.{Files, Paths}
+    val dir = TestSpark.tmpDir("sweep-skipped") + "/t"
+    val table = LakeTable.create(dir, Schemas.turn)
+    MergeInto.merge(spark, table, batch(Seq(("I", 1L, "c1", "a"))), "ss", 0L,
+      MergeOptions(mode = MergeMode.Mor))
+    // truncate the live manifest: liveness can no longer be computed
+    val manifest = Paths.get(dir, "_manifests", table.currentSnapshot.manifests.head.name)
+    val raw = Files.readAllBytes(manifest)
+    Files.write(manifest, raw.take(raw.length / 2))
+    graft.lake.TableLog.clearManifestCacheForTest()
+    val t0 = System.currentTimeMillis()
+    val (deleted, snaps) = Compaction.vacuum(table, retainVersions = 100, orphanMinAgeMs = 0L)
+    assert(deleted == 0 && snaps == 0, s"deleted $deleted files, $snaps snapshots")
+    val skipped = table.metrics(spark).filter(col("op") === "vacuum-sweep-skipped").collect()
+    assert(skipped.length == 1, skipped.mkString("; "))
+    val r = skipped.head
+    def s(c: String): String = r.getString(r.fieldIndex(c))
+    assert(s("errorClass").nonEmpty && s("message").nonEmpty)
+    assert(s("thread") == Thread.currentThread.getName)
+    val at = r.getLong(r.fieldIndex("timeMs"))
+    assert(at >= t0 && at <= System.currentTimeMillis())
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.merge.{MergeInto, Placement}
+import graft.merge.{MergeInto, Placement, Resolve}
 import graft.ops.{CdcQueries, RelationalOps}
 
 /**
@@ -50,13 +50,9 @@ class PlanSpec extends AnyFunSuite {
     val df = spark.read.parquet(s"$sf/events.parquet")
       .select(col("user_id").cast("string").as("conv_id"),
         lit(0).as("turn_idx"), col("event_id").as("_lsn"), col("value"))
-    val resolved = MergeInto.resolveMaxLsn(df, Seq("conv_id", "turn_idx"), 1)
+    val resolved = Resolve.resolveMaxLsn(df, Seq("conv_id", "turn_idx"))
     val exchanges = "Exchange".r.findAllIn(plan(resolved)).size
     assert(exchanges == 1, s"expected 1 shuffle, saw $exchanges:\n${plan(resolved)}")
-    // salted variant adds exactly one more (the pre-reduce)
-    val salted = MergeInto.resolveMaxLsn(df, Seq("conv_id", "turn_idx"), 16)
-    val saltedEx = "Exchange".r.findAllIn(plan(salted)).size
-    assert(saltedEx == 2, s"expected 2 shuffles for salted, saw $saltedEx")
   }
 
   test("MoR read: delta fold is one ObjectHashAggregate shuffle, no sort") {
@@ -91,7 +87,7 @@ class PlanSpec extends AnyFunSuite {
         col("value"), col("event_type"),
         map_from_arrays(array(lit("value"), lit("event_type")),
           array(col("event_id"), col("event_id"))).as("_cell_lsn"))
-    val p = plan(MergeInto.resolveSparse(
+    val p = plan(Resolve.resolveSparse(
       df.repartition(8, col("conv_id"), col("turn_idx")),
       Seq("conv_id", "turn_idx"), Seq("value", "event_type")))
     // the caller's hash exchange must satisfy every window's clustering:
@@ -110,7 +106,7 @@ class PlanSpec extends AnyFunSuite {
         map_from_arrays(array(lit("value"), lit("event_type")),
           array(col("event_id"), col("event_id"))).as("_cell_lsn"),
         lit(null).cast("long").as("_del_lsn"))
-    val p = plan(MergeInto.resolveSparseAgg(df,
+    val p = plan(Resolve.resolveSparseAgg(df,
       Seq("conv_id", "turn_idx"), Seq("value", "event_type")))
     val exchanges = "Exchange".r.findAllIn(p).size
     assert(exchanges == 1, s"expected 1 shuffle in sparse agg resolve, saw $exchanges:\n$p")
@@ -128,7 +124,7 @@ class PlanSpec extends AnyFunSuite {
       .select(col("user_id").cast("string").as("conv_id"),
         (col("event_id") % 5).cast("int").as("turn_idx"),
         col("event_id").as("_lsn"), col("value"))
-    val p = plan(MergeInto.resolveExchanged(df, Seq("conv_id", "turn_idx"), sparse = false, 8,
+    val p = plan(Resolve.resolveExchanged(df, Seq("conv_id", "turn_idx"), sparse = false, 8,
       Placement.ByRange))
     val exchanges = "Exchange".r.findAllIn(p).size
     val sorts = "Sort ".r.findAllIn(p).size
@@ -201,7 +197,7 @@ class PlanSpec extends AnyFunSuite {
     assert(placement.isInstanceOf[Placement.ByBase], s"not aligned: $placement")
     val stored = batch(1000, 5000L).select($"conv_id", $"turn_idx", $"role", $"text",
       $"tool", $"ts", $"lsn".as("_lsn"), lit(false).as("_deleted"))
-    val p = plan(MergeInto.resolveExchanged(stored, Seq("conv_id", "turn_idx"),
+    val p = plan(Resolve.resolveExchanged(stored, Seq("conv_id", "turn_idx"),
       sparse = false, 8, placement))
     assert("Exchange".r.findAllIn(p).size == 1, s"expected 1 shuffle:\n$p")
     assert("Sort ".r.findAllIn(p).size == 1, s"expected 1 sort:\n$p")

@@ -4,7 +4,8 @@ import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.{ChangelogGen, GenParams}
-import graft.lake.LakeTable
+import graft.lake.{LakeTable, TableLog}
+import graft.merge.Maintenance
 import graft.model.Schemas
 import graft.stream.{CdcIngestJob, IngestConfig}
 
@@ -19,8 +20,6 @@ class StreamingReplaySpec extends AnyFunSuite {
 
   private val p = GenParams(nEvents = 8000, nConvs = 120, eventsPerFile = 1000,
     maxLateEvents = 300, turnsPerConv = 25)
-  // watermark must exceed max event-time lateness across batches (in event
-  // seconds): eventsPerFile + maxLateEvents = 1300s < 2h default.
 
   /** Canonical sorted state: every payload column under (conv, turn) order. */
   private def state(dir: String): Seq[Seq[Any]] = {
@@ -75,30 +74,23 @@ class StreamingReplaySpec extends AnyFunSuite {
         s"version ${LakeTable.load(s"$work/table1").currentVersion}")
   }
 
-  test("streamDedup: the watermark dedup drops redelivered events and the " +
-    "drain equals the fold oracle") {
-    val work = TestSpark.tmpDir("stream-dedup")
-    ChangelogGen.writeWal(spark, p, s"$work/wal")
-    val wal = spark.read.parquet(s"$work/wal")
-    val events = wal.count()
-    val lsns = wal.select("lsn").distinct().count()
-    assert(lsns < events, "the WAL must carry redelivered events")
-    CdcIngestJob.runAvailableNow(spark, IngestConfig(s"$work/wal", s"$work/table",
-      s"$work/ckpt", maxFilesPerTrigger = Some(3), streamDedup = true))
-    // each lsn reached the merges once: the stream dropped every redelivery
-    val merged = LakeTable.load(s"$work/table").metrics(spark)
-      .where("ckptId IS NOT NULL").selectExpr("sum(batchRows)").head().getLong(0)
-    assert(merged == lsns, s"merged $merged rows for $lsns distinct lsns")
-    val got = state(s"$work/table")
-    val oracle = oracleKeys
-    assert(got.size == oracle.size, s"rows: got ${got.size}, want ${oracle.size}")
-    val cols = LakeTable.load(s"$work/table").read(spark).columns.sorted
-    got.foreach { row =>
-      val k = (row(cols.indexOf("conv_id")).asInstanceOf[String],
-        row(cols.indexOf("turn_idx")).asInstanceOf[Int])
-      assert(oracle.contains(k), s"unexpected key $k")
-      assert(row(cols.indexOf("text")) == oracle(k).text, s"text mismatch at $k")
-    }
+  test("a drain merges through one table handle: 20 epochs list the snapshot log once") {
+    val work = TestSpark.tmpDir("stream-handle")
+    val p20 = p.copy(nEvents = 4000, eventsPerFile = 200, maxLateEvents = 100)
+    assert(p20.nFiles == 20)
+    ChangelogGen.writeWal(spark, p20, s"$work/wal")
+    LakeTable.create(s"$work/table", CdcIngestJob.payloadSchema(Schemas.changeV2))
+    Maintenance.await()
+    val scans0 = TableLog.allSnapshotListScans.get()
+    val cfg = IngestConfig(s"$work/wal", s"$work/table", s"$work/ckpt",
+      maxFilesPerTrigger = Some(1))
+    CdcIngestJob.drainAvailableNow(spark, cfg)
+    Maintenance.await()
+    val scans = TableLog.allSnapshotListScans.get() - scans0
+    val table = LakeTable.load(s"$work/table")
+    assert(table.currentSnapshot.epochHwm(CdcIngestJob.ckptId(cfg.checkpointDir)) == 19L)
+    assert(scans == 1, s"a 20-epoch drain listed the snapshot log $scans times")
+    assert(state(s"$work/table").size == ChangelogGen.foldOracle(p20).size)
   }
 
   test("checkpoint resume: stop after era 0, append era 1 with evolved schema, " +
