@@ -1,6 +1,7 @@
 package graft.merge
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.graft.GraftStreamingShim
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,7 +22,8 @@ import graft.model.Schemas
  *      batch, as delta files (O(batch) IO, the streaming default).
  *   2. [[Resolve]]: with max-LSN-wins and globally unique lsns, MERGE is an
  *      associative arg-max fold, never a full-outer join: ONE exchange plus an
- *      in-partition window dedup, shared with delta folds.
+ *      in-partition sort and rank-limit dedup (each key's first row by
+ *      `_lsn desc`, no window), shared with delta folds.
  *   3. `LakeTable.writeAndCommit`, as delta folds do. Deletes write
  *      tombstones so a late lower-lsn insert never resurrects a key; the
  *      per-checkpoint epoch high-watermark in the snapshot makes re-delivered
@@ -110,7 +112,11 @@ final case class MergeStats(
     writeMs: Long,
     footerMs: Long,
     commitMs: Long,
-    noop: Boolean)
+    noop: Boolean,
+    /** driver time (ms) from `merge` entry until the write starts: the
+      * stats pass of a copy-on-write epoch, planning and building the
+      * write's DataFrame; 0 when nothing is written */
+    planMs: Long = 0L)
 
 object MergeInto {
   import LakeTable.{DeletedCol, LsnCol}
@@ -210,7 +216,7 @@ object MergeInto {
 
     // --- plan ------------------------------------------------------------
     val plan = EpochPlan.plan(spark, table, snap, opts, k1Type, cow,
-      EpochPlan.history(table.dir, ckptId), bNorm.rdd.getNumPartitions)
+      EpochPlan.history(table.dir, ckptId), GraftStreamingShim.partitions(batch))
     val touched = plan.touched
 
     // --- write and commit. MoR telemetry rides the write job (see the stats
@@ -244,6 +250,7 @@ object MergeInto {
       }
     // the aggregate's deltas span the keyspace: the table loses its base
     // ranges until the next range fold (see Snapshot.baseRanges)
+    val planMs = millisSince(t0)
     val written = table.writeAndCommit(snap, storedSchema, toWrite, delta = isMor,
       touched, Some((ckptId, epochId)),
       baseRanges = added => if (plan.aggResolve && added.nonEmpty) Some(Nil) else None)
@@ -263,7 +270,7 @@ object MergeInto {
     val stats = MergeStats(ckptId, epochId, committed.version, b.rows, b.minLsn, b.maxLsn,
       written.files.map(_.rows).sum + refRowCount - touched.map(_.rows).sum, b.deletes,
       touched.size, refFileCount - touched.size, written.files.size, millisSince(t0), statsMs,
-      written.writeMs, written.footerMs, written.commitMs, noop = false)
+      written.writeMs, written.footerMs, written.commitMs, noop = false, planMs = planMs)
     recordEpoch(table, stats)
     // an empty epoch adds nothing to fold
     if (isMor && written.files.nonEmpty) Maintenance.foldIfDue(spark, table, committed, opts)

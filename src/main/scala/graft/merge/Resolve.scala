@@ -1,6 +1,7 @@
 package graft.merge
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.graft.GraftStreamingShim
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -18,12 +19,13 @@ object Resolve {
    * The write-time resolver of merge epochs and delta folds: ONE exchange
    * that places every version of a key in one partition, then the per-key
    * fold inside each partition — the per-column window fold
-   * ([[resolveSparse]]) on sparse tables, else a (key, lsn desc) sort and
-   * first-row-per-key window, exact for max-lsn-wins because lsns are unique.
-   * Every exchange satisfies the window's ClusteredDistribution and the
-   * in-partition sort its ordering, so EnsureRequirements adds NO second
-   * exchange or sort (asserted in PlanSpec); output is deterministic given
-   * the data.
+   * ([[resolveSparse]]) on sparse tables, else an in-partition sort and
+   * Spark's rank-limit operator alone, which keeps each key's first row in
+   * `_lsn desc` order ([[GraftStreamingShim.firstPerGroup]]: no window, no
+   * row-number filter), exact for max-lsn-wins because lsns are unique.
+   * Every exchange satisfies the operator's ClusteredDistribution and the
+   * sort its ordering, so EnsureRequirements adds NO second exchange or
+   * sort (asserted in PlanSpec); output is deterministic given the data.
    *
    * `placement` picks the exchange. [[Placement.ByRange]] also gives each
    * output file tight key bounds and key-sorted rows — what long-lived base
@@ -35,13 +37,18 @@ object Resolve {
    * [[Placement.ByHash]] hashes the FULL key tuple (a hot conv_id spreads
    * over its turns). [[Placement.ByBase]] (MoR epochs over a range-placed
    * base) hashes an integer column chosen per group of base ranges and
-   * hash sub-partition, which joins the window's partition keys after the
-   * key columns so the exchange still satisfies it; each delta file then
-   * lies inside one group.
+   * hash sub-partition, which joins the group after the key columns so the
+   * exchange still satisfies it; each delta file then lies inside one group.
+   *
+   * The hash placements need only grouping, not key order, so their sort
+   * leads with a 64-bit hash of the key ([[keyHash]]): its 8-byte sort
+   * prefix tells almost all keys apart, where the key's own prefix rarely
+   * does (every generated `conv_id` starts with `conv_000`) and a tie falls
+   * through to a full-row compare. Their files are written in hash order;
+   * the range placement keeps key order.
    */
   private[graft] def resolveExchanged(rows: DataFrame, keyCols: Seq[String], sparse: Boolean,
       nOut: Int, placement: Placement): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val kc = keyCols.map(col)
     val (exchanged, cluster) = placement match {
       case Placement.ByRange => (rows.repartitionByRange(nOut, kc: _*), keyCols)
@@ -50,17 +57,31 @@ object Resolve {
         (rows.withColumn(PlaceCol, p.column(keyCols)).repartition(p.partitions, col(PlaceCol)),
           keyCols :+ PlaceCol)
     }
-    val cc = cluster.map(col)
-    val resolved =
-      if (sparse)
-        resolveSparse(exchanged, cluster, rows.columns.toSeq.filterNot(c =>
-          LakeTable.MetaCols.contains(c) || keyCols.contains(c)))
-      else
-        exchanged
-          .sortWithinPartitions(cc :+ col(LsnCol).desc: _*)
-          .withColumn("_rn", row_number().over(Window.partitionBy(cc: _*).orderBy(col(LsnCol).desc)))
-          .filter(col("_rn") === 1).drop("_rn")
-    if (cluster == keyCols) resolved else resolved.drop(PlaceCol)
+    if (sparse) {
+      val resolved = resolveSparse(exchanged, cluster, rows.columns.toSeq.filterNot(c =>
+        LakeTable.MetaCols.contains(c) || keyCols.contains(c)))
+      if (cluster == keyCols) resolved else resolved.drop(PlaceCol)
+    } else {
+      val group = placement match {
+        case Placement.ByRange => kc
+        case _ => keyHash(keyCols) +: cluster.map(col)
+      }
+      GraftStreamingShim.firstPerGroup(exchanged, group, Seq(col(LsnCol).desc),
+        rows.columns.toSeq)
+    }
+  }
+
+  /** The leading sort key of the hash placements: a 64-bit value whose high
+    * half is a hash of the first key column and whose low half is a hash of
+    * the others. Its 8-byte sort prefix tells almost all keys apart, and each
+    * first key's rows (a conversation's turns) stay together in the file, so
+    * the file compresses about as well as in key order. An expression, not a
+    * column: the sort computes the prefix once per row, and only a tie
+    * (versions of one key) evaluates it again. */
+  private def keyHash(keyCols: Seq[String]): Column = {
+    val first = shiftleft(hash(col(keyCols.head)).cast(LongType), 32)
+    if (keyCols.size == 1) first
+    else first.bitwiseOR(hash(keyCols.tail.map(col): _*).cast(LongType).bitwiseAND(lit(0xFFFFFFFFL)))
   }
 
   /** the exchange column of [[Placement.ByBase]], dropped before the write */

@@ -1,6 +1,11 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Ascending, RowNumber, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort, WindowGroupLimit}
+import org.apache.spark.sql.classic.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
 
 /**
  * A V1 streaming `Source.getBatch` must return a DataFrame whose logical
@@ -11,7 +16,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
  * which is `private[sql]` — hence this one-object shim inside the
  * `org.apache.spark.sql` namespace, the standard pattern for V1 connectors
  * whose batches are computed with full Catalyst plans rather than raw RDDs.
- * Nothing else may live in this package.
+ * The shim also holds the merge's other uses of `private[sql]` API (a
+ * micro-batch's partitions, a plan built from logical nodes). Nothing else
+ * may live in this package.
  */
 object GraftStreamingShim {
   def asStreaming(df: DataFrame): DataFrame = {
@@ -43,10 +50,50 @@ object GraftStreamingShim {
   def asBatch(df: DataFrame, spark: SparkSession): DataFrame = {
     val cdf = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
     val rdd = cdf.queryExecution.analyzed match {
-      case r: org.apache.spark.sql.execution.LogicalRDD if !r.isStreaming => r.rdd
+      case r: LogicalRDD if !r.isStreaming => r.rdd
       case _ => cdf.queryExecution.toRdd
     }
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, cdf.schema, isStreaming = false)
+  }
+
+  /** The partitions `df` yields. A frame [[asBatch]] built is a scan of an
+    * RDD, whose partitions are read off it: nothing is planned or run. Any
+    * other frame is planned and its RDD built, outside a SQL execution
+    * (`Dataset.rdd` would start one); an adaptive plan still runs the jobs
+    * that fix its partitions. */
+  def partitions(df: DataFrame): Int = {
+    val cdf = df.asInstanceOf[Dataset[Row]]
+    cdf.queryExecution.analyzed match {
+      case r: LogicalRDD if !r.isStreaming => r.rdd.getNumPartitions
+      case _ => cdf.queryExecution.toRdd.getNumPartitions
+    }
+  }
+
+  /**
+   * The first row of each group of `rows` that agrees on `group`, in `order`,
+   * with the columns named `out`. `rows` must already be clustered by
+   * `group`: every row of a group in one partition.
+   *
+   * The plan is an in-partition sort on (`group`, `order`) under Spark's
+   * rank-limit operator alone (`WindowGroupLimit` with `row_number()` and
+   * limit 1), which keeps each group's first row as the sorted rows stream
+   * past. It is the operator Spark's optimizer puts under a
+   * `row_number() = 1` window filter, without the window, the filter and
+   * the row-number column; plain Spark plans it. Built as one logical plan
+   * over `rows` and analyzed once.
+   */
+  def firstPerGroup(rows: DataFrame, group: Seq[Column], order: Seq[Column],
+      out: Seq[String]): DataFrame = {
+    val cdf = rows.asInstanceOf[Dataset[Row]]
+    val groupSpec = group.map(cdf.sparkSession.expression)
+    val orderSpec = order.map(cdf.sparkSession.expression).map {
+      case s: SortOrder => s
+      case e => SortOrder(e, Ascending)
+    }
+    val sorted = Sort(groupSpec.map(SortOrder(_, Ascending)) ++ orderSpec, global = false,
+      cdf.logicalPlan)
+    val firsts = WindowGroupLimit(groupSpec, orderSpec, RowNumber(), 1, sorted)
+    Dataset.ofRows(cdf.sparkSession, Project(out.map(UnresolvedAttribute.quoted), firsts))
   }
 }

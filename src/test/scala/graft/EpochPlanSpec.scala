@@ -3,9 +3,11 @@ package graft
 import java.sql.Timestamp
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftStreamingShim
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -126,5 +128,33 @@ class EpochPlanSpec extends AnyFunSuite {
     // an idle epoch records nothing
     MergeInto.merge(spark, b, events(0), ckpt, 1L, mor)
     assert(EpochPlan.history(s"$dir/b", ckpt).map(_.rows).contains(10L))
+  }
+
+  test("a history-less MoR epoch over a micro-batch frame runs one SQL execution") {
+    val table = LakeTable.create(s"${TestSpark.tmpDir("epoch-first")}/t", Schemas.turn)
+    // the frame CdcIngestJob merges: a scan of the micro-batch's planned RDD,
+    // whose partitions size the first epoch without planning or running it
+    val batch = GraftStreamingShim.asBatch(events(2000), spark)
+    Maintenance.await()
+    org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    val executions = new AtomicInteger
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => executions.incrementAndGet(); ()
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    val stats =
+      try {
+        val s = MergeInto.merge(spark, table, batch, s"first-${System.nanoTime()}", 0L, mor)
+        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+        s
+      } finally spark.sparkContext.removeSparkListener(l)
+    assert(executions.get == 1, s"the epoch ran ${executions.get} SQL executions, not its write alone")
+    assert(stats.filesAdded == 1 && stats.batchRows == 2000L, s"$stats")
+    // the driver time before the write is recorded, inside the epoch's wall
+    assert(stats.planMs > 0 && stats.planMs <= stats.wallMs, s"$stats")
+    assert(table.metrics(spark).columns.contains("planMs"))
   }
 }

@@ -65,4 +65,37 @@ class MergePropertySpec extends AnyFunSuite {
       assert(got == want, s"seed=$seed nEpochs=$nEpochs")
     }
   }
+
+  test("resolveExchanged keeps each key's max-lsn row under every placement") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.StringType
+    import graft.merge.{Placement, Resolve}
+    val keys = Seq("conv_id", "turn_idx")
+    (1 to 3).foreach { seed =>
+      val r = new Random(seed)
+      // 40% of versions on 6 hot keys (hundreds each), a cold tail over 400
+      // conv_ids, null key parts, and ~12% redelivered (key, lsn) rows
+      val rows = (0 until 4000).map { i =>
+        val hot = r.nextInt(10) < 4
+        val conv =
+          if (r.nextInt(50) == 0) None
+          else Some(if (hot) s"conv_hot_${r.nextInt(3)}" else f"conv_${r.nextInt(400)}%06d")
+        val turn = if (r.nextInt(60) == 0) None else Some(r.nextInt(if (hot) 2 else 4))
+        (conv, turn, s"t$seed-$i", i * 7L + seed, r.nextInt(20) == 0)
+      }
+      val df = r.shuffle(rows ++ rows.filter(_ => r.nextInt(8) == 0))
+        .toDF("conv_id", "turn_idx", "text", "_lsn", "_deleted").repartition(3)
+      val want = df.groupBy(keys.map(col): _*)
+        .agg(max_by(struct(df.columns.map(col).toSeq: _*), col("_lsn")).as("e"))
+        .select("e.*").collect().toSet
+      Seq(Placement.ByHash, Placement.ByRange,
+        Placement.ByBase(StringType, IndexedSeq("conv_000200", "conv_hot_1"), IndexedSeq(2, 3, 1)))
+        .foreach { p =>
+          val got = Resolve.resolveExchanged(df, keys, sparse = false, 6, p)
+          assert(got.columns.toSeq == df.columns.toSeq, s"seed=$seed $p")
+          val rows = got.collect()
+          assert(rows.length == want.size && rows.toSet == want, s"seed=$seed $p")
+        }
+    }
+  }
 }

@@ -12,6 +12,9 @@ import graft.ops.{CdcQueries, RelationalOps}
  * parquet scan, broadcast of dimension sides, hash (not sort) aggregation
  * for the CDC fold, and a single shuffle for the unsalted arg-max.
  */
+/** Collects nodes of a plan, descending into adaptive plans. */
+private object AqeNodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
 class PlanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -134,6 +137,47 @@ class PlanSpec extends AnyFunSuite {
     assert(sorts == 1, s"expected 1 sort, saw $sorts:\n$p")
     // WindowGroupLimit drops losing rows before full window evaluation
     assert(p.contains("WindowGroupLimit"), s"rank-limit pushdown missing:\n$p")
+  }
+
+  /** The executed plan of the non-sparse resolve of `stored` under
+    * `placement`, the AQE plan's initial form included. */
+  private def resolvePlan(placement: Placement): org.apache.spark.sql.execution.SparkPlan = {
+    import org.apache.spark.sql.functions._
+    val stored = spark.read.parquet(s"$sf/events.parquet")
+      .select(col("user_id").cast("string").as("conv_id"),
+        (col("event_id") % 5).cast("int").as("turn_idx"),
+        col("event_id").as("_lsn"), col("value"))
+    Resolve.resolveExchanged(stored, Seq("conv_id", "turn_idx"), sparse = false, 8, placement)
+      .queryExecution.executedPlan
+  }
+
+  Seq(Placement.ByHash -> "the key hash",
+    Placement.ByBase(org.apache.spark.sql.types.StringType, IndexedSeq("5"), IndexedSeq(4, 4)) ->
+      "the key hash",
+    Placement.ByRange -> "conv_id").foreach { case (placement, firstKey) =>
+    val name = placement.getClass.getSimpleName.stripSuffix("$")
+    test(s"$name resolve: one exchange, one sort led by $firstKey, the rank-limit " +
+      "operator alone (no window, no row-number filter)") {
+      import org.apache.spark.sql.catalyst.expressions.{Attribute, Murmur3Hash}
+      import org.apache.spark.sql.execution.{FilterExec, SortExec}
+      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+      import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+      val p = resolvePlan(placement)
+      def all[T](pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, T]): Seq[T] =
+        AqeNodes.collect(p)(pf)
+      assert(all { case e: ShuffleExchangeExec => e }.size == 1, s"expected 1 shuffle:\n$p")
+      val sorts = all { case s: SortExec => s }
+      assert(sorts.size == 1, s"expected 1 sort:\n$p")
+      val lead = sorts.head.sortOrder.head.child
+      val led = lead match {
+        case a: Attribute => a.name == firstKey
+        case e => firstKey == "the key hash" && e.find(_.isInstanceOf[Murmur3Hash]).nonEmpty
+      }
+      assert(led, s"sort not led by $firstKey:\n$p")
+      assert(all { case w: WindowGroupLimitExec => w }.nonEmpty, s"rank-limit operator missing:\n$p")
+      assert(all { case w: WindowExec => w }.isEmpty, s"window planned:\n$p")
+      assert(all { case f: FilterExec => f }.isEmpty, s"row-number filter planned:\n$p")
+    }
   }
 
   test("graft point read: the fold's input is key-filtered and reads only the " +
