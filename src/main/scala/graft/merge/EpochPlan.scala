@@ -16,10 +16,8 @@ final case class BatchStats(rows: Long, minLsn: Long, maxLsn: Long, deletes: Lon
     ranges: KeyRanges = KeyRanges.All)
 
 /** An epoch's driver decisions: the base files a copy-on-write epoch
-  * rewrites, the write's partitions and exchange, and whether a sparse
-  * merge-on-read epoch resolves by the aggregate form. */
-final case class EpochPlan(touched: List[DataFile], nOut: Int, placement: Placement,
-    aggResolve: Boolean)
+  * rewrites, and the write's partitions and exchange. */
+final case class EpochPlan(touched: List[DataFile], nOut: Int, placement: Placement)
 
 /**
  * Plans merge epochs from metadata alone — snapshot, options, batch stats
@@ -50,8 +48,7 @@ object EpochPlan {
    * epoch, or the first after a restart) from the batch's `scanPartitions`,
    * which track input bytes, so a small first batch does not spray 2x-cores
    * micro-files (measured: 64 files / ~600 ms write for a 5k-row epoch vs 1
-   * file / ~250 ms). It places by the base's key ranges, by hash for the
-   * aggregate form.
+   * file / ~250 ms). It places by the base's key ranges.
    */
   def plan(spark: SparkSession, table: TableLog, snap: Snapshot, opts: MergeOptions,
       k1Type: DataType, stats: Option[BatchStats], history: Option[History],
@@ -63,17 +60,13 @@ object EpochPlan {
         val s = stats.getOrElse(throw new IllegalArgumentException(
           "a copy-on-write epoch plans from its batch stats"))
         val touched = table.filesIntersecting(snap, s.ranges).filter(s.ranges.touches)
-        EpochPlan(touched, sized(touched.map(_.rows).sum + s.rows), Placement.ByRange,
-          aggResolve = false)
+        EpochPlan(touched, sized(touched.map(_.rows).sum + s.rows), Placement.ByRange)
       case MergeMode.Mor =>
         val nOut = history.map(_.rows).filter(_ > 0).map(sized)
           .getOrElse(math.max(1, math.min(2 * spark.sparkContext.defaultParallelism,
             scanPartitions)))
-        val agg = snap.sparse && opts.sparseResolve == ResolveStrategy.Agg
-        val placement =
-          if (agg) Placement.ByHash
-          else Placement.forDeltas(snap.baseRanges, k1Type, nOut, history.flatMap(_.loads))
-        EpochPlan(Nil, nOut, placement, agg)
+        EpochPlan(Nil, nOut,
+          Placement.forDeltas(snap.baseRanges, k1Type, nOut, history.flatMap(_.loads)))
     }
   }
 

@@ -52,19 +52,22 @@ object Maintenance {
     .newSingleThreadExecutor { r =>
       val t = new Thread(r, "graft-maintenance"); t.setDaemon(true); t
     }
-  /** table dirs with a maintenance task queued or running */
+  /** (table dir, op) pairs with a maintenance task queued or running */
   private val inFlight =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
 
   /** Queue `task` (the maintenance op `op`, e.g. "fold") for `table` unless
-    * one is already pending — a trigger firing mid-fold is absorbed, not
-    * queued behind it (the running fold already shrinks the delta backlog;
-    * the next epoch re-evaluates the trigger). A failure clears the flag and
-    * is recorded, not rethrown: maintenance is best-effort by design (the
-    * stream's correctness never depends on a fold), so the table's
+    * the same op is already pending for it — a trigger firing mid-fold is
+    * absorbed, not queued behind it (the running fold already shrinks the
+    * delta backlog; the next epoch re-evaluates the trigger). Another op is
+    * queued: a vacuum due while a fold is pending runs after it on the one
+    * thread, rather than waiting for its next cadence. A failure clears the
+    * flag and is recorded, not rethrown: maintenance is best-effort by design
+    * (the stream's correctness never depends on a fold), so the table's
     * `_metrics` get a [[MaintenanceFailure]] record (op `"<op>-failed"`). */
-  private[graft] def submit(table: LakeTable, op: String)(task: () => Unit): Unit =
-    if (inFlight.add(table.dir)) pool.submit(new Runnable {
+  private[graft] def submit(table: LakeTable, op: String)(task: () => Unit): Unit = {
+    val key = (table.dir, op)
+    if (inFlight.add(key)) pool.submit(new Runnable {
       override def run(): Unit =
         try task()
         catch {
@@ -72,9 +75,10 @@ object Maintenance {
             System.err.println(s"[graft] maintenance task $op for ${table.dir} failed: $e")
             record(table, s"$op-failed", e)
         } finally {
-          inFlight.remove(table.dir); ()
+          inFlight.remove(key); ()
         }
     })
+  }
 
   /** Drain the maintenance queue (tests, bounded-lifecycle jobs): returns
     * once every task submitted before the call has finished. */

@@ -60,13 +60,6 @@ final case class MergeOptions(
       * 2x cores): near it, folds would rewrite the base every few epochs —
       * O(T^2) total writes instead of the ratio trigger's logarithmic ones. */
     morCompactMaxDeltaFiles: Int = 1024,
-    /** Sparse MoR epochs only: [[ResolveStrategy.SortDedup]] (default) folds
-      * in clustered windows ([[Resolve.resolveSparse]]) whose exchange is
-      * also the write placement; [[ResolveStrategy.Agg]] in one hash
-      * aggregate ([[Resolve.resolveSparseAgg]]) whose map-side combine
-      * collapses hot-key duplicates BEFORE the shuffle. Read-time and delta
-      * folds keep the window form. */
-    sparseResolve: ResolveStrategy = ResolveStrategy.SortDedup,
     /** MoR: run trigger-fired delta folds OUT-OF-BAND on the maintenance
       * thread ([[Maintenance]]): an inline fold reads base+deltas in full,
       * stalling the stream inside its epoch. Async folds ride the
@@ -75,13 +68,6 @@ final case class MergeOptions(
       * meanwhile. Default off, for deterministic single-shot batch jobs and
       * tests; the streaming ingest config turns it on. */
     foldAsync: Boolean = false)
-
-/** Sparse-table resolution plan shape, see [[MergeOptions.sparseResolve]]. */
-sealed trait ResolveStrategy
-object ResolveStrategy {
-  case object SortDedup extends ResolveStrategy
-  case object Agg extends ResolveStrategy
-}
 
 sealed trait MergeMode
 object MergeMode {
@@ -229,12 +215,7 @@ object MergeInto {
           sum(when(col(DeletedCol), 1L).otherwise(0L)).as("dels")) ++
           EpochPlan.groupRows(plan.placement, k1): _*)
     val toWrite =
-      if (plan.aggResolve)
-        // coalesce, not repartition, to nOut: file sizing stays governed by
-        // targetRowsPerFile rather than spark.sql.shuffle.partitions, with
-        // no second exchange
-        Resolve.resolveSparseAgg(obsNorm, keyCols, nonKeyPayload).coalesce(plan.nOut)
-      else if (isMor)
+      if (isMor)
         // merge-on-read: write ONLY the batch, resolved within itself
         // (cross-epoch conflicts fold at read / delta-fold time)
         Resolve.resolveExchanged(obsNorm, keyCols, snap.sparse, plan.nOut, plan.placement)
@@ -248,12 +229,9 @@ object MergeInto {
         Resolve.resolveExchanged(target.unionByName(bNorm), keyCols, snap.sparse, plan.nOut,
           plan.placement)
       }
-    // the aggregate's deltas span the keyspace: the table loses its base
-    // ranges until the next range fold (see Snapshot.baseRanges)
     val planMs = millisSince(t0)
     val written = table.writeAndCommit(snap, storedSchema, toWrite, delta = isMor,
-      touched, Some((ckptId, epochId)),
-      baseRanges = added => if (plan.aggResolve && added.nonEmpty) Some(Nil) else None)
+      touched, Some((ckptId, epochId)))
 
     // --- record. The ridden-along MoR telemetry: the write action finished,
     // so get() returns immediately
@@ -324,12 +302,17 @@ object MergeInto {
     * frozen `graft.Bench` and the perfbench harness call it by this name. */
   def awaitMaintenance(): Unit = Maintenance.await()
 
-  /** The read-time max-lsn fold, [[Resolve.resolveMaxLsn]]. Kept here, as a
-    * forwarder with its `saltBuckets` parameter, because the frozen
-    * `graft.Bench` calls it by name; salting is gone, so it must be 1. */
+  /** The max-lsn fold in built-ins alone: per key, `max_by(struct(*), _lsn)`
+    * — none of the engine's own resolve code. Kept, under this name and
+    * with its `saltBuckets` parameter, because the frozen `graft.Bench`
+    * builds its expected state with it; salting is gone, so it must be 1.
+    * Tests use it as the reference [[Resolve.resolveMaxLsn]] must match. */
   def resolveMaxLsn(union: DataFrame, keyCols: Seq[String], saltBuckets: Int): DataFrame = {
     require(saltBuckets == 1, s"salted arg-max is not supported (saltBuckets = $saltBuckets)")
-    Resolve.resolveMaxLsn(union, keyCols)
+    val all = union.columns.toSeq
+    union.groupBy(keyCols.map(col): _*)
+      .agg(max_by(struct(all.map(col): _*), col(LsnCol)).as("_e"))
+      .select(all.map(c => col(s"_e.`$c`").as(c)): _*)
   }
 
   /** An applied epoch's `_metrics` record (empty epochs included). */

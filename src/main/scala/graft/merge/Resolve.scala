@@ -152,75 +152,21 @@ object Resolve {
   }
 
   /**
-   * Aggregate-form sparse resolution — same fold semantics as
-   * [[resolveSparse]] (per-column max-cell-lsn after the delete watermark,
-   * watermark persisted), different plan shape: ONE hash aggregate
-   * (ObjectHashAggregate via the native `max_row_by_long`, map-side partial
-   * combine) instead of clustered windows. The window form buffers each key
-   * group in memory before emitting; under heavy per-key duplication (hot
-   * conv_ids updated many times within one batch) the aggregate collapses
-   * duplicates map-side BEFORE the shuffle, bounding both shuffle volume and
-   * per-key memory. Selectable via [[MergeOptions.sparseResolve]].
-   *
-   * Per column the aggregate takes the arg-max value by UNMASKED cell lsn
-   * plus the max cell lsn, then masks at projection time: if the column's
-   * max cell lsn is <= the key's delete watermark every older cell is too,
-   * and if it is above, the unmasked winner IS the masked winner — so
-   * post-masking is exact. null ordinals (events that didn't set the column)
-   * are ignored by the aggregate, like nulls in `max_by`.
+   * The max-lsn fold of read-time merge-on-read folds, the change feed's
+   * bootstrap and the stream query: per key, the row with the highest
+   * `_lsn`. The write path's fold ([[resolveExchanged]] under a hash
+   * placement) without its explicit exchange: a sort led by [[keyHash]]
+   * under Spark's rank-limit operator ([[GraftStreamingShim.firstPerGroup]]).
+   * On unclustered rows Spark plans a partial rank-limit in each input
+   * partition (each key's first row there: the map-side collapse), ONE
+   * exchange on the key, then the final rank-limit; on rows already in one
+   * partition (a point read's `coalesce(1)`) it plans no exchange. Hot keys
+   * need no salt: the grouping is on the full key tuple, so a hot conv_id
+   * spreads over its turns.
    */
-  def resolveSparseAgg(rows0: DataFrame, keyCols: Seq[String],
-      payloadCols: Seq[String]): DataFrame = {
-    val rows = withDelLsn(rows0)
-    def cellOf(c: String) = element_at(col(LakeTable.CellLsnCol), lit(c))
-    val aggs: Seq[Column] =
-      payloadCols.flatMap(c => Seq(
-        argMax(rows, struct(col(c).as("v")), cellOf(c)).as(s"_av_$c"),
-        max(cellOf(c)).as(s"_al_$c"))) ++ Seq(
-        max(greatest(
-          when(coalesce(col(DeletedCol), lit(false)), col(LsnCol)),
-          col(LakeTable.DelLsnCol))).as("_wm"),
-        argMax(rows, struct(col(LsnCol).as("l"), col(DeletedCol).as("d")), col(LsnCol))
-          .as("_meta"))
-    val g = rows.groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    def wm = coalesce(col("_wm"), lit(Long.MinValue))
-    def maskedLsn(c: String) = when(col(s"_al_$c") > wm, col(s"_al_$c"))
-    val cellMap = cellLsnMap(payloadCols, payloadCols.map(maskedLsn))
-    val outCols = rows.columns.toSeq.map {
-      case c if payloadCols.contains(c) =>
-        when(maskedLsn(c).isNotNull, col(s"_av_$c").getField("v")).as(c)
-      case c if c == LsnCol => col("_meta").getField("l").as(c)
-      case c if c == DeletedCol => col("_meta").getField("d").as(c)
-      case c if c == LakeTable.CellLsnCol => cellMap.as(c)
-      case c if c == LakeTable.DelLsnCol => col("_wm").as(c)
-      case c => col(c) // key columns: grouping output
-    }
-    g.select(outCols: _*)
-  }
-
-  /**
-   * The max-lsn arg-max fold of read-time merge-on-read folds and the change
-   * feed's bootstrap: per key, the row with the highest `_lsn`.
-   *
-   * Uses the native `max_row_by_long` TypedImperativeAggregate rather than
-   * built-in `max_by`: max_by's immutable buffer types force SortAggregate
-   * (a per-partition sort of every row on both sides of the shuffle), while
-   * the native aggregate runs in ObjectHashAggregateExec with map-side
-   * partial combine. Hot keys need no salt: the grouping is on the full key
-   * tuple, so a hot conv_id spreads over its turns.
-   */
-  def resolveMaxLsn(union: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val all = union.columns.toSeq
-    union.groupBy(keyCols.map(col): _*)
-      .agg(argMax(union, struct(all.map(col): _*), col(LsnCol)).as("_e"))
-      .select(all.map(c => col(s"_e.`$c`").as(c)): _*)
-  }
-
-  /** `max_row_by_long(v, o)`, registered on `rows`' session. */
-  private def argMax(rows: DataFrame, v: Column, o: Column): Column = {
-    graft.functions.GraftFunctions.register(rows.sparkSession)
-    call_function(graft.functions.GraftFunctions.MaxRowByLongName, v, o)
-  }
+  def resolveMaxLsn(union: DataFrame, keyCols: Seq[String]): DataFrame =
+    GraftStreamingShim.firstPerGroup(union, keyHash(keyCols) +: keyCols.map(col),
+      Seq(col(LsnCol).desc), union.columns.toSeq)
 
   /** A `_cell_lsn` map: payload column name -> lsn, null lsns left out. */
   private[merge] def cellLsnMap(payloadCols: Seq[String], lsns: Seq[Column]): Column =

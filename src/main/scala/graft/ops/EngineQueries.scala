@@ -59,14 +59,15 @@ object EngineQueries {
    * Partial-column upsert e2e (the reference's OnDupKeyFields,
    * /root/reference/processors/sql_writer.go:25, util/sql.go:274-284):
    * deterministic sparse changelog derived from `documents`, merged through
-   * a sparse lake table in two MoR epochs (insert epoch, then a mixed epoch
-   * of single-column updates + deletes), so the driver's DuckDB oracle can
-   * verify the closed-form final state — including that columns NOT carried
-   * by an update survive from the incumbent row.
+   * a sparse lake table in two epochs of `mode` (insert epoch, then a mixed
+   * epoch of single-column updates + deletes), so a DuckDB oracle can
+   * verify the closed-form final state — including that columns NOT
+   * carried by an update survive from the incumbent row. Merge-on-read folds
+   * the second epoch's deltas at read time; copy-on-write folds them into
+   * the rewritten base files at write time.
    */
   def mergeSparse(s: SparkSession, dir: String,
-      sparseResolve: graft.merge.ResolveStrategy =
-        graft.merge.ResolveStrategy.SortDedup): DataFrame = {
+      mode: graft.merge.MergeMode = graft.merge.MergeMode.Mor): DataFrame = {
     import org.apache.spark.sql.types._
     import graft.merge.MergeOptions
     val docs = s.read.parquet(s"$dir/documents.parquet")
@@ -77,8 +78,7 @@ object EngineQueries {
       StructField("text", StringType)))
     val table = LakeTable.create(s"$work/t", payload, keyCols = Seq("doc_id"),
       sparseUpdates = true)
-    val opts = MergeOptions(keyCols = Seq("doc_id"),
-      mode = graft.merge.MergeMode.Mor, sparseResolve = sparseResolve)
+    val opts = MergeOptions(keyCols = Seq("doc_id"), mode = mode)
     def nul = lit(null).cast(StringType)
     val ins = docs.select(lit("I").as("op"), (col("doc_id") * 4).as("lsn"),
       col("doc_id"), col("lang"), col("source"), col("text"))
@@ -234,10 +234,11 @@ object EngineQueries {
       cdcStreamE2E(s, paramsFor(dir).copy(nEvents = 20000L, eventsPerFile = 2500L,
         maxLateEvents = 500))),
     "q_merge_sparse" -> ((s, dir) => mergeSparse(s, dir)),
-    // same changelog through the aggregate-form epoch collapse (hot-key /
-    // high-duplication plan shape) — must hit the identical closed form
-    "q_merge_sparse_agg" -> ((s, dir) =>
-      mergeSparse(s, dir, graft.merge.ResolveStrategy.Agg)))
+    // the same changelog through copy-on-write epochs: range placement and
+    // the per-column fold over base ∪ batch at write time. The name is kept
+    // from the aggregate-form plan it once selected, because the query set
+    // and its outputs are fixed by name; it must hit the identical closed form
+    "q_merge_sparse_agg" -> ((s, dir) => mergeSparse(s, dir, graft.merge.MergeMode.Cow)))
 
   // closed-form final state of the sparse changelog: lang touched by the
   // %3 update, text by the %5 update (other columns must SURVIVE each

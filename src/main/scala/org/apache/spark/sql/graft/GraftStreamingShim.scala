@@ -72,8 +72,7 @@ object GraftStreamingShim {
 
   /**
    * The first row of each group of `rows` that agrees on `group`, in `order`,
-   * with the columns named `out`. `rows` must already be clustered by
-   * `group`: every row of a group in one partition.
+   * with the columns named `out`.
    *
    * The plan is an in-partition sort on (`group`, `order`) under Spark's
    * rank-limit operator alone (`WindowGroupLimit` with `row_number()` and
@@ -82,6 +81,14 @@ object GraftStreamingShim {
    * `row_number() = 1` window filter, without the window, the filter and
    * the row-number column; plain Spark plans it. Built as one logical plan
    * over `rows` and analyzed once.
+   *
+   * Spark plans the operator in two steps: a partial one in each input
+   * partition, and a final one that requires `rows` clustered by `group`.
+   * When `rows` already are (an exchange on a subset of `group`, or a single
+   * partition), nothing is added. Otherwise `EnsureRequirements` puts one
+   * hash exchange on `group` and a sort after it between the two steps, and
+   * the partial step keeps only each group's first row of its partition
+   * before the exchange.
    */
   def firstPerGroup(rows: DataFrame, group: Seq[Column], order: Seq[Column],
       out: Seq[String]): DataFrame = {

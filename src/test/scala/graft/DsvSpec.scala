@@ -218,13 +218,13 @@ class DsvSpec extends AnyFunSuite {
 
   /** The scan's fold, and the columns its pre-fold filters reference. */
   private def preFold(df: DataFrame): (DataFrame, Set[String]) = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Window}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Window, WindowGroupLimit}
     val fold = df.queryExecution.sparkPlan.collectFirst {
       case s: org.apache.spark.sql.execution.RowDataSourceScanExec => s.relation
     }.collect { case r: graft.spark.GraftRelation => r.resolved }
       .getOrElse(fail(s"no graft scan in\n${df.queryExecution.sparkPlan}"))
     val input = fold.queryExecution.optimizedPlan.collectFirst {
-      case a: Aggregate => a.child
+      case l: WindowGroupLimit => l.child
       case w: Window => w.child
     }.getOrElse(fail(s"no fold in\n${fold.queryExecution.optimizedPlan}"))
     (fold, input.collect { case f: Filter => f.condition.references.map(_.name) }

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lake.{Compaction, KeyCodec, KeyRanges, LakeTable}
 import graft.merge.{BatchStats, EpochPlan, Maintenance, MergeInto, MergeMode, MergeOptions,
-  Placement, ResolveStrategy}
+  Placement}
 import graft.model.Schemas
 
 /**
@@ -55,7 +55,7 @@ class EpochPlanSpec extends AnyFunSuite {
   private def sized(rows: Long, o: MergeOptions): Int =
     Compaction.outputFiles(spark, rows, o.targetRowsPerFile, o.minRowsPerFile)
 
-  test("planning a MoR, CoW or sparse Agg epoch launches no Spark job") {
+  test("planning a MoR, CoW or sparse MoR epoch launches no Spark job") {
     val dir = TestSpark.tmpDir("epoch-plan")
     // a range-folded base: disjoint files whose ranges the snapshot records
     val ranged = LakeTable.create(s"$dir/ranged", Schemas.turn)
@@ -83,18 +83,17 @@ class EpochPlanSpec extends AnyFunSuite {
         EpochPlan.plan(spark, ranged, rSnap, cow, StringType,
           Some(BatchStats(100L, 10000L, 10099L, 0L, cowKeys)), None, batch.rdd.getNumPartitions),
         EpochPlan.plan(spark, sparse, sparse.currentSnapshot,
-          MergeOptions(keyCols = Seq("k"), mode = MergeMode.Mor,
-            sparseResolve = ResolveStrategy.Agg), LongType, None, Some(history),
+          MergeOptions(keyCols = Seq("k"), mode = MergeMode.Mor), LongType, None, None,
           batch.rdd.getNumPartitions))
     }
     assert(jobs == 0, s"planning launched $jobs Spark jobs")
-    val Seq(first, steady, rewrite, agg) = plans
+    val Seq(first, steady, rewrite, sparseMor) = plans
 
     // MoR without history: the batch's scan partitions, by hash with no base
-    assert(first == EpochPlan(Nil, 1, Placement.ByHash, aggResolve = false))
+    assert(first == EpochPlan(Nil, 1, Placement.ByHash))
     // MoR with history: sized by its rows, placed by the base's ranges with
     // its loads — the heavy first range gets more partitions
-    assert(steady.touched.isEmpty && steady.nOut == sized(30000L, mor) && !steady.aggResolve)
+    assert(steady.touched.isEmpty && steady.nOut == sized(30000L, mor))
     steady.placement match {
       case p: Placement.ByBase =>
         assert(p.partitions == steady.nOut && p.counts.head == p.counts.max, s"$p")
@@ -105,8 +104,8 @@ class EpochPlanSpec extends AnyFunSuite {
     assert(rewrite.touched.forall(cowKeys.touches))
     assert(rewrite.placement == Placement.ByRange &&
       rewrite.nOut == sized(rewrite.touched.map(_.rows).sum + 100L, cow))
-    // sparse Agg: the aggregate form by hash, sized by the history
-    assert(agg == EpochPlan(Nil, sized(30000L, mor), Placement.ByHash, aggResolve = true))
+    // sparse MoR: planned like any MoR epoch, by hash with no base
+    assert(sparseMor == EpochPlan(Nil, 1, Placement.ByHash))
   }
 
   test("one table's epoch history neither sizes nor places another table's epochs") {

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.{ChangelogGen, GenParams}
 import graft.lake.{KeyCodec, LakeTable, SchemaMerge, TableLog}
-import graft.merge.{MergeInto, MergeMode, MergeOptions, Resolve, ResolveStrategy}
+import graft.merge.{MergeInto, MergeMode, MergeOptions, Resolve}
 import graft.model.Schemas
 
 class LakeMergeSpec extends AnyFunSuite {
@@ -427,13 +427,10 @@ class LakeMergeSpec extends AnyFunSuite {
   }
 
   test("sparse upserts: partial-column updates coalesce from the incumbent row") {
-    for ((mode, sres) <- Seq(
-        (MergeMode.Mor, ResolveStrategy.SortDedup),
-        (MergeMode.Mor, ResolveStrategy.Agg), // aggregate-form epoch collapse
-        (MergeMode.Cow, ResolveStrategy.SortDedup))) {
-      val dir = TestSpark.tmpDir(s"lake-sparse-$mode-$sres")
+    for (mode <- Seq(MergeMode.Mor, MergeMode.Cow)) {
+      val dir = TestSpark.tmpDir(s"lake-sparse-$mode")
       val table = LakeTable.create(s"$dir/t", Schemas.turn, sparseUpdates = true)
-      val opts = MergeOptions(mode = mode, sparseResolve = sres,
+      val opts = MergeOptions(mode = mode,
         morCompactDeltaRatio = 1e9, morCompactMaxDeltaFiles = Int.MaxValue)
       def batch(rows: Seq[(String, Long, String, Int, String, String, Option[String])]) =
         rows.map { case (op, lsn, c, t, role, tx, tool) =>
@@ -558,11 +555,11 @@ class LakeMergeSpec extends AnyFunSuite {
     }
   }
 
-  test("sparse resolution: window and aggregate forms fold identically") {
+  test("sparse resolution: a staged fold equals the one-shot fold") {
     // ~3000 random sparse events (partial-column updates + deletes) over 200
-    // keys: both plan shapes must emit identical resolved rows — values,
-    // cell lsns, delete watermark and row meta — and the aggregate form must
-    // stay associative across a two-stage fold.
+    // keys: folding a prefix, then that fold with the rest, must emit the
+    // one-shot fold's resolved rows — values, cell lsns, delete watermark
+    // and row meta — whether the caller or the planner places the keys.
     val rnd = new scala.util.Random(42)
     val cols = Seq("role", "text", "tool")
     val raw = (1 to 3000).map { lsn =>
@@ -587,19 +584,18 @@ class LakeMergeSpec extends AnyFunSuite {
           case v => v
         }
       }.toSet
-    val win = norm(Resolve.resolveSparse(
+    val oneShot = norm(Resolve.resolveSparse(
       df.repartition(8, col("conv_id"), col("turn_idx")), keys, cols))
-    val agg = norm(Resolve.resolveSparseAgg(df, keys, cols))
-    assert(agg == win, {
-      val onlyW = win -- agg
-      val onlyA = agg -- win
-      s"forms diverge: window-only=${onlyW.take(2)}, agg-only=${onlyA.take(2)}"
-    })
+    assert(oneShot.size == df.select(keys.map(col): _*).distinct().count())
     // associativity: fold a prefix, union the rest raw, fold again
-    val pre = Resolve.resolveSparseAgg(df.filter(col("_lsn") <= 1500), keys, cols)
-    val staged = norm(Resolve.resolveSparseAgg(
+    val pre = Resolve.resolveSparse(df.filter(col("_lsn") <= 1500), keys, cols)
+    val staged = norm(Resolve.resolveSparse(
       pre.unionByName(df.filter(col("_lsn") > 1500)), keys, cols))
-    assert(staged == agg, "aggregate fold is not associative")
+    assert(staged == oneShot, {
+      val onlyO = oneShot -- staged
+      val onlyS = staged -- oneShot
+      s"folds diverge: one-shot-only=${onlyO.take(2)}, staged-only=${onlyS.take(2)}"
+    })
   }
 
   test("empty MoR epoch: ledger-only commit, sizing estimator unpoisoned") {

@@ -258,6 +258,28 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(table.read(spark).count() == 1)
   }
 
+  test("a vacuum due while a fold is pending is queued behind it, not dropped") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val table = LakeTable.create(TestSpark.tmpDir("fold-then-vacuum") + "/t", Schemas.turn)
+    val started = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val folds, vacuums = new AtomicInteger
+    try {
+      Maintenance.submit(table, "fold") { () =>
+        started.countDown()
+        release.await(60, TimeUnit.SECONDS)
+        folds.incrementAndGet(); ()
+      }
+      assert(started.await(60, TimeUnit.SECONDS), "the fold never started")
+      // the same op while one is pending is absorbed; another op is queued
+      Maintenance.submit(table, "fold") { () => folds.incrementAndGet(); () }
+      Maintenance.submit(table, "vacuum") { () => vacuums.incrementAndGet(); () }
+    } finally release.countDown()
+    Maintenance.await()
+    assert(folds.get == 1 && vacuums.get == 1, s"folds ${folds.get}, vacuums ${vacuums.get}")
+  }
+
   test("a failed out-of-band fold is recorded in _metrics") {
     import java.nio.file.Files
     val dir = TestSpark.tmpDir("fold-fails") + "/t"

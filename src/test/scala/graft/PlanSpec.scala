@@ -9,8 +9,8 @@ import graft.ops.{CdcQueries, RelationalOps}
 /**
  * Physical-plan assertions: the properties the 100-TB story depends on must
  * be visible in the plan, not assumed — filter/projection pushdown into the
- * parquet scan, broadcast of dimension sides, hash (not sort) aggregation
- * for the CDC fold, and a single shuffle for the unsalted arg-max.
+ * parquet scan, broadcast of dimension sides, map-side collapse for the CDC
+ * fold, and a single shuffle for the unsalted arg-max.
  */
 /** Collects nodes of a plan, descending into adaptive plans. */
 private object AqeNodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -58,8 +58,11 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges == 1, s"expected 1 shuffle, saw $exchanges:\n${plan(resolved)}")
   }
 
-  test("MoR read: delta fold is one ObjectHashAggregate shuffle, no sort") {
+  test("MoR read: delta fold is one exchange under the rank-limit, no window, no aggregate") {
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
     import graft.lake.LakeTable
     import graft.merge.{MergeInto, MergeMode, MergeOptions}
     import spark.implicits._
@@ -72,13 +75,16 @@ class PlanSpec extends AnyFunSuite {
       .toDF("op", "lsn", "conv_id", "turn_idx", "role", "text", "tool", "ts")
     MergeInto.merge(spark, table, b, "ck", 0L, mor)
     MergeInto.merge(spark, table, b.withColumn("lsn", lit(2L)), "ck", 1L, mor)
-    val p = plan(table.read(spark))
-    // the consumer-facing fold must hash-aggregate (map-side combine), never
-    // fall into max_by's SortAggregate, and cost exactly one shuffle
-    assert(p.contains("ObjectHashAggregate"), s"expected hash agg fold:\n$p")
-    assert(!p.contains("SortAggregate"), s"SortAggregate in read path:\n$p")
-    val ex = "Exchange".r.findAllIn(p).size
-    assert(ex == 1, s"expected 1 shuffle in MoR read, saw $ex:\n$p")
+    val p = table.read(spark).queryExecution.executedPlan
+    def all[T](pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, T]): Seq[T] =
+      AqeNodes.collect(p)(pf)
+    // the consumer-facing fold is the write path's: a partial rank-limit
+    // before exactly one shuffle, the final one after it
+    assert(all { case e: ShuffleExchangeExec => e }.size == 1, s"expected 1 shuffle:\n$p")
+    assert(all { case w: WindowGroupLimitExec => w }.nonEmpty, s"rank-limit operator missing:\n$p")
+    assert(all { case w: WindowExec => w }.isEmpty, s"window planned:\n$p")
+    assert(all { case a: BaseAggregateExec => a }.isEmpty, s"aggregate planned:\n$p")
+    assert(table.read(spark).count() == 1)
   }
 
   test("sparse resolution: all per-column folds share one key clustering") {
@@ -97,26 +103,6 @@ class PlanSpec extends AnyFunSuite {
     // one shuffle total, however many payload columns fold
     val exchanges = "Exchange".r.findAllIn(p).size
     assert(exchanges == 1, s"expected 1 shuffle in sparse resolve, saw $exchanges:\n$p")
-  }
-
-  test("sparse AGG resolution: one ObjectHashAggregate shuffle, no sort, no window") {
-    import org.apache.spark.sql.functions._
-    val df = spark.read.parquet(s"$sf/events.parquet")
-      .select(col("user_id").cast("string").as("conv_id"),
-        (col("event_id") % 5).cast("int").as("turn_idx"),
-        col("event_id").as("_lsn"), lit(false).as("_deleted"),
-        col("value"), col("event_type"),
-        map_from_arrays(array(lit("value"), lit("event_type")),
-          array(col("event_id"), col("event_id"))).as("_cell_lsn"),
-        lit(null).cast("long").as("_del_lsn"))
-    val p = plan(Resolve.resolveSparseAgg(df,
-      Seq("conv_id", "turn_idx"), Seq("value", "event_type")))
-    val exchanges = "Exchange".r.findAllIn(p).size
-    assert(exchanges == 1, s"expected 1 shuffle in sparse agg resolve, saw $exchanges:\n$p")
-    assert(p.contains("ObjectHashAggregate"),
-      s"native arg-max should run in ObjectHashAggregate:\n$p")
-    assert(!p.contains("SortAggregate"), s"SortAggregate fallback:\n$p")
-    assert(!p.contains("Window"), s"agg form must not plan windows:\n$p")
   }
 
   test("sort-dedup resolution: one exchange, one sort, rank-limit pushdown") {
@@ -182,7 +168,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("graft point read: the fold's input is key-filtered and reads only the " +
     "requested columns") {
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, WindowGroupLimit}
     import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec}
     import org.apache.spark.sql.functions._
     import graft.lake.LakeTable
@@ -205,7 +191,7 @@ class PlanSpec extends AnyFunSuite {
     }.collect { case r: graft.spark.GraftRelation => r.resolved }
     assert(fold.isDefined, s"no graft scan:\n${point.queryExecution.sparkPlan}")
     val opt = fold.get.queryExecution.optimizedPlan
-    val keyFiltered = opt.collectFirst { case a: Aggregate => a.child }.exists(_.exists {
+    val keyFiltered = opt.collectFirst { case w: WindowGroupLimit => w.child }.exists(_.exists {
       case f: Filter => f.condition.references.exists(_.name == "conv_id")
       case _ => false
     })
@@ -276,7 +262,7 @@ class PlanSpec extends AnyFunSuite {
       case s: org.apache.spark.sql.execution.RowDataSourceScanExec => s.relation
     }.collect { case r: graft.spark.GraftRelation => r.resolved }.get
     val fp = plan(fold)
-    assert(fp.contains("HashAggregate") || fp.contains("ObjectHashAggregate"), fp)
+    assert(fp.contains("WindowGroupLimit"), fp)
     assert(!fp.contains("Exchange"), s"point read fold plans an exchange:\n$fp")
     assert(point.collect().map(r => r.getInt(0) -> r.getString(1)).toMap ==
       Map(0 -> "t5000", 1 -> "t5000", 2 -> "t5000", 3 -> "t0", 4 -> "t0"))
