@@ -20,17 +20,9 @@ import graft.merge.Placement
  * caller — folding on the wrong column would silently corrupt merge-time
  * file pruning.
  */
-object CompactionStats {
-  val empty: CompactionStats = CompactionStats(0, 0, 0, 0)
-}
-final case class CompactionStats(
-    filesBefore: Int,
-    filesAfter: Int,
-    rowsRewritten: Long,
-    wallMs: Long)
-
 /** A delta fold's `_metrics` record (`op` = "fold"), next to the epochs'
-  * [[graft.merge.MergeStats]] in [[LakeTable.metrics]]. */
+  * [[graft.merge.MergeStats]] in [[LakeTable.metrics]]; also what
+  * [[Compaction.foldDeltas]] returns. */
 final case class FoldRecord(
     op: String,
     snapshotVersion: Long,
@@ -39,6 +31,12 @@ final case class FoldRecord(
     rowsRewritten: Long,
     foldMs: Long,
     thread: String)
+
+object FoldRecord {
+  /** [[Compaction.foldDeltas]] on a table without deltas: nothing was
+    * written, committed or recorded. */
+  val NoDeltas: FoldRecord = FoldRecord("fold", -1L, 0, 0, 0L, 0L, "")
+}
 
 object Compaction {
 
@@ -92,19 +90,22 @@ object Compaction {
    * bounds) degrades to the old behavior, never to a wrong one. Tombstones
    * in carried-over base files are untouched (folding only re-resolves rows
    * that could conflict).
+   *
+   * Returns the fold's `_metrics` record ([[FoldRecord]]), or
+   * [[FoldRecord.NoDeltas]] when there was nothing to fold.
    */
   def foldDeltas(
       spark: SparkSession,
       table: LakeTable,
       targetRowsPerFile: Long = 500000L,
       minRowsPerFile: Long = 10000L,
-      rangePlace: Boolean = true): CompactionStats = {
+      rangePlace: Boolean = true): FoldRecord = {
     val t0 = System.nanoTime()
     LocalFs.install(spark)
     val snap = table.currentSnapshot
     val allFiles = table.files(snap)
     val (deltas, baseFiles) = allFiles.partition(_.delta)
-    if (deltas.isEmpty) return CompactionStats.empty
+    if (deltas.isEmpty) return FoldRecord.NoDeltas
     val (touchedBase, carriedBase) = baseFiles.partition(KeyRanges.covering(deltas).touches)
     val all = touchedBase ++ deltas
     val estRows = all.map(_.rows).sum
@@ -118,14 +119,11 @@ object Compaction {
       beforeCommit = () => if (testDelayBeforeFoldCommitMs > 0)
         Thread.sleep(testDelayBeforeFoldCommitMs),
       baseRanges = added => Some(Placement.rangesOf(carriedBase ++ added)))
-    val stats = CompactionStats(allFiles.size,
-      carriedBase.size + written.files.size, estRows,
-      (System.nanoTime() - t0) / 1000000L)
     val version = written.snapshot.version
-    table.writeMetrics(f"fold-$version%010d.json", FoldRecord("fold", version,
-      stats.filesBefore, stats.filesAfter, stats.rowsRewritten, stats.wallMs,
-      Thread.currentThread.getName))
-    stats
+    val fold = FoldRecord("fold", version, allFiles.size, carriedBase.size + written.files.size,
+      estRows, (System.nanoTime() - t0) / 1000000L, Thread.currentThread.getName)
+    table.writeMetrics(f"fold-$version%010d.json", fold)
+    fold
   }
 
   /**

@@ -156,8 +156,10 @@ final class LakeTable(dir: String) extends TableLog(dir) {
   /** Current table contents (tombstones filtered, metadata cols dropped). */
   def read(spark: SparkSession): DataFrame = readAt(spark, currentVersion)
 
-  /** Telemetry table (throughput/lineage surface): one row per committed
-    * epoch ([[graft.merge.MergeStats]]), per delta fold
+  /** Telemetry table: one row per committed epoch
+    * ([[graft.merge.MergeStats]], with the source range it consumed and its
+    * snapshot version and commit time: lineage from the table directory
+    * alone), per delta fold
     * ([[FoldRecord]], `op = "fold"`) and per failed out-of-band maintenance
     * task or skipped vacuum sweep ([[graft.merge.MaintenanceFailure]],
     * `op = "fold-failed"`, `"vacuum-failed"`, `"vacuum-sweep-skipped"`).

@@ -29,8 +29,9 @@ import graft.model.Schemas
  *      per-checkpoint epoch high-watermark in the snapshot makes re-delivered
  *      micro-batches no-ops (epoch ids per checkpoint are monotone,
  *      Structured Streaming's foreachBatch contract).
- *   4. The `_metrics` record ([[MergeStats]]), the epoch history, and a MoR
- *      fold when one is due ([[Maintenance]]).
+ *   4. The `_metrics` record ([[MergeStats]], with the [[SourceRange]] the
+ *      epoch consumed), the epoch history, and a MoR fold when one is due
+ *      ([[Maintenance]]).
  *
  * Base files (CoW epochs, range folds) are range-partitioned and key-sorted
  * so per-file key bounds stay tight; file contents are deterministic given
@@ -102,7 +103,20 @@ final case class MergeStats(
     /** driver time (ms) from `merge` entry until the write starts: the
       * stats pass of a copy-on-write epoch, planning and building the
       * write's DataFrame; 0 when nothing is written */
-    planMs: Long = 0L)
+    planMs: Long = 0L,
+    /** the source range (sourceStart, sourceEnd] that landed in
+      * `snapshotVersion` ([[SourceRange]]); null when the writer has no
+      * source (a SQL `INSERT`, a direct `merge` call) */
+    sourceStart: String = null,
+    sourceEnd: String = null,
+    /** when the epoch committed (epoch ms); 0 on a no-op */
+    commitTimeMs: Long = 0L)
+
+/** The source range (start, end] a merge epoch consumed, each side JSON: a
+  * streaming query's offset log entries (`GraftStreamingShim.sourceRanges`)
+  * or a change feed's upstream versions. `start` is null from the source's
+  * own initial position (a query's first batch, a feed's bootstrap). */
+final case class SourceRange(start: String, end: String)
 
 object MergeInto {
   import LakeTable.{DeletedCol, LsnCol}
@@ -115,7 +129,8 @@ object MergeInto {
    * Merge one change batch into the table under (ckptId, epochId) idempotence.
    * Batch columns: [[Schemas.OpCol]], [[Schemas.LsnCol]] + payload columns
    * (superset-merged into the table schema; missing payload columns read as
-   * null).
+   * null). `source` is the range of the writer's source the batch holds,
+   * recorded in the epoch's `_metrics` record.
    */
   def merge(
       spark: SparkSession,
@@ -123,7 +138,8 @@ object MergeInto {
       batch: DataFrame,
       ckptId: String,
       epochId: Long,
-      opts: MergeOptions = MergeOptions()): MergeStats = {
+      opts: MergeOptions = MergeOptions(),
+      source: Option[SourceRange] = None): MergeStats = {
     val t0 = System.nanoTime()
     LocalFs.install(spark)
     val snap = table.currentSnapshot
@@ -194,10 +210,9 @@ object MergeInto {
     if (cow.exists(_.rows == 0)) {
       val next = table.commitChange(snap, snap.schemaJson, Set.empty, Nil,
         Some((ckptId, epochId)))
-      val stats = MergeStats(ckptId, epochId, next.version, 0, -1, -1, refRowCount, 0, 0,
-        refFileCount, 0, millisSince(t0), statsMs, 0, 0, 0, noop = false)
-      recordEpoch(table, stats)
-      return stats
+      return recordEpoch(table, MergeStats(ckptId, epochId, next.version, 0, -1, -1,
+        refRowCount, 0, 0, refFileCount, 0, millisSince(t0), statsMs, 0, 0, 0, noop = false),
+        source)
     }
 
     // --- plan ------------------------------------------------------------
@@ -245,11 +260,11 @@ object MergeInto {
     // written.snapshot.version, not snap.version + 1: a disjoint-writer
     // commit retry (e.g. racing a delta fold) may land the epoch later
     val committed = written.snapshot
-    val stats = MergeStats(ckptId, epochId, committed.version, b.rows, b.minLsn, b.maxLsn,
-      written.files.map(_.rows).sum + refRowCount - touched.map(_.rows).sum, b.deletes,
-      touched.size, refFileCount - touched.size, written.files.size, millisSince(t0), statsMs,
-      written.writeMs, written.footerMs, written.commitMs, noop = false, planMs = planMs)
-    recordEpoch(table, stats)
+    val stats = recordEpoch(table, MergeStats(ckptId, epochId, committed.version, b.rows,
+      b.minLsn, b.maxLsn, written.files.map(_.rows).sum + refRowCount - touched.map(_.rows).sum,
+      b.deletes, touched.size, refFileCount - touched.size, written.files.size, millisSince(t0),
+      statsMs, written.writeMs, written.footerMs, written.commitMs, noop = false,
+      planMs = planMs), source)
     // an empty epoch adds nothing to fold
     if (isMor && written.files.nonEmpty) Maintenance.foldIfDue(spark, table, committed, opts)
     stats
@@ -315,9 +330,15 @@ object MergeInto {
       .select(all.map(c => col(s"_e.`$c`").as(c)): _*)
   }
 
-  /** An applied epoch's `_metrics` record (empty epochs included). */
-  private def recordEpoch(table: LakeTable, s: MergeStats): Unit =
+  /** An applied epoch's `_metrics` record (empty epochs included), with
+    * the source range it consumed and its commit time. Returns it. */
+  private def recordEpoch(table: LakeTable, stats: MergeStats,
+      source: Option[SourceRange]): MergeStats = {
+    val s = stats.copy(sourceStart = source.map(_.start).orNull,
+      sourceEnd = source.map(_.end).orNull, commitTimeMs = System.currentTimeMillis())
     table.writeMetrics(f"epoch-${s.ckptId}-${s.epochId}%010d.json", s)
+    s
+  }
 
   private def millisSince(t0: Long): Long = (System.nanoTime() - t0) / 1000000L
 }

@@ -11,6 +11,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.{col, lit, monotonically_increasing_id}
+import org.apache.spark.sql.graft.GraftStreamingShim
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
@@ -89,9 +90,9 @@ final class GraftDataSource extends TableProvider with DataSourceRegister
       parameters.collectFirst { case (n, v) if n.equalsIgnoreCase(k) => v }
     // ckptId anchors the exactly-once ledger; derived from the stream's own
     // checkpoint so epoch ids and the ledger share one lifetime
+    val checkpoint = opt("checkpointLocation")
     val ckptId = opt("ckptId")
-      .orElse(opt("checkpointLocation")
-        .map(c => "sink-" + graft.stream.CdcIngestJob.ckptId(c)))
+      .orElse(checkpoint.map(c => "sink-" + graft.stream.CdcIngestJob.ckptId(c)))
       .getOrElse(throw new IllegalArgumentException(
         "graft sink: a checkpointLocation (or explicit ckptId option) is required"))
     val mode = opt("mode").getOrElse("mor") match {
@@ -100,10 +101,13 @@ final class GraftDataSource extends TableProvider with DataSourceRegister
       case m => throw new IllegalArgumentException(
         s"graft sink: unknown mode '$m' (use mor or cow)")
     }
-    val opts = MergeOptions(mode = mode)
+    // trigger-fired folds run out of band, as the ingest's do: a stream must
+    // never stall an epoch behind an O(table) fold
+    val opts = MergeOptions(mode = mode, foldAsync = true)
     val keyCols = opt("keyCols")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    new GraftStreamSink(ctx.sparkSession, dir, ckptId, opts, keyCols)
+    new GraftStreamSink(ctx.sparkSession, dir, ckptId, opts, keyCols,
+      checkpoint.map(GraftStreamingShim.sourceRanges(ctx.sparkSession, _)))
   }
 
   override def sourceSchema(ctx: SQLContext, schema: Option[StructType],

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.{lit, monotonically_increasing_id}
 import org.apache.spark.sql.graft.GraftStreamingShim
 
 import graft.lake.LakeTable
-import graft.merge.{MergeInto, MergeOptions, Resolve}
+import graft.merge.{MergeInto, MergeOptions, Resolve, SourceRange}
 import graft.model.Schemas
 
 /**
@@ -21,7 +21,10 @@ import graft.model.Schemas
  *
  * Exactly-once: epochId = the engine's batchId under a checkpoint-derived
  * ckptId, so a replayed micro-batch hits the (ckptId, epochId) commit ledger
- * and is a no-op — the same contract as every other write path.
+ * and is a no-op — the same contract as every other write path. Each
+ * applied epoch's `_metrics` record carries the source offsets of its batch
+ * (`sourceRanges`, read from the query's offset log; None when the
+ * checkpoint location is not a sink option).
  *
  * Batch shape, by column inspection (first match wins):
  *  1. CDC envelope ([[Schemas.OpCol]] + [[Schemas.LsnCol]] columns):
@@ -50,7 +53,8 @@ import graft.model.Schemas
  * listing the snapshot log per epoch.
  */
 final class GraftStreamSink(spark: SparkSession, dir: String, ckptId: String,
-    opts: MergeOptions, keyColsOpt: Option[Seq[String]]) extends Sink with Logging {
+    opts: MergeOptions, keyColsOpt: Option[Seq[String]],
+    sourceRanges: Option[Long => (String, String)]) extends Sink with Logging {
 
   /** the sink's one table handle: the first batch creates the table first */
   private lazy val table = LakeTable.load(dir)
@@ -96,7 +100,8 @@ final class GraftStreamSink(spark: SparkSession, dir: String, ckptId: String,
             lit(lsnBase) + monotonically_increasing_id())
       }
 
-    val stats = MergeInto.merge(spark, table, batch, ckptId, batchId, mergeOpts)
+    val stats = MergeInto.merge(spark, table, batch, ckptId, batchId, mergeOpts,
+      sourceRanges.map(r => SourceRange.tupled(r(batchId))))
     logInfo(s"graft sink: $dir epoch $batchId " +
       (if (stats.noop) "replayed (no-op)" else s"v${stats.snapshotVersion}"))
   }

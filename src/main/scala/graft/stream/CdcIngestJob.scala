@@ -1,16 +1,15 @@
 package graft.stream
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.GraftStreamingShim
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.lake.{LakeTable, LocalFs}
-import graft.merge.{Maintenance, MergeInto, MergeOptions}
+import graft.merge.{Maintenance, MergeInto, MergeOptions, SourceRange}
 import graft.model.Schemas
 
 /**
@@ -32,6 +31,12 @@ import graft.model.Schemas
  *   checkpointLocation                            — offsets WAL; restart
  *     resumes from the last committed epoch (the reference restarts from
  *     scratch — SURVEY.md §2.6 "Streaming")
+ *
+ * Telemetry: each applied epoch's `_metrics` record ([[graft.merge.MergeStats]])
+ * carries the WAL offsets it consumed, read from the query's own offset log,
+ * next to the snapshot version they landed in — the reference's per-stage
+ * stats (`execution_stat.go`) as one record per epoch.
+ * Spark's per-trigger durations stay on `StreamingQuery.recentProgress`.
  *
  * Duplicates need no streaming state: a redelivered event carries the same
  * (key, lsn) and payload (the WAL contract), so the merge's max-lsn
@@ -57,17 +62,6 @@ final case class IngestConfig(
     checkpointDir: String,
     schema: StructType = Schemas.changeV2,
     maxFilesPerTrigger: Option[Int] = None,
-    /** Read-partition size for batch scans. The default 128 MiB packs small
-      * WAL files into a handful of read partitions, capping every epoch's
-      * map side (stats pass, dedup shuffle write, merge scan) at that
-      * parallelism no matter how many cores exist — measured as THE scaling
-      * bottleneck. 16 MiB keeps typical binlog segments one-per-task.
-      *
-      * NOTE: applied to the shared session config at `start` and left in
-      * place (micro-batch planning re-reads it every epoch, so it cannot be
-      * scoped to the stream). Pass None to leave the session untouched;
-      * `runAvailableNow` restores the prior value when the stream ends. */
-    maxPartitionBytes: Option[Long] = Some(16L * 1024 * 1024),
     /** merge-on-read by default: a streaming epoch writes O(batch) delta
       * files, never a copy-on-write rewrite of the table (see MergeMode) —
       * and trigger-fired folds run OUT-OF-BAND (foldAsync): a stream must
@@ -112,17 +106,20 @@ object CdcIngestJob {
     StructType(changeSchema.fields.filterNot(f =>
       f.name == Schemas.OpCol || f.name == Schemas.LsnCol))
 
-  /** The streaming query's name: unique per checkpoint, and a checkpoint
-    * runs at most one active query. */
-  def queryName(checkpointDir: String): String = s"cdc-ingest-${ckptId(checkpointDir)}"
+  /** Read-partition size for the stream's batch scans. Spark's default
+    * 128 MiB packs small WAL files into a handful of read partitions,
+    * capping every epoch's map side (stats pass, dedup shuffle write, merge
+    * scan) at that parallelism no matter how many cores exist — measured as
+    * THE scaling bottleneck. 16 MiB keeps typical binlog segments
+    * one-per-task.
+    *
+    * Applied to the shared session config at [[start]] and left in place
+    * (micro-batch planning re-reads it every epoch, so it cannot be scoped
+    * to the stream); [[drainAvailableNow]] restores the prior value when the
+    * stream ends. */
+  val MaxPartitionBytes: Long = 16L * 1024 * 1024
 
-  def start(spark: SparkSession, cfg: IngestConfig, trigger: Trigger): StreamingQuery =
-    startWithLineage(spark, cfg, trigger)._1
-
-  /** [[start]], plus the query's [[LineageListener]]: registered before the
-    * query starts, it removes itself when the query terminates. */
-  private def startWithLineage(spark: SparkSession, cfg: IngestConfig,
-      trigger: Trigger): (StreamingQuery, LineageListener) = {
+  def start(spark: SparkSession, cfg: IngestConfig, trigger: Trigger): StreamingQuery = {
     // before the query exists: its checkpoint logs take their filesystem
     // from the Hadoop configuration at start
     LocalFs.install(spark)
@@ -133,9 +130,10 @@ object CdcIngestJob {
       // a different key would fail (or corrupt pruning) on the first epoch
       else LakeTable.create(cfg.tableDir, payloadSchema(cfg.schema),
         cfg.mergeOptions.keyCols)
-    cfg.maxPartitionBytes.foreach(b =>
-      spark.conf.set("spark.sql.files.maxPartitionBytes", b))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", MaxPartitionBytes)
     val id = ckptId(cfg.checkpointDir)
+    // the WAL offsets each epoch consumed, for its `_metrics` record
+    val sourceRange = GraftStreamingShim.sourceRanges(spark, cfg.checkpointDir)
 
     var src = spark.readStream
       .schema(cfg.schema)
@@ -146,17 +144,16 @@ object CdcIngestJob {
       cfg.sourceArchiveDir.foreach(d => src = src.option("sourceArchiveDir", d))
     }
 
-    val lineage = new LineageListener(spark, cfg.tableDir, queryName(cfg.checkpointDir))
-    spark.streams.addListener(lineage)
-    val q = try src.parquet(cfg.walDir).writeStream
-      .queryName(queryName(cfg.checkpointDir))
+    src.parquet(cfg.walDir).writeStream
+      // unique per checkpoint: a checkpoint runs at most one active query
+      .queryName(s"cdc-ingest-$id")
       .option("checkpointLocation", cfg.checkpointDir)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         // merge on the caller's session, not the clone: a merge planned on a
         // new query's clone recompiles all of its generated code and runs
         // its first epoch cold (see Sessions above)
         MergeInto.merge(spark, table, GraftStreamingShim.asBatch(batch, spark),
-          id, epochId, cfg.mergeOptions)
+          id, epochId, cfg.mergeOptions, Some(SourceRange.tupled(sourceRange(epochId))))
         // retention cadence: out-of-band like async folds — a vacuum is
         // driver-side fs work but still O(retained snapshots) and must never
         // stretch an epoch; the maintenance queue also serializes it against
@@ -173,8 +170,6 @@ object CdcIngestJob {
       }
       .trigger(trigger)
       .start()
-    catch { case e: Throwable => spark.streams.removeListener(lineage); throw e }
-    (q, lineage)
   }
 
   /**
@@ -192,63 +187,11 @@ object CdcIngestJob {
     * read+fold the caller would immediately repeat). */
   def drainAvailableNow(spark: SparkSession, cfg: IngestConfig): Unit = {
     val priorMpb = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    try {
-      val (q, lineage) = startWithLineage(spark, cfg, Trigger.AvailableNow())
-      q.awaitTermination()
-      // progress events arrive asynchronously: return once every epoch's
-      // lineage record is on disk
-      lineage.awaitDetached()
-    } finally {
-      // bounded lifecycle => restore the session's scan-partitioning config
-      if (cfg.maxPartitionBytes.isDefined)
-        priorMpb match {
-          case Some(v) => spark.conf.set("spark.sql.files.maxPartitionBytes", v)
-          case None => spark.conf.unset("spark.sql.files.maxPartitionBytes")
-        }
+    // bounded lifecycle => restore the session's scan-partitioning config
+    try start(spark, cfg, Trigger.AvailableNow()).awaitTermination()
+    finally priorMpb match {
+      case Some(v) => spark.conf.set("spark.sql.files.maxPartitionBytes", v)
+      case None => spark.conf.unset("spark.sql.files.maxPartitionBytes")
     }
-  }
-}
-
-/**
- * Per-epoch lineage: source offset ranges + row counts + durations from query
- * progress, dropped as JSON next to the table (`_lineage/`). Together with
- * the `_metrics` table (MergeStats incl. snapshot version + lsn range per
- * epoch) this is the engine's upgrade of the reference's per-stage stats
- * (/root/reference/execution_stat.go:9-48, pipeline.go:205-221).
- *
- * A listener sees every query of the session, so it records only the first
- * query named `queryName` to start after it is registered (the ingest writing
- * `tableDir`), and removes itself from the session when that query
- * terminates. Progress events are delivered off the query's thread, so the
- * writes stay off the epoch's critical path.
- */
-final class LineageListener(spark: SparkSession, tableDir: String, queryName: String)
-    extends StreamingQueryListener {
-  private val dir = Paths.get(tableDir, "_lineage")
-  @volatile private var runId: java.util.UUID = null
-  private val detached = new java.util.concurrent.CountDownLatch(1)
-
-  override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-    if (runId == null && e.name == queryName) {
-      Files.createDirectories(dir)
-      runId = e.runId
-    }
-
-  override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-    val p = e.progress
-    if (p.runId == runId)
-      Files.write(dir.resolve(f"epoch-${p.batchId}%010d.json"),
-        p.json.getBytes(StandardCharsets.UTF_8))
-  }
-
-  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-    if (e.runId == runId) {
-      spark.streams.removeListener(this)
-      detached.countDown()
-    }
-
-  /** Waits (bounded) until the query's last event has been handled. */
-  def awaitDetached(): Unit = {
-    detached.await(1, java.util.concurrent.TimeUnit.MINUTES); ()
   }
 }

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.lake.LakeTable
-import graft.merge.{MergeInto, MergeMode, MergeOptions, Resolve}
+import graft.merge.{MergeInto, MergeMode, MergeOptions, Resolve, SourceRange}
 
 /**
  * Checkpointed change-stream consumer: follows a lake table's CDC-out feed
@@ -18,7 +18,8 @@ import graft.merge.{MergeInto, MergeMode, MergeOptions, Resolve}
  *
  * Delivery model: each poll applies the resolved change rows of upstream
  * versions (cursor, head] as ONE idempotent merge into the downstream table,
- * then advances the cursor (atomic tmp+rename). Crash anywhere between the
+ * whose `_metrics` epoch record carries that range, then advances the
+ * cursor (atomic tmp+rename). Crash anywhere between the
  * two steps is safe twice over — the downstream epoch ledger (epochId =
  * upstream head version, monotone) makes an exact replay a no-op, and a
  * WIDER replay (new upstream commits landed before the retry) re-delivers
@@ -86,7 +87,7 @@ object ChangeFeed {
         "rows carry per-column provenance a row-changelog cannot express")
     // raises the named retention error if (from, head] fell behind vacuum
     val changes = upstream.readChangesBetween(spark, from, head)
-    applyBatch(spark, cfg, upstream, changes, epochId = head)
+    applyBatch(spark, cfg, upstream, changes, Some(from), head)
     writeCursor(cfg.cursorPath, head)
     head - from
   }
@@ -115,22 +116,24 @@ object ChangeFeed {
     val head = upstream.currentVersion
     val usnap = upstream.snapshot(head)
     require(!usnap.sparse, "ChangeFeed is defined for row-lsn (non-sparse) tables")
-    applyBatch(spark, cfg, upstream, upstream.readResolved(spark, usnap), epochId = head)
+    applyBatch(spark, cfg, upstream, upstream.readResolved(spark, usnap), None, head)
     writeCursor(cfg.cursorPath, head)
     head
   }
 
-  /** stored-shape rows (payload + _lsn + _deleted) -> one idempotent merge
-    * into the downstream table under (feed ckptId, upstream version) */
+  /** stored-shape rows (payload + _lsn + _deleted) of upstream versions
+    * (from, head] (None: the whole state) -> one idempotent merge into the
+    * downstream table under (feed ckptId, head), recording the range */
   private def applyBatch(spark: SparkSession, cfg: Config, upstream: LakeTable,
-      stored: DataFrame, epochId: Long): Unit = {
+      stored: DataFrame, from: Option[Long], head: Long): Unit = {
     val keyCols = upstream.currentSnapshot.keyCols
     if (!LakeTable.exists(cfg.downstreamDir))
       LakeTable.create(cfg.downstreamDir, upstream.payloadSchema, keyCols)
     MergeInto.merge(spark, LakeTable.load(cfg.downstreamDir),
       Resolve.storedAsChanges(stored),
-      ckptId = "feed-" + CdcIngestJob.ckptId(cfg.cursorPath), epochId,
-      cfg.mergeOptions.copy(keyCols = keyCols))
+      ckptId = "feed-" + CdcIngestJob.ckptId(cfg.cursorPath), epochId = head,
+      cfg.mergeOptions.copy(keyCols = keyCols),
+      Some(SourceRange(from.map(_.toString).orNull, head.toString)))
     ()
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, RowNumber, SortOrde
 import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort, WindowGroupLimit}
 import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
 
 /**
  * A V1 streaming `Source.getBatch` must return a DataFrame whose logical
@@ -17,8 +18,8 @@ import org.apache.spark.sql.execution.LogicalRDD
  * `org.apache.spark.sql` namespace, the standard pattern for V1 connectors
  * whose batches are computed with full Catalyst plans rather than raw RDDs.
  * The shim also holds the merge's other uses of `private[sql]` API (a
- * micro-batch's partitions, a plan built from logical nodes). Nothing else
- * may live in this package.
+ * micro-batch's partitions, a plan built from logical nodes, a query's
+ * offset log). Nothing else may live in this package.
  */
 object GraftStreamingShim {
   def asStreaming(df: DataFrame): DataFrame = {
@@ -55,6 +56,23 @@ object GraftStreamingShim {
     }
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, cdf.schema, isStreaming = false)
+  }
+
+  /** The source range of each micro-batch of the streaming query
+    * checkpointed at `checkpointDir`, from its offset log, which the query
+    * writes before it runs a batch: batch `n` consumed (entry `n - 1`,
+    * entry `n`]. Each side is JSON: the source's offset, or an array of one
+    * per source; null for a first batch's start or an entry the log lacks.
+    * Opens the log once: call it when the query is defined, not per batch. */
+  def sourceRanges(spark: SparkSession, checkpointDir: String): Long => (String, String) = {
+    val log = new OffsetSeqLog(spark, s"$checkpointDir/offsets")
+    def entry(batchId: Long): String =
+      if (batchId < 0) null
+      else log.get(batchId).map(_.offsets.map(_.fold("null")(_.json)) match {
+        case Seq(one) => one
+        case all => all.mkString("[", ",", "]")
+      }).orNull
+    batchId => (entry(batchId - 1), entry(batchId))
   }
 
   /** The partitions `df` yields. A frame [[asBatch]] built is a scan of an

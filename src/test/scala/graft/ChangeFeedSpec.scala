@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
 import graft.lake.{Compaction, LakeTable}
 import graft.merge.{MergeInto, MergeMode, MergeOptions}
 import graft.model.Schemas
-import graft.stream.ChangeFeed
+import graft.stream.{CdcIngestJob, ChangeFeed}
 
 /**
  * CDC-out consumption: a downstream table follows the upstream through the
@@ -34,6 +34,30 @@ class ChangeFeedSpec extends AnyFunSuite {
     LakeTable.load(dir).read(spark).collect()
       .map(r => r.getString(r.fieldIndex("conv_id")) ->
         r.getString(r.fieldIndex("text"))).toMap
+
+  test("each poll's epoch record carries its upstream range (cursor, head]") {
+    val work = TestSpark.tmpDir("changefeed-range")
+    val up = s"$work/up"
+    LakeTable.create(up, Schemas.turn)
+    val table = LakeTable.load(up)
+    def commit(e: Long): Unit = MergeInto.merge(spark, table,
+      batch(Seq(("I", 1L + e, f"k$e%03d", s"v$e"))), "up", e, mor)
+    commit(0L); commit(1L)
+    val cfg = ChangeFeed.Config(up, s"$work/down", s"$work/cursor")
+    assert(ChangeFeed.pollOnce(spark, cfg) == 2L)
+    commit(2L)
+    assert(ChangeFeed.pollOnce(spark, cfg) == 1L)
+    assert(ChangeFeed.pollOnce(spark, cfg) == 0L, "caught up")
+    def ranges(dir: String) = LineageSpec.epochRecords(dir)
+      .map(r => (r.ckptId, r.epochId, r.sourceStart, r.sourceEnd))
+    val feed = "feed-" + CdcIngestJob.ckptId(cfg.cursorPath)
+    assert(ranges(cfg.downstreamDir) == List((feed, 2L, "0", "2"), (feed, 3L, "2", "3")))
+    // a bootstrap takes the whole state up to the head
+    val boot = ChangeFeed.Config(up, s"$work/down2", s"$work/cursor2")
+    assert(ChangeFeed.bootstrap(spark, boot) == 3L)
+    assert(ranges(boot.downstreamDir) ==
+      List(("feed-" + CdcIngestJob.ckptId(boot.cursorPath), 3L, null, "3")))
+  }
 
   test("feed: converge, idempotent replay, restart, retention error") {
     val work = TestSpark.tmpDir("changefeed")

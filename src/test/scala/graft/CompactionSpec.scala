@@ -4,7 +4,7 @@ import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.{ChangelogGen, GenParams}
-import graft.lake.{Compaction, LakeTable, TableLog}
+import graft.lake.{Compaction, FoldRecord, LakeTable, TableLog}
 import graft.merge.{MergeInto, MergeMode, MergeOptions}
 import graft.model.Schemas
 import org.apache.spark.sql.functions._
@@ -45,10 +45,21 @@ class CompactionSpec extends AnyFunSuite {
     val filesBefore = table.currentFiles.size
     val epochsBefore = table.currentSnapshot.epochHwm
 
-    val stats = Compaction.foldDeltas(spark, table, targetRowsPerFile = 50000L)
-    assert(stats.filesAfter < stats.filesBefore,
-      s"expected fewer files: ${stats.filesBefore} -> ${stats.filesAfter}")
+    val fold = Compaction.foldDeltas(spark, table, targetRowsPerFile = 50000L)
+    assert(fold.filesAfter < fold.filesBefore,
+      s"expected fewer files: ${fold.filesBefore} -> ${fold.filesAfter}")
     assert(table.currentFiles.size < filesBefore)
+    assert(fold.filesAfter == table.currentFiles.size && fold.snapshotVersion == table.currentVersion)
+    // the returned record is the one the fold wrote to `_metrics`; a table
+    // without deltas folds nothing and records nothing
+    def folds = table.metrics(spark).where(col("op") === "fold").collect()
+      .map(r => (r.getAs[Long]("snapshotVersion"), r.getAs[Long]("filesBefore"),
+        r.getAs[Long]("filesAfter"), r.getAs[Long]("rowsRewritten"))).toSeq
+    val recorded = Seq((fold.snapshotVersion, fold.filesBefore.toLong, fold.filesAfter.toLong,
+      fold.rowsRewritten))
+    assert(folds == recorded)
+    assert(Compaction.foldDeltas(spark, table) == FoldRecord.NoDeltas)
+    assert(folds == recorded && fold.snapshotVersion == table.currentVersion)
 
     // logical state is bit-for-bit unchanged
     assert(state() == before, "compaction must not change table contents")

@@ -7,9 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
-import graft.lake.LakeTable
+import graft.lake.{Compaction, LakeTable}
 import graft.merge.{MergeInto, MergeMode, MergeOptions}
 import graft.model.Schemas
+import graft.stream.CdcIngestJob
 
 /**
  * `df.writeStream.format("graft")`: every micro-batch is one idempotent
@@ -90,6 +91,65 @@ class GraftStreamSinkSpec extends AnyFunSuite {
       "restart must deliver only the new versions and stay convergent")
     assert(state(s"$work/down")(keys(3)) == s"v0-${keys(3)}",
       "late lower-lsn event must lose downstream too")
+  }
+
+  test("async folds: a sink epoch queues its due fold instead of running it") {
+    val work = TestSpark.tmpDir("gsink-fold")
+    val (up, down) = (s"$work/up", s"$work/down")
+    // downstream: a small folded base
+    LakeTable.create(down, Schemas.turn)
+    MergeInto.merge(spark, LakeTable.load(down),
+      batch((0 until 4).map(i => ("I", 1L + i, f"b$i%03d", "base"))), "seed", 0L, mor)
+    Compaction.foldDeltas(spark, LakeTable.load(down))
+    // upstream: more than twice the base's rows, so the epoch's fold is due
+    LakeTable.create(up, Schemas.turn)
+    MergeInto.merge(spark, LakeTable.load(up),
+      batch((0 until 12).map(i => ("I", 100L + i, f"k$i%03d", "up"))), "up", 0L, mor)
+    Compaction.testDelayBeforeFoldCommitMs = 4000L
+    try {
+      val q = spark.readStream.format("graft").load(up)
+        .writeStream.format("graft").option("path", down)
+        .option("checkpointLocation", s"$work/ckpt")
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      assert(q.exception.isEmpty, q.exception.map(_.toString).getOrElse(""))
+      // an inline fold would have held the epoch until its commit
+      assert(LakeTable.load(down).currentFiles.exists(_.delta),
+        "the query ended with its deltas folded: the fold ran inside the epoch")
+      MergeInto.awaitMaintenance()
+      val after = LakeTable.load(down).currentFiles
+      assert(after.nonEmpty && !after.exists(_.delta), "the queued fold did not run")
+    } finally {
+      Compaction.testDelayBeforeFoldCommitMs = 0L
+    }
+    assert(state(down) == state(up) ++ (0 until 4).map(i => f"b$i%03d" -> "base"))
+  }
+
+  test("epoch records carry the upstream versions in the sink's offset log") {
+    val work = TestSpark.tmpDir("gsink-lineage")
+    val up = s"$work/up"
+    LakeTable.create(up, Schemas.turn)
+    val table = LakeTable.load(up)
+    (0 until 3).foreach(e => MergeInto.merge(spark, table,
+      batch(Seq(("I", 1L + e, f"k$e%03d", s"v$e"))), "up", e.toLong, mor))
+    assert(table.currentVersion == 3L)
+    val ckpt = s"$work/ckpt"
+    val q = spark.readStream.format("graft").option("maxVersionsPerBatch", "1").load(up)
+      .writeStream.format("graft").option("path", s"$work/down")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(q.exception.isEmpty, q.exception.map(_.toString).getOrElse(""))
+
+    val records = LineageSpec.epochRecords(s"$work/down")
+    val id = "sink-" + CdcIngestJob.ckptId(ckpt)
+    assert(records.map(r => (r.ckptId, r.epochId)) == (0L to 2L).map((id, _)).toList)
+    // one upstream version per batch: (v - 1, v], the first from the
+    // source's starting position
+    assert(records.map(r => (r.sourceStart, r.sourceEnd)) ==
+      List((null, "1"), ("1", "2"), ("2", "3")))
+    records.foreach(r =>
+      assert(r.sourceEnd == LineageSpec.offsetEntry(ckpt, r.epochId), r.toString))
   }
 
   test("CDC envelope shape from a file stream: inserts, updates, deletes fold") {

@@ -197,8 +197,9 @@ class LakeMergeSpec extends AnyFunSuite {
       }
       assert(table.currentFiles.exists(_.delta), "expected re-delivered deltas")
       assert(tableState(table) == want, "read-time fold over base + deltas mismatch")
-      val cs = graft.lake.Compaction.foldDeltas(spark, table)
-      assert(cs.filesBefore > cs.filesAfter || cs.rowsRewritten > 0)
+      val fold = graft.lake.Compaction.foldDeltas(spark, table)
+      assert(fold.filesBefore > fold.filesAfter || fold.rowsRewritten > 0)
+      assert(fold.snapshotVersion == table.currentVersion)
       assert(!table.currentFiles.exists(_.delta))
       assert(tableState(table) == want, "foldDeltas changed table contents")
       // replay after fold still no-ops

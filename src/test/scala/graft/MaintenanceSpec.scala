@@ -70,7 +70,7 @@ class MaintenanceSpec extends AnyFunSuite {
       s"setup must produce both carried and touched base files " +
         s"(outside=${outside.size}, touched=${intersecting.size})")
 
-    val stats = Compaction.foldDeltas(spark, table)
+    val fold = Compaction.foldDeltas(spark, table)
     val after = table.currentFiles
     assert(after.forall(!_.delta), "fold must leave no deltas")
     // untouched base files carried over BY IDENTITY (never rewritten)
@@ -79,7 +79,8 @@ class MaintenanceSpec extends AnyFunSuite {
     // touched base files are gone (rewritten)
     assert(after.map(_.path).toSet.intersect(intersecting).isEmpty,
       "intersecting base files should have been folded away")
-    assert(stats.rowsRewritten < base.map(_.rows).sum + deltas.map(_.rows).sum,
+    assert(fold.snapshotVersion == table.currentVersion)
+    assert(fold.rowsRewritten < base.map(_.rows).sum + deltas.map(_.rows).sum,
       "scoped fold should rewrite fewer rows than a full fold")
     // content parity: a-range untouched, z-range updated
     val got = textByKey(dir)
@@ -122,14 +123,15 @@ class MaintenanceSpec extends AnyFunSuite {
       .map(_.path).toSet
     assert(middle.nonEmpty, "setup must produce middle base files")
 
-    val stats = Compaction.foldDeltas(spark, table)
+    val fold = Compaction.foldDeltas(spark, table)
     val after = table.currentFiles
     assert(after.forall(!_.delta), "fold must leave no deltas")
     // the middle of the keyspace is OUTSIDE the union of the two burst
     // intervals: its base files must be carried over by identity
     assert(middle.subsetOf(after.map(_.path).toSet),
       "union-scoped fold rewrote base files between the two bursts")
-    assert(stats.rowsRewritten < base.map(_.rows).sum + deltas.map(_.rows).sum,
+    assert(fold.snapshotVersion == table.currentVersion)
+    assert(fold.rowsRewritten < base.map(_.rows).sum + deltas.map(_.rows).sum,
       "union-scoped fold should rewrite fewer rows than a full fold")
     // content parity across all three ranges
     val got = textByKey(dir)

@@ -60,17 +60,19 @@ class StreamingReplaySpec extends AnyFunSuite {
     // bit-for-bit replay equality (every column, canonical order)
     val run2 = ingest(2)
     assert(run1 == run2, "from-scratch replay must reproduce identical state")
-    // multiple epochs actually happened (not one mega-batch); lineage is the
-    // direct epoch count (table versions can also move via maintenance)
-    val lineage = new java.io.File(s"$work/table1/_lineage").list()
-    assert(lineage != null && lineage.nonEmpty, "lineage files missing")
+    // multiple epochs actually happened (not one mega-batch); the `_metrics`
+    // epoch records are the direct epoch count (table versions can also move
+    // via maintenance)
+    val epochs = Option(new java.io.File(s"$work/table1/_metrics").list())
+      .getOrElse(Array.empty[String]).filter(_.startsWith("epoch-"))
+    assert(epochs.nonEmpty, "epoch records missing")
     def walkParts(f: java.io.File): Int =
       if (f.isFile) (if (f.getName.startsWith("part-")) 1 else 0)
       else Option(f.listFiles()).getOrElse(Array.empty).map(walkParts).sum
     val walFiles = walkParts(new java.io.File(s"$work/wal"))
-    assert(lineage.length >= 3,
+    assert(epochs.length >= 3,
       s"expected >=3 epochs (maxFilesPerTrigger=3 over $walFiles WAL files), " +
-        s"saw ${lineage.length} [${lineage.sorted.mkString(",")}], " +
+        s"saw ${epochs.length} [${epochs.sorted.mkString(",")}], " +
         s"version ${LakeTable.load(s"$work/table1").currentVersion}")
   }
 
